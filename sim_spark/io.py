@@ -1,7 +1,16 @@
 """Table loading for the fixed parquet fixtures (FIXTURES.md).
 
-Schemas are pinned explicitly rather than inferred so a scan never silently
-drifts (schema inference is still exercised once, in ``scan_json_roundtrip``).
+Every table is checked against its pinned schema (``SCHEMAS``) so a scan
+never silently drifts. The check runs once per file: the first load of a
+file infers its parquet schema (a Spark job), compares it with the pin and
+remembers the inferred schema under the file's identity — absolute path,
+modification time in ns, size. Later loads of the same file hand that
+schema to the reader, which then submits no job. Rewriting the file
+changes its identity, so the next load infers and checks again. Only this
+metadata is kept, like a catalog; every query still scans the parquet.
+A path that cannot be ``stat``-ed as a regular file (a directory dataset,
+a remote URI) is inferred and checked on every load.
+
 At 100 TB the same loaders work unchanged: ``spark.read.parquet`` over a
 directory tree gives partition pruning + predicate pushdown + column pruning
 for free; nothing here materializes data on the driver.
@@ -9,6 +18,10 @@ for free; nothing here materializes data on the driver.
 
 from __future__ import annotations
 
+import os
+import stat
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -124,26 +137,105 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-# (sf_dir, table) -> COUNT(*). The fixture dirs are immutable for a
-# process lifetime, and the corpus-count ladder dials (ops/ladders.py)
+# Session confs that change what parquet schema inference returns; they
+# are part of the memo key, so a session that sets them re-infers.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+
+# (file identity, inference confs) -> the schema Spark inferred for the
+# file when it was checked, or None for an events file whose
+# TIMESTAMP(NANOS) column inference rejects (see _events).
+_INFERRED: dict[tuple, T.StructType | None] = {}
+
+# file identity -> COUNT(*). The corpus-count ladder dials (ops/ladders.py)
 # re-derive their K at every query build — without the memo each bench
 # sample pays a fresh full-table count job (r9 review).
-_COUNT_CACHE: dict[tuple[str, str], int] = {}
+_COUNT_CACHE: dict[tuple, int] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(absolute path, mtime in ns, size) of a regular file, else None."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def _canon(schema: T.StructType) -> str:
+    # timestamp vs timestamp_ntz is NOT drift — fixtures ship NTZ and
+    # the session pins UTC, so queries normalize it downstream.
+    return schema.simpleString().replace("timestamp_ntz", "timestamp")
+
+
+def _inferred_schema(spark: SparkSession, path: str, name: str) -> T.StructType | None:
+    """The parquet schema Spark infers for ``path``, checked against the
+    pinned ``SCHEMAS[name]`` — inferred and checked once per file
+    identity (module docstring).
+
+    Fails LOUD on fixture drift: a silently retyped column (int32
+    doc_id, float32 price) changes every downstream pandas dtype and the
+    result hash with no local signal otherwise. ``events`` is
+    not checked; its TIMESTAMP(NANOS) layout, which inference rejects,
+    returns None."""
+    ident = _file_identity(path)
+    key = None
+    if ident is not None:
+        key = (ident, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+        if key in _INFERRED:
+            return _INFERRED[key]
+    try:
+        schema = spark.read.parquet(path).schema
+    except AnalysisException as e:
+        # Only the TIMESTAMP(NANOS) schema rejection of events falls
+        # through to the legacy nanosAsLong path; a missing/corrupt file
+        # must fail loud here, not with a misleading error from the
+        # legacy branch.
+        msg = str(e)
+        nanos = "PARQUET_TYPE_ILLEGAL" in msg or "TIMESTAMP(NANOS" in msg
+        if name != "events" or not nanos:
+            raise
+        schema = None
+    pinned = SCHEMAS.get(name) if name != "events" else None
+    if pinned is not None and _canon(schema) != _canon(pinned):
+        raise TypeError(
+            f"fixture schema drift for {name!r}: expected "
+            f"{pinned.simpleString()}, got {schema.simpleString()}"
+        )
+    if key is not None:
+        _INFERRED[key] = schema
+    return schema
 
 
 def table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Memoized COUNT(*) of a fixture table — for data-deterministic
-    scale dials (ladders), not for query results."""
-    import os
-
-    key = (os.path.abspath(sf_dir), name)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = table(spark, sf_dir, name).count()
-    return _COUNT_CACHE[key]
+    scale dials (ladders), not for query results. The count is a Spark
+    job, run once per file identity; a path without one counts on
+    every call."""
+    ident = _file_identity(f"{sf_dir}/{name}.parquet")
+    if ident is not None and ident in _COUNT_CACHE:
+        return _COUNT_CACHE[ident]
+    n = table(spark, sf_dir, name).count()
+    if ident is not None:
+        _COUNT_CACHE[ident] = n
+    return n
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (lazy; no driver-side data).
+
+    The file's schema is inferred and checked against the pin on its
+    first load and read from the memo afterwards (module docstring), so
+    a repeat load submits no Spark job. The reader is given the INFERRED
+    schema, not the pin: fixtures carry ``timestamp_ntz`` where the pin
+    says ``timestamp``, and reading with the pin would change plans.
 
     ``events.ts`` has shipped in two physical layouts across fixture
     generations: parquet TIMESTAMP(MICROS) (reads directly) and
@@ -158,46 +250,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalize(spark)
     if name == "events":
         return _events(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    pinned = SCHEMAS.get(name)
-    if pinned is not None:
-        # Fail LOUD on fixture drift: a silently retyped column (int32
-        # doc_id, float32 price) changes every downstream pandas dtype
-        # and the driver's value hash with no local signal otherwise.
-        # timestamp vs timestamp_ntz is NOT drift — fixtures ship NTZ and
-        # the session pins UTC, so queries normalize it downstream.
-        def _canon(schema):
-            return schema.simpleString().replace("timestamp_ntz", "timestamp")
-
-        if _canon(df.schema) != _canon(pinned):
-            raise TypeError(
-                f"fixture schema drift for {name!r}: expected "
-                f"{pinned.simpleString()}, got {df.schema.simpleString()}"
-            )
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(_inferred_schema(spark, path, name)).parquet(path)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     path = f"{sf_dir}/events.parquet"
-    try:
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-    except Exception as e:
-        # Only the TIMESTAMP(NANOS) schema rejection should fall through to
-        # the legacy nanosAsLong path; a missing/corrupt file must fail loud
-        # here, not with a misleading error from the legacy branch.
-        msg = str(e)
-        if "PARQUET_TYPE_ILLEGAL" not in msg and "TIMESTAMP(NANOS" not in msg:
-            raise
-        df = None
-        ts_type = None
-    if df is not None and isinstance(ts_type, T.TimestampType):
-        return df
-    if df is not None and isinstance(ts_type, T.TimestampNTZType):
+    schema = _inferred_schema(spark, path, "events")
+    ts_type = schema["ts"].dataType if schema is not None else None
+    if isinstance(ts_type, T.TimestampType):
+        return spark.read.schema(schema).parquet(path)
+    if isinstance(ts_type, T.TimestampNTZType):
         # µs fixtures read as NTZ; session TZ is UTC, so the cast is a
         # pure relabel (identical wall-clock values, oracle-compatible).
+        df = spark.read.schema(schema).parquet(path)
         return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     # Legacy TIMESTAMP(NANOS) layout: scope the legacy conf to this one
     # read — the scan relation captures the conf at build time
@@ -205,10 +273,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # restoring immediately keeps later TIMESTAMP(NANOS) reads in the
     # session loud.
     conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
+    prev = spark.conf.get(conf_key, None)  # None: not set in this session
     spark.conf.set(conf_key, "true")
     try:
         # FLOOR division, not `div` (truncate-toward-zero): DuckDB floors

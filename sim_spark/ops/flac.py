@@ -24,8 +24,9 @@ Implemented subset (a spec-conformant stream any FLAC decoder reads):
   — decode-side — LPC orders 1..32 (QLP precision/shift/coefficient
   parse + integer prediction), because real-world FLAC files
   overwhelmingly use LPC; round-trip-tested via the LPC test writer.
-  Residuals are rice-coded (4/5-bit parameter, partition order 0,
-  zigzag, escape to raw).
+  Residuals are rice-coded (4/5-bit parameter, zigzag, escape to raw)
+  in 2^po partitions, each with its own parameter; the encoder picks
+  the cheapest po in 0..6.
 - stereo: per-frame channel decorrelation (independent, left/side,
   right/side, mid/side with the exact (mid<<1)|(side&1) inverse),
   chosen by cost like a real encoder; MD5 over the interleaved stream.
@@ -36,6 +37,7 @@ single corrupted bit anywhere in the stream is caught — tested.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 
@@ -77,12 +79,42 @@ def _crc8(data: bytes) -> int:
     return crc
 
 
+def _make_crc16_powers(words: int) -> np.ndarray:
+    """Row d: the CRC-16 of each of the 16 single-bit 16-bit words
+    followed by d zero words. The CRC (init 0) is linear over GF(2), so
+    a message's CRC is the XOR of these rows picked by its set bits,
+    each at its distance from the end."""
+    step = np.array(_CRC16_T, dtype=np.int64)
+    x = np.arange(1 << 16)
+    hi = step[x >> 8]
+    # one 16-bit word: the 16-bit register shifted by 16 bits depends
+    # only on (register ^ word)
+    step2 = ((hi & 0xFF) << 8) ^ step[(x & 0xFF) ^ (hi >> 8)]
+    rows = np.empty((words, 16), dtype=np.uint16)
+    rows[0] = step2[1 << np.arange(16)]
+    for d in range(1, words):
+        rows[d] = step2[rows[d - 1]]
+    return rows
+
+
+_CRC16_POW = _make_crc16_powers(4096)  # frames up to 8 KiB in one pass
+_BIT16 = np.arange(16, dtype=np.uint16)
+
+
 def _crc16(data: bytes) -> int:
     """CRC-16 poly x^16+x^15+x^2+1 (0x8005), init 0 — FLAC frame CRC."""
-    crc = 0
-    t = _CRC16_T
-    for b in data:
-        crc = ((crc << 8) & 0xFF00) ^ t[(crc >> 8) ^ b]
+    nwords = len(data) >> 1
+    if nwords > len(_CRC16_POW):  # beyond the table: bytewise
+        crc = 0
+        t = _CRC16_T
+        for b in data:
+            crc = ((crc << 8) & 0xFF00) ^ t[(crc >> 8) ^ b]
+        return crc
+    words = np.frombuffer(data, dtype=">u2", count=nwords).astype(np.uint16)
+    bits = (words[:, None] >> _BIT16) & 1  # column b: bit b
+    crc = int(np.bitwise_xor.reduce((_CRC16_POW[:nwords][::-1] * bits).ravel()))
+    if len(data) & 1:
+        crc = ((crc << 8) & 0xFF00) ^ _CRC16_T[(crc >> 8) ^ data[-1]]
     return crc
 
 
@@ -101,16 +133,42 @@ class _BitWriter:
                 self.out.append((self._acc >> self._n) & 0xFF)
             self._acc &= (1 << self._n) - 1
 
-    def unary(self, q: int) -> None:
-        """q zero bits then a one bit (FLAC rice quotient)."""
-        while q >= 32:
-            self.put(0, 32)
-            q -= 32
-        self.put(1, q + 1)
+    def put_many(self, values: np.ndarray, nbits: np.ndarray) -> None:
+        """``put(v, n)`` for every (v, n) pair, packed in one numpy pass.
+        Each value must already fit its width (see :func:`_pack_bits`)."""
+        packed = _pack_bits(
+            np.concatenate([[self._acc], values]),
+            np.concatenate([[self._n], nbits]),
+        )
+        total = self._n + int(np.sum(nbits))
+        full, self._n = total >> 3, total & 7
+        self.out += packed[:full].tobytes()
+        self._acc = int(packed[full]) >> (8 - self._n) if self._n else 0
 
     def pad_to_byte(self) -> None:
         if self._n:
             self.put(0, 8 - self._n)
+
+
+def _pack_bits(values: np.ndarray, nbits: np.ndarray) -> np.ndarray:
+    """MSB-first concatenation of ``values[i]`` over ``nbits[i]`` bits,
+    zero-padded to a whole byte, as a uint8 array. Every value must be
+    below ``2**min(nbits[i], 32)``: a rice code's unary zeros make its
+    width unbounded, but its set bits are only the stop bit and the k
+    remainder bits. Each value is shifted so its last bit lands on its
+    byte's bit position and split over the five bytes it can touch;
+    items never share a bit, so summing byte contributions ORs them."""
+    ends = np.cumsum(nbits, dtype=np.int64)
+    nbytes = (int(ends[-1]) + 7) >> 3 if ends.size else 0
+    aligned = np.asarray(values, dtype=np.int64) << (-ends & 7)
+    parts = (aligned[:, None] >> _BYTE_SHIFTS) & 0xFF
+    where = np.maximum(((ends - 1) >> 3)[:, None] - _BYTE_BACK, 0)
+    packed = np.bincount(where.ravel(), parts.ravel(), minlength=nbytes)
+    return packed.astype(np.uint8)
+
+
+_BYTE_BACK = np.arange(5)
+_BYTE_SHIFTS = 8 * _BYTE_BACK
 
 
 class _BitReader:
@@ -213,129 +271,286 @@ _BLOCKSIZE = 256  # fixed encode blocksize; last frame may be shorter
 
 
 def _zigzag(res: np.ndarray) -> np.ndarray:
-    return np.where(res >= 0, res * 2, -res * 2 - 1).astype(np.int64)
+    """Signed residuals -> FLAC's unsigned rice order 0, -1, 1, -2, ..."""
+    res = np.asarray(res)
+    return (res << 1) ^ (res >> (8 * res.itemsize - 1))
 
 
-def _unzigzag(u: int) -> int:
-    return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
+# --- encoder: a stream is planned and packed in whole-stream numpy passes ---
+#
+# A stream's blocks are stacked into (blocks, blocksize) matrices, one
+# per distinct blocksize (the full frames, then the short tail), and
+# every decision a real encoder makes is costed for all rows at once:
+# fixed-predictor residuals for orders 0..2, zigzag, the quotient sums
+# of all 15 rice parameters at every partition order, and (stereo) the
+# four channel assignments. Costs and tie-breaks must not move: the
+# emitted bytes are pinned by tests/test_flac_golden.py, which also
+# checks the planner against a plain scalar scan. Every subframe bit of
+# the stream is then packed in one _pack_bits call.
+
+_K = np.arange(15, dtype=np.int64)  # 4-bit rice parameters (15 is the escape)
+# per planner dtype: (k, 1, 1) shift and k + 1 columns
+_K_COLS = {
+    dt: (_K.astype(dt)[:, None, None], (_K + 1).astype(dt)[:, None, None])
+    for dt in (np.int32, np.int64)
+}
+_NO_PLAN = 1 << 30  # cost of an order whose warm-up fills the block
 
 
-def _fixed_residual(samples: np.ndarray, order: int) -> np.ndarray:
-    """FLAC fixed-predictor residuals (finite differences of `order`)."""
-    res = samples.astype(np.int64)
-    for _ in range(order):
-        res = np.diff(res)
-    return res
+@functools.lru_cache(maxsize=_BLOCKSIZE)  # encode blocks are 1.._BLOCKSIZE long
+def _partition_layout(bs: int):
+    """Partition orders a ``bs``-sample block can take (2^po partitions
+    must divide it, po <= 6) and, for all of them side by side in po
+    order (po's partitions start at 2^po - 1): each partition's length,
+    a first-partition mask, and the 0/1 (partition, po) matrix that
+    sums partitions per po."""
+    po_deep = 0
+    while po_deep < 6 and bs % (2 << po_deep) == 0:
+        po_deep += 1
+    pos = np.arange(po_deep + 1)
+    lens = np.concatenate([np.full(1 << p, bs >> p) for p in pos]).astype(np.int64)
+    first = np.zeros(lens.size, dtype=np.int64)
+    first[(1 << pos) - 1] = 1
+    per_po = (np.repeat(pos, 1 << pos)[:, None] == pos[None, :]).astype(np.float64)
+    for shared in (pos, lens, first, per_po):  # every caller gets these arrays
+        shared.setflags(write=False)
+    return po_deep, pos, lens, first, per_po
 
 
-_K_RANGE = np.arange(15, dtype=np.int64)[:, None]
+def _rice_plans(zp: np.ndarray, order: np.ndarray):
+    """Cheapest partitioned-rice layout of every row of ``zp``.
+
+    ``zp`` is (rows, bs) zigzagged residuals whose first ``order[r]``
+    entries are zero (the predictor warm-up; a zero adds no quotient
+    bits at any k, so every partition sum is the residuals' own). Each
+    valid partition order po costs 2 + 4 + 4·2^po bits plus, per
+    partition, its cheapest rice parameter (lowest k on ties); the
+    lowest po wins ties. A po is valid while the first partition keeps
+    at least one residual. Returns (po, ks, bits): per row the chosen
+    po and its bit count (``_NO_PLAN`` when no po is valid), and the
+    (rows, partitions) rice parameters of every po side by side, po's
+    2^po partitions starting at 2^po - 1.
+
+    A partition's cost over k, sum(u >> k) + len·(k + 1), is convex
+    (each u's step (u >> k) - (u >> k+1) shrinks with k), so its first
+    minimum is the number of k whose cost exceeds the next one's; past
+    the bit length of the largest residual every quotient is 0 and the
+    cost only grows, so larger k are not evaluated. Sums run in int32
+    when no partition sum can overflow it."""
+    rows, bs = zp.shape
+    po_deep, pos, lens, first, per_po = _partition_layout(bs)
+    top = int(zp.max(initial=0))
+    dt = np.int32 if top < (1 << 31) // (bs + 16) else np.int64
+    nk = min(top.bit_length(), 14) + 1
+    k_col, k1_col = (c[:nk] for c in _K_COLS[dt])
+    q = zp.astype(dt, copy=False)[None] >> k_col  # (k, row, sample)
+    step = bs >> po_deep
+    if step <= 8:
+        qs = q[..., 0::step]
+        for j in range(1, step):
+            qs = qs + q[..., j::step]
+    else:
+        qs = q.reshape(nk, rows, 1 << po_deep, step).sum(axis=3)
+    levels = [qs]
+    for _ in range(po_deep):
+        qs = qs[..., 0::2] + qs[..., 1::2]
+        levels.append(qs)
+    quot = np.concatenate(levels[::-1], axis=2)  # (k, row, partition)
+    part_len = (lens[None, :] - order[:, None] * first[None, :]).astype(dt)
+    costs = quot + k1_col * part_len[None]
+    ks = (costs[:-1] > costs[1:]).sum(axis=0)
+    # float64 sums are exact: every count stays far below 2^53
+    level_bits = (costs.min(axis=0) @ per_po).astype(np.int64)
+    bits = 6 + 4 * (1 << pos)[None, :] + level_bits
+    bits = np.where((bs >> pos)[None, :] > order[:, None], bits, _NO_PLAN)
+    po = bits.argmin(axis=1)
+    return po, ks, bits[np.arange(rows), po]
 
 
-def _best_rice_k(zz: np.ndarray) -> tuple[int, int]:
-    """(cheapest 4-bit rice parameter, its bit cost) for zigzagged
-    residuals — one vectorized pass over all 15 candidate k."""
-    costs = (zz[None, :] >> _K_RANGE).sum(axis=1) + zz.size * (_K_RANGE[:, 0] + 1)
-    k = int(costs.argmin())
-    return k, int(costs[k])
+def _residual_spec(zp: np.ndarray, order: int, po: int, ks: np.ndarray, head: list):
+    """Subframe spec ``(head, (codes, ks, lens))`` of a coded-residual
+    section: ``head`` gains the method and partition-order fields, and
+    ``ks`` / ``lens`` are the chosen po's rice parameters and partition
+    lengths (the first is short by the predictor order)."""
+    po = int(po)
+    off = (1 << po) - 1
+    lens = _partition_layout(zp.size)[2][off : 2 * off + 1].copy()
+    lens[0] -= order
+    head.append((0b00, 2))  # residual method: rice, 4-bit parameter
+    head.append((po, 4))
+    return head, (zp[order:], ks[off : 2 * off + 1], lens)
 
 
-_PLAN_MISS = object()
-# Thread-local (ADVICE r14): the memo is scoped to one encode_flac*
-# stream — a module-global dict cleared at entry points was correct only
-# by convention and unsafe if two encodes ever interleave in one process
-# (driver-side threaded callers exist since scale_ops r14). Each thread
-# sees its own dict; entry points still reset it per stream.
-_PLAN_TLS = __import__("threading").local()
+class _FixedPlan:
+    """The cheapest FIXED subframe (order 0..2, then its rice layout)
+    of every row of a (rows, bs) block matrix coded at ``ebps[r]``
+    bits per sample: ``order``, ``cost`` (bits after the 8-bit subframe
+    header) and :meth:`spec` to emit one row."""
+
+    def __init__(self, blocks: np.ndarray, ebps: np.ndarray) -> None:
+        rows, bs = blocks.shape
+        # int32 holds every residual: samples are at most 25 bits wide
+        zp = np.zeros((3, rows, bs), dtype=np.int32)
+        zp[0] = blocks
+        zp[1, :, 1:] = np.diff(blocks, axis=1)
+        zp[2, :, 2:] = np.diff(zp[1, :, 1:], axis=1)
+        zp = _zigzag(zp)  # warm-up zeros stay zero
+        po, ks, bits = _rice_plans(
+            zp.reshape(3 * rows, bs), np.repeat(np.arange(3), rows)
+        )
+        # indexed [order, row] from here on
+        self.zp, self.po, self.ks = zp, po.reshape(3, rows), ks.reshape(3, rows, -1)
+        self.bits = bits.reshape(3, rows)
+        costs = self.bits + np.arange(3)[:, None] * ebps[None, :]
+        self.order = costs.argmin(axis=0)  # lowest order on ties
+        self.cost = costs[self.order, np.arange(rows)]
+
+    def take(self, rows: np.ndarray) -> _FixedPlan:
+        """The plan of a subset (or reordering) of the rows."""
+        p = object.__new__(_FixedPlan)
+        p.zp, p.po, p.ks = self.zp[:, rows], self.po[:, rows], self.ks[:, rows]
+        p.bits, p.order, p.cost = self.bits[:, rows], self.order[rows], self.cost[rows]
+        return p
+
+    def spec(self, row: int, blk: np.ndarray, wasted: int, ebps: int):
+        """Subframe spec of ``row`` (``blk``: its samples after
+        wasted-bits stripping)."""
+        o = int(self.order[row])
+        head = [(0, 1), (0b001000 | o, 6)]
+        # wasted-bits flag, then (wasted - 1) in unary
+        head += [(1, 1), (1, wasted)] if wasted else [(0, 1)]
+        head += [(int(v) & ((1 << ebps) - 1), ebps) for v in blk[:o]]
+        # plan bits cover the residual section (method and po included)
+        nbits = 8 + wasted + o * ebps + int(self.bits[o, row])
+        head, res = _residual_spec(
+            self.zp[o, row], o, self.po[o, row], self.ks[o, row], head
+        )
+        return head, res, nbits
 
 
-def _plan_memo() -> dict:
-    memo = getattr(_PLAN_TLS, "memo", None)
-    if memo is None:
-        memo = _PLAN_TLS.memo = {}
-    return memo
+def _wasted_shifts(blocks: np.ndarray, bps: np.ndarray) -> np.ndarray:
+    """Per row, the common trailing zero bits of its samples (the FLAC
+    wasted-bits field): trailing zeros of the OR of the row — valid in
+    two's complement — capped so at least one significant bit remains;
+    0 for an all-zero row."""
+    orv = np.bitwise_or.reduce(blocks, axis=1).tolist()
+    tz = [(v & -v).bit_length() - 1 if v else 0 for v in orv]
+    return np.minimum(tz, bps - 2)
 
 
-def _plan_memo_reset() -> None:
-    _PLAN_TLS.memo = {}
+def _subframe_specs(blocks: np.ndarray, bps: np.ndarray, plan: _FixedPlan | None = None):
+    """Subframe spec ``(head, residuals or None, bits)`` of each row:
+    CONSTANT, else FIXED at the cheapest order after wasted-bits
+    stripping. ``plan``, when given, plans the same rows unstripped;
+    rows without wasted bits reuse it and only the others are planned
+    again."""
+    const = np.all(blocks == blocks[:, :1], axis=1)
+    wasted = np.where(const, 0, _wasted_shifts(blocks, bps))
+    sub = blocks >> wasted[:, None]
+    ebps = bps - wasted
+    redo = {}  # row -> its row in replan
+    if plan is None:
+        plan = _FixedPlan(sub, ebps)
+    elif wasted.any():
+        rows = np.flatnonzero(wasted)
+        replan = _FixedPlan(sub[rows], ebps[rows])
+        redo = dict(zip(rows.tolist(), range(rows.size)))
+    specs = []
+    for r in range(len(blocks)):
+        b, w = int(bps[r]), int(wasted[r])
+        if const[r]:
+            # zero padding bit, CONSTANT, no wasted bits, the value
+            v = int(blocks[r, 0]) & ((1 << b) - 1)
+            specs.append(([(0, 1), (0b000000, 6), (0, 1), (v, b)], None, 8 + b))
+        elif r in redo:
+            specs.append(replan.spec(redo[r], sub[r], w, b - w))
+        else:
+            specs.append(plan.spec(r, sub[r], w, b - w))
+    return specs
 
 
-def _partition_plan(zz: np.ndarray, bs: int, order: int):
-    """(partition_order, [k per partition], total residual-section bits)
-    — the real-encoder decision (r12): try every partition order whose
-    2^po partitions divide the blocksize and leave the first partition
-    its `order` warm-up deficit, pick per-partition rice parameters,
-    keep the cheapest. Mixed-regime blocks (constant head, noisy tail)
-    are exactly where per-partition k beats a single k.
-
-    r14 shape: instead of a (15, n+1) quotient-bit prefix table per
-    call, pad the warm-up deficit with zeros (quotient bits of 0 are 0
-    at every k, so sums are unchanged), reshape-sum the (15, bs)
-    quotient matrix once at the DEEPEST valid partition order, and
-    derive every coarser order by pairwise halving — the same integer
-    per-partition costs, ~3x less numpy per call on the ~256-sample
-    blocks these fixtures emit. Ties across orders resolve to the
-    LOWEST po exactly as the old ascending scan did (descending loop,
-    <=). A pure-function memo keyed on the residuals removes the
-    search/emit and stereo cost/emit recomputes of the same block
-    (plan is a deterministic function of (zz, order); zz.size + order
-    recovers bs, so the key is complete). The memo is scoped to ONE
-    encode_flac*/stream call — each entry point clears it — so nothing
-    is reused across rows, runs, or bench iterations; only the
-    cost-pass/emit-pass repeats within a single stream hit."""
-    memo = _plan_memo()
-    key = (zz.tobytes(), order)
-    hit = memo.get(key, _PLAN_MISS)
-    if hit is not _PLAN_MISS:
-        return hit
-    # deepest po passing the same validity scan the ascending loop ran
-    po_max = -1
-    po = 0
-    while po <= 6:
-        nparts = 1 << po
-        if bs % nparts or (bs >> po) <= order or nparts > zz.size + order:
-            break
-        po_max = po
-        po += 1
-    best = None
-    if po_max >= 0:
-        zp = np.concatenate([np.zeros(order, dtype=np.int64), zz]) if order else zz
-        q = zp[None, :] >> _K_RANGE  # (15, bs)
-        kk1 = _K_RANGE[:, 0] + 1  # (15,)
-        nparts = 1 << po_max
-        qs = q.reshape(15, nparts, bs >> po_max).sum(axis=2)  # (15, nparts)
-        for po in range(po_max, -1, -1):
-            nparts = 1 << po
-            step = bs >> po
-            lens = np.full(nparts, step, dtype=np.int64)
-            lens[0] = step - order
-            costs = qs + kk1[:, None] * lens[None, :]
-            ks = costs.argmin(axis=0)
-            bits = 2 + 4 + 4 * nparts + int(costs[ks, np.arange(nparts)].sum())
-            if best is None or bits <= best[2]:
-                best = (po, ks.tolist(), bits)
-            if po:
-                qs = qs.reshape(15, nparts >> 1, 2).sum(axis=2)
-    memo[key] = best
-    return best
-
-
-def _wasted_shift(blk: np.ndarray, bps: int) -> int:
-    """Common trailing zero bits across the block (the FLAC wasted-bits
-    field): trailing zeros of the OR of all samples — valid in two's
-    complement, capped so at least one significant bit remains."""
-    orv = int(np.bitwise_or.reduce(blk))
-    if orv == 0:
-        return 0
-    w = (orv & -orv).bit_length() - 1
-    return min(w, bps - 2)
-
-
-def _rice_cost(samples: np.ndarray, order: int, bps: int = 16) -> int:
-    plan = _partition_plan(
-        _zigzag(_fixed_residual(samples, order)), samples.size, order
+def _rice_items(zz, ks, lens, at, values, nbits) -> np.ndarray:
+    """(value, nbits) rows of rice-coded residuals ``zz`` — partitions
+    of ``lens`` residuals at parameters ``ks`` — with each partition's
+    4-bit parameter in front of it and the fixed fields ``values`` /
+    ``nbits`` inserted before residual index ``at``. A residual's unary
+    quotient, stop bit and k-bit remainder concatenate to
+    (1 << k) | rem over (q + 1 + k) bits."""
+    k = np.repeat(ks, lens)
+    items = np.stack([(1 << k) | (zz & ((1 << k) - 1)), (zz >> k) + 1 + k], axis=1)
+    fixed = np.stack(
+        [np.concatenate([values, ks]), np.concatenate([nbits, np.full(ks.size, 4)])],
+        axis=1,
     )
-    cost = plan[2] if plan else 1 << 30
-    return cost + order * bps  # residual bits + verbatim warm-up
+    # fixed fields sort before a partition parameter at the same index
+    return np.insert(items, np.concatenate([at, np.cumsum(lens) - lens]), fixed, axis=0)
+
+
+def _emit(frames: list) -> bytes:
+    """Frame bytes from ``(header, subframe specs)`` pairs: header,
+    subframe bits zero-padded to a byte, CRC-16. The subframes of all
+    frames are packed in one :func:`_pack_bits` call: the residual
+    codes of the whole stream at once, with each subframe's fixed
+    fields, each partition's parameter and each frame's padding
+    inserted (:func:`_rice_items`)."""
+    codes, ks, lens = [_EMPTY], [_EMPTY], [_EMPTY]
+    at, hv, hn, sizes = [], [], [], []
+    pos = 0  # residual codes so far
+    for _header, subs in frames:
+        fbits = 0
+        for head, res, nbits in subs:
+            at += [pos] * len(head)
+            hv += [v for v, _ in head]
+            hn += [n for _, n in head]
+            fbits += nbits
+            if res is not None:
+                codes.append(res[0])
+                ks.append(res[1])
+                lens.append(res[2])
+                pos += res[0].size
+        pad = -fbits % 8
+        at.append(pos)
+        hv.append(0)
+        hn.append(pad)
+        sizes.append((fbits + pad) >> 3)
+    items = _rice_items(
+        np.concatenate(codes), np.concatenate(ks), np.concatenate(lens), at, hv, hn
+    )
+    body = _pack_bits(items[:, 0], items[:, 1]).tobytes()
+    out = []
+    start = 0
+    for (header, _), size in zip(frames, sizes):
+        payload = header + body[start : start + size]
+        start += size
+        out.append(payload + struct.pack(">H", _crc16(payload)))
+    return b"".join(out)
+
+
+_EMPTY = np.zeros(0, dtype=np.int64)
+
+
+def _stream_blocks(*channels: np.ndarray):
+    """(first frame number, blocks...) per run of equal-size frames:
+    the full _BLOCKSIZE frames as one matrix per channel, then the
+    short tail frame, if any."""
+    n = channels[0].size
+    full = n // _BLOCKSIZE * _BLOCKSIZE
+    if full:
+        yield (0, *(c[:full].reshape(-1, _BLOCKSIZE) for c in channels))
+    if full < n:
+        yield (full // _BLOCKSIZE, *(c[None, full:] for c in channels))
+
+
+def _streaminfo(n: int, sample_rate: int, channels: int, bps: int, md5: bytes) -> bytes:
+    """"fLaC" magic plus the STREAMINFO block (last metadata block)."""
+    bs = min(_BLOCKSIZE, n)
+    info = bs << 16 | bs  # min, max blocksize
+    info <<= 48  # min, max frame size: unknown
+    info = info << 20 | sample_rate & 0xFFFFF
+    info = info << 3 | channels - 1
+    info = info << 5 | bps - 1
+    info = info << 36 | n & ((1 << 36) - 1)
+    return b"fLaC\x80" + (34).to_bytes(3, "big") + info.to_bytes(18, "big") + md5
 
 
 _BPS_CODE = {8: 0b001, 12: 0b010, 16: 0b100, 20: 0b101, 24: 0b110}
@@ -361,190 +576,110 @@ def encode_flac(
 ) -> bytes:
     """Mono samples -> FLAC stream (STREAMINFO + frames) at any
     supported depth (8/12/16/20/24 bits, r12)."""
-    _plan_memo_reset()  # memo lives for this one stream only
     assert bps in _BPS_CODE, bps
     s = np.asarray(samples, dtype=np.int64)
     lim = 1 << (bps - 1)
     assert s.size and np.all((s >= -lim) & (s <= lim - 1))
-    n = s.size
     md5 = hashlib.md5(_pack_samples(s, bps)).digest()
-
-    out = bytearray(b"fLaC")
-    # STREAMINFO: last-metadata-block flag set, type 0, length 34
-    si = _BitWriter()
-    last_bs = n % _BLOCKSIZE or min(n, _BLOCKSIZE)
-    si.put(min(_BLOCKSIZE, n) if n >= _BLOCKSIZE else n, 16)  # min blocksize
-    si.put(min(_BLOCKSIZE, n), 16)  # max blocksize
-    si.put(0, 24)  # min frame size unknown
-    si.put(0, 24)  # max frame size unknown
-    si.put(sample_rate, 20)
-    si.put(0, 3)  # channels - 1
-    si.put(bps - 1, 5)
-    si.put(n, 36)
-    out += b"\x80" + (34).to_bytes(3, "big") + bytes(si.out) + md5
-    del last_bs
-
-    for frame_no, start in enumerate(range(0, n, _BLOCKSIZE)):
-        blk = s[start : start + _BLOCKSIZE]
-        out += _encode_frame(blk, frame_no, sample_rate, bps)
-    return bytes(out)
+    frames = []
+    for frame_no, blocks in _stream_blocks(s):
+        frames += _mono_frames(blocks, frame_no, bps)
+    return _streaminfo(s.size, sample_rate, 1, bps, md5) + _emit(frames)
 
 
 def _frame_header(bs: int, frame_no: int, ch_code: int, bps: int = 16) -> bytes:
-    w = _BitWriter()
-    w.put(0b11111111111110, 14)  # sync
-    w.put(0, 1)  # reserved
-    w.put(0, 1)  # fixed-blocksize stream
-    # block size code: 0b0110 = get 8-bit from end, 0b0111 = 16-bit
+    # block size code: 0b1000 = 256 exactly, 0b0111 = 16-bit size after
+    # the frame number
     if bs == 256:
-        w.put(0b1000, 4)  # 256 exactly
-        bs_tail = b""
+        bs_code, bs_tail = 0b1000, b""
     else:
-        w.put(0b0111, 4)
-        bs_tail = struct.pack(">H", bs - 1)
-    w.put(0b0000, 4)  # sample rate: from STREAMINFO
-    w.put(ch_code, 4)  # 0 = mono; 1 = L/R; 8/9/10 = LS/RS/MS
-    w.put(_BPS_CODE[bps], 3)
-    w.put(0, 1)  # reserved
-    header = bytes(w.out) + _utf8_coded(frame_no) + bs_tail
+        bs_code, bs_tail = 0b0111, struct.pack(">H", bs - 1)
+    word = (
+        0b11111111111110 << 18  # sync; reserved; fixed-blocksize stream
+        | bs_code << 12
+        | 0b0000 << 8  # sample rate: from STREAMINFO
+        | ch_code << 4  # 0 = mono; 1 = L/R; 8/9/10 = LS/RS/MS
+        | _BPS_CODE[bps] << 1  # then a reserved bit
+    )
+    header = word.to_bytes(4, "big") + _utf8_coded(frame_no) + bs_tail
     return header + bytes([_crc8(header)])
 
 
-def _subframe_cost(blk: np.ndarray, bps: int) -> int:
-    """Bits the cheapest supported subframe would take for `blk`."""
-    if np.all(blk == blk[0]):
-        return 8 + bps
-    return 8 + min(_rice_cost(blk, o, bps) for o in range(3))
+def _mono_frames(blocks: np.ndarray, frame_no: int, bps: int = 16) -> list:
+    """(header, subframes) of mono frames, one per row of ``blocks``,
+    numbered from ``frame_no``: each the cheapest of CONSTANT / FIXED
+    order 0..2, with wasted-bits stripping and per-partition rice
+    parameters like a real encoder."""
+    rows, bs = blocks.shape
+    specs = _subframe_specs(blocks, np.full(rows, bps))
+    return [
+        (_frame_header(bs, frame_no + r, 0, bps), [specs[r]]) for r in range(rows)
+    ]
 
 
-def _write_residuals(
-    body: _BitWriter, zz: np.ndarray, bs: int, order: int
-) -> None:
-    """Coded-residual section with the cheapest partition order (r12):
-    2^po partitions, each with its own 4-bit rice parameter — the shape
-    real encoders emit almost universally."""
-    po, ks, _bits = _partition_plan(zz, bs, order)
-    body.put(0b00, 2)  # residual method: rice, 4-bit parameter
-    body.put(po, 4)
-    put = body.put
-    lo = 0
-    for pn, k in enumerate(ks):
-        cnt = (bs >> po) - (order if pn == 0 else 0)
-        put(k, 4)
-        # one put per sample: the unary quotient, stop bit, and k-bit
-        # remainder concatenate to (1 << k) | rem over (q + 1 + k) bits
-        # (r14: a per-partition numpy scatter-pack was tried and is
-        # SLOWER — high-po blocks split into 4-sample partitions where
-        # fixed numpy overhead swamps the per-sample loop)
-        kmask = (1 << k) - 1
-        stop = 1 << k
-        for u in zz[lo : lo + cnt].tolist():
-            put(stop | (u & kmask), (u >> k) + 1 + k)
-        lo += cnt
+# Stereo channel assignments in cost-out order (ties keep the first):
+# frame channel code -> the two coded channels, as indices into
+# (left, right, side, mid). side = L - R at bps+1; mid = (L + R) >> 1.
+_STEREO = {0b0001: (0, 1), 0b1000: (0, 2), 0b1001: (2, 1), 0b1010: (3, 2)}
+_STEREO_BPS = np.array([16, 16, 17, 16])
 
 
-def _encode_subframe(body: _BitWriter, blk: np.ndarray, bps: int) -> None:
-    """Cheapest of CONSTANT / FIXED order 0..2; wasted-bits stripping
-    and per-partition rice parameters like a real encoder (r12)."""
-    if np.all(blk == blk[0]):
-        body.put(0, 1)  # zero padding bit
-        body.put(0b000000, 6)  # CONSTANT
-        body.put(0, 1)  # no wasted bits
-        body.put(int(blk[0]) & ((1 << bps) - 1), bps)
-        return
-    wasted = _wasted_shift(blk, bps)
-    sub = blk >> wasted
-    ebps = bps - wasted
-    order = min(range(3), key=lambda o: _rice_cost(sub, o, ebps))
-    body.put(0, 1)
-    body.put(0b001000 | order, 6)  # FIXED, order
-    if wasted:
-        body.put(1, 1)
-        body.unary(wasted - 1)  # spec: unary-coded (wasted - 1)
+def _stereo_frames(
+    left: np.ndarray, right: np.ndarray, frame_no: int,
+    force_code: int | None = None,
+) -> list:
+    """(header, subframes) of stereo frames, one per row of
+    ``left``/``right``, numbered from ``frame_no``. Per frame the
+    channel assignment is chosen by cost like a real encoder: cost out
+    independent L/R, left/side, right/side and mid/side (each channel
+    at its cheapest CONSTANT or FIXED subframe, before wasted-bits
+    stripping) and emit the cheapest."""
+    rows, bs = left.shape
+    chans = np.concatenate([left, right, left - right, (left + right) >> 1])
+    bps = np.repeat(_STEREO_BPS, rows)
+    plan = _FixedPlan(chans, bps)
+    const = np.all(chans == chans[:, :1], axis=1)
+    ch_cost = 8 + np.where(const, bps, plan.cost).reshape(4, rows)
+    if force_code is None:
+        opt = np.array([ch_cost[a] + ch_cost[b] for a, b in _STEREO.values()])
+        picks = [list(_STEREO)[i] for i in opt.argmin(axis=0)]
     else:
-        body.put(0, 1)
-    for v in sub[:order]:  # warm-up samples, verbatim ebps bits
-        body.put(int(v) & ((1 << ebps) - 1), ebps)
-    _write_residuals(body, _zigzag(_fixed_residual(sub, order)), blk.size, order)
-
-
-def _encode_frame(
-    blk: np.ndarray, frame_no: int, sample_rate: int, bps: int = 16
-) -> bytes:
-    header = _frame_header(blk.size, frame_no, 0, bps)
-    body = _BitWriter()
-    _encode_subframe(body, blk, bps)
-    body.pad_to_byte()
-    payload = header + bytes(body.out)
-    return payload + struct.pack(">H", _crc16(payload))
+        picks = [force_code] * rows
+    coded = np.array(
+        [c * rows + r for r, code in enumerate(picks) for c in _STEREO[code]]
+    )
+    specs = _subframe_specs(chans[coded], bps[coded], plan.take(coded))
+    return [
+        (_frame_header(bs, frame_no + r, code, 16), specs[2 * r : 2 * r + 2])
+        for r, code in enumerate(picks)
+    ]
 
 
 def _encode_frame_stereo(
     left: np.ndarray, right: np.ndarray, frame_no: int,
     force_code: int | None = None,
 ) -> bytes:
-    """Per-frame channel-assignment choice, like a real encoder: cost
-    out independent L/R, left/side, right/side, and mid/side (side =
-    L - R at bps+1; mid = (L + R) >> 1) and emit the cheapest."""
-    side = left - right
-    mid = (left + right) >> 1
-    c_l = _subframe_cost(left, 16)
-    c_r = _subframe_cost(right, 16)
-    c_s = _subframe_cost(side, 17)
-    c_m = _subframe_cost(mid, 16)
-    options = {
-        0b0001: (c_l + c_r, (left, 16), (right, 16)),
-        0b1000: (c_l + c_s, (left, 16), (side, 17)),
-        0b1001: (c_s + c_r, (side, 17), (right, 16)),
-        0b1010: (c_m + c_s, (mid, 16), (side, 17)),
-    }
-    ch_code = force_code if force_code is not None else min(
-        options, key=lambda c: options[c][0]
-    )
-    _, ch1, ch2 = options[ch_code]
-    header = _frame_header(left.size, frame_no, ch_code)
-    body = _BitWriter()
-    _encode_subframe(body, ch1[0], ch1[1])
-    _encode_subframe(body, ch2[0], ch2[1])
-    body.pad_to_byte()
-    payload = header + bytes(body.out)
-    return payload + struct.pack(">H", _crc16(payload))
+    """One stereo frame; ``force_code`` overrides the cost-out."""
+    return _emit(_stereo_frames(left[None], right[None], frame_no, force_code))
 
 
 def encode_flac_stereo(
     left: np.ndarray, right: np.ndarray, sample_rate: int
 ) -> bytes:
     """Stereo int16 -> FLAC stream with per-frame decorrelation."""
-    _plan_memo_reset()  # memo lives for this one stream only
     lft = np.asarray(left, dtype=np.int64)
     rgt = np.asarray(right, dtype=np.int64)
     assert lft.size == rgt.size and lft.size
     for s in (lft, rgt):
         assert np.all((s >= -32768) & (s <= 32767))
-    n = lft.size
-    inter = np.empty(2 * n, dtype="<i2")
+    inter = np.empty(2 * lft.size, dtype="<i2")
     inter[0::2] = lft.astype("<i2")
     inter[1::2] = rgt.astype("<i2")
     md5 = hashlib.md5(inter.tobytes()).digest()
-
-    out = bytearray(b"fLaC")
-    si = _BitWriter()
-    si.put(min(_BLOCKSIZE, n) if n >= _BLOCKSIZE else n, 16)
-    si.put(min(_BLOCKSIZE, n), 16)
-    si.put(0, 24)
-    si.put(0, 24)
-    si.put(sample_rate, 20)
-    si.put(1, 3)  # channels - 1
-    si.put(15, 5)  # bps - 1
-    si.put(n, 36)
-    out += b"\x80" + (34).to_bytes(3, "big") + bytes(si.out) + md5
-    for frame_no, start in enumerate(range(0, n, _BLOCKSIZE)):
-        out += _encode_frame_stereo(
-            lft[start : start + _BLOCKSIZE],
-            rgt[start : start + _BLOCKSIZE],
-            frame_no,
-        )
-    return bytes(out)
+    frames = []
+    for frame_no, lb, rb in _stream_blocks(lft, rgt):
+        frames += _stereo_frames(lb, rb, frame_no)
+    return _streaminfo(lft.size, sample_rate, 2, 16, md5) + _emit(frames)
 
 
 def _decode_stream(payload: bytes, want_channels: int):
@@ -901,6 +1036,31 @@ def gen_flac_stereo_payload(doc_id: int) -> bytes:
     return encode_flac_stereo(left, right, rate)
 
 
+def _lpc_spec(blk: np.ndarray, bps: int, coefs: list[int], precision: int, shift: int):
+    """LPC subframe spec (test/interop aid: the oracle keys emit FIXED
+    subframes, but the decoder supports LPC because real-world FLAC
+    files overwhelmingly use it — this writer exists so that support is
+    round-trip-TESTED, not merely claimed). Residuals use the same
+    integer prediction the decoder inverts:
+    e[i] = x[i] - ((sum c[j]*x[i-1-j]) >> shift)."""
+    order = len(coefs)
+    assert 1 <= order <= 32 and 1 <= precision <= 15 and 0 <= shift <= 15
+    psign = 1 << (precision - 1)
+    assert all(-psign <= c < psign for c in coefs)
+    x = blk.astype(np.int64)
+    pred = sum(c * x[order - 1 - j : x.size - 1 - j] for j, c in enumerate(coefs))
+    zp = np.zeros((1, x.size), dtype=np.int64)
+    zp[0, order:] = _zigzag(x[order:] - (pred >> shift))
+    po, ks, bits = _rice_plans(zp, np.array([order]))
+    head = [(0, 1), (0b100000 | (order - 1), 6), (0, 1)]  # no wasted bits
+    head += [(int(v) & ((1 << bps) - 1), bps) for v in x[:order]]
+    head += [(precision - 1, 4), (shift, 5)]
+    head += [(c & ((1 << precision) - 1), precision) for c in coefs]
+    nbits = sum(n for _, n in head) + int(bits[0])
+    head, res = _residual_spec(zp[0], order, po[0], ks[0], head)
+    return head, res, nbits
+
+
 def _encode_subframe_lpc(
     body: _BitWriter,
     blk: np.ndarray,
@@ -909,34 +1069,12 @@ def _encode_subframe_lpc(
     precision: int,
     shift: int,
 ) -> None:
-    """LPC subframe encoder (test/interop aid: the oracle keys emit
-    FIXED subframes, but the decoder supports LPC because real-world
-    FLAC files overwhelmingly use it — this writer exists so that
-    support is round-trip-TESTED, not merely claimed). Residuals use
-    the same integer prediction the decoder inverts:
-    e[i] = x[i] - ((sum c[j]*x[i-1-j]) >> shift)."""
-    order = len(coefs)
-    assert 1 <= order <= 32 and 1 <= precision <= 15 and 0 <= shift <= 15
-    psign = 1 << (precision - 1)
-    assert all(-psign <= c < psign for c in coefs)
-    body.put(0, 1)
-    body.put(0b100000 | (order - 1), 6)
-    body.put(0, 1)  # no wasted bits
-    for v in blk[:order]:
-        body.put(int(v) & ((1 << bps) - 1), bps)
-    body.put(precision - 1, 4)
-    body.put(shift, 5)
-    for c in coefs:
-        body.put(c & ((1 << precision) - 1), precision)
-    res = []
-    x = blk.astype(np.int64)
-    for i in range(order, blk.size):
-        pred = 0
-        for j, c in enumerate(coefs):
-            pred += c * int(x[i - 1 - j])
-        res.append(int(x[i]) - (pred >> shift))
-    zz = _zigzag(np.array(res, dtype=np.int64)) if res else np.array([], dtype=np.int64)
-    _write_residuals(body, zz, blk.size, order)  # r12: partitioned rice
+    """Write one LPC subframe (:func:`_lpc_spec`) into ``body``."""
+    head, (zz, ks, lens), _nbits = _lpc_spec(blk, bps, coefs, precision, shift)
+    items = _rice_items(
+        zz, ks, lens, [0] * len(head), [v for v, _ in head], [n for _, n in head]
+    )
+    body.put_many(items[:, 0], items[:, 1])
 
 
 def encode_flac_lpc(
@@ -952,36 +1090,20 @@ def encode_flac_lpc(
     decoder's LPC path is exercised END TO END — container, frame
     headers, CRCs, MD5 — under the multimodal_flac_lpc_decode hash
     oracle, not just at frame level in unit tests."""
-    _plan_memo_reset()  # memo lives for this one stream only
     s = np.asarray(samples, dtype=np.int64)
     assert s.size > len(coefs) and np.all((s >= -32768) & (s <= 32767))
-    n = s.size
     md5 = hashlib.md5(s.astype("<i2").tobytes()).digest()
-    out = bytearray(b"fLaC")
-    si = _BitWriter()
-    si.put(min(_BLOCKSIZE, n) if n >= _BLOCKSIZE else n, 16)
-    si.put(min(_BLOCKSIZE, n), 16)
-    si.put(0, 24)
-    si.put(0, 24)
-    si.put(sample_rate, 20)
-    si.put(0, 3)
-    si.put(15, 5)
-    si.put(n, 36)
-    out += b"\x80" + (34).to_bytes(3, "big") + bytes(si.out) + md5
-    for frame_no, start in enumerate(range(0, n, _BLOCKSIZE)):
+    frames = []
+    for frame_no, start in enumerate(range(0, s.size, _BLOCKSIZE)):
         blk = s[start : start + _BLOCKSIZE]
-        header = _frame_header(blk.size, frame_no, 0)
-        body = _BitWriter()
-        if blk.size > len(coefs):
-            _encode_subframe_lpc(body, blk, 16, coefs, precision, shift)
-        else:
+        if blk.size <= len(coefs):
             # a tail frame shorter than the predictor order cannot carry
             # its warm-up — per-frame subframe freedom lets it go FIXED
-            _encode_subframe(body, blk, 16)
-        body.pad_to_byte()
-        payload = header + bytes(body.out)
-        out += payload + struct.pack(">H", _crc16(payload))
-    return bytes(out)
+            frames += _mono_frames(blk[None], frame_no)
+        else:
+            spec = _lpc_spec(blk, 16, coefs, precision, shift)
+            frames.append((_frame_header(blk.size, frame_no, 0), [spec]))
+    return _streaminfo(s.size, sample_rate, 1, 16, md5) + _emit(frames)
 
 
 def formula_flac_lpc(doc_id: int):

@@ -131,4 +131,6 @@ def materialize(df: DataFrame, *, cache_ok: bool = False, eager: bool = True) ->
     _MAT_SEQ += 1
     path = os.path.join(base, f"mat_{os.getpid()}_{_MAT_SEQ:06d}")
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    # The files hold exactly df's schema: hand it to the reader rather
+    # than paying a schema-inference job per round.
+    return df.sparkSession.read.schema(df.schema).parquet(path)

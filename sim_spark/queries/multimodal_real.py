@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sim_spark.io import table
+from sim_spark.io import table, table_count
 from sim_spark.ops.bandlsh import (
     banded_canonical_oracle,
     banded_dedup,
@@ -79,8 +79,8 @@ def _doc_ids(
     2 000 documents, because at small corpora the per-task Python
     worker + Arrow overhead outweighs their decode work (measured:
     32-way WAV at sf0.1 is 2x slower than 3-way). The corpus count
-    comes from the parquet footer (metadata-only count, cached per
-    sf_dir)."""
+    is a COUNT(*) job, run once per documents file
+    (:func:`sim_spark.io.table_count`)."""
     d = table(spark, sf_dir, "documents").select("doc_id", *cols)
     try:
         slots = spark.sparkContext.defaultParallelism
@@ -88,9 +88,7 @@ def _doc_ids(
         slots = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if heavy:
         return d.repartition(slots)
-    n = _DOC_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = _DOC_COUNT_CACHE[sf_dir] = table(spark, sf_dir, "documents").count()
+    n = table_count(spark, sf_dir, "documents")
     target = max(1, min(slots, (n + 1999) // 2000))
     # A well-laid-out input already splits wide enough: adding an
     # Exchange there only REDUCES parallelism (repartition(25) over a
@@ -103,9 +101,6 @@ def _doc_ids(
     if est is not None and est >= target:
         return d
     return d.repartition(target)
-
-
-_DOC_COUNT_CACHE: dict = {}
 
 
 def _make_gen_batches(gen_fn, with_n_chars: bool = False):
@@ -1455,9 +1450,9 @@ def multimodal_flac_wasted_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     rice): the three-regime mono fixture scaled by 2^(doc_id % 4), so
     three quarters of the streams carry subframes whose samples share
     1..3 trailing zero bits. The encoder strips them (flag + unary
-    count, reduced-width residual coding — ops/flac.py:_wasted_shift),
+    count, reduced-width residual coding — ops/flac.py:_wasted_shifts),
     the decoder restores them, and since r12 BOTH sides also negotiate
-    per-block rice partition orders 0..6 (ops/flac.py:_partition_plan /
+    per-block rice partition orders 0..6 (ops/flac.py:_rice_plans /
     _read_residuals), so every payload here — and in the three r11 FLAC
     keys — exercises the two shapes real encoders emit almost
     universally. The oracle recomputes every scaled sample in integer

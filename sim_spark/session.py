@@ -10,7 +10,10 @@ runtime so we apply them defensively on every query invocation.
 from __future__ import annotations
 
 import os
+import warnings
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs every query depends on (SURVEY.md §2.12).
@@ -25,13 +28,21 @@ _RUNTIME_CONFS = {
 }
 
 
+# Runtime confs a host refused to let normalize() pin: warned about once.
+_LOCKED_WARNED: set[str] = set()
+
+
 def normalize(spark: SparkSession) -> SparkSession:
     """Pin runtime confs on a session we did not build (driver-owned)."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked by the host; queries still avoid depending on it
+        except (PySparkException, Py4JJavaError) as e:
+            # The JVM refused (conf locked by the host); queries still
+            # avoid depending on it, so go on, but say so once.
+            if k not in _LOCKED_WARNED:
+                _LOCKED_WARNED.add(k)
+                warnings.warn(f"sim_spark could not pin {k}={v}: {e}", stacklevel=2)
     return spark
 
 
