@@ -880,30 +880,7 @@ def write_payload_dir(df: DataFrame, out_dir: str) -> None:
     )
 
 
-# --- decoded-media features (round 5: the decode step is REAL) --------------
-
-WAV_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-        T.StructField("max_abs", T.LongType()),
-        T.StructField("first_sample", T.LongType()),
-        T.StructField("last_sample", T.LongType()),
-    ]
-)
-
-BMP_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("px_sum", T.LongType()),
-        T.StructField("top_row_sum", T.LongType()),
-        T.StructField("px_max", T.LongType()),
-    ]
-)
+# --- payload generators (decoded by queries/multimodal_real.py) ------------
 
 
 def gen_wav_payload(doc_id: int, n_chars: int) -> bytes:
@@ -1020,53 +997,3 @@ def gen_png_payload(doc_id: int) -> bytes:
     ch = np.arange(3, dtype=np.int64)[None, None, :]
     px = ((3 * doc_id + 11 * r + 17 * c + 31 * ch) % 256).astype(np.uint8)
     return encode_png(w, h, px.tobytes())
-
-
-def _wav_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, s = decode_wav(bytes(payload))
-            a = np.abs(s.astype(np.int64))
-            rows.append(
-                (int(doc_id), rate, len(s), int(a.sum()), int(a.max()),
-                 int(s[0]), int(s[-1]))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "sample_rate", "n_samples", "sum_abs",
-                     "max_abs", "first_sample", "last_sample"],
-        ).astype("int64")
-
-
-def _bmp_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px = decode_bmp(bytes(payload))
-            a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-            rows.append(
-                (int(doc_id), w, h, int(a.sum()), int(a[: w * 3].sum()), int(a.max()))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "px_sum", "top_row_sum", "px_max"],
-        ).astype("int64")
-
-
-def wav_features(df: DataFrame) -> DataFrame:
-    """(doc_id, payload: binary) → decoded-audio features via the real
-    RIFF parser. Arrow-batched mapInPandas: executor memory is bounded by
-    batch size × payload size, decode parallelism = partition count."""
-    return df.mapInPandas(_wav_feature_batches, WAV_FEATURES_SCHEMA)
-
-
-def bmp_features(df: DataFrame) -> DataFrame:
-    """(doc_id, payload: binary) → decoded-image features via the real
-    BMP parser (stride un-padding, bottom-up row reorder — top_row_sum is
-    wrong unless row order is decoded correctly)."""
-    return df.mapInPandas(_bmp_feature_batches, BMP_FEATURES_SCHEMA)

@@ -12,7 +12,7 @@ partitions by data volume and cannot see per-row CPU cost.
 but ONLY when its current layout under-parallelizes — a well-laid-out
 input (100 TB = many row groups/files) already splits wide, and adding
 an Exchange there would pay a shuffle for nothing (and can even reduce
-parallelism). Same guard as the decode keys' ``_doc_ids`` fan-out.
+parallelism). The decode keys' ``_doc_ids`` fan-out goes through it too.
 Callers project to the narrow column set FIRST so the Exchange moves
 only what the compute needs (guide §2: shuffle fewer bytes).
 
@@ -73,15 +73,16 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin ``df`` across all task slots iff its estimated scan
-    parallelism is below ``min_partitions`` (default: the session's
-    ``defaultParallelism``). No-op under Spark Connect (no JVM access)."""
+    """Round-robin ``df`` into ``min_partitions`` partitions iff its
+    estimated scan parallelism is below that target. The target
+    defaults to the session's ``defaultParallelism`` (its task slots)
+    and is clamped to it. No-op under Spark Connect (no JVM access)."""
     try:
         slots = df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # Spark Connect: no sparkContext — leave layout alone
         _warn_once("no sparkContext (Spark Connect)")
         return df
-    target = min_partitions or slots
+    target = slots if min_partitions is None else min(min_partitions, slots)
     est = _estimated_scan_partitions(df)
     if est is None or est >= target:
         return df

@@ -1,29 +1,33 @@
-"""Multimodal queries with a REAL decode step (round 5).
+"""Multimodal queries with a REAL decode step.
 
-The payloads are genuine media files — playable mono PCM16 WAV and
-viewable 24-bpp BMP — synthesized deterministically from ``doc_id`` /
-``n_chars`` by ops.multimodal's encoders, then decoded back by its
-struct-level parsers inside Arrow-batched ``mapInPandas``. Because the
-synthesis formula is integer arithmetic, DuckDB can recompute the
-decoded features independently (unnest(range(...))), so the whole
-encode → container bytes → parse → feature pipeline is hash-oracled:
-if the BMP parser mis-handled stride padding or bottom-up row order,
-``top_row_sum`` would mismatch; if the WAV chunk walk mis-read the data
-chunk, ``sum_abs``/``first_sample``/``last_sample`` would.
+Every key here is per-document work. A generator synthesizes one real
+media or container file per document from ``doc_id`` (the WAV keys also
+read ``n_chars``); a row function parses it back with the struct-level
+decoders under ``sim_spark.ops`` and returns that document's integer
+feature rows. :func:`_decode_docs` is the one path every key takes:
+per Arrow batch it runs generate → decode → rows for each document
+inside ONE ``mapInPandas``, so payload bytes never cross a process
+boundary. Because the synthesis formulas are integer arithmetic, DuckDB
+recomputes the decoded features independently (unnest(range(...))),
+and the whole encode → container bytes → parse → feature pipeline is
+hash-oracled: if the BMP parser mis-handled stride padding or bottom-up
+row order, ``top_row_sum`` would mismatch; if the WAV chunk walk
+mis-read the data chunk, ``sum_abs``/``first_sample``/``last_sample``
+would.
 
 100 TB shape: payload synthesis stands in for a parquet binary column
-scan; decode is per-row independent work in mapInPandas — executor
-memory bounded by Arrow batch size × payload size. The only shuffle
-before the (tiny) feature frame is :func:`_doc_ids`' round-robin of
-the 8-byte id frame, which pins decode parallelism to the machine
-instead of the input's row-group layout (r11); payload bytes
-themselves are never shuffled.
+scan; decode is per-row independent work — executor memory bounded by
+Arrow batch size × payload size. The only shuffle before the (tiny)
+feature frame is :func:`_doc_ids`' round-robin of the 8-byte id frame,
+which pins decode parallelism to the machine instead of the input's
+row-group layout; payload bytes themselves are never shuffled.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,131 +42,95 @@ from sim_spark.ops.multimodal import (
     SIN64A,
     SIN64B,
     SIN64C,
-    bmp_features,
     decode_bmp,
     decode_png,
+    decode_wav,
     gen_bmp_payload,
     gen_png_payload,
     gen_png_twin_payload,
     gen_wav_payload,
     gen_wav_tone_payload,
-    wav_features,
 )
+from sim_spark.ops.spread import spread
 from sim_spark.registry import query
 
-_PAYLOAD_SCHEMA = "doc_id long, payload binary"
+_SIG_SCHEMA = "doc_id long, b0 long, b1 long, b2 long, b3 long"
 
 
 def _doc_ids(
-    spark: SparkSession, sf_dir: str, *cols, heavy: bool = False
+    spark: SparkSession, sf_dir: str, *cols: str, heavy: bool = False
 ) -> DataFrame:
-    """The decode keys' input frame, spread across all task slots.
+    """The decode keys' input frame, fanned out by :func:`spread`.
 
     Decode parallelism equals partition count, and a small-fixture
     documents.parquet is often ONE row group — unsplittable, so the
     whole synthesize+decode chain would run in a single task (measured:
     22 s for the jpeg key at sf1 on local[32], all serial). The frame
-    repartitioned here holds only doc_id (+ tiny int columns) BEFORE
-    payload synthesis, so the Exchange moves ~8 bytes/row at ANY scale
-    — the payloads themselves are never shuffled. At 100 TB the same
-    reasoning holds: round-robin the id frame, synthesize/decode
-    payloads after, stay narrow from there on.
+    spread here holds only doc_id (+ tiny int columns) BEFORE payload
+    synthesis, so the Exchange moves ~8 bytes/row at ANY scale — the
+    payloads themselves are never shuffled.
 
-    The fan-out is SIZED, not fixed: measured at sf0.1, a blanket
-    32-way repartition of 5 000 docs costs more in per-task Python
-    worker + Arrow batch overhead than cheap decodes (WAV) save, while
-    the expensive decode (JPEG) still wins 3x from full fan-out. So the
-    fan-out is proportional to per-row decode cost: HEAVY codecs
-    (entropy-coded: JPEG, FLAC) take every task slot at any corpus size
-    — measured 3x at sf0.1 and 10x at sf1 over the serial scan — while
-    LIGHT decodes (struct parsers: WAV/BMP/PNG/tone) take ~1 task per
+    The fan-out target is proportional to per-row decode cost: HEAVY
+    codecs (entropy-coded: JPEG, FLAC, ...) target every task slot —
+    measured 3x at sf0.1 and 10x at sf1 over the serial scan — while
+    LIGHT decodes (struct parsers: WAV/BMP/PNG/...) target ~1 task per
     2 000 documents, because at small corpora the per-task Python
     worker + Arrow overhead outweighs their decode work (measured:
-    32-way WAV at sf0.1 is 2x slower than 3-way). The corpus count
-    is a COUNT(*) job, run once per documents file
-    (:func:`sim_spark.io.table_count`)."""
+    32-way WAV at sf0.1 is 2x slower than 3-way). The corpus count is a
+    COUNT(*) job, run once per documents file
+    (:func:`sim_spark.io.table_count`). Either way ``spread`` adds the
+    round-robin Exchange only when the scan's estimated split count is
+    below the target: a well-laid-out input already splits wide enough,
+    and an Exchange there would only pay a shuffle for nothing."""
     d = table(spark, sf_dir, "documents").select("doc_id", *cols)
-    try:
-        slots = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        slots = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if heavy:
-        return d.repartition(slots)
+        return spread(d)
     n = table_count(spark, sf_dir, "documents")
-    target = max(1, min(slots, (n + 1999) // 2000))
-    # A well-laid-out input already splits wide enough: adding an
-    # Exchange there only REDUCES parallelism (repartition(25) over a
-    # 32-split scan) and pays a shuffle for nothing. r15: probe via the
-    # optimizer's size estimate (ops/spread), not df.rdd — the RDD
-    # conversion physically planned the frame per call.
-    from sim_spark.ops.spread import _estimated_scan_partitions
-
-    est = _estimated_scan_partitions(d)
-    if est is not None and est >= target:
-        return d
-    return d.repartition(target)
+    return spread(d, (n + 1999) // 2000)
 
 
-def _make_gen_batches(gen_fn, with_n_chars: bool = False):
-    """One mapInPandas payload-synthesis wrapper for every generator
-    (r9 review: the per-format copies only differed in the gen call)."""
+def _decode_docs(
+    spark: SparkSession,
+    sf_dir: str,
+    gen: Callable[..., bytes],
+    row_fn: Callable[[int, bytes], list[tuple]],
+    schema: str,
+    *cols: str,
+    heavy: bool = False,
+) -> DataFrame:
+    """The one decode path of every key: for each document,
+    ``payload = gen(doc_id, *cols)`` then ``row_fn(doc_id, payload)``,
+    which returns that document's rows as tuples in ``schema``'s column
+    order (every column is ``long``).
+
+    Synthesis and decode run in ONE Arrow-batched mapInPandas over
+    :func:`_doc_ids`' frame. A separate synthesis map would serialize
+    every payload Python→JVM→Python before the parse — a round trip a
+    production pipeline reading payloads from a binary scan never pays.
+    Fusing the two maps measured 0.65 → 0.46 s median on
+    multimodal_jpeg_decode at sf0.1 on 32 cores."""
+    names = [field.split()[0] for field in schema.split(",")]
 
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if with_n_chars:
-                payloads = [
-                    gen_fn(int(d), int(n))
-                    for d, n in zip(pdf["doc_id"], pdf["n_chars"])
-                ]
-            else:
-                payloads = [gen_fn(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
+        for batch in batches:
+            rows = []
+            for doc_id, *extra in zip(*(batch[c] for c in ("doc_id", *cols))):
+                doc_id = int(doc_id)
+                payload = gen(doc_id, *map(int, extra))
+                rows.extend(row_fn(doc_id, payload))
+            yield pd.DataFrame(rows, columns=names).astype("int64")
 
-    return _batches
+    d = _doc_ids(spark, sf_dir, *cols, heavy=heavy)
+    return d.mapInPandas(_batches, schema)
 
 
-class _FusedPayloads:
-    """The synthesized-payload 'frame' of every decode key, fused (r14,
-    guide §4: minimize what crosses the Python boundary).
-
-    Old shape: ``d.mapInPandas(_gen_X, _PAYLOAD_SCHEMA)`` materialized a
-    real intermediate DataFrame and the decode was a SECOND mapInPandas,
-    so every payload byte crossed Python→JVM→Python (Arrow-serialized
-    twice) before being parsed. A production pipeline reads payloads
-    from a parquet/binaryFile scan and pays exactly ONE JVM→Python
-    crossing; the extra round trip existed only because the fixture
-    payloads are synthesized in Python in the first place. This adapter
-    keeps each key's code shape — ``payloads.mapInPandas(feature_fn,
-    schema)`` — but compiles to ONE fused mapInPandas whose Python side
-    runs synthesize→decode per Arrow batch: plan diff "2 MapInPandas →
-    1", and the payload bytes now cross no process boundary at all.
-    Measured on multimodal_jpeg_decode at sf0.1/32 cores: 0.65 → 0.46 s
-    median (interleaved A/B, 5-run medians); every decode key inherits.
-    Decode work, output rows, and schema are unchanged."""
-
-    def __init__(self, d: DataFrame, gen_batches):
-        self._d, self._gen = d, gen_batches
-
-    def mapInPandas(self, feature_batches, schema) -> DataFrame:
-        gen = self._gen
-
-        def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            return feature_batches(gen(batches))
-
-        return self._d.mapInPandas(_fused, schema)
-
-
-def _fused_payloads(d: DataFrame, gen_batches) -> _FusedPayloads:
-    return _FusedPayloads(d, gen_batches)
-
-
-_gen_wav_batches = _make_gen_batches(gen_wav_payload, with_n_chars=True)
-_gen_bmp_batches = _make_gen_batches(gen_bmp_payload)
+def _wav_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    rate, s = decode_wav(payload)
+    a = np.abs(s.astype(np.int64))
+    return [
+        (doc_id, rate, len(s), int(a.sum()), int(a.max()),
+         int(s[0]), int(s[-1]))
+    ]
 
 
 @query(
@@ -189,9 +157,12 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplitude features. The oracle recomputes the features from the
     synthesis formula — it never sees the bytes, so a decode bug cannot
     cancel out."""
-    d = _doc_ids(spark, sf_dir, "n_chars")
-    payloads = _fused_payloads(d, _gen_wav_batches)
-    return wav_features(payloads)
+    return _decode_docs(
+        spark, sf_dir, gen_wav_payload, _wav_rows,
+        "doc_id long, sample_rate long, n_samples long, sum_abs long, "
+        "max_abs long, first_sample long, last_sample long",
+        "n_chars",
+    )
 
 
 @query(
@@ -221,31 +192,24 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel statistics. ``top_row_sum`` pins row ORDER: BMP stores rows
     bottom-up, so a parser that skips the reorder matches ``px_sum`` but
     fails this column."""
-    d = _doc_ids(spark, sf_dir, F.lit(0).alias("n_chars"))
-    payloads = _fused_payloads(d, _gen_bmp_batches)
-    return bmp_features(payloads)
+    return _decode_docs(
+        spark, sf_dir, gen_bmp_payload, _bmp_rows,
+        "doc_id long, width long, height long, px_sum long, "
+        "top_row_sum long, px_max long",
+    )
 
 
-def _wav_rms_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from sim_spark.ops.multimodal import decode_wav
-
-    for pdf in batches:
-        rows = {"doc_id": [], "win": [], "n_smp": [], "sumsq": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, smp = decode_wav(bytes(payload))
-            s = smp.astype(np.int64)
-            n = len(s)
-            qsize = n // 4
-            q = np.minimum(np.arange(n) // qsize, 3)
-            for k in range(4):
-                seg = s[q == k]
-                rows["doc_id"].append(int(doc_id))
-                rows["win"].append(k)
-                rows["n_smp"].append(int(len(seg)))
-                rows["sumsq"].append(int(np.sum(seg * seg)))
-        yield pd.DataFrame(rows)
+def _wav_rms_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    _rate, smp = decode_wav(payload)
+    s = smp.astype(np.int64)
+    n = len(s)
+    qsize = n // 4
+    q = np.minimum(np.arange(n) // qsize, 3)
+    rows = []
+    for k in range(4):
+        seg = s[q == k]
+        rows.append((doc_id, k, int(len(seg)), int(np.sum(seg * seg))))
+    return rows
 
 
 @query(
@@ -273,10 +237,10 @@ def multimodal_wav_rms_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 rows/doc. The oracle recomputes every window from the synthesis
     formula, so a segmentation bug (window boundaries, remainder
     handling) cannot hide."""
-    d = _doc_ids(spark, sf_dir, "n_chars")
-    payloads = _fused_payloads(d, _gen_wav_batches)
-    feats = payloads.mapInPandas(
-        _wav_rms_batches, "doc_id long, win long, n_smp long, sumsq long"
+    feats = _decode_docs(
+        spark, sf_dir, gen_wav_payload, _wav_rms_rows,
+        "doc_id long, win long, n_smp long, sumsq long",
+        "n_chars",
     )
     return feats.select(
         "doc_id",
@@ -291,61 +255,55 @@ def multimodal_wav_rms_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "win")
 
 
-def _bmp_tile_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from sim_spark.ops.multimodal import decode_bmp
-
-    for pdf in batches:
-        rows = {"doc_id": [], "quad": [], "n_px": [], "val_sum": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px = decode_bmp(bytes(payload))
-            a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
-            r_hi = np.arange(h) >= h // 2
-            c_hi = np.arange(w) >= w // 2
-            quad = (r_hi[:, None].astype(int) * 2 + c_hi[None, :].astype(int))
-            for q in range(4):
-                mask = quad == q
-                rows["doc_id"].append(int(doc_id))
-                rows["quad"].append(q)
-                rows["n_px"].append(int(mask.sum()))
-                rows["val_sum"].append(int(a[mask].sum()))
-        yield pd.DataFrame(rows)
+def _bmp_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px = decode_bmp(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    return [
+        (doc_id, w, h, int(a.sum()), int(a[: w * 3].sum()), int(a.max()))
+    ]
 
 
-def _make_dhash_batches(decode_fn):
-    """Container-generic dhash signature extractor: decode via
+def _bmp_tile_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px = decode_bmp(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
+    r_hi = np.arange(h) >= h // 2
+    c_hi = np.arange(w) >= w // 2
+    quad = (r_hi[:, None].astype(int) * 2 + c_hi[None, :].astype(int))
+    rows = []
+    for q in range(4):
+        mask = quad == q
+        rows.append((doc_id, q, int(mask.sum()), int(a[mask].sum())))
+    return rows
+
+
+def _make_dhash_rows(decode_fn):
+    """Container-generic dhash signature row function: decode via
     ``decode_fn`` (BMP or PNG parser — both return top-down (w, h,
     pixel-bytes)), grayscale by exact channel sum, nearest-neighbor
     sample to the canonical 8x9 grid, pack the 64
     brighter-to-the-right bits as 4x16-bit band values."""
-    import numpy as np
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_fn(bytes(payload))
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
-                gray = a.sum(axis=2)  # exact int channel sum, 0..765
-                # nearest-neighbor "resize" to the canonical 8x9 dhash grid
-                ri = (np.arange(8) * h) // 8
-                cj = (np.arange(9) * w) // 9
-                g = gray[np.ix_(ri, cj)]  # 8 rows x 9 cols
-                # 64 bits, row-major: bit(r,c) = brighter-to-the-right
-                flat = (g[:, 1:] > g[:, :-1]).astype(np.int64).flatten()
-                rows["doc_id"].append(int(doc_id))
-                for k in range(4):
-                    rows[f"b{k}"].append(
-                        int(sum(int(flat[16 * k + i]) << i for i in range(16)))
-                    )
-            yield pd.DataFrame(rows)
+    def _rows(doc_id: int, payload: bytes) -> list[tuple]:
+        w, h, px = decode_fn(payload)
+        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
+        gray = a.sum(axis=2)  # exact int channel sum, 0..765
+        # nearest-neighbor "resize" to the canonical 8x9 dhash grid
+        ri = (np.arange(8) * h) // 8
+        cj = (np.arange(9) * w) // 9
+        g = gray[np.ix_(ri, cj)]  # 8 rows x 9 cols
+        # 64 bits, row-major: bit(r,c) = brighter-to-the-right
+        flat = (g[:, 1:] > g[:, :-1]).astype(np.int64).flatten()
+        bands = [
+            int(sum(int(flat[16 * k + i]) << i for i in range(16)))
+            for k in range(4)
+        ]
+        return [(doc_id, *bands)]
 
-    return _batches
+    return _rows
 
 
-_bmp_dhash_batches = _make_dhash_batches(decode_bmp)
-_png_dhash_batches = _make_dhash_batches(decode_png)
+_bmp_dhash_rows = _make_dhash_rows(decode_bmp)
+_png_dhash_rows = _make_dhash_rows(decode_png)
 
 
 _IMG_SIG_CTES = """dims AS (
@@ -416,10 +374,8 @@ def bmp_dhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BMP key's signature frame (doc_id, b0..b3) — exposed so the
     band_recall diagnostic (tests/test_scale_ops.py, SCALE.md §21) can
     measure the capped generator against the exact pair set."""
-    d = _doc_ids(spark, sf_dir, F.lit(0).alias("n_chars"))
-    payloads = _fused_payloads(d, _gen_bmp_batches)
-    return payloads.mapInPandas(
-        _bmp_dhash_batches, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    return _decode_docs(
+        spark, sf_dir, gen_bmp_payload, _bmp_dhash_rows, _SIG_SCHEMA
     )
 
 
@@ -449,29 +405,15 @@ def dedup_image_dhash_megadup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return banded_canonical(bmp_dhash_sig(spark, sf_dir), hd_max=4)
 
 
-_gen_png_batches = _make_gen_batches(gen_png_payload)
-_gen_png_twin_batches = _make_gen_batches(gen_png_twin_payload)
-
-
-def _png_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px = decode_png(bytes(payload))
-            a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
-            rows.append(
-                (
-                    int(doc_id), w, h, int(a.sum()), int(a[0].sum()),
-                    int(a[:, 0].sum()), int(a.max()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "px_sum", "top_row_sum",
-                     "left_col_sum", "px_max"],
-        ).astype("int64")
+def _png_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px = decode_png(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
+    return [
+        (
+            doc_id, w, h, int(a.sum()), int(a[0].sum()),
+            int(a[:, 0].sum()), int(a.max()),
+        )
+    ]
 
 
 @query(
@@ -510,10 +452,8 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unfilter, chunk-walk, or inflate-reassembly bug cannot cancel out.
     Same 100 TB shape as the BMP/WAV twins: per-row mapInPandas decode,
     no shuffle until the tiny feature frame."""
-    d = _doc_ids(spark, sf_dir, F.lit(0).alias("n_chars"))
-    payloads = _fused_payloads(d, _gen_png_batches)
-    return payloads.mapInPandas(
-        _png_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_png_payload, _png_rows,
         "doc_id long, width long, height long, px_sum long, "
         "top_row_sum long, left_col_sum long, px_max long",
     )
@@ -540,19 +480,12 @@ def dedup_image_dhash_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def png_dhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PNG twin's signature frame — see :func:`bmp_dhash_sig`."""
-    d = _doc_ids(spark, sf_dir, F.lit(0).alias("n_chars"))
-    payloads = _fused_payloads(d, _gen_png_twin_batches)
-    return payloads.mapInPandas(
-        _png_dhash_batches, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    return _decode_docs(
+        spark, sf_dir, gen_png_twin_payload, _png_dhash_rows, _SIG_SCHEMA
     )
 
 
-_gen_tone_batches = _make_gen_batches(gen_wav_tone_payload)
-
-
-def _wav_fingerprint_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _wav_fingerprint_rows(doc_id: int, payload: bytes) -> list[tuple]:
     """Decode each WAV and emit its audio fingerprint as 4 band values:
     window the 512 samples into 32 frames of 16, take per-frame
     sum(|s|), set derivative bit w when frame w+1 is louder than frame w
@@ -560,30 +493,23 @@ def _wav_fingerprint_batches(
     reduced to its integer-exact core — and fold two coarse-quantized
     frame energies per band into bits 8..15 of the bucket value (the r8
     entropy booster; see the query docstring)."""
-    import numpy as np
-
-    from sim_spark.ops.multimodal import decode_wav
-
-    for pdf in batches:
-        rows = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, s = decode_wav(bytes(payload))
-            e = np.abs(s.astype(np.int64)).reshape(32, 16).sum(axis=1)
-            bits = (e[1:] > e[:-1]).astype(np.int64)  # 31 bits
-            rows["doc_id"].append(int(doc_id))
-            for k in range(4):
-                seg = bits[8 * k : 8 * k + 8]
-                b = int(sum(int(seg[j]) << j for j in range(len(seg))))
-                # entropy booster (r8 sf1 rehearsal): derivative bits
-                # alone collapse into a few giant LSH buckets on
-                # periodic signals; fold in two coarse-quantized window
-                # energies per band. Step 4096 vs the <=±48 per-window
-                # perturbation of a true near-dup keeps dup pairs in the
-                # same bucket (boundary-straddle ~1%/window).
-                q1 = min(int(e[8 * k]) // 4096, 15)
-                q2 = min(int(e[8 * k + 4]) // 4096, 15)
-                rows[f"b{k}"].append(b | (q1 << 8) | (q2 << 12))
-        yield pd.DataFrame(rows)
+    _rate, s = decode_wav(payload)
+    e = np.abs(s.astype(np.int64)).reshape(32, 16).sum(axis=1)
+    bits = (e[1:] > e[:-1]).astype(np.int64)  # 31 bits
+    bands = []
+    for k in range(4):
+        seg = bits[8 * k : 8 * k + 8]
+        b = int(sum(int(seg[j]) << j for j in range(len(seg))))
+        # entropy booster (r8 sf1 rehearsal): derivative bits
+        # alone collapse into a few giant LSH buckets on
+        # periodic signals; fold in two coarse-quantized window
+        # energies per band. Step 4096 vs the <=±48 per-window
+        # perturbation of a true near-dup keeps dup pairs in the
+        # same bucket (boundary-straddle ~1%/window).
+        q1 = min(int(e[8 * k]) // 4096, 15)
+        q2 = min(int(e[8 * k + 4]) // 4096, 15)
+        bands.append(b | (q1 << 8) | (q2 << 12))
+    return [(doc_id, *bands)]
 
 
 def _lut(vals: list[int]) -> str:
@@ -714,10 +640,8 @@ def dedup_audio_fingerprint_metricband(
 
 def wav_fingerprint_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The audio key's signature frame — see :func:`bmp_dhash_sig`."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_tone_batches)
-    return payloads.mapInPandas(
-        _wav_fingerprint_batches, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    return _decode_docs(
+        spark, sf_dir, gen_wav_tone_payload, _wav_fingerprint_rows, _SIG_SCHEMA
     )
 
 
@@ -750,14 +674,10 @@ def multimodal_bmp_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every (row, col, channel) byte from the synthesis
     formula — catches it. Tiling is the downsample-for-vision-models
     preprocessing shape; per-row mapInPandas decode, 4 rows/doc out."""
-    d = _doc_ids(spark, sf_dir, F.lit(0).alias("n_chars"))
-    payloads = _fused_payloads(d, _gen_bmp_batches)
-    return (
-        payloads.mapInPandas(
-            _bmp_tile_batches, "doc_id long, quad long, n_px long, val_sum long"
-        )
-        .orderBy("doc_id", "quad")
-    )
+    return _decode_docs(
+        spark, sf_dir, gen_bmp_payload, _bmp_tile_rows,
+        "doc_id long, quad long, n_px long, val_sum long",
+    ).orderBy("doc_id", "quad")
 
 
 # --- JPEG: entropy-coded media decode (r11, closing the r10 #1 gap) ---------
@@ -768,43 +688,28 @@ from sim_spark.ops.jpeg import (  # noqa: E402
     gen_jpeg_payload,
 )
 
-_gen_jpeg_batches = _make_gen_batches(gen_jpeg_payload)
-_gen_jpeg_dc_batches = _make_gen_batches(gen_jpeg_dc_payload)
 
-
-def _jpeg_coeff_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _jpeg_coeff_rows(doc_id: int, payload: bytes) -> list[tuple]:
     """Decode each JPEG and emit entropy-layer features computed from
     the RECOVERED quantized coefficients (decode_jpeg's exact output):
     a zigzag-position-weighted checksum catches de-zigzag or run-length
     errors; dc_sum catches DC-prediction / restart-reset errors."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px, coeffs = decode_jpeg(bytes(payload))
-            n = coeffs.shape[0]
-            b = np.arange(n, dtype=np.int64)[:, None]
-            z = np.arange(64, dtype=np.int64)[None, :]
-            rows.append(
-                (
-                    int(doc_id),
-                    w,
-                    h,
-                    n,
-                    int(coeffs[:, 0].sum()),
-                    int((coeffs[:, 1:] != 0).sum()),
-                    int(np.abs(coeffs).sum()),
-                    int(((z + 64 * b) * coeffs).sum()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_blocks", "dc_sum",
-                     "ac_nonzero", "abs_sum", "zz_checksum"],
-        ).astype("int64")
+    w, h, px, coeffs = decode_jpeg(payload)
+    n = coeffs.shape[0]
+    b = np.arange(n, dtype=np.int64)[:, None]
+    z = np.arange(64, dtype=np.int64)[None, :]
+    return [
+        (
+            doc_id,
+            w,
+            h,
+            n,
+            int(coeffs[:, 0].sum()),
+            int((coeffs[:, 1:] != 0).sum()),
+            int(np.abs(coeffs).sum()),
+            int(((z + 64 * b) * coeffs).sum()),
+        )
+    ]
 
 
 @query(
@@ -857,32 +762,18 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     math) plus property tests against a naive O(N^4) reference DCT.
     100 TB shape: per-row mapInPandas decode, no shuffle until the
     8-column feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_batches)
-    return payloads.mapInPandas(
-        _jpeg_coeff_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_jpeg_payload, _jpeg_coeff_rows,
         "doc_id long, width long, height long, n_blocks long, dc_sum long, "
         "ac_nonzero long, abs_sum long, zz_checksum long",
+        heavy=True,
     )
 
 
-def _jpeg_pixel_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px, _ = decode_jpeg(bytes(payload))
-            a = px.astype(np.int64)
-            rows.append(
-                (int(doc_id), w, h, int(a.sum()), int(a.min()), int(a.max()))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "px_sum", "px_min", "px_max"],
-        ).astype("int64")
+def _jpeg_pixel_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px, _ = decode_jpeg(payload)
+    a = px.astype(np.int64)
+    return [(doc_id, w, h, int(a.sum()), int(a.min()), int(a.max()))]
 
 
 @query(
@@ -917,12 +808,11 @@ def multimodal_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     `px_sum`; together with `multimodal_jpeg_decode` (entropy layer,
     general coefficients) the full decode path is covered by exact
     oracles despite JPEG's lossiness."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_dc_batches)
-    return payloads.mapInPandas(
-        _jpeg_pixel_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_jpeg_dc_payload, _jpeg_pixel_rows,
         "doc_id long, width long, height long, px_sum long, "
         "px_min long, px_max long",
+        heavy=True,
     )
 
 
@@ -940,38 +830,23 @@ def _gen_jpeg_progressive_payload(doc_id: int) -> bytes:
     return encode_jpeg_progressive_from_coeffs(wb, hb, coeffs)
 
 
-_gen_jpeg_prog_batches = _make_gen_batches(_gen_jpeg_progressive_payload)
-
-
-def _jpeg_prog_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px, coeffs = decode_jpeg_progressive(bytes(payload))
-            n = coeffs.shape[0]
-            b = np.arange(n, dtype=np.int64)[:, None]
-            z = np.arange(64, dtype=np.int64)[None, :]
-            rows.append(
-                (
-                    int(doc_id),
-                    w,
-                    h,
-                    n,
-                    int(coeffs[:, 0].sum()),
-                    int((coeffs[:, 1:] != 0).sum()),
-                    int(np.abs(coeffs).sum()),
-                    int(((z + 64 * b) * coeffs).sum()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_blocks", "dc_sum",
-                     "ac_nonzero", "abs_sum", "zz_checksum"],
-        ).astype("int64")
+def _jpeg_prog_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px, coeffs = decode_jpeg_progressive(payload)
+    n = coeffs.shape[0]
+    b = np.arange(n, dtype=np.int64)[:, None]
+    z = np.arange(64, dtype=np.int64)[None, :]
+    return [
+        (
+            doc_id,
+            w,
+            h,
+            n,
+            int(coeffs[:, 0].sum()),
+            int((coeffs[:, 1:] != 0).sum()),
+            int(np.abs(coeffs).sum()),
+            int(((z + 64 * b) * coeffs).sum()),
+        )
+    ]
 
 
 @query(
@@ -1020,12 +895,11 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
     bit-exactly; any EOB-run, point-transform, or correction-bit bug
     lands in zz_checksum. 100 TB shape unchanged: per-row Arrow-batched
     mapInPandas decode, no shuffle until the feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_prog_batches)
-    return payloads.mapInPandas(
-        _jpeg_prog_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_jpeg_progressive_payload, _jpeg_prog_rows,
         "doc_id long, width long, height long, n_blocks long, dc_sum long, "
         "ac_nonzero long, abs_sum long, zz_checksum long",
+        heavy=True,
     )
 
 
@@ -1033,28 +907,14 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
 
 from sim_spark.ops.flac import decode_flac, gen_flac_payload  # noqa: E402
 
-_gen_flac_batches = _make_gen_batches(gen_flac_payload)
 
-
-def _flac_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, s = decode_flac(bytes(payload))
-            a = s.astype(np.int64)
-            rows.append(
-                (int(doc_id), rate, len(s), int(np.abs(a).sum()),
-                 int(np.abs(a).max()), int(a[0]), int(a[-1]))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "sample_rate", "n_samples", "sum_abs",
-                     "max_abs", "first_sample", "last_sample"],
-        ).astype("int64")
+def _flac_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    rate, s = decode_flac(payload)
+    a = s.astype(np.int64)
+    return [
+        (doc_id, rate, len(s), int(np.abs(a).sum()),
+         int(np.abs(a).max()), int(a[0]), int(a[-1]))
+    ]
 
 
 @query(
@@ -1103,12 +963,11 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     without ever seeing the bytes. Same 100 TB shape as the other
     codecs: per-row Arrow-batched mapInPandas, no shuffle until the
     tiny feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_flac_batches)
-    return payloads.mapInPandas(
-        _flac_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_flac_payload, _flac_rows,
         "doc_id long, sample_rate long, n_samples long, sum_abs long, "
         "max_abs long, first_sample long, last_sample long",
+        heavy=True,
     )
 
 
@@ -1119,39 +978,24 @@ from sim_spark.ops.jpeg import (  # noqa: E402
     gen_jpeg_color_payload,
 )
 
-_gen_jpeg_color_batches = _make_gen_batches(gen_jpeg_color_payload)
 
+def _jpeg_color_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, rgb, (y, cb, cr) = decode_jpeg_color(payload)
 
-def _jpeg_color_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
+    def chk(c):
+        b = np.arange(c.shape[0], dtype=np.int64)[:, None]
+        z = np.arange(64, dtype=np.int64)[None, :]
+        return int(((z + 64 * b) * c).sum())
 
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb, (y, cb, cr) = decode_jpeg_color(bytes(payload))
-
-            def chk(c):
-                b = np.arange(c.shape[0], dtype=np.int64)[:, None]
-                z = np.arange(64, dtype=np.int64)[None, :]
-                return int(((z + 64 * b) * c).sum())
-
-            rows.append(
-                (
-                    int(doc_id), w, h, y.shape[0] // 4,
-                    int(y[:, 0].sum()), int(cb[:, 0].sum()), int(cr[:, 0].sum()),
-                    int((y[:, 1:] != 0).sum() + (cb[:, 1:] != 0).sum()
-                        + (cr[:, 1:] != 0).sum()),
-                    chk(y), chk(cb), chk(cr),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_mcus", "y_dc_sum",
-                     "cb_dc_sum", "cr_dc_sum", "ac_nonzero",
-                     "y_checksum", "cb_checksum", "cr_checksum"],
-        ).astype("int64")
+    return [
+        (
+            doc_id, w, h, y.shape[0] // 4,
+            int(y[:, 0].sum()), int(cb[:, 0].sum()), int(cr[:, 0].sum()),
+            int((y[:, 1:] != 0).sum() + (cb[:, 1:] != 0).sum()
+                + (cr[:, 1:] != 0).sum()),
+            chk(y), chk(cb), chk(cr),
+        )
+    ]
 
 
 @query(
@@ -1251,13 +1095,12 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent checksums. Pixel/color-conversion math is pinned by
     tests (DC-only gray color images decode to exact constants).
     Per-row Arrow-batched mapInPandas, no shuffle."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_color_batches)
-    return payloads.mapInPandas(
-        _jpeg_color_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_jpeg_color_payload, _jpeg_color_rows,
         "doc_id long, width long, height long, n_mcus long, y_dc_sum long, "
         "cb_dc_sum long, cr_dc_sum long, ac_nonzero long, y_checksum long, "
         "cb_checksum long, cr_checksum long",
+        heavy=True,
     )
 
 
@@ -1268,30 +1111,16 @@ from sim_spark.ops.flac import (  # noqa: E402
     gen_flac_stereo_payload,
 )
 
-_gen_flac_stereo_batches = _make_gen_batches(gen_flac_stereo_payload)
 
-
-def _flac_stereo_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, left, right = decode_flac_stereo(bytes(payload))
-            lft = left.astype(np.int64)
-            rgt = right.astype(np.int64)
-            rows.append(
-                (int(doc_id), rate, len(lft), int(np.abs(lft).sum()),
-                 int(np.abs(rgt).sum()), int(np.abs(lft - rgt).sum()),
-                 int(lft[0]), int(rgt[-1]))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "sample_rate", "n_samples", "sum_abs_l",
-                     "sum_abs_r", "sum_abs_side", "first_l", "last_r"],
-        ).astype("int64")
+def _flac_stereo_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    rate, left, right = decode_flac_stereo(payload)
+    lft = left.astype(np.int64)
+    rgt = right.astype(np.int64)
+    return [
+        (doc_id, rate, len(lft), int(np.abs(lft).sum()),
+         int(np.abs(rgt).sum()), int(np.abs(lft - rgt).sum()),
+         int(lft[0]), int(rgt[-1]))
+    ]
 
 
 @query(
@@ -1339,20 +1168,17 @@ def multimodal_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     end-to-end oracle: DuckDB recomputes every L/R sample from the
     doc_id formula. `sum_abs_side` pins the decorrelation axis
     explicitly. Per-row Arrow-batched mapInPandas."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_flac_stereo_batches)
-    return payloads.mapInPandas(
-        _flac_stereo_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_flac_stereo_payload, _flac_stereo_rows,
         "doc_id long, sample_rate long, n_samples long, sum_abs_l long, "
         "sum_abs_r long, sum_abs_side long, first_l long, last_r long",
+        heavy=True,
     )
 
 
 # --- LPC-coded FLAC end-to-end (r11) ----------------------------------------
 
 from sim_spark.ops.flac import gen_flac_lpc_payload  # noqa: E402
-
-_gen_flac_lpc_batches = _make_gen_batches(gen_flac_lpc_payload)
 
 
 @query(
@@ -1396,20 +1222,17 @@ def multimodal_flac_lpc_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tail frames shorter than the predictor order go FIXED, exercising
     mixed subframe types within one stream. Per-row Arrow-batched
     mapInPandas; heavy fan-out class (entropy decode)."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_flac_lpc_batches)
-    return payloads.mapInPandas(
-        _flac_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_flac_lpc_payload, _flac_rows,
         "doc_id long, sample_rate long, n_samples long, sum_abs long, "
         "max_abs long, first_sample long, last_sample long",
+        heavy=True,
     )
 
 
 # --- FLAC wasted-bits decode (r12) ------------------------------------------
 
 from sim_spark.ops.flac import gen_flac_wasted_payload  # noqa: E402
-
-_gen_flac_wasted_batches = _make_gen_batches(gen_flac_wasted_payload)
 
 
 @query(
@@ -1459,12 +1282,11 @@ def multimodal_flac_wasted_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     SQL without seeing a byte. Same 100 TB decode shape: Arrow-batched
     mapInPandas over the round-robin id frame, no shuffle until the
     feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_flac_wasted_batches)
-    return payloads.mapInPandas(
-        _flac_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_flac_wasted_payload, _flac_rows,
         "doc_id long, sample_rate long, n_samples long, sum_abs long, "
         "max_abs long, first_sample long, last_sample long",
+        heavy=True,
     )
 
 
@@ -1472,27 +1294,14 @@ def multimodal_flac_wasted_decode(spark: SparkSession, sf_dir: str) -> DataFrame
 
 from sim_spark.ops.mp3 import gen_mp3_payload, parse_mp3  # noqa: E402
 
-_gen_mp3_batches = _make_gen_batches(gen_mp3_payload)
 
-
-def _mp3_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            d = parse_mp3(bytes(payload))
-            rows.append(
-                (int(doc_id), d["n_frames"], d["sample_rate"], d["mode"],
-                 d["total_bytes"], d["kbps_sum"], d["duration_us"],
-                 d["xing_frames"], d["xing_bytes"], d["head16_sum"])
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "n_frames", "sample_rate", "mode",
-                     "total_bytes", "kbps_sum", "duration_us",
-                     "xing_frames", "xing_bytes", "head16_sum"],
-        ).astype("int64")
+def _mp3_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    d = parse_mp3(payload)
+    return [
+        (doc_id, d["n_frames"], d["sample_rate"], d["mode"],
+         d["total_bytes"], d["kbps_sum"], d["duration_us"],
+         d["xing_frames"], d["xing_bytes"], d["head16_sum"])
+    ]
 
 
 _MP3_KBPS_SQL = (
@@ -1560,10 +1369,8 @@ def multimodal_mp3_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample decode remains the documented psychoacoustic fence. Light
     fan-out class: Arrow-batched mapInPandas, no shuffle until the
     10-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_mp3_batches)
-    return payloads.mapInPandas(
-        _mp3_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_mp3_payload, _mp3_rows,
         "doc_id long, n_frames long, sample_rate long, mode long, "
         "total_bytes long, kbps_sum long, duration_us long, "
         "xing_frames long, xing_bytes long, head16_sum long",
@@ -1573,8 +1380,6 @@ def multimodal_mp3_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- FLAC bit-depth decode (r12): 8/16/24-bit ---------------------------------
 
 from sim_spark.ops.flac import gen_flac_depth_payload  # noqa: E402
-
-_gen_flac_depth_batches = _make_gen_batches(gen_flac_depth_payload)
 
 
 @query(
@@ -1619,12 +1424,11 @@ def multimodal_flac_depth_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     width or packing bug cannot pass. The oracle recomputes every
     sample in integer SQL. Heavy fan-out class like the other FLAC
     keys."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_flac_depth_batches)
-    return payloads.mapInPandas(
-        _flac_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_flac_depth_payload, _flac_rows,
         "doc_id long, sample_rate long, n_samples long, sum_abs long, "
         "max_abs long, first_sample long, last_sample long",
+        heavy=True,
     )
 
 
@@ -1648,29 +1452,14 @@ def _gen_png_any_payload(doc_id: int) -> bytes:
     return encode_png(w, h, px.tobytes(), channels=ch_n)
 
 
-_gen_png_any_batches = _make_gen_batches(_gen_png_any_payload)
-
-
-def _png_any_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch_n, px = decode_png_any(bytes(payload))
-            a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-            alpha = int(a.reshape(-1, ch_n)[:, 3].sum()) if ch_n == 4 else 0
-            rows.append(
-                (int(doc_id), w, h, ch_n, int(a.sum()), alpha,
-                 int(a[: w * ch_n].sum()))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "channels", "px_sum",
-                     "alpha_sum", "top_row_sum"],
-        ).astype("int64")
+def _png_any_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, ch_n, px = decode_png_any(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    alpha = int(a.reshape(-1, ch_n)[:, 3].sum()) if ch_n == 4 else 0
+    return [
+        (doc_id, w, h, ch_n, int(a.sum()), alpha,
+         int(a[: w * ch_n].sum()))
+    ]
 
 
 @query(
@@ -1709,10 +1498,8 @@ def multimodal_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and corrupts everything else; `top_row_sum`/`px_sum` break if it
     does). The oracle recomputes every byte from the formula with the
     per-parity channel count. Light fan-out class."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_png_any_batches)
-    return payloads.mapInPandas(
-        _png_any_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_png_any_payload, _png_any_rows,
         "doc_id long, width long, height long, channels long, px_sum long, "
         "alpha_sum long, top_row_sum long",
     )
@@ -1758,9 +1545,6 @@ def _gen_png_pal7_payload(doc_id: int) -> bytes:
     return encode_png_indexed(
         w, h, idx.tobytes(), pal, trns=trns, interlace=(m == 2)
     )
-
-
-_gen_png_pal7_batches = _make_gen_batches(_gen_png_pal7_payload)
 
 
 @query(
@@ -1813,10 +1597,8 @@ def multimodal_png_palette_adam7_decode(
     (palette indirection included) in integer SQL. Light fan-out class
     like the other PNG keys: Arrow-batched mapInPandas, no shuffle
     until the feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_png_pal7_batches)
-    return payloads.mapInPandas(
-        _png_any_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_png_pal7_payload, _png_any_rows,
         "doc_id long, width long, height long, channels long, px_sum long, "
         "alpha_sum long, top_row_sum long",
     )
@@ -1856,44 +1638,27 @@ def _gen_gif_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_gif_batches = _make_gen_batches(_gen_gif_payload)
-
-
-def _gif_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb, transparent = decode_gif(bytes(payload))
-            _, _, idx, _ = decode_gif_indices(bytes(payload))
-            a = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
-            img = a.reshape(h, w, 3)
-            # row-weighted sum: px_sum alone is permutation-invariant,
-            # so an interlace reorder bug would slip through it
-            wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
-            ix = np.frombuffer(idx, dtype=np.uint8)
-            tn = int((ix == transparent).sum()) if transparent is not None else 0
-            rows.append(
-                (
-                    int(doc_id),
-                    w,
-                    h,
-                    int(a.sum()),
-                    wrow,
-                    int(img[0].sum()),
-                    tn,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "px_sum", "wrow_sum",
-                "top_row_sum", "transparent_n",
-            ],
-        ).astype("int64")
+def _gif_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, rgb, transparent = decode_gif(payload)
+    _, _, idx, _ = decode_gif_indices(payload)
+    a = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
+    img = a.reshape(h, w, 3)
+    # row-weighted sum: px_sum alone is permutation-invariant,
+    # so an interlace reorder bug would slip through it
+    wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
+    ix = np.frombuffer(idx, dtype=np.uint8)
+    tn = int((ix == transparent).sum()) if transparent is not None else 0
+    return [
+        (
+            doc_id,
+            w,
+            h,
+            int(a.sum()),
+            wrow,
+            int(img[0].sum()),
+            tn,
+        )
+    ]
 
 
 @query(
@@ -1942,10 +1707,8 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     indirection included) in integer SQL. Light fan-out class:
     Arrow-batched mapInPandas over the round-robined id frame, no
     shuffle until the 7-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_gif_batches)
-    return payloads.mapInPandas(
-        _gif_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_gif_payload, _gif_rows,
         "doc_id long, width long, height long, px_sum long, wrow_sum long, "
         "top_row_sum long, transparent_n long",
     )
@@ -1998,32 +1761,15 @@ def _gen_png_depth_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_png_depth_batches = _make_gen_batches(_gen_png_depth_payload)
-
-
-def _png_depth_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch_n, depth, img = decode_png_deep(bytes(payload))
-            wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
-            rows.append(
-                (
-                    int(doc_id), w, h, ch_n, depth,
-                    int(img.sum()), wrow, int(img[0].sum()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "channels", "depth",
-                "px_sum", "wrow_sum", "top_row_sum",
-            ],
-        ).astype("int64")
+def _png_depth_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, ch_n, depth, img = decode_png_deep(payload)
+    wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
+    return [
+        (
+            doc_id, w, h, ch_n, depth,
+            int(img.sum()), wrow, int(img[0].sum()),
+        )
+    ]
 
 
 @query(
@@ -2080,10 +1826,8 @@ def multimodal_png_depth_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mistake. The oracle recomputes every sample in integer SQL. Light
     fan-out class: Arrow-batched mapInPandas, no shuffle until the
     feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_png_depth_batches)
-    return payloads.mapInPandas(
-        _png_depth_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_png_depth_payload, _png_depth_rows,
         "doc_id long, width long, height long, channels long, depth long, "
         "px_sum long, wrow_sum long, top_row_sum long",
     )
@@ -2104,41 +1848,23 @@ def _gen_jpeg_prog_color_payload(doc_id: int) -> bytes:
     return encode_jpeg_progressive_color_from_coeffs(mx, my, y, cb, cr)
 
 
-_gen_jpeg_prog_color_batches = _make_gen_batches(_gen_jpeg_prog_color_payload)
+def _jpeg_prog_color_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, rgb, (y, cb, cr) = decode_jpeg_progressive_color(payload)
 
+    def chk(c):
+        b = np.arange(c.shape[0], dtype=np.int64)[:, None]
+        z = np.arange(64, dtype=np.int64)[None, :]
+        return int(((z + 64 * b) * c).sum())
 
-def _jpeg_prog_color_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb, (y, cb, cr) = decode_jpeg_progressive_color(
-                bytes(payload)
-            )
-
-            def chk(c):
-                b = np.arange(c.shape[0], dtype=np.int64)[:, None]
-                z = np.arange(64, dtype=np.int64)[None, :]
-                return int(((z + 64 * b) * c).sum())
-
-            rows.append(
-                (
-                    int(doc_id), w, h, y.shape[0] // 4,
-                    int(y[:, 0].sum()), int(cb[:, 0].sum()), int(cr[:, 0].sum()),
-                    int((y[:, 1:] != 0).sum() + (cb[:, 1:] != 0).sum()
-                        + (cr[:, 1:] != 0).sum()),
-                    chk(y), chk(cb), chk(cr),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_mcus", "y_dc_sum",
-                     "cb_dc_sum", "cr_dc_sum", "ac_nonzero",
-                     "y_checksum", "cb_checksum", "cr_checksum"],
-        ).astype("int64")
+    return [
+        (
+            doc_id, w, h, y.shape[0] // 4,
+            int(y[:, 0].sum()), int(cb[:, 0].sum()), int(cr[:, 0].sum()),
+            int((y[:, 1:] != 0).sum() + (cb[:, 1:] != 0).sum()
+                + (cr[:, 1:] != 0).sum()),
+            chk(y), chk(cb), chk(cr),
+        )
+    ]
 
 
 @query(
@@ -2167,13 +1893,12 @@ def multimodal_jpeg_progressive_color_decode(
     checksums hash-match the SAME integer-SQL oracle as
     multimodal_jpeg_color_decode. Heavy fan-out class like the other
     JPEG keys."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_prog_color_batches)
-    return payloads.mapInPandas(
-        _jpeg_prog_color_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_jpeg_prog_color_payload, _jpeg_prog_color_rows,
         "doc_id long, width long, height long, n_mcus long, y_dc_sum long, "
         "cb_dc_sum long, cr_dc_sum long, ac_nonzero long, y_checksum long, "
         "cb_checksum long, cr_checksum long",
+        heavy=True,
     )
 
 
@@ -2181,37 +1906,23 @@ def multimodal_jpeg_progressive_color_decode(
 
 from sim_spark.ops.mp3 import gen_mp3_id3_payload, parse_mp3  # noqa: E402
 
-_gen_mp3_id3_batches = _make_gen_batches(gen_mp3_id3_payload)
 
-
-def _mp3_id3_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            prof = parse_mp3(bytes(payload))
-            tags = prof["id3"]
-            rows.append(
-                (
-                    int(doc_id),
-                    tags["_version"],
-                    prof["id3_bytes"],
-                    sum(tags["TIT2"].encode("latin-1")),
-                    sum(tags["TPE1"].encode("latin-1")),
-                    int(tags["TRCK"]),
-                    int(tags["TLEN"]),
-                    prof["n_frames"],
-                    prof["duration_us"],
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "tag_version", "tag_bytes", "title_sum",
-                "artist_sum", "track", "tlen_ms", "n_frames", "duration_us",
-            ],
-        ).astype("int64")
+def _mp3_id3_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    prof = parse_mp3(payload)
+    tags = prof["id3"]
+    return [
+        (
+            doc_id,
+            tags["_version"],
+            prof["id3_bytes"],
+            sum(tags["TIT2"].encode("latin-1")),
+            sum(tags["TPE1"].encode("latin-1")),
+            int(tags["TRCK"]),
+            int(tags["TLEN"]),
+            prof["n_frames"],
+            prof["duration_us"],
+        )
+    ]
 
 
 @query(
@@ -2267,10 +1978,8 @@ def multimodal_mp3_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly excludes the tag. Byte sums of the decoded text and the
     exact total tag size hash-match integer SQL. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_mp3_id3_batches)
-    return payloads.mapInPandas(
-        _mp3_id3_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, gen_mp3_id3_payload, _mp3_id3_rows,
         "doc_id long, tag_version long, tag_bytes long, title_sum long, "
         "artist_sum long, track long, tlen_ms long, n_frames long, "
         "duration_us long",
@@ -2300,38 +2009,23 @@ def _gen_gzip_members_payload(doc_id: int) -> bytes:
     return encode_gzip_members(members)
 
 
-_gen_gzip_batches = _make_gen_batches(_gen_gzip_members_payload)
-
-
-def _gzip_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            recs = parse_gzip_members(bytes(payload))
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    sum(len(r["content"]) for r in recs),
-                    sum(sum(r["content"]) for r in recs),
-                    sum(
-                        sum(r["name"].encode("latin-1"))
-                        for r in recs
-                        if r["name"] is not None
-                    ),
-                    sum(r["header_bytes"] for r in recs),
-                    sum(r["mtime"] for r in recs),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_members", "total_len", "content_sum",
-                "names_sum", "header_sum", "mtime_sum",
-            ],
-        ).astype("int64")
+def _gzip_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    recs = parse_gzip_members(payload)
+    return [
+        (
+            doc_id,
+            len(recs),
+            sum(len(r["content"]) for r in recs),
+            sum(sum(r["content"]) for r in recs),
+            sum(
+                sum(r["name"].encode("latin-1"))
+                for r in recs
+                if r["name"] is not None
+            ),
+            sum(r["header_bytes"] for r in recs),
+            sum(r["mtime"] for r in recs),
+        )
+    ]
 
 
 @query(
@@ -2395,10 +2089,8 @@ def multimodal_gzip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascii sums, exact per-member header sizes, and MTIME sums in
     integer SQL. Light fan-out class: Arrow-batched mapInPandas, no
     shuffle until the 7-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_gzip_batches)
-    return payloads.mapInPandas(
-        _gzip_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_gzip_members_payload, _gzip_rows,
         "doc_id long, n_members long, total_len long, content_sum long, "
         "names_sum long, header_sum long, mtime_sum long",
     )
@@ -2428,36 +2120,21 @@ def _gen_tar_payload(doc_id: int) -> bytes:
     return encode_tar(members)
 
 
-_gen_tar_batches = _make_gen_batches(_gen_tar_payload)
-
-
-def _tar_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            recs = parse_tar(bytes(payload))
-            txt = [r for r in recs if r["name"].endswith(".txt")]
-            cls = [r for r in recs if r["name"].endswith(".cls")]
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    sum(r["size"] for r in recs),
-                    sum(sum(r["content"]) for r in txt),
-                    sum(int(r["content"]) for r in cls),
-                    sum(sum(r["name"].encode()) for r in recs),
-                    sum(r["mtime"] for r in recs),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_members", "total_size", "txt_sum", "cls_sum",
-                "names_sum", "mtime_sum",
-            ],
-        ).astype("int64")
+def _tar_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    recs = parse_tar(payload)
+    txt = [r for r in recs if r["name"].endswith(".txt")]
+    cls = [r for r in recs if r["name"].endswith(".cls")]
+    return [
+        (
+            doc_id,
+            len(recs),
+            sum(r["size"] for r in recs),
+            sum(sum(r["content"]) for r in txt),
+            sum(int(r["content"]) for r in cls),
+            sum(sum(r["name"].encode()) for r in recs),
+            sum(r["mtime"] for r in recs),
+        )
+    ]
 
 
 @query(
@@ -2515,10 +2192,8 @@ def multimodal_tar_webdataset_walk(spark: SparkSession, sf_dir: str) -> DataFram
     text-byte sums, class labels, name ascii sums, and mtimes in
     integer SQL. Light fan-out class: Arrow-batched mapInPandas, no
     shuffle until the 7-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_tar_batches)
-    return payloads.mapInPandas(
-        _tar_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_tar_payload, _tar_rows,
         "doc_id long, n_members long, total_size long, txt_sum long, "
         "cls_sum long, names_sum long, mtime_sum long",
     )
@@ -2554,35 +2229,18 @@ def _gen_tiff_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_tiff_batches = _make_gen_batches(_gen_tiff_payload)
-
-
-def _tiff_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch_n, px = decode_tiff(bytes(payload))
-            a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-            img = a.reshape(h, w, ch_n)
-            wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
-            rows.append(
-                (
-                    int(doc_id), w, h, ch_n, int(doc_id % 3),
-                    int((doc_id % 6) >= 3), int(a.sum()), wrow,
-                    int(img[0].sum()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "channels", "comp_kind",
-                "big_endian", "px_sum", "wrow_sum", "top_row_sum",
-            ],
-        ).astype("int64")
+def _tiff_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, ch_n, px = decode_tiff(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    img = a.reshape(h, w, ch_n)
+    wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
+    return [
+        (
+            doc_id, w, h, ch_n, int(doc_id % 3),
+            int((doc_id % 6) >= 3), int(a.sum()), wrow,
+            int(img[0].sum()),
+        )
+    ]
 
 
 @query(
@@ -2627,10 +2285,8 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-weighted so a strip-ordering bug cannot cancel. The oracle
     recomputes every byte in integer SQL. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_tiff_batches)
-    return payloads.mapInPandas(
-        _tiff_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_tiff_payload, _tiff_rows,
         "doc_id long, width long, height long, channels long, "
         "comp_kind long, big_endian long, px_sum long, wrow_sum long, "
         "top_row_sum long",
@@ -2658,33 +2314,18 @@ def _gen_zip_payload(doc_id: int) -> bytes:
     return encode_zip(members)
 
 
-_gen_zip_batches = _make_gen_batches(_gen_zip_payload)
-
-
-def _zip_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            recs = parse_zip(bytes(payload))
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    sum(len(r["content"]) for r in recs),
-                    sum(sum(r["content"]) for r in recs),
-                    sum(sum(r["name"].encode()) for r in recs),
-                    sum(1 for r in recs if r["method"] == 8),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_members", "total_len", "content_sum",
-                "names_sum", "n_deflated",
-            ],
-        ).astype("int64")
+def _zip_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    recs = parse_zip(payload)
+    return [
+        (
+            doc_id,
+            len(recs),
+            sum(len(r["content"]) for r in recs),
+            sum(sum(r["content"]) for r in recs),
+            sum(sum(r["name"].encode()) for r in recs),
+            sum(1 for r in recs if r["method"] == 8),
+        )
+    ]
 
 
 @query(
@@ -2739,10 +2380,8 @@ def multimodal_zip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes member counts, lengths, content/name byte
     sums, and the deflate count in integer SQL. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_zip_batches)
-    return payloads.mapInPandas(
-        _zip_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_zip_payload, _zip_rows,
         "doc_id long, n_members long, total_len long, content_sum long, "
         "names_sum long, n_deflated long",
     )
@@ -2783,44 +2422,29 @@ def _gen_warc_gz_payload(doc_id: int) -> bytes:
     return encode_gzip_members(members)
 
 
-_gen_warc_batches = _make_gen_batches(_gen_warc_gz_payload)
-
-
-def _warc_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            recs = []
-            for mem in parse_gzip_members(bytes(payload)):
-                recs.extend(parse_warc_records(mem["content"]))
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    sum(1 for r in recs if r["type"] == "response"),
-                    sum(r["content_length"] for r in recs),
-                    sum(sum(r["content"]) for r in recs),
-                    sum(
-                        sum(r["target_uri"].encode("latin-1"))
-                        for r in recs
-                        if r["target_uri"] is not None
-                    ),
-                    sum(r["header_bytes"] for r in recs),
-                    sum(
-                        int(r["date"][14:16]) * 60 + int(r["date"][17:19])
-                        for r in recs
-                    ),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_records", "n_response", "content_total",
-                "payload_sum", "uri_sum", "header_sum", "date_sum",
-            ],
-        ).astype("int64")
+def _warc_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    recs = []
+    for mem in parse_gzip_members(payload):
+        recs.extend(parse_warc_records(mem["content"]))
+    return [
+        (
+            doc_id,
+            len(recs),
+            sum(1 for r in recs if r["type"] == "response"),
+            sum(r["content_length"] for r in recs),
+            sum(sum(r["content"]) for r in recs),
+            sum(
+                sum(r["target_uri"].encode("latin-1"))
+                for r in recs
+                if r["target_uri"] is not None
+            ),
+            sum(r["header_bytes"] for r in recs),
+            sum(
+                int(r["date"][14:16]) * 60 + int(r["date"][17:19])
+                for r in recs
+            ),
+        )
+    ]
 
 
 @query(
@@ -2900,10 +2524,8 @@ def multimodal_warc_record_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifts header_sum/payload_sum and hash-mismatches. Light fan-out
     class: Arrow-batched mapInPandas, no shuffle until the 8-column
     feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_warc_batches)
-    return payloads.mapInPandas(
-        _warc_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_warc_gz_payload, _warc_rows,
         "doc_id long, n_records long, n_response long, content_total long, "
         "payload_sum long, uri_sum long, header_sum long, date_sum long",
     )
@@ -2959,39 +2581,23 @@ def _gen_mp4_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_mp4_batches = _make_gen_batches(_gen_mp4_payload)
-
-
-def _mp4_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = parse_mp4_meta(bytes(payload))
-            rows.append(
-                (
-                    int(doc_id),
-                    len(m["tracks"]),
-                    sum(1 for t in m["tracks"] if t["handler"] == "vide"),
-                    m["duration"] * 1000 // m["timescale"],
-                    sum(t["n_samples"] for t in m["tracks"]),
-                    sum(t["sample_bytes"] for t in m["tracks"]),
-                    sum(t["width"] for t in m["tracks"]),
-                    sum(t["height"] for t in m["tracks"]),
-                    m["mdat_bytes"],
-                    sum(sum(b.encode("ascii")) for b in
-                        m["compatible_brands"]),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_tracks", "n_video", "dur_ms", "total_samples",
-                "sample_bytes", "width_sum", "height_sum", "mdat_bytes",
-                "brand_sum",
-            ],
-        ).astype("int64")
+def _mp4_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    m = parse_mp4_meta(payload)
+    return [
+        (
+            doc_id,
+            len(m["tracks"]),
+            sum(1 for t in m["tracks"] if t["handler"] == "vide"),
+            m["duration"] * 1000 // m["timescale"],
+            sum(t["n_samples"] for t in m["tracks"]),
+            sum(t["sample_bytes"] for t in m["tracks"]),
+            sum(t["width"] for t in m["tracks"]),
+            sum(t["height"] for t in m["tracks"]),
+            m["mdat_bytes"],
+            sum(sum(b.encode("ascii")) for b in
+                m["compatible_brands"]),
+        )
+    ]
 
 
 @query(
@@ -3059,10 +2665,8 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-walked box length shifts all downstream fields and
     hash-mismatches. Light fan-out class: Arrow-batched mapInPandas,
     no shuffle until the 10-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_mp4_batches)
-    return payloads.mapInPandas(
-        _mp4_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_mp4_payload, _mp4_rows,
         "doc_id long, n_tracks long, n_video long, dur_ms long, "
         "total_samples long, sample_bytes long, width_sum long, "
         "height_sum long, mdat_bytes long, brand_sum long",
@@ -3102,41 +2706,24 @@ def _gen_mp3_apic_payload(doc_id: int) -> bytes:
     return tag + gen_mp3_payload(doc_id)
 
 
-_gen_mp3_apic_batches = _make_gen_batches(_gen_mp3_apic_payload)
-
-
-def _mp3_apic_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from sim_spark.ops.mp3 import parse_mp3
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            prof = parse_mp3(bytes(payload))
-            apic = prof["id3"]["APIC"]
-            w, h, px = decode_png(apic["data"])
-            rows.append(
-                (
-                    int(doc_id),
-                    prof["id3"]["_version"],
-                    w,
-                    h,
-                    sum(px),
-                    apic["pic_type"],
-                    sum(apic["desc"].encode("latin-1")),
-                    sum(apic["mime"].encode("latin-1")),
-                    sum(prof["id3"]["TIT2"].encode("latin-1")),
-                    prof["n_frames"],
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "tag_version", "apic_w", "apic_h", "apic_pixsum",
-                "pic_type", "desc_sum", "mime_sum", "title_sum", "n_frames",
-            ],
-        ).astype("int64")
+def _mp3_apic_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    prof = parse_mp3(payload)
+    apic = prof["id3"]["APIC"]
+    w, h, px = decode_png(apic["data"])
+    return [
+        (
+            doc_id,
+            prof["id3"]["_version"],
+            w,
+            h,
+            sum(px),
+            apic["pic_type"],
+            sum(apic["desc"].encode("latin-1")),
+            sum(apic["mime"].encode("latin-1")),
+            sum(prof["id3"]["TIT2"].encode("latin-1")),
+            prof["n_frames"],
+        )
+    ]
 
 
 @query(
@@ -3200,13 +2787,12 @@ def multimodal_mp3_apic_unsync(spark: SparkSession, sf_dir: str) -> DataFrame:
     the total must count) and extended headers on every third doc.
     Light fan-out class: Arrow-batched mapInPandas, no shuffle until
     the 10-column feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_mp3_apic_batches)
-    return payloads.mapInPandas(
-        _mp3_apic_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_mp3_apic_payload, _mp3_apic_rows,
         "doc_id long, tag_version long, apic_w long, apic_h long, "
         "apic_pixsum long, pic_type long, desc_sum long, mime_sum long, "
         "title_sum long, n_frames long",
+        heavy=True,
     )
 
 
@@ -3236,33 +2822,18 @@ def _gen_bz2_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_bz2_batches = _make_gen_batches(_gen_bz2_payload)
-
-
-def _bz2_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            recs = parse_bz2_streams(bytes(payload))
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    sum(len(r["content"]) for r in recs),
-                    sum(sum(r["content"]) for r in recs),
-                    sum(r["level"] for r in recs),
-                    sum(r["content"][0] for r in recs),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_streams", "total_len", "content_sum",
-                "level_sum", "head_sum",
-            ],
-        ).astype("int64")
+def _bz2_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    recs = parse_bz2_streams(payload)
+    return [
+        (
+            doc_id,
+            len(recs),
+            sum(len(r["content"]) for r in recs),
+            sum(sum(r["content"]) for r in recs),
+            sum(r["level"] for r in recs),
+            sum(r["content"][0] for r in recs),
+        )
+    ]
 
 
 @query(
@@ -3313,10 +2884,8 @@ def multimodal_bz2_multistream_walk(
     sums, level sums, and first-byte sums in integer SQL. Light
     fan-out class: Arrow-batched mapInPandas, no shuffle until the
     6-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_bz2_batches)
-    return payloads.mapInPandas(
-        _bz2_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_bz2_payload, _bz2_rows,
         "doc_id long, n_streams long, total_len long, content_sum long, "
         "level_sum long, head_sum long",
     )
@@ -3374,40 +2943,24 @@ def _gen_mediawiki_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_mediawiki_batches = _make_gen_batches(_gen_mediawiki_payload)
-
-
-def _mediawiki_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            d = parse_mediawiki_dump(bytes(payload))
-            revs = [r for pg in d["pages"] for r in pg["revisions"]]
-            rows.append(
-                (
-                    int(doc_id),
-                    d["n_streams"],
-                    len(d["pages"]),
-                    sum(pg["page_id"] for pg in d["pages"]),
-                    sum(pg["ns"] for pg in d["pages"]),
-                    sum(ord(c) for pg in d["pages"] for c in pg["title"]),
-                    len(revs),
-                    sum(r["rev_id"] for r in revs),
-                    sum(len(r["text"].encode("utf-8")) for r in revs),
-                    sum(ord(c) for r in revs for c in r["text"]),
-                    sum(ord(c) for c in d["dbname"]),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_streams", "n_pages", "page_id_sum", "ns_sum",
-                "title_sum", "n_revisions", "rev_id_sum", "text_bytes_sum",
-                "text_sum", "db_sum",
-            ],
-        ).astype("int64")
+def _mediawiki_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    d = parse_mediawiki_dump(payload)
+    revs = [r for pg in d["pages"] for r in pg["revisions"]]
+    return [
+        (
+            doc_id,
+            d["n_streams"],
+            len(d["pages"]),
+            sum(pg["page_id"] for pg in d["pages"]),
+            sum(pg["ns"] for pg in d["pages"]),
+            sum(ord(c) for pg in d["pages"] for c in pg["title"]),
+            len(revs),
+            sum(r["rev_id"] for r in revs),
+            sum(len(r["text"].encode("utf-8")) for r in revs),
+            sum(ord(c) for r in revs for c in r["text"]),
+            sum(ord(c) for c in d["dbname"]),
+        )
+    ]
 
 
 @query(
@@ -3486,13 +3039,12 @@ def multimodal_mediawiki_dump_parse(
     text character sums in integer SQL. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the 11-column feature
     frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_mediawiki_batches)
-    return payloads.mapInPandas(
-        _mediawiki_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_mediawiki_payload, _mediawiki_rows,
         "doc_id long, n_streams long, n_pages long, page_id_sum long, "
         "ns_sum long, title_sum long, n_revisions long, rev_id_sum long, "
         "text_bytes_sum long, text_sum long, db_sum long",
+        heavy=True,
     )
 
 
@@ -3539,38 +3091,22 @@ def _gen_webp_container_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_webp_container_batches = _make_gen_batches(_gen_webp_container_payload)
-
-
-def _webp_container_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            r = parse_webp(bytes(payload))
-            px = decode_vp8l(r["image_payload"])
-            rows.append(
-                (
-                    int(doc_id),
-                    1 if r["variant"] == "extended" else 0,
-                    len(r["chunks"]),
-                    r["canvas_w"], r["canvas_h"],
-                    r["image_w"], r["image_h"],
-                    sum(r["exif"]) if r["exif"] is not None else 0,
-                    sum(r["xmp"]) if r["xmp"] is not None else 0,
-                    sum(r["iccp"]) if r["iccp"] is not None else 0,
-                    sum(px["rgb"][:3]),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "is_extended", "n_chunks", "canvas_w", "canvas_h",
-                "image_w", "image_h", "exif_sum", "xmp_sum", "iccp_sum",
-                "first_px_sum",
-            ],
-        ).astype("int64")
+def _webp_container_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    r = parse_webp(payload)
+    px = decode_vp8l(r["image_payload"])
+    return [
+        (
+            doc_id,
+            1 if r["variant"] == "extended" else 0,
+            len(r["chunks"]),
+            r["canvas_w"], r["canvas_h"],
+            r["image_w"], r["image_h"],
+            sum(r["exif"]) if r["exif"] is not None else 0,
+            sum(r["xmp"]) if r["xmp"] is not None else 0,
+            sum(r["iccp"]) if r["iccp"] is not None else 0,
+            sum(px["rgb"][:3]),
+        )
+    ]
 
 
 @query(
@@ -3630,13 +3166,12 @@ def multimodal_webp_container_walk(
     metadata byte sums from the synthesis formulas in integer SQL.
     Light fan-out class: Arrow-batched mapInPandas, no shuffle until
     the 11-column feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_webp_container_batches)
-    return payloads.mapInPandas(
-        _webp_container_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_webp_container_payload, _webp_container_rows,
         "doc_id long, is_extended long, n_chunks long, canvas_w long, "
         "canvas_h long, image_w long, image_h long, exif_sum long, "
         "xmp_sum long, iccp_sum long, first_px_sum long",
+        heavy=True,
     )
 
 
@@ -3654,33 +3189,18 @@ def _gen_webp_vp8l_payload(doc_id: int) -> bytes:
     return encode_webp((b"VP8L", encode_vp8l(w, h, rgb)))
 
 
-_gen_webp_vp8l_batches = _make_gen_batches(_gen_webp_vp8l_payload)
-
-
-def _webp_vp8l_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            r = parse_webp(bytes(payload))
-            d = decode_vp8l(r["image_payload"])
-            w, h = d["width"], d["height"]
-            a = (np.frombuffer(d["rgb"], dtype=np.uint8)
-                 .astype(np.int64).reshape(h, w, 3))
-            rows.append(
-                (
-                    int(doc_id), w, h, int(a.sum()), int(a[0].sum()),
-                    int(a[:, 0].sum()), int(a.max()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "px_sum", "top_row_sum",
-                     "left_col_sum", "px_max"],
-        ).astype("int64")
+def _webp_vp8l_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    r = parse_webp(payload)
+    d = decode_vp8l(r["image_payload"])
+    w, h = d["width"], d["height"]
+    a = (np.frombuffer(d["rgb"], dtype=np.uint8)
+         .astype(np.int64).reshape(h, w, 3))
+    return [
+        (
+            doc_id, w, h, int(a.sum()), int(a[0].sum()),
+            int(a[:, 0].sum()), int(a.max()),
+        )
+    ]
 
 
 @query(
@@ -3723,12 +3243,11 @@ def multimodal_webp_vp8l_decode(
     inversion, or container-walk bug cannot cancel out. Same 100 TB
     shape as the PNG/BMP twins: per-row mapInPandas decode, no
     shuffle until the tiny feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_webp_vp8l_batches)
-    return payloads.mapInPandas(
-        _webp_vp8l_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_webp_vp8l_payload, _webp_vp8l_rows,
         "doc_id long, width long, height long, px_sum long, "
         "top_row_sum long, left_col_sum long, px_max long",
+        heavy=True,
     )
 
 
@@ -3783,40 +3302,24 @@ def _gen_heif_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_heif_batches = _make_gen_batches(_gen_heif_payload)
-
-
-def _heif_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            r = parse_heif_meta(bytes(payload))
-            prim = next(i for i in r["items"]
-                        if i["item_id"] == r["primary_id"])
-            rows.append(
-                (
-                    int(doc_id),
-                    len(r["items"]),
-                    prim["width"], prim["height"],
-                    sum(i["width"] for i in r["items"]
-                        if i["width"] is not None and
-                        i["item_id"] != r["primary_id"]),
-                    sum(len(i["extents"]) for i in r["items"]),
-                    sum(len(i["data"]) for i in r["items"]),
-                    sum(b for i in r["items"] for b in i["data"]),
-                    r["n_properties"],
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_items", "primary_w", "primary_h",
-                "thumb_w_sum", "n_extents", "data_total", "data_sum",
-                "n_properties",
-            ],
-        ).astype("int64")
+def _heif_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    r = parse_heif_meta(payload)
+    prim = next(i for i in r["items"]
+                if i["item_id"] == r["primary_id"])
+    return [
+        (
+            doc_id,
+            len(r["items"]),
+            prim["width"], prim["height"],
+            sum(i["width"] for i in r["items"]
+                if i["width"] is not None and
+                i["item_id"] != r["primary_id"]),
+            sum(len(i["extents"]) for i in r["items"]),
+            sum(len(i["data"]) for i in r["items"]),
+            sum(b for i in r["items"] for b in i["data"]),
+            r["n_properties"],
+        )
+    ]
 
 
 @query(
@@ -3890,10 +3393,8 @@ def multimodal_heif_items_walk(
     synthesis formulas in integer SQL. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the 9-column feature
     frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_heif_batches)
-    return payloads.mapInPandas(
-        _heif_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_heif_payload, _heif_rows,
         "doc_id long, n_items long, primary_w long, primary_h long, "
         "thumb_w_sum long, n_extents long, data_total long, "
         "data_sum long, n_properties long",
@@ -3934,35 +3435,20 @@ def _gen_jpeg_arith_payload(doc_id: int) -> bytes:
     return encode_jpeg_arith_from_coeffs(wb, hb, coeffs)
 
 
-_gen_jpeg_arith_batches = _make_gen_batches(_gen_jpeg_arith_payload)
-
-
-def _jpeg_arith_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px, coeffs = decode_jpeg_arith(bytes(payload))
-            n = coeffs.shape[0]
-            b = np.arange(n, dtype=np.int64)[:, None]
-            z = np.arange(64, dtype=np.int64)[None, :]
-            rows.append(
-                (
-                    int(doc_id), w, h, n,
-                    int(coeffs[:, 0].sum()),
-                    int((coeffs[:, 1:] != 0).sum()),
-                    int(np.abs(coeffs).sum()),
-                    int(((z + 64 * b) * coeffs).sum()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_blocks", "dc_sum",
-                     "ac_nonzero", "abs_sum", "zz_checksum"],
-        ).astype("int64")
+def _jpeg_arith_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px, coeffs = decode_jpeg_arith(payload)
+    n = coeffs.shape[0]
+    b = np.arange(n, dtype=np.int64)[:, None]
+    z = np.arange(64, dtype=np.int64)[None, :]
+    return [
+        (
+            doc_id, w, h, n,
+            int(coeffs[:, 0].sum()),
+            int((coeffs[:, 1:] != 0).sum()),
+            int(np.abs(coeffs).sum()),
+            int(((z + 64 * b) * coeffs).sum()),
+        )
+    ]
 
 
 @query(
@@ -4016,12 +3502,11 @@ def multimodal_jpeg_arith_decode(
     IDCT plane) is pinned in tests/test_jpeg_codec.py. Same 100 TB
     shape as every container key: per-row mapInPandas decode, no
     shuffle until the 8-column feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_jpeg_arith_batches)
-    return payloads.mapInPandas(
-        _jpeg_arith_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_jpeg_arith_payload, _jpeg_arith_rows,
         "doc_id long, width long, height long, n_blocks long, dc_sum long, "
         "ac_nonzero long, abs_sum long, zz_checksum long",
+        heavy=True,
     )
 
 
@@ -4056,35 +3541,21 @@ def _gen_tfrecord_payload(doc_id: int) -> bytes:
     return encode_tfrecord_file(recs)
 
 
-_gen_tfrecord_batches = _make_gen_batches(_gen_tfrecord_payload)
-
-
-def _tfrecord_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            exs = [parse_example(r)
-                   for r in parse_tfrecord_file(bytes(payload))]
-            ids = [v for ex in exs for v in ex["ids"][1]]
-            texts = [b for ex in exs for b in ex["text"][1]]
-            rows.append(
-                (
-                    int(doc_id),
-                    len(exs),
-                    len(ids),
-                    sum(ids),
-                    sum(len(b) for b in texts),
-                    sum(byte for b in texts for byte in b),
-                    sum(len(ex["w"][1]) for ex in exs),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "n_records", "ids_count", "ids_sum",
-                     "text_bytes", "text_sum", "float_count"],
-        ).astype("int64")
+def _tfrecord_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    exs = [parse_example(r) for r in parse_tfrecord_file(payload)]
+    ids = [v for ex in exs for v in ex["ids"][1]]
+    texts = [b for ex in exs for b in ex["text"][1]]
+    return [
+        (
+            doc_id,
+            len(exs),
+            len(ids),
+            sum(ids),
+            sum(len(b) for b in texts),
+            sum(byte for b in texts for byte in b),
+            sum(len(ex["w"][1]) for ex in exs),
+        )
+    ]
 
 
 @query(
@@ -4138,10 +3609,8 @@ def multimodal_tfrecord_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FloatList arm is parsed and counted but never value-aggregated
     across the hash boundary. Light fan-out class: Arrow-batched
     mapInPandas, no shuffle until the 7-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_tfrecord_batches)
-    return payloads.mapInPandas(
-        _tfrecord_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_tfrecord_payload, _tfrecord_rows,
         "doc_id long, n_records long, ids_count long, ids_sum long, "
         "text_bytes long, text_sum long, float_count long",
     )
@@ -4188,36 +3657,22 @@ def _gen_avro_payload(doc_id: int) -> bytes:
     )
 
 
-_gen_avro_batches = _make_gen_batches(_gen_avro_payload)
-
-
-def _avro_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            r = parse_avro_ocf(bytes(payload))
-            recs = r["records"]
-            rows.append(
-                (
-                    int(doc_id),
-                    len(recs),
-                    r["n_blocks"],
-                    sum(x["id"] for x in recs),
-                    sum(ord(c) for x in recs for c in x["name"]),
-                    sum(b for x in recs for b in x["blob"]),
-                    int(sum(round(x["score"] * 4) for x in recs)),
-                    sum(1 for x in recs if x["ok"]),
-                    1 if r["codec"] == "deflate" else 0,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "n_records", "n_blocks", "id_sum",
-                     "name_sum", "blob_sum", "score_qsum", "ok_count",
-                     "codec_deflate"],
-        ).astype("int64")
+def _avro_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    r = parse_avro_ocf(payload)
+    recs = r["records"]
+    return [
+        (
+            doc_id,
+            len(recs),
+            r["n_blocks"],
+            sum(x["id"] for x in recs),
+            sum(ord(c) for x in recs for c in x["name"]),
+            sum(b for x in recs for b in x["blob"]),
+            int(sum(round(x["score"] * 4) for x in recs)),
+            sum(1 for x in recs if x["ok"]),
+            1 if r["codec"] == "deflate" else 0,
+        )
+    ]
 
 
 @query(
@@ -4272,10 +3727,8 @@ def multimodal_avro_ocf_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     4x sum). Oracle recomputes everything from the synthesis
     formulas in integer SQL. Light fan-out class: Arrow-batched
     mapInPandas, no shuffle until the 9-column feature frame."""
-    d = _doc_ids(spark, sf_dir)
-    payloads = _fused_payloads(d, _gen_avro_batches)
-    return payloads.mapInPandas(
-        _avro_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_avro_payload, _avro_rows,
         "doc_id long, n_records long, n_blocks long, id_sum long, "
         "name_sum long, blob_sum long, score_qsum long, ok_count long, "
         "codec_deflate long",
@@ -4308,40 +3761,27 @@ def _gen_parquet_payload(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-_gen_parquet_batches = _make_gen_batches(_gen_parquet_payload)
-
-
-def _parquet_footer_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            r = parse_parquet_footer(bytes(payload))
-            idcols = [
-                (g, c)
-                for g, rg in enumerate(r["row_groups"])
-                for c in rg["columns"]
-                if c["path"] == "id"
-            ]
-            rows.append(
-                (
-                    int(doc_id),
-                    r["num_rows"],
-                    len(r["row_groups"]),
-                    len(r["row_groups"][0]["columns"]),
-                    sum((g + 1) * c["num_values"] for g, c in idcols),
-                    sum(c["stats"]["min_value"] for _, c in idcols),
-                    sum(c["stats"]["max_value"] for _, c in idcols),
-                    sum(c["stats"].get("null_count", 0)
-                        for _, c in idcols),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "num_rows", "n_row_groups", "n_columns",
-                     "nv_checksum", "min_sum", "max_sum", "null_sum"],
-        ).astype("int64")
+def _parquet_footer_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    r = parse_parquet_footer(payload)
+    idcols = [
+        (g, c)
+        for g, rg in enumerate(r["row_groups"])
+        for c in rg["columns"]
+        if c["path"] == "id"
+    ]
+    return [
+        (
+            doc_id,
+            r["num_rows"],
+            len(r["row_groups"]),
+            len(r["row_groups"][0]["columns"]),
+            sum((g + 1) * c["num_values"] for g, c in idcols),
+            sum(c["stats"]["min_value"] for _, c in idcols),
+            sum(c["stats"]["max_value"] for _, c in idcols),
+            sum(c["stats"].get("null_count", 0)
+                for _, c in idcols),
+        )
+    ]
 
 
 @query(
@@ -4391,10 +3831,9 @@ def multimodal_parquet_footer_walk(
     the bloom file and absent on the twin. Light fan-out class:
     Arrow-batched mapInPandas, no shuffle until the 8-column
     feature frame."""
-    d = _doc_ids(spark, sf_dir, heavy=True)
-    payloads = _fused_payloads(d, _gen_parquet_batches)
-    return payloads.mapInPandas(
-        _parquet_footer_feature_batches,
+    return _decode_docs(
+        spark, sf_dir, _gen_parquet_payload, _parquet_footer_rows,
         "doc_id long, num_rows long, n_row_groups long, n_columns long, "
         "nv_checksum long, min_sum long, max_sum long, null_sum long",
+        heavy=True,
     )

@@ -1131,3 +1131,44 @@ def test_parquet_bloom_rowgroup_skip(spark, tmp_path):
     # and the registry key's plan carries the pushed IN predicate
     p = plan(spark, "scan_parquet_bloom")
     assert "PushedFilters: [In(l_orderkey" in p, p
+
+
+# Every multimodal_* key synthesizes, decodes and extracts features in ONE
+# Arrow-batched mapInPandas (multimodal_real._decode_docs): a second map
+# would ship every payload Python -> JVM -> Python before the parse. The
+# heavy (entropy-coded) decodes also round-robin the id frame across the
+# task slots, since the single-row-group fixture scan is one task.
+_DECODE_KEYS = sorted(
+    k
+    for k, fn in QUERIES.items()
+    if k.startswith("multimodal_")
+    and fn.__module__ == "sim_spark.queries.multimodal_real"
+)
+_HEAVY_DECODE_KEYS = {
+    "multimodal_flac_decode",
+    "multimodal_flac_depth_decode",
+    "multimodal_flac_lpc_decode",
+    "multimodal_flac_stereo_decode",
+    "multimodal_flac_wasted_decode",
+    "multimodal_jpeg_arith_decode",
+    "multimodal_jpeg_color_decode",
+    "multimodal_jpeg_decode",
+    "multimodal_jpeg_pixels",
+    "multimodal_jpeg_progressive_color_decode",
+    "multimodal_jpeg_progressive_decode",
+    "multimodal_mediawiki_dump_parse",
+    "multimodal_mp3_apic_unsync",
+    "multimodal_parquet_footer_walk",
+    "multimodal_webp_container_walk",
+    "multimodal_webp_vp8l_decode",
+}
+
+
+@pytest.mark.parametrize("key", _DECODE_KEYS)
+def test_decode_key_is_one_python_map(spark, key):
+    assert len(_DECODE_KEYS) == 37 and _HEAVY_DECODE_KEYS <= set(_DECODE_KEYS)
+    p = plan(spark, key)
+    n_map = len(re.findall(r"^\(\d+\) MapInPandas$", p, re.M))
+    assert n_map == 1, f"{key}: {n_map} MapInPandas nodes\n{p}"
+    if key in _HEAVY_DECODE_KEYS:
+        assert "RoundRobinPartitioning" in p, f"{key}:\n{p}"
