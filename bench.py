@@ -11,8 +11,9 @@ stdout's FINAL line is a COMPACT JSON summary (≤ ~400 bytes):
 The external driver records only a bounded (~2000-char) tail of stdout;
 r11/r12 both landed `parsed: null` because the full per-query map grew
 past that window (VERDICT r12 item 1). The FULL record — every
-headline query's median, the raw samples, and the complete DuckDB
-sanity column — goes to stderr and to the artifact file
+headline query's median, the complete DuckDB sanity column, and (in
+the artifact only) each key's raw samples split into build and execute
+time — goes to stderr and to the artifact file
 $SPARK_GRAFT_BENCH_OUT (default ./BENCH_local_last.json), which each
 round is committed as BENCH_r{N}_local.json.
 
@@ -23,9 +24,12 @@ any cross-round drift in the box itself is visible inline (a rising
 suite value with a flat ratio is environment, not regression).
 
 Rules (BASELINE.md): session startup excluded; per-query value is the
-median of 3 runs after one warm-up; results are fully materialized via
-the noop sink (no driver collect); DuckDB runs the same oracle SQL as a
-sanity column where one exists.
+median of 3 runs after one warm-up, tracked caches released after the
+warm-up and after every run; results are fully materialized via the
+noop sink (no driver collect); DuckDB runs the same oracle SQL as a
+sanity column where one exists. :func:`warm_up` and :func:`time_key`
+are the one key-timing path: ``tools/measure.py`` times single keys
+through them.
 """
 
 from __future__ import annotations
@@ -196,36 +200,40 @@ def summary_line(summary: dict) -> str:
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
 
+def open_session(app: str):
+    """``(spark, cpus)``: the bench's session on local[$SPARK_GRAFT_CPUS]
+    with every registry key loaded.
+
+    Iterative ops default to reliable checkpoints (cluster-durable; see
+    SCALE.md §9). In a single-JVM local bench, executor loss IS process
+    death, so the durability premium buys nothing — opt into the fast
+    local variant here, explicitly, rather than silently in the library."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    os.environ.setdefault("SIM_SPARK_LOCAL_CHECKPOINT", "1")
+    from sim_spark.session import get_spark
+    import sim_spark.queries  # noqa: F401
+
+    return get_spark(app, cpus=cpus), cpus
+
+
 def _materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    # Iterative ops default to reliable checkpoints (cluster-durable; see
-    # SCALE.md §9). In a single-JVM local bench, executor loss IS process
-    # death, so the durability premium buys nothing — opt into the fast
-    # local variant here, explicitly, rather than silently in the library.
-    os.environ.setdefault("SIM_SPARK_LOCAL_CHECKPOINT", "1")
-
-    from sim_spark.session import get_spark
-    import sim_spark.queries  # noqa: F401
-    from sim_spark.registry import ORACLES, QUERIES
+def warm_up(spark, sf_dir: str) -> None:
+    """Suite-level JIT warm-up (BASELINE.md already excludes session
+    startup): the FIRST query in the loop otherwise pays C2 compilation
+    for the shared codegen/shuffle/scan stack. A FIXED warm-up count is
+    not enough on a cold process — VARIANCE_r08 item 2 measured the
+    flagship ramp 4.09 → 1.17 s over 5 samples, so two untimed runs
+    still left the first timed median ~3x its steady floor in driver
+    runs. r9: run the flagship plan family until two consecutive
+    untimed samples agree within 15% (capped at 8 runs so a genuinely
+    noisy box cannot stall the bench); :func:`time_key`'s per-key
+    warm-up still covers query-specific code."""
+    from sim_spark.registry import QUERIES
     from sim_spark.scratch import release_tracked_caches
 
-    spark = get_spark("sim_spark-bench", cpus=cpus)
-
-    # Suite-level JIT warm-up (BASELINE.md already excludes session
-    # startup): the FIRST query in the loop otherwise pays C2 compilation
-    # for the shared codegen/shuffle/scan stack. A FIXED warm-up count is
-    # not enough on a cold process — VARIANCE_r08 item 2 measured the
-    # flagship ramp 4.09 → 1.17 s over 5 samples, so two untimed runs
-    # still left the first timed median ~3x its steady floor in driver
-    # runs. r9: run the flagship plan family until two consecutive
-    # untimed samples agree within 15% (capped at 8 runs so a genuinely
-    # noisy box cannot stall the bench); the per-query warm-up below
-    # still covers query-specific code.
     prev = None
     for _ in range(8):
         t0 = time.perf_counter()
@@ -236,30 +244,59 @@ def main() -> None:
         prev = dt
     release_tracked_caches()
 
-    times: dict[str, float] = {}
-    all_samples: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = SPECIAL.get(name) or QUERIES[name]
+
+def time_key(spark, key: str, sf_dir: str, runs: int = RUNS) -> list[dict]:
+    """One untimed warm-up sample of ``key``, then ``runs`` timed ones,
+    each ``{"wall_s", "build_s", "exec_s"}``: ``build_s`` is the query
+    function call (including the eager rounds it runs before returning),
+    ``exec_s`` the noop write of the frame it returns. Jobs carry the
+    job group ``key``.
+
+    Per-RUN release (r15, VERDICT r14 item 1): the old per-QUERY
+    release let the untimed warm-up populate every track_cache'd frame
+    and the timed runs then read those blocks through the CacheManager —
+    cache-heavy keys were timed mostly warm (graph_betweenness_sampled
+    measured 6.2 s warm vs 12.5 s cold at the r14 HEAD). Releasing after
+    the warm-up AND after every timed run makes each sample a full cold
+    computation from the parquet inputs; JIT/code-cache/file-stats
+    warm-up is unaffected."""
+    from sim_spark.registry import QUERIES
+    from sim_spark.scratch import release_tracked_caches
+
+    fn = SPECIAL.get(key) or QUERIES[key]
+    sc = spark.sparkContext
+    sc.setJobGroup(key, key)
+    try:
         _materialize(fn(spark, sf_dir))  # warm-up: JIT, code cache, file stats
-        # Per-RUN release (r15, VERDICT r14 item 1): the old per-QUERY
-        # release let the untimed warm-up populate every track_cache'd
-        # frame and the timed runs then read those blocks through the
-        # CacheManager — cache-heavy keys were timed mostly warm
-        # (graph_betweenness_sampled measured 6.2 s warm vs 12.5 s cold
-        # at the r14 HEAD). Releasing after the warm-up AND after every
-        # timed run makes each sample a full cold computation from the
-        # parquet inputs. This is a deliberate measurement-protocol fix
-        # (OPTIMIZATION_r15.md records both protocols' numbers at the
-        # same HEAD); JIT/code-cache/file-stats warm-up is unaffected.
         release_tracked_caches()
         samples = []
-        for _ in range(RUNS):
+        for _ in range(runs):
             t0 = time.perf_counter()
-            _materialize(fn(spark, sf_dir))
-            samples.append(round(time.perf_counter() - t0, 4))
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            _materialize(df)
+            t2 = time.perf_counter()
             release_tracked_caches()
-        all_samples[name] = samples
-        times[name] = round(statistics.median(samples), 3)
+            samples.append({"wall_s": t2 - t0, "build_s": t1 - t0, "exec_s": t2 - t1})
+    finally:
+        sc._jsc.clearJobGroup()
+    return samples
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, cpus = open_session("sim_spark-bench")
+    from sim_spark.registry import ORACLES
+
+    warm_up(spark, sf_dir)
+    times: dict[str, float] = {}
+    all_samples: dict[str, list[dict]] = {}
+    for name in HEADLINE:
+        samples = time_key(spark, name, sf_dir)
+        all_samples[name] = [
+            {k: round(v, 4) for k, v in s.items()} for s in samples
+        ]
+        times[name] = round(statistics.median(s["wall_s"] for s in samples), 3)
 
     # DuckDB sanity column (same parquet, oracle SQL) — context, not a
     # gate. SPARK_GRAFT_SKIP_DUCK=1 skips the FULL column (its CC
@@ -317,12 +354,10 @@ def main() -> None:
             json.dump({**result, "samples": all_samples}, f, indent=1)
     except OSError:
         pass  # read-only checkout: stderr still has the full record
-    samples_out = os.environ.get("SPARK_GRAFT_BENCH_SAMPLES_OUT")
-    if samples_out:  # raw per-run samples for variance studies
-        with open(samples_out, "w") as f:
-            json.dump({**result, "samples": all_samples}, f)
     print(summary_line(summary))
     spark.stop()
+
+
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ the fixpoint doesn't).
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -32,42 +32,21 @@ from pyspark.sql import functions as F
 from sim_spark.ops.materialize import materialize
 
 
-def _contract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Union-find over each Arrow batch's edges → (node, root) with
-    root = min id of the batch-local set (union-by-min + path
-    compression; a batch is a refinement of the partition, which only
-    means slightly less contraction per round, never wrong output)."""
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for s, d in zip(pdf["s"], pdf["d"]):
-            s, d = int(s), int(d)
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                lo, hi = (rs, rd) if rs < rd else (rd, rs)
-                parent[hi] = lo
-        nodes = list(parent)
-        yield pd.DataFrame(
-            {"node": nodes, "root": [find(n) for n in nodes]}
-        ).astype("int64")
+# Finish-in-memory threshold (r15, VERDICT r14 item 4 — the Kiveris-
+# family endgame): the contracted edge list shrinks geometrically, and
+# once it fits comfortably in ONE task a single whole-graph union-find
+# pass replaces the remaining rounds. Each distributed round costs 3
+# driver round-trips (isEmpty + two checkpoints) over a frame that is
+# already tiny — measured 29 jobs / ~5.9 s cold at sf0.1 where the edge
+# list starts below the threshold to begin with. 1M edges ≈ a 1-2 s
+# single-task pass; larger graphs keep contracting distributed until
+# they fit.
+_FINISH_EDGES = 1_000_000
 
 
-def _contract_whole(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Union-find over ALL batches of the (single) partition in one
-    structure — the finish-in-memory step: on a one-partition frame the
-    per-node min root IS the exact component mapping of the remaining
-    contracted graph (unlike :func:`_contract_partition`, which unions
-    per batch and needs further global rounds)."""
+def _roots(pairs: Iterable[tuple[int, int]]) -> pd.DataFrame:
+    """Union-find over ``pairs`` → (node, root) with root = min id of
+    the node's set (union-by-min + path compression)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -76,19 +55,36 @@ def _contract_whole(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             x = parent[x]
         return x
 
-    for pdf in batches:
-        for s, d in zip(pdf["s"], pdf["d"]):
-            s, d = int(s), int(d)
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                lo, hi = (rs, rd) if rs < rd else (rd, rs)
-                parent[hi] = lo
+    for s, d in pairs:
+        s, d = int(s), int(d)
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            lo, hi = (rs, rd) if rs < rd else (rd, rs)
+            parent[hi] = lo
     nodes = list(parent)
-    yield pd.DataFrame(
-        {"node": nodes, "root": [find(n) for n in nodes]}
-    ).astype("int64")
+    return pd.DataFrame({"node": nodes, "root": [find(n) for n in nodes]}).astype(
+        "int64"
+    )
+
+
+def _contract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Union-find over each Arrow batch's edges (a batch is a refinement
+    of the partition, which only means slightly less contraction per
+    round, never wrong output)."""
+    for pdf in batches:
+        if not pdf.empty:
+            yield _roots(zip(pdf["s"], pdf["d"]))
+
+
+def _contract_whole(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Union-find over ALL batches of the (single) partition in one
+    structure — the finish-in-memory step: on a one-partition frame the
+    roots ARE the exact component mapping of the remaining contracted
+    graph, one row per node (unlike :func:`_contract_partition`, which
+    unions per batch and needs further global rounds)."""
+    yield _roots((s, d) for pdf in batches for s, d in zip(pdf["s"], pdf["d"]))
 
 
 def connected_components(
@@ -101,22 +97,10 @@ def connected_components(
 ) -> DataFrame:
     """(node_col) + (src,dst) → (node_col, component) with component =
     min node id reachable. Isolated nodes keep their own id."""
-    import os
-
     # Checkpoint the (small, derived) edge list once so the upstream
     # pair-generation pipeline is evaluated exactly once, not once per
     # reference in the round's two-sided rewrite join.
     cur = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).transform(materialize)
-    # Finish-in-memory threshold (r15, VERDICT r14 item 4 — the
-    # Kiveris-family endgame): the contracted edge list shrinks
-    # geometrically, and once it fits comfortably in ONE task a single
-    # whole-graph union-find pass replaces the remaining rounds. Each
-    # distributed round here costs 3 driver round-trips (isEmpty + two
-    # checkpoints) over a frame that is already tiny — measured 29 jobs
-    # / ~5.9 s cold at sf0.1 where the edge list starts below the
-    # threshold to begin with. 1M edges ≈ a 1-2 s single-task pass;
-    # larger graphs keep contracting distributed until they fit.
-    finish_edges = int(os.environ.get("SIM_SPARK_CC_FINISH_EDGES", "1000000"))
     mappings: list[DataFrame] = []
     converged = False
     for _ in range(max_iter):
@@ -124,19 +108,12 @@ def connected_components(
         if n_edges == 0:
             converged = True
             break
-        if n_edges <= finish_edges:
-            local = cur.coalesce(1).mapInPandas(
-                _contract_whole, schema="node long, root long"
-            )
-            # one partition + whole-partition union-find ⇒ exact roots
-            # of the contracted graph; min-agg is a no-op reshape kept
-            # for the shared compose below
-            m = (
-                local.groupBy("node")
-                .agg(F.min("root").alias("root"))
+        if n_edges <= _FINISH_EDGES:
+            mappings.append(
+                cur.coalesce(1)
+                .mapInPandas(_contract_whole, schema="node long, root long")
                 .transform(materialize)
             )
-            mappings.append(m)
             converged = True
             break
         local = cur.mapInPandas(_contract_partition, schema="node long, root long")

@@ -8,16 +8,16 @@ survive executor loss on a real cluster:
   fast, but after the cut there is no lineage to recompute from, so losing
   one executor mid-job kills the query. Fine on local[32]; wrong at 1000
   executors.
-- ``checkpoint()`` (reliable) writes the RDD to the session checkpoint
-  directory — durable storage (HDFS/S3/DBFS) on a cluster — and severs
-  lineage. An executor loss just re-reads the checkpoint files.
+- a durable write (reliable ``checkpoint()``, or here a parquet write +
+  read-back) lands on durable storage (HDFS/S3/DBFS) on a cluster and
+  severs lineage. An executor loss just re-reads the files.
 
-:func:`materialize` is the one switch point: reliable checkpoint by
-default, with the directory taken from ``SIM_SPARK_CHECKPOINT_DIR`` (point
-it at cluster storage in production) or a per-process local scratch dir
-otherwise. ``SIM_SPARK_LOCAL_CHECKPOINT=1`` opts back into the fast local
-variant for latency-sensitive local benchmarking, where executor loss is
-process death anyway.
+:func:`materialize` is the one switch point: a parquet round-trip by
+default, into ``SIM_SPARK_CHECKPOINT_DIR`` (point it at cluster storage in
+production) or a per-process local scratch dir otherwise.
+``SIM_SPARK_LOCAL_CHECKPOINT=1`` opts into the fast local variant for
+latency-sensitive local benchmarking, where executor loss is process
+death anyway.
 """
 
 from __future__ import annotations
@@ -25,26 +25,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-
-_DIR_SET_FOR: set[str] = set()  # app ids with a checkpoint dir already set
-
-
-def _ensure_checkpoint_dir(df: DataFrame) -> None:
-    sc = df.sparkSession.sparkContext
-    app_id = sc.applicationId
-    if app_id in _DIR_SET_FOR:
-        return
-    existing = sc._jsc.sc().getCheckpointDir()
-    if existing.isDefined():
-        _DIR_SET_FOR.add(app_id)
-        return
-    from sim_spark.scratch import scratch_dir
-
-    sc.setCheckpointDir(
-        os.environ.get("SIM_SPARK_CHECKPOINT_DIR") or scratch_dir("checkpoints")
-    )
-    _DIR_SET_FOR.add(app_id)
-
 
 _MAT_SEQ = 0
 
@@ -78,7 +58,7 @@ def _flat_cached(df: DataFrame) -> DataFrame:
         return df  # Connect / internals moved: plain cached frame still correct
 
 
-def materialize(df: DataFrame, *, cache_ok: bool = False, eager: bool = True) -> DataFrame:
+def materialize(df: DataFrame, *, cache_ok: bool = False) -> DataFrame:
     """Evaluate ``df`` once and sever its lineage, durably by default.
 
     r12: the durable path is a PARQUET write + read-back instead of
@@ -109,17 +89,15 @@ def materialize(df: DataFrame, *, cache_ok: bool = False, eager: bool = True) ->
     up the plan tree no longer applies to the LOGICAL plan (the baked
     physical plan inside the relation nests, but it is a leaf to the
     analyzer/optimizer and canonicalization is memoized per object).
-    ``eager=False`` skips the populating count() — only safe when no
-    two concurrent branches race the first read (a lazy InMemoryRelation
-    recomputes per concurrent first reader). The durable path ignores
-    both flags — parquet round-trips cut lineage regardless."""
+    The populating ``count()`` always runs: a lazy InMemoryRelation
+    would recompute once per concurrent first reader. The durable path
+    ignores ``cache_ok`` — parquet round-trips cut lineage regardless."""
     if os.environ.get("SIM_SPARK_LOCAL_CHECKPOINT") == "1":
         if cache_ok:
             from sim_spark.scratch import track_cache
 
             track_cache(df)
-            if eager:
-                df.count()
+            df.count()
             return _flat_cached(df)
         return df.localCheckpoint()
     global _MAT_SEQ

@@ -67,3 +67,37 @@ def test_control_keys_are_registered_and_oracled():
         assert k in HEADLINE, k  # ctrl keys ride the headline warm-up
     # exactly one deliberately heavy iterative key anchors the band
     assert "graph_betweenness_sampled" in CONTROL
+
+
+def test_time_key_releases_tracked_caches_after_every_sample(spark, monkeypatch):
+    """The per-sample protocol: the warm-up and every timed sample end
+    with a release, so no sample reads a cache an earlier run populated;
+    each sample splits its wall into build (the query function) and
+    execute (the noop write)."""
+    import bench
+    import sim_spark.queries  # noqa: F401
+    import sim_spark.scratch as scratch
+
+    monkeypatch.setenv("SIM_SPARK_LOCAL_CHECKPOINT", "1")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    real = scratch.release_tracked_caches
+    calls = []
+
+    def release():
+        tracked = list(scratch._TRACKED_CACHES)
+        real()
+        alive = [df for df in tracked if cm.lookupCachedData(df._jdf).isDefined()]
+        calls.append((len(tracked), len(alive)))
+
+    monkeypatch.setattr(scratch, "release_tracked_caches", release)
+    runs = 2
+    samples = bench.time_key(
+        spark, "text_bigram_perplexity", "/root/testdata/sf0.001", runs
+    )
+    assert len(samples) == runs
+    assert len(calls) == runs + 1  # after the warm-up and after each sample
+    assert all(n > 0 and alive == 0 for n, alive in calls), calls
+    assert scratch._TRACKED_CACHES == []
+    for s in samples:
+        assert s["build_s"] > 0 and s["exec_s"] > 0
+        assert s["build_s"] + s["exec_s"] <= s["wall_s"] + 1e-9

@@ -213,6 +213,36 @@ def test_connected_components_chain_converges_logarithmically(spark):
     assert {r["component"] for r in cc} == {0}
 
 
+def test_connected_components_rounds_path_matches_one_task_finish(spark, monkeypatch):
+    """With the finish threshold at 0 every graph takes the distributed
+    contraction rounds; their labels must equal the whole-graph
+    union-find finish, on the 100-node chain and on the dedup key."""
+    import warnings
+
+    import sim_spark.ops.connected_components as ccmod
+    import sim_spark.queries  # noqa: F401
+    from sim_spark.registry import QUERIES
+
+    n = 100
+    nodes = spark.range(n).withColumnRenamed("id", "nid")
+    edges = spark.range(n - 1).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+
+    def rows():
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")  # a max_iter warning fails the test
+            chain = ccmod.connected_components(nodes, edges, node_col="nid")
+            chain = sorted(map(tuple, chain.collect()))
+        key = QUERIES["dedup_connected_components"](spark, "/root/testdata/sf0.01")
+        return chain, sorted(map(tuple, key.collect()))
+
+    one_task = rows()
+    monkeypatch.setattr(ccmod, "_FINISH_EDGES", 0)
+    assert rows() == one_task
+    assert len(one_task[0]) == n and {c for _, c in one_task[0]} == {0}
+
+
 def test_connected_components_is_a_fixpoint(spark):
     """CC labels are stable under one more propagation round (true
     fixpoint), components are min-labeled, and CC refines the one-hop

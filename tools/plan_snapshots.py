@@ -59,13 +59,19 @@ SNAPSHOT = [
 ]
 
 
+def explain_formatted(df) -> str:
+    """``df.explain("formatted")`` as a string (the pre-execution plan)."""
+    spark = df.sparkSession
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
 def main() -> None:
     from sim_spark.session import get_spark
     import sim_spark.queries  # noqa: F401
     from sim_spark.registry import QUERIES
 
     spark = get_spark("plans", cpus=4)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     lines = [
         "# PLANS — physical-plan snapshots (sf0.001, AQE pre-execution)",
         "",
@@ -75,7 +81,7 @@ def main() -> None:
     ]
     for key, why in SNAPSHOT:
         df = QUERIES[key](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = explain_formatted(df)
         # Operator tree + scan detail (ReadSchema/PushedFilters evidence),
         # capped so join-heavy plans don't balloon the file.
         plan_lines = plan.splitlines()
