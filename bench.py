@@ -204,12 +204,11 @@ def open_session(app: str):
     """``(spark, cpus)``: the bench's session on local[$SPARK_GRAFT_CPUS]
     with every registry key loaded.
 
-    Iterative ops default to reliable checkpoints (cluster-durable; see
-    SCALE.md §9). In a single-JVM local bench, executor loss IS process
-    death, so the durability premium buys nothing — opt into the fast
-    local variant here, explicitly, rather than silently in the library."""
+    Nothing here picks the lineage-cut mode: iterative ops take whatever
+    ``ops/materialize.py`` takes for the environment (a local cut unless
+    ``SIM_SPARK_CHECKPOINT_DIR`` is set), so the bench times the path
+    the driver contract and the oracle drive run."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    os.environ.setdefault("SIM_SPARK_LOCAL_CHECKPOINT", "1")
     from sim_spark.session import get_spark
     import sim_spark.queries  # noqa: F401
 

@@ -339,7 +339,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (survivor nodes, surviving edges per round) is the output. Fixpoint
     k-core is this loop run until stable; the bounded form keeps it
     SQL-oracle-checkable while exercising the identical per-round plan.
-    Edges are durably materialized each round (ops/materialize.py):
+    Edges are materialized (lineage cut) each round (ops/materialize.py):
     every round references the previous edge frame THREE times (degree
     count + two endpoint semi-joins), so uncut lineage would grow 3^K."""
     e = _copurchase_edges(spark, sf_dir).transform(materialize)

@@ -9,11 +9,13 @@ every query is hash-checked end-to-end. All arithmetic is integer, so
 there is no float-noise surface at all.
 
 Spark shape per round: one equi-join of the state frame onto the edge
-list + one keyed aggregate — the relational Bellman-Ford step. The state
-is durably materialized per round (ops/materialize.py, same as PageRank):
-each round references the previous state twice (relax leg + carry leg),
-so un-cut lineage grows 2^K. At 100 TB the state frame is one row per
-node and both the join and the aggregate hash-partition on the node key.
+list + one keyed aggregate — the relational Bellman-Ford step. The
+mirrored edge list has one construction (:func:`_edges_both`), cut once
+per query; the state is cut per round (ops/materialize.py, same as
+PageRank): each round references the previous state twice (relax leg +
+carry leg), so un-cut lineage grows 2^K. At 100 TB the state frame is
+one row per node and both the join and the aggregate hash-partition on
+the node key.
 The full-relaxation form (re-relax every node each round, not just the
 frontier) trades redundant work for a fixed per-round plan — the standard
 scale formulation, since a frontier filter saves little once the frontier
@@ -28,7 +30,7 @@ from pyspark.sql import Window as W
 
 from sim_spark.io import table
 from sim_spark.ops.materialize import materialize
-from sim_spark.queries.graph_ops import _EDGES_CTE, _copurchase_edges
+from sim_spark.queries.graph_ops import _EDGES_CTE, _order_baskets
 from sim_spark.registry import query
 
 # Undirected graph: mirror the canonical (u < v) edge list both ways.
@@ -44,55 +46,42 @@ LPA_ROUNDS = 3
 
 def _edges_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized once: every round (and both union legs) re-references
-    # this frame; un-cut, the pair-generation self-join re-executes per
-    # reference and the K-round plan grows exponentially (each round's
-    # state references the previous state twice: relax + union).
-    import os
-
-    if os.environ.get("SIM_SPARK_LOCAL_CHECKPOINT") == "1":
-        # r15 (VERDICT r14 item 2): cache the MIRRORED frame
-        # hash-partitioned on src — every consumer loop joins
-        # e2.src == state.node, and with an unpartitioned cache each
-        # round's AQE plan materialized a fresh full shuffle map stage
-        # over the edge frame BEFORE converting the tiny state side to
-        # broadcast (measured: two 64-task ~1.4 s stages per round on
-        # betweenness; ~7 such scans per cold run). Partitioned once,
-        # EnsureRequirements reuses the cached layout for every round's
-        # join: one exchange total instead of one per round (guide
-        # §2.4). repartition("src") takes the session shuffle
-        # parallelism, so the layout is scale-adaptive, and the
-        # InMemoryRelation preserves outputPartitioning for consumers.
-        # Both directions are emitted IN-ROW by the basket expansion and
-        # deduped ON the src layout (hashpartitioning(src) satisfies the
-        # (src, dst)-clustered distribution the dedup aggregate needs),
-        # so the old distinct-by-(u,v) exchange disappears too: one
-        # exchange builds dedup + layout together.
-        from sim_spark.queries.graph_ops import _order_baskets
-
-        both = (
-            _order_baskets(spark, sf_dir)
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ps, (x, i) -> flatten("
-                        "transform(slice(ps, i + 2, size(ps)), "
-                        "y -> array(struct(x AS src, y AS dst), "
-                        "struct(y AS src, x AS dst))))))"
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
+    # this frame; un-cut, the pair generation re-executes per reference
+    # and the K-round plan grows exponentially (each round's state
+    # references the previous state twice: relax + union).
+    #
+    # The MIRRORED frame is hash-partitioned on src: every consumer loop
+    # joins e2.src == state.node, and with an unpartitioned cut each
+    # round's AQE plan materialized a fresh full shuffle map stage over
+    # the edge frame BEFORE converting the tiny state side to broadcast
+    # (measured: two 64-task ~1.4 s stages per round on betweenness).
+    # Partitioned once, EnsureRequirements reuses the cached layout for
+    # every round's join: one exchange total instead of one per round
+    # (guide §2.4). repartition("src") takes the session shuffle
+    # parallelism, so the layout is scale-adaptive, and the
+    # InMemoryRelation preserves outputPartitioning for consumers. Both
+    # directions are emitted IN-ROW by the basket expansion and deduped
+    # ON the src layout (hashpartitioning(src) satisfies the
+    # (src, dst)-clustered distribution the dedup aggregate needs), so
+    # one exchange builds dedup + layout together. Under
+    # SIM_SPARK_CHECKPOINT_DIR the cut is a parquet round-trip instead;
+    # the read-back carries no layout, and each round's join shuffles.
+    both = (
+        _order_baskets(spark, sf_dir)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) -> flatten("
+                    "transform(slice(ps, i + 2, size(ps)), "
+                    "y -> array(struct(x AS src, y AS dst), "
+                    "struct(y AS src, x AS dst))))))"
+                )
+            ).alias("e")
         )
-        e2 = both.repartition("src").dropDuplicates(["src", "dst"])
-        return materialize(e2, cache_ok=True)
-    # Durable path (cluster): checkpoint the UNDIRECTED half and mirror
-    # it lazily — parquet read-back cannot carry a hash layout anyway,
-    # and the durable write halves (the mirrored frame was 24M rows at
-    # sf1; r12).
-    e = materialize(_copurchase_edges(spark, sf_dir))
-    return e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        .select("e.src", "e.dst")
     )
+    e2 = both.repartition("src").dropDuplicates(["src", "dst"])
+    return materialize(e2, cache_ok=True)
 
 
 # --------------------------------------------------------------------------
@@ -253,10 +242,10 @@ FROM l{rounds} GROUP BY label ORDER BY n_members DESC, label LIMIT 20"""
     )
 
 
-def _lpa_labels(spark: SparkSession, sf_dir: str, rounds: int = LPA_ROUNDS):
-    """Deterministic LPA labels after ``rounds`` synchronous rounds —
-    the Spark twin of _lpa_cte_chain (materialized per round)."""
-    e2 = _edges_both(spark, sf_dir)
+def _lpa_labels(e2: DataFrame, rounds: int = LPA_ROUNDS):
+    """Deterministic LPA labels over the mirrored edge list ``e2`` after
+    ``rounds`` synchronous rounds — the Spark twin of _lpa_cte_chain
+    (materialized per round)."""
     labels = e2.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -284,7 +273,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines replay it exactly. Per round: one join + one
     (node, label) count + one per-node top-1 window. Returns the 20
     largest communities."""
-    labels = _lpa_labels(spark, sf_dir)
+    labels = _lpa_labels(_edges_both(spark, sf_dir))
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -469,8 +458,8 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shape: every layer/dependency state is one equi-join onto the
     materialized mirrored edge list + one keyed aggregate, all keyed by
     (src, node) — the identical relational-iteration plan as BFS/SSSP
-    above, twice (forward then backward). States are durably
-    materialized per round so the 2D-round lineage stays flat; at scale
+    above, twice (forward then backward). States are materialized
+    (lineage cut) per round so the 2D-round lineage stays flat; at scale
     the K sources multiply state rows, not plan depth."""
     def _cut(df: DataFrame) -> DataFrame:
         return materialize(df, cache_ok=True)
@@ -538,9 +527,9 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.coalesce(F.sum(contrib), F.lit(0)).cast("long").alias("dq"))
         )
         if k > 1:
-            # d1 is consumed exactly once (the bc union) — a checkpoint
-            # there would be a pure write-read tax; deeper deps feed both
-            # the next sweep and the union, so they stay durable.
+            # d1 is consumed exactly once (the bc union) — a cut there
+            # would be a pure write-read tax; deeper deps feed both the
+            # next sweep and the union, so they are cut.
             deps[k] = _cut(deps[k])
     all_d = deps[1].select("src", "node", "dq")
     for k in range(2, _BC_DEPTH + 1):
@@ -607,8 +596,8 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree mass per community is a node-keyed then label-keyed
     aggregate. Everything partial+final; the Σd_c² reduce runs on the
     community frame, which is graph-order-bounded."""
-    labels = _lpa_labels(spark, sf_dir)
     e2 = _edges_both(spark, sf_dir)
+    labels = _lpa_labels(e2)
     la = labels.select(F.col("node").alias("na"), F.col("label").alias("la"))
     lb = labels.select(F.col("node").alias("nb"), F.col("label").alias("lb"))
     m2 = e2.agg(F.count(F.lit(1)).cast("bigint").alias("m2"))

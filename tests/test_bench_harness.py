@@ -78,7 +78,6 @@ def test_time_key_releases_tracked_caches_after_every_sample(spark, monkeypatch)
     import sim_spark.queries  # noqa: F401
     import sim_spark.scratch as scratch
 
-    monkeypatch.setenv("SIM_SPARK_LOCAL_CHECKPOINT", "1")
     cm = spark._jsparkSession.sharedState().cacheManager()
     real = scratch.release_tracked_caches
     calls = []

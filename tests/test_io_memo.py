@@ -5,7 +5,8 @@ checks it against the pin and remembers it under the file's identity
 (path, mtime, size); later loads hand the remembered schema to the
 reader and submit no Spark job. These tests pin that the memo never
 hides drift, that a hit reads exactly what an inferring read does, and
-the durable ``materialize`` read-back that skips inference the same way.
+the ``materialize`` parquet read-back (``SIM_SPARK_CHECKPOINT_DIR`` set)
+that skips inference the same way and returns what the local cut does.
 """
 
 from __future__ import annotations
@@ -129,7 +130,6 @@ def test_nanos_events_layout_is_remembered(spark, tmp_path):
 def test_durable_materialize_reads_back_without_inference(spark, monkeypatch, tmp_path):
     from sim_spark.ops.materialize import materialize
 
-    monkeypatch.delenv("SIM_SPARK_LOCAL_CHECKPOINT", raising=False)
     monkeypatch.setenv("SIM_SPARK_CHECKPOINT_DIR", str(tmp_path))
     df = io.table(spark, SF, "nation").where("n_regionkey > 1")
     _, n_write = _jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
@@ -137,16 +137,43 @@ def test_durable_materialize_reads_back_without_inference(spark, monkeypatch, tm
     assert n_mat == n_write, "the read-back must not infer the written schema"
     assert out.schema == df.schema
     assert _hash(out) == _hash(df)
+    assert list(tmp_path.glob("mat_*/*.parquet")), "the cut must land in the configured dir"
 
 
-def test_connected_components_durable_mode_is_hash_identical(spark, monkeypatch):
-    key = "dedup_connected_components"
-    monkeypatch.setenv("SIM_SPARK_LOCAL_CHECKPOINT", "1")
+# Every registered key whose build calls ops.materialize.
+_CC_KEYS = ("dedup_connected_components", "dedup_cluster_canonical")
+_MATERIALIZE_KEYS = (
+    "graph_bfs_layers",
+    "graph_sssp_weighted",
+    "graph_label_propagation",
+    "graph_betweenness_sampled",
+    "graph_modularity_score",
+    *_CC_KEYS,
+    "graph_pagerank",
+    "graph_triangle_count",
+    "graph_kcore_peel",
+    "graph_triangle_doulion",
+    "graph_clustering_global",
+    "graph_assortativity",
+    "graph_degree_hist",
+)
+
+
+@pytest.mark.parametrize("key", _MATERIALIZE_KEYS)
+def test_checkpoint_dir_mode_is_hash_identical(spark, monkeypatch, tmp_path, key):
+    """The local cut (dir unset: the path every timed run takes) and the
+    parquet round-trip (dir set) return the same rows."""
+    from sim_spark.scratch import release_tracked_caches
+
+    monkeypatch.delenv("SIM_SPARK_CHECKPOINT_DIR", raising=False)
     local = _hash(QUERIES[key](spark, SF))
-    monkeypatch.delenv("SIM_SPARK_LOCAL_CHECKPOINT")
+    release_tracked_caches()
+    monkeypatch.setenv("SIM_SPARK_CHECKPOINT_DIR", str(tmp_path))
     assert _hash(QUERIES[key](spark, SF)) == local
-    res = run_parity(spark, key, SF)
-    assert res.ok, f"{key}: {res.detail}\n" + "\n".join(res.diffs)
+    assert any(tmp_path.glob("mat_*/*.parquet")), "the dir-set run must write its cuts there"
+    if key in _CC_KEYS:
+        res = run_parity(spark, key, SF)
+        assert res.ok, f"{key}: {res.detail}\n" + "\n".join(res.diffs)
 
 
 def test_normalize_warns_once_on_a_refused_conf_and_raises_on_bugs(monkeypatch):

@@ -1200,7 +1200,7 @@ def test_materialize_cache_ok_rows_and_partitioning(spark, monkeypatch):
     from sim_spark.ops.materialize import materialize
     from sim_spark import scratch
 
-    monkeypatch.setenv("SIM_SPARK_LOCAL_CHECKPOINT", "1")
+    monkeypatch.delenv("SIM_SPARK_CHECKPOINT_DIR", raising=False)
     base = spark.range(0, 1000).select(
         (F.col("id") % 7).alias("k"), F.col("id").alias("v")
     )
@@ -1233,3 +1233,43 @@ def test_materialize_cache_ok_rows_and_partitioning(spark, monkeypatch):
     scratch._TRACKED_CACHES.remove(tracked)
     # after release, the wrapped frame recomputes from the baked plan
     assert {(r["k"], r["s"]) for r in mat.collect()} == expect
+    # without cache_ok the dir-unset cut is local too: no parquet relation
+    cut = materialize(agg)._jdf.queryExecution().analyzed().toString()
+    assert "parquet" not in cut.lower(), cut
+
+
+def test_flat_cached_degrades_with_one_warning(spark, monkeypatch):
+    """When the JVM lookup behind the flat rewrap fails (here: the
+    ``classic.Dataset`` class is missing, so py4j hands back a package
+    and calling it raises), materialize returns the plain cached frame
+    and says so once per process, not once per call."""
+    import warnings
+
+    from py4j.protocol import Py4JError
+
+    import sim_spark.ops.materialize as mat
+    from sim_spark import scratch
+
+    class _MissingClass:
+        def __getattr__(self, name):
+            return self
+
+        def __call__(self, *args):
+            raise Py4JError("Trying to call a package.")
+
+    monkeypatch.delenv("SIM_SPARK_CHECKPOINT_DIR", raising=False)
+    monkeypatch.setattr(mat, "_WARNED", False)
+    agg = spark.range(0, 100).groupBy((F.col("id") % 3).alias("k")).agg(
+        F.sum("id").alias("s")
+    )
+    expect = sorted(map(tuple, agg.collect()))
+    with monkeypatch.context() as m, warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        m.setattr(spark, "_jvm", _MissingClass())
+        outs = [mat.materialize(agg, cache_ok=True) for _ in range(2)]
+    ours = [w for w in seen if issubclass(w.category, RuntimeWarning)]
+    assert len(ours) == 1, [str(w.message) for w in seen]
+    assert "Py4JError" in str(ours[0].message)
+    for out in outs:
+        assert sorted(map(tuple, out.collect())) == expect
+    scratch.release_tracked_caches()
