@@ -71,10 +71,6 @@ def sql_davg(expr: str, ndigits: int = 6) -> str:
     return f"ROUND({sql_dsum(expr)} / COUNT({expr}), {ndigits})"
 
 
-def sql_ts_str(expr: str) -> str:
-    return f"strftime({expr}, '%Y-%m-%d %H:%M:%S')"
-
-
 def h48(col: Column) -> Column:
     """48-bit integer from the md5 hex prefix — same bits both engines.
     Pass a STRING column (cast integers yourself): string rendering of

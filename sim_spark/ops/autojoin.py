@@ -28,40 +28,20 @@ names must be disjoint (the refine filter re-resolves by name); the
 band must relate ONE left attribute to ONE right attribute with
 literal / simple-INTERVAL offsets.
 
-Deploy-mode behavior matrix (r11 — every cell rewritten or loud, no
-silent BNLJ):
-
-===========  ======================  ===================================
-API          classic PySpark         Spark Connect
-===========  ======================  ===================================
-DataFrame    Python walker rewrite   `on._jc` unreadable → the SAME band
-(auto_join)  (this module)           algebra re-derives the conjuncts
-                                     from the condition's printed prefix
-                                     grammar (_conjuncts_from_text, r11)
-                                     and rewrites client-side; only if
-                                     the text isn't that grammar does it
-                                     degrade with a RuntimeWarning naming
-                                     ops/sqlband — and the COMPILED rule
-                                     still bucket-rewrites the fallback
-                                     join when the server ships
-                                     spark.sql.extensions (it matches the
-                                     resolved Join plan regardless of the
-                                     condition's origin)
-SQL string   compiled Catalyst rule  compiled rule iff configured
-             (ops/sqlband installs   server-side (no runtime injection
-             into the live JVM)      without a JVM gateway — the
-                                     ops/sqlband.py fence); else naive +
-                                     the rule's own NaiveBandJoinWarning
-                                     is unavailable, so plans should be
-                                     reviewed
-===========  ======================  ===================================
+Platform: classic PySpark only. The walker reads the condition through
+``on._jc.node()``; if that read fails (PySpark internals drift), the
+join degrades to the plain ``left.join`` with a ``RuntimeWarning``.
+SQL-string band joins go through the compiled Catalyst rule that
+:mod:`sim_spark.ops.sqlband` installs into the live JVM.
 """
 
 from __future__ import annotations
 
 import re
+import warnings
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -199,154 +179,6 @@ def _conjuncts(n) -> list:
     return [n]
 
 
-# --- Connect-repr text walker (r10 verdict task #3) -------------------------
-#
-# Under Spark Connect there is no `_jc` and the ColumnNode readers above
-# cannot run — but `repr(Column)` is "Column<'<expr>'>" in BOTH modes,
-# and the Connect client prints expressions in a stable prefix grammar
-# (pyspark/sql/connect/expressions.py):
-#
-#   UnresolvedFunction  -> name(arg, arg, ...)     e.g.  >=(rv, -(lv, 4.0))
-#   ColumnReference     -> bare identifier         e.g.  lv   or  t.lv
-#   LiteralExpression   -> f"{value}"              e.g.  4.0, -7
-#   SQLExpression       -> its raw SQL text        e.g.  INTERVAL '1' HOUR
-#
-# _parse_text_node below parses that grammar into tiny shim nodes that
-# implement the SAME read protocol as the JVM ColumnNode tree (_cls /
-# _children / functionName / nameParts / value / expression), so
-# _classify and the whole band algebra are reused verbatim — one
-# grammar, two front-ends. Anything unparseable becomes an opaque node
-# that classifies to None, and any parse error aborts to the naive
-# join: the text path can only ever ADD a rewrite, never change rows
-# (the original predicate is still the refine filter). The classic
-# infix repr ("((rv >= (lv - 4.0)) AND ...)") deliberately does not
-# parse as this grammar — classic sessions never reach this path.
-
-
-class _TxtShim:
-    """Duck-typed stand-in for a JVM ColumnNode (see protocol above)."""
-
-    def __init__(self, kind: str, *, name: str = "", parts=None, val=None, sql=""):
-        self._kind = kind
-        self._name = name
-        self._parts = parts or []
-        self._val = val
-        self._sql = sql
-        self._kids: list[_TxtShim] = []
-
-    # getClass().getSimpleName() protocol
-    def getClass(self):
-        return self
-
-    def getSimpleName(self) -> str:
-        return self._kind
-
-    # children() -> scala-Seq-like (size/apply) protocol
-    def children(self):
-        return _TxtSeq(self._kids)
-
-    def functionName(self) -> str:
-        return self._name
-
-    def nameParts(self):
-        return _TxtSeq(self._parts)
-
-    def value(self):
-        return self._val
-
-    def expression(self) -> str:
-        return self._sql
-
-
-class _TxtSeq:
-    def __init__(self, items):
-        self._items = list(items)
-
-    def size(self) -> int:
-        return len(self._items)
-
-    def apply(self, i: int):
-        return self._items[i]
-
-
-_NUM_RE = re.compile(r"-?(?:\d+\.\d*(?:[eE][+-]?\d+)?|\.\d+|\d+(?:[eE][+-]?\d+)?)")
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*")
-
-
-def _atom_shim(text: str) -> _TxtShim:
-    text = text.strip()
-    if _NUM_RE.fullmatch(text):
-        v = float(text) if any(c in text for c in ".eE") else int(text)
-        return _TxtShim("Literal", val=v)
-    if re.match(r"(?i)^\s*INTERVAL\b", text):
-        return _TxtShim("SqlExpression", sql=text)
-    if _IDENT_RE.fullmatch(text) and text.upper() not in ("NULL", "TRUE", "FALSE"):
-        return _TxtShim("UnresolvedAttribute", parts=text.split("."))
-    return _TxtShim("Opaque")  # classifies to None; refine keeps semantics
-
-
-def _parse_text_node(s: str, pos: int) -> tuple[_TxtShim, int]:
-    """Parse one node at s[pos:]; returns (node, next_pos). A node is
-    ``name(args)`` when the first top-level special char is '(' —
-    otherwise everything up to the next top-level ',' or ')' is an
-    atom."""
-    i = pos
-    while i < len(s) and s[i] not in "(),":
-        i += 1
-    if i < len(s) and s[i] == "(" and s[pos:i].strip():
-        fn = _TxtShim("UnresolvedFunction", name=s[pos:i].strip())
-        i += 1  # past '('
-        while True:
-            child, i = _parse_text_node(s, i)
-            fn._kids.append(child)
-            if i >= len(s):
-                raise ValueError("unterminated call")
-            if s[i] == ",":
-                i += 1
-                continue
-            if s[i] == ")":
-                return fn, i + 1
-            raise ValueError(f"unexpected char at {i}")
-    # atom: consume to the next top-level ',' or ')' (atoms never nest)
-    j = pos
-    while j < len(s) and s[j] not in ",)":
-        if s[j] == "(":
-            raise ValueError("paren inside atom")
-        j += 1
-    return _atom_shim(s[pos:j]), j
-
-
-def _column_text(on) -> str | None:
-    """The expression text inside "Column<'...'>" — identical wrapper in
-    classic and Connect; only the inner grammar differs."""
-    m = re.fullmatch(r"Column<'(.*)'>", repr(on), flags=re.S)
-    return m.group(1) if m else None
-
-
-def _conjuncts_from_text(on) -> list | None:
-    """Connect fallback front-end: parse repr(on)'s prefix grammar into
-    shim conjuncts, or None when the text isn't that grammar."""
-    text = _column_text(on)
-    if text is None:
-        return None
-    try:
-        node, end = _parse_text_node(text, 0)
-        if end != len(text):
-            return None
-        if node.getSimpleName() == "Opaque":
-            return None
-        return _conjuncts(node)
-    except Exception:
-        # opportunistic front-end: any read failure means "not this
-        # grammar" — the caller degrades loudly, rows stay naive-exact
-        return None
-
-
-#: incremented whenever the text front-end (not the JVM walker) supplies
-#: the parsed condition — tests and deploy audits read it
-TEXT_PARSES = 0
-
-
 # --- classification ---------------------------------------------------------
 
 
@@ -443,50 +275,22 @@ def auto_join(
         return left.join(right, on, how)
 
     try:
-        # Classic-PySpark-only internals: `on._jc.node()` and the node
-        # readers above don't exist under Spark Connect and may shift
-        # between Spark versions. The rewrite is purely opportunistic —
-        # ANY failure to read the tree degrades to the plain join rather
-        # than breaking a public API whose contract is "falls back
-        # untouched when unsupported".
+        # `on._jc.node()` and the node readers above are PySpark
+        # internals that may shift between Spark versions; a failed read
+        # degrades to the plain join, loudly.
         parsed = [_classify(c, lcols, rcols) for c in _conjuncts(on._jc.node())]
-    except Exception:
-        # The JVM walker is unavailable (Spark Connect, or internals
-        # drift). r11 (r10 verdict task #3): before degrading, re-derive
-        # the SAME conjunct shapes from the condition's printed text —
-        # the Connect client reprs expressions in a stable prefix
-        # grammar, and _conjuncts_from_text parses it into shim nodes
-        # the band algebra reads verbatim. Only when THAT also fails
-        # does the loud degradation fire (r9 verdict task #4): name the
-        # compiled rule, which routes what's routable — it matches the
-        # RESOLVED logical Join regardless of whether the condition came
-        # from a SQL string or this DataFrame API, so when
-        # ops.sqlband.install_sql_band_extension ran (classic) or the
-        # cluster ships spark.sql.extensions server-side (Connect), the
-        # plain join below still replans as bucket-equi + refine
-        # JVM-side (asserted in tests/test_ops_properties.py).
-        txt = _conjuncts_from_text(on)
-        if txt is not None:
-            global TEXT_PARSES
-            TEXT_PARSES += 1
-            parsed = [_classify(c, lcols, rcols) for c in txt]
-        else:
-            import warnings
-
-            warnings.warn(
-                "auto_join could not read the Column expression tree "
-                "(Spark Connect, or PySpark internals drift) and the "
-                "condition text is not the Connect prefix grammar: "
-                "falling back to the plain join. If the simspark "
-                "SQL-band extension is active "
-                "(sim_spark.ops.sqlband.install_sql_band_extension, "
-                "or spark.sql.extensions server-side), band conditions "
-                "are still bucket-rewritten JVM-side; otherwise expect "
-                "a BroadcastNestedLoopJoin.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return left.join(right, on, how)
+    except (Py4JError, AttributeError):
+        warnings.warn(
+            "auto_join could not read the Column expression tree "
+            "(PySpark internals drift): falling back to the plain join. "
+            "If the simspark SQL-band extension is active "
+            "(sim_spark.ops.sqlband.install_sql_band_extension), band "
+            "conditions are still bucket-rewritten JVM-side; otherwise "
+            "expect a BroadcastNestedLoopJoin.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return left.join(right, on, how)
     # collect bounds per (l_attr, r_attr) pair; [lo, hi, offset-unit set]
     bounds: dict[tuple[str, str], list] = {}
     for p in parsed:
@@ -767,9 +571,9 @@ def auto_asof(
     composite's schema-generic contract; callers re-cast).
 
     Unlike :func:`auto_join` there is NO plain-join fallback — a plain
-    join has different semantics — so an unrecognizable predicate (or a
-    Connect-only environment where the Column internals are unreadable)
-    raises ``ValueError`` loudly instead of guessing.
+    join has different semantics — so an unrecognizable predicate (or
+    Column internals that cannot be read) raises ``ValueError`` loudly
+    instead of guessing.
     """
     lcols, rcols = set(left.columns), set(right.columns)
     if lcols & rcols:
@@ -779,7 +583,7 @@ def auto_asof(
         )
     try:
         parsed = [_asof_parse(c, lcols, rcols) for c in _conjuncts(on._jc.node())]
-    except Exception as exc:  # Connect / node-API drift: no semantic fallback
+    except (Py4JError, AttributeError) as exc:  # node-API drift: no fallback
         raise ValueError(
             "auto_asof could not read the join condition's Column tree "
             "(classic PySpark only); build the as-of join explicitly via "

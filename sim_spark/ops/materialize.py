@@ -45,9 +45,8 @@ def _flat_cached(df: DataFrame) -> DataFrame:
     columnar blocks. If the blocks are later evicted or released, the
     relation recomputes from its baked physical plan — same recovery
     story as a plain cache. Falls back to ``df`` unchanged, with one
-    ``RuntimeWarning`` per process, when the JVM internals are
-    unreachable (Spark Connect, or a Spark without
-    ``classic.Dataset``)."""
+    ``RuntimeWarning`` per process, when the JVM lookup fails (a Spark
+    without ``classic.Dataset``)."""
     try:
         spark = df.sparkSession
         jspark = spark._jsparkSession

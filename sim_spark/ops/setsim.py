@@ -162,10 +162,7 @@ def jaccard_join_prefix(
     )
     a = prefixes.select(F.col("id").alias("id_a"), "h")
     b = prefixes.select(F.col("id").alias("id_b"), "h").hint("shuffle_hash")
-    try:
-        slots = sets.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        slots = None
+    slots = sets.sparkSession.sparkContext.defaultParallelism
     cand = (
         a.join(b, ["h"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -184,8 +181,7 @@ def jaccard_join_prefix(
     # and forced exactly-slots partitions at any scale; mass-derived
     # sizing (~100k candidate pairs per refine task) fans out further as
     # the pair list grows and still covers every core locally.
-    if slots:
-        cand = cand.repartition(max(slots, mass // 100_000))
+    cand = cand.repartition(max(slots, mass // 100_000))
 
     # Exact refine: the SMALL candidate-pair set joins the corpus keyed
     # on id — a plain shuffle join whose cost scales with the candidates

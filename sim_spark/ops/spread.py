@@ -23,52 +23,44 @@ conversion physically planned the query AND built a pickle-serializing
 Python RDD per call (repeated driver work on 100 TB-wide plans), and it
 read the pre-AQE partition count anyway. The stats pass is analysis +
 optimization the query pays regardless (memoized on the Dataset), and
-bytes-vs-split-size is exactly how the scan itself will be split.
+bytes-vs-split-size is exactly how the scan itself will be split. The
+split size is the session's parsed ``spark.sql.files.maxPartitionBytes``.
+If the probe's JVM calls fail, the frame comes back unchanged after one
+process-wide ``RuntimeWarning``.
 """
 
 from __future__ import annotations
 
 import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _WARNED = False
 
 
-def _warn_once(what: str) -> None:
-    # ADVICE r14: the old guards swallowed every exception twice, so a
-    # real regression silently degraded to the serial layout with no
-    # signal. One process-wide warning distinguishes "Connect, by
-    # design" from "the probe broke".
-    global _WARNED
-    if not _WARNED:
-        _WARNED = True
-        warnings.warn(
-            f"spread(): layout probe unavailable ({what}); leaving frame "
-            "layout unchanged for this process",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-
-
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """How many tasks the frame's scan stage will get, estimated from
     plan statistics: sizeInBytes / maxPartitionBytes (clamped up by 1).
-    None when the JVM internals are unreachable (Spark Connect)."""
+    None when a JVM call of the probe fails."""
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        raw = df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728b"
-        ).strip().lower()
-        units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-        raw = raw.removesuffix("b")
-        mult = units.get(raw[-1:], 1)
-        max_split = int(raw.rstrip("kmgt") or "134217728") * mult
-        return max(1, size // max_split)
-    except Exception as exc:
-        _warn_once(f"stats probe failed: {type(exc).__name__}: {exc}")
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        return max(1, size // conf.filesMaxPartitionBytes())
+    except Py4JError as exc:
+        # A broken probe must not silently degrade to the serial layout:
+        # one process-wide warning says the layout decision was skipped.
+        global _WARNED
+        if not _WARNED:
+            _WARNED = True
+            warnings.warn(
+                f"spread(): layout probe failed ({type(exc).__name__}: "
+                f"{exc}); leaving frame layout unchanged for this process",
+                RuntimeWarning,
+                stacklevel=3,
+            )
         return None
 
 
@@ -76,12 +68,8 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin ``df`` into ``min_partitions`` partitions iff its
     estimated scan parallelism is below that target. The target
     defaults to the session's ``defaultParallelism`` (its task slots)
-    and is clamped to it. No-op under Spark Connect (no JVM access)."""
-    try:
-        slots = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext — leave layout alone
-        _warn_once("no sparkContext (Spark Connect)")
-        return df
+    and is clamped to it. No-op when the layout probe fails."""
+    slots = df.sparkSession.sparkContext.defaultParallelism
     target = slots if min_partitions is None else min(min_partitions, slots)
     est = _estimated_scan_partitions(df)
     if est is None or est >= target:

@@ -38,14 +38,15 @@ batch, applied to every subsequent plan including pure SQL strings):
   re-runs extra rules in its fixed-point batch and under AQE), so they
   count distinct join conditions, not rule visits.
 
-Installation is purely additive and opportunistic: the jar loads
-through a child URLClassLoader of the live JVM (no session restart, no
-classpath flags), and any failure — missing jar AND missing compiler,
-Connect-only environment — returns False and leaves the session
-untouched. Correctness never depends on the rule being installed: the
-rewrite preserves semantics, so queries return identical rows either
-way; only the PLAN differs (asserted in tests/test_plans.py, skipped
-when the extension is unavailable).
+Platform: classic PySpark only. Installation is additive: the
+committed jar (``ext/build.sh``'s artifact, pinned to its source's
+sha256 by tests/test_source_pins.py) loads through a child
+URLClassLoader of the live JVM (no session restart, no classpath
+flags). If the load fails, the call warns once with a
+``RuntimeWarning`` and returns False, leaving the session untouched.
+Correctness never depends on the rule being installed: the rewrite
+preserves semantics, so queries return identical rows either way; only
+the PLAN differs (asserted in tests/test_plans.py).
 
 Documented limitation (the honest fence SURVEY §4.3 asked to keep
 visible, shrunk again in r10 — year-month intervals and wide decimals
@@ -57,8 +58,9 @@ plans naively with a WARN; use the DataFrame API (auto_join) there.
 from __future__ import annotations
 
 import os
-import subprocess
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 _EXT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
@@ -69,67 +71,18 @@ _JAR = os.path.join(_EXT_DIR, "simspark-ext.jar")
 _INSTALLED: dict[str, tuple[bool, object]] = {}
 
 
-def _jar_stale() -> bool:
-    """True when any .scala source under ext/src is newer than the
-    committed jar — editing the rule source must trigger a rebuild, or
-    the session silently runs stale compiled rules (r7 ADVICE)."""
-    if not os.path.exists(_JAR):
-        return True
-    # 2 s slack: a fresh git checkout writes sources and the committed
-    # jar at essentially the same instant in arbitrary order — a few-ms
-    # "newer" source must not trigger a scalac rebuild (or a spurious
-    # stale warning where the compiler is unavailable).
-    jar_mtime = os.path.getmtime(_JAR) + 2.0
-    src_dir = os.path.join(_EXT_DIR, "src")
-    for root, _, files in os.walk(src_dir):
-        for f in files:
-            if f.endswith(".scala") and os.path.getmtime(
-                os.path.join(root, f)
-            ) > jar_mtime:
-                return True
-    return False
-
-
-def _build_jar() -> bool:
-    """Rebuild ext/simspark-ext.jar with the scala-compiler jar shipped
-    inside $SPARK_HOME/jars (no network, no extra installs)."""
-    script = os.path.join(_EXT_DIR, "build.sh")
-    if not os.path.exists(script):
-        return False
-    try:
-        subprocess.run(
-            ["bash", script], check=True, capture_output=True, timeout=600
-        )
-    except Exception:
-        return False
-    return os.path.exists(_JAR)
-
-
 def install_sql_band_extension(spark: SparkSession) -> bool:
     """Install the band-rewrite + warning rules into this session's
     optimizer. Idempotent per session; returns False (leaving the
-    session untouched) when the jar is unavailable and unbuildable or
-    the JVM internals are unreachable (Spark Connect)."""
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:
-        return False  # Connect: no JVM gateway — documented fence
+    session untouched, after one ``RuntimeWarning``) when the jar's
+    classes cannot be loaded into the live JVM."""
+    app_id = spark.sparkContext.applicationId
     cached = _INSTALLED.get(app_id)
     if cached is not None:
         return cached[0]
     ok = False
     diag = None
     try:
-        if _jar_stale() and not _build_jar():
-            if not os.path.exists(_JAR):
-                raise FileNotFoundError(_JAR)
-            import warnings
-
-            warnings.warn(
-                "ext/src is newer than ext/simspark-ext.jar and the "
-                "rebuild failed — running the STALE compiled rules",
-                stacklevel=2,
-            )
         jvm = spark._jvm
         gw = spark.sparkContext._gateway
         url = jvm.java.io.File(_JAR).toURI().toURL()
@@ -148,8 +101,14 @@ def install_sql_band_extension(spark: SparkSession) -> bool:
             .get(None)
         )
         ok = True
-    except Exception:
-        ok = False
+    except Py4JError as exc:
+        warnings.warn(
+            f"sqlband: could not install {_JAR} into the session "
+            f"({type(exc).__name__}): band joins in SQL strings plan as "
+            "nested-loop joins",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     _INSTALLED[app_id] = (ok, diag)
     return ok
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from sim_spark.ops.materialize import materialize
 
-from sim_spark.io import table
+from sim_spark.io import table, table_count
 from sim_spark.registry import query
 
 _EDGES_CTE = """
@@ -50,14 +50,9 @@ def _order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small-corpus regime where that starvation can happen at all; at
     # scale the byte-sized partitions already cover every core and the
     # extra Exchange would be a wasted corpus pass, so it is skipped.
-    try:
-        slots = spark.sparkContext.defaultParallelism
-        from sim_spark.io import table_count
-
-        if table_count(spark, sf_dir, "orders") < slots * 50_000:
-            ps = ps.repartition(slots)
-    except Exception:  # Spark Connect: no sparkContext — leave layout alone
-        pass
+    slots = spark.sparkContext.defaultParallelism
+    if table_count(spark, sf_dir, "orders") < slots * 50_000:
+        ps = ps.repartition(slots)
     return ps
 
 

@@ -422,11 +422,8 @@ def simhash64_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the layout to doc_id across the session's shuffle parallelism:
     # the projection runs wide and the votes aggregate reuses the
     # partitioning (no extra exchange for it).
-    try:
-        n_shuffle = int(tf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        tf = tf.repartition(n_shuffle, "doc_id")
-    except Exception:
-        pass  # non-numeric conf (auto): leave AQE in charge
+    n_shuffle = int(tf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    tf = tf.repartition(n_shuffle, "doc_id")
     # SQL-string expressions for the same reason as _spark_simhash_df:
     # the 16-digit + 64-vote + 4-band Column-API loops cost ~2.9 s of
     # py4j round-trips per build (r14 cProfile), identical parsed trees.

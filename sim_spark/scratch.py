@@ -21,6 +21,8 @@ import os
 import shutil
 import tempfile
 
+from py4j.protocol import Py4JError
+
 _ROOT: str | None = None
 
 
@@ -69,7 +71,7 @@ def release_tracked_caches() -> int:
     for df in _TRACKED_CACHES:
         try:
             df.unpersist()
-        except Exception:
+        except Py4JError:
             pass  # session already stopped — nothing to release
     _TRACKED_CACHES = []
     return n

@@ -670,8 +670,7 @@ def test_sql_band_rule_preserves_rows_randomized(spark):
 
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
 
     rng = random.Random(7)
     lrows = [
@@ -757,8 +756,7 @@ def test_sql_band_rule_huge_double_axis(spark):
     Python-computed naive expectation and the rule must still fire."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
 
     base = 1_600_000_000_000_000_000
     lrows = [(i, float(base + 37 * i)) for i in range(100)]
@@ -796,8 +794,7 @@ def test_sql_band_rule_denormal_width_stays_naive(spark):
     divide hazard above); the naive plan's answer stands."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
 
     spark.createDataFrame(
         [(1, -1.0), (2, 0.0), (3, 1.0)], "lid long, x double"
@@ -926,8 +923,7 @@ def test_sql_band_rule_month_interval_preserves_rows(spark):
 
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
 
     d0 = datetime.date(2024, 1, 15)
     lrows = [(i, d0 + datetime.timedelta(days=11 * i)) for i in range(60)]
@@ -966,13 +962,13 @@ def test_sql_band_rule_month_interval_preserves_rows(spark):
 
 
 def test_auto_join_connect_degradation_is_loud_and_routed(spark):
-    """r9 verdict task #4: when the Column expression tree is unreadable
-    (Spark Connect has no `_jc`; internals can drift), auto_join must
-    (a) warn loudly, naming the compiled SQL-band rule, (b) return the
-    naive join's exact rows, and (c) still end up bucket-rewritten
-    JVM-side when the compiled rule is installed — the rule matches the
-    resolved logical Join whether the condition came from SQL text or
-    the DataFrame API, so no cell of the deploy matrix silently BNLJs."""
+    """When the Column expression tree is unreadable (PySpark internals
+    drift), auto_join must (a) warn loudly, naming the compiled SQL-band
+    rule, (b) return the naive join's exact rows, and (c) still end up
+    bucket-rewritten JVM-side when the compiled rule is installed — the
+    rule matches the resolved logical Join whether the condition came
+    from SQL text or the DataFrame API, so the fallback never silently
+    BNLJs."""
     import warnings
 
     from sim_spark.ops import autojoin
@@ -988,9 +984,9 @@ def test_auto_join_connect_degradation_is_loud_and_routed(spark):
     cond = (F.col("rv") >= F.col("lv") - 4.0) & (F.col("rv") <= F.col("lv") + 4.0)
     want = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
 
-    # simulate Connect: the walker's first tree read raises
+    # simulate internals drift: the walker's first tree read raises
     orig = autojoin._conjuncts
-    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("connect"))
+    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("drift"))
     try:
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
@@ -1005,9 +1001,8 @@ def test_auto_join_connect_degradation_is_loud_and_routed(spark):
     # with the compiled rule installed, the SAME fallback join is
     # bucket-rewritten JVM-side: no BNLJ even though the Python walker
     # never saw the condition
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
-    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("connect"))
+    assert install_sql_band_extension(spark)
+    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("drift"))
     try:
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
@@ -1018,114 +1013,6 @@ def test_auto_join_connect_degradation_is_loud_and_routed(spark):
     finally:
         autojoin._conjuncts = orig
     assert got2 == want
-
-
-# --- Connect prefix-grammar text front-end (r11, r10 verdict task #3) -------
-
-
-def test_text_walker_parses_connect_prefix_grammar():
-    """The Connect client reprs conditions in a prefix grammar
-    (`and(>=(rv, -(lv, 4.0)), <=(rv, +(lv, 4.0)))`); the text front-end
-    must classify the SAME band/eq shapes the JVM walker produces —
-    bands with numeric offsets, INTERVAL offsets, abs-bands, equi
-    conjuncts, date_add — and refuse non-bands and the classic infix
-    repr."""
-    from sim_spark.ops.autojoin import _classify, _conjuncts_from_text
-
-    class FakeCol:
-        def __init__(self, text):
-            self._t = text
-
-        def __repr__(self):
-            return f"Column<'{self._t}'>"
-
-    lcols, rcols = {"lv", "lt", "lu"}, {"rv", "rt", "ru"}
-
-    def shapes(text):
-        cj = _conjuncts_from_text(FakeCol(text))
-        if cj is None:
-            return None
-        return [_classify(c, lcols, rcols) for c in cj]
-
-    # plain numeric band, both inequalities
-    got = shapes("and(>=(rv, -(lv, 4.0)), <=(rv, +(lv, 2.0)))")
-    assert got == [
-        ("bound", "lv", "rv", -4.0, None, {"native"}),
-        ("bound", "lv", "rv", None, 2.0, {"native"}),
-    ]
-    # INTERVAL offsets on a timestamp pair + an equi conjunct
-    got = shapes(
-        "and(and(==(lu, ru), >=(rt, -(lt, INTERVAL '1' HOUR))), <=(rt, lt))"
-    )
-    assert got == [
-        ("eq", "lu", "ru"),
-        ("bound", "lt", "rt", -3_600_000_000.0, None, {"us"}),
-        ("bound", "lt", "rt", None, 0.0, set()),
-    ]
-    # abs-band (symmetric)
-    got = shapes("<(abs(-(rv, lv)), 7)")
-    assert got == [("bound", "lv", "rv", -7, 7, {"native"})]
-    # date_add offset: day-unit band
-    got = shapes("and(>=(rt, date_sub(lt, 3)), <=(rt, date_add(lt, 2)))")
-    assert got == [
-        ("bound", "lt", "rt", -3.0, None, {"days"}),
-        ("bound", "lt", "rt", None, 2.0, {"days"}),
-    ]
-    # not a band: same-side compare classifies to None but parses
-    got = shapes(">=(rv, 100)")
-    assert got == [None]
-    # classic infix repr must NOT parse as this grammar
-    assert shapes("((rv >= (lv - 4.0)) AND (rv <= (lv + 4.0)))") is None
-    # malformed text must not raise
-    assert shapes("and(>=(rv, -(lv, 4.0)") is None
-
-
-def test_auto_join_connect_text_path_rewrites(spark):
-    """Simulated Connect (JVM walker raises, condition text delivered in
-    the Connect prefix grammar): auto_join must rewrite CLIENT-side via
-    the text front-end — naive-identical rows, TEXT_PARSES bumped, no
-    warning, and a nested-loop-free plan. This is the behavior-matrix
-    cell the r10 verdict flagged (Connect x DataFrame-API)."""
-    import warnings
-
-    from sim_spark.ops import autojoin
-    from sim_spark.ops.autojoin import auto_join
-
-    L = spark.createDataFrame(
-        [(i, float(i) * 3) for i in range(80)], "lid long, lv double"
-    )
-    R = spark.createDataFrame(
-        [(i, float(i) * 5 + 1) for i in range(80)], "rid long, rv double"
-    )
-    cond = (F.col("rv") >= F.col("lv") - 4.0) & (F.col("rv") <= F.col("lv") + 4.0)
-    want = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-
-    orig_conj, orig_text = autojoin._conjuncts, autojoin._column_text
-    autojoin._conjuncts = lambda n, _o=orig_conj: (
-        (_ for _ in ()).throw(AttributeError("connect"))
-        if not isinstance(n, autojoin._TxtShim)
-        else _o(n)
-    )
-    autojoin._column_text = (
-        lambda on: "and(>=(rv, -(lv, 4.0)), <=(rv, +(lv, 4.0)))"
-    )
-    before = autojoin.TEXT_PARSES
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            out = auto_join(L, R, cond)
-            got = sorted(map(tuple, out.select("lid", "rid").collect()))
-            plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        autojoin._conjuncts = orig_conj
-        autojoin._column_text = orig_text
-    assert got == want and len(got) > 0
-    assert autojoin.TEXT_PARSES == before + 1
-    assert not [
-        w for w in caught if issubclass(w.category, RuntimeWarning)
-        and "auto_join" in str(w.message)
-    ]
-    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 
 def test_candidate_density_guardrail(spark):
@@ -1222,9 +1109,9 @@ def test_materialize_cache_ok_rows_and_partitioning(spark, monkeypatch):
     )
     assert "InMemoryTableScan" in plan
     # (d): the returned frame's LOGICAL plan is the IMR leaf itself —
-    # nothing upstream for the analyzer/optimizer to re-walk. (On Spark
-    # Connect the wrap falls back to the plain cached frame; this suite
-    # runs classic, where the wrap must engage.)
+    # nothing upstream for the analyzer/optimizer to re-walk. (The wrap
+    # falls back to the plain cached frame only when its JVM lookup
+    # fails; here it must engage.)
     analyzed = mat._jdf.queryExecution().analyzed()
     assert analyzed.getClass().getSimpleName() == "InMemoryRelation"
     assert analyzed.children().size() == 0  # leaf: no logical upstream
@@ -1273,3 +1160,51 @@ def test_flat_cached_degrades_with_one_warning(spark, monkeypatch):
     for out in outs:
         assert sorted(map(tuple, out.collect())) == expect
     scratch.release_tracked_caches()
+
+
+def test_spread_probe_failure_warns_once_and_keeps_layout(spark, monkeypatch):
+    """When a JVM call of spread()'s layout probe fails, the frame comes
+    back unchanged, with one RuntimeWarning per process, not per call."""
+    import warnings
+
+    from py4j.protocol import Py4JError
+
+    import sim_spark.ops.spread as sp
+
+    class _Raising:
+        def __getattr__(self, name):
+            raise Py4JError(f"probe call {name} failed")
+
+    df = spark.range(0, 100)
+    # the healthy probe fans this one-split frame out to the task slots
+    assert sp.spread(df) is not df
+    monkeypatch.setattr(sp, "_WARNED", False)
+    with monkeypatch.context() as m, warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        m.setattr(spark, "_jsparkSession", _Raising())
+        outs = [sp.spread(df) for _ in range(2)]
+    assert all(out is df for out in outs)
+    ours = [w for w in seen if issubclass(w.category, RuntimeWarning)]
+    assert len(ours) == 1, [str(w.message) for w in seen]
+    assert "Py4JError" in str(ours[0].message)
+
+
+def test_sql_band_install_failure_warns_and_returns_false(spark, monkeypatch):
+    """A jar whose classes cannot be loaded (here: the path names no
+    file, so the JVM class load raises) makes the install return False
+    with one RuntimeWarning; the per-session memo keeps a second call
+    quiet."""
+    import warnings
+
+    import sim_spark.ops.sqlband as sb
+
+    monkeypatch.setattr(sb, "_JAR", sb._JAR + ".missing")
+    monkeypatch.setattr(sb, "_INSTALLED", {})
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        results = [sb.install_sql_band_extension(spark) for _ in range(2)]
+    assert results == [False, False]
+    ours = [w for w in seen if issubclass(w.category, RuntimeWarning)]
+    assert len(ours) == 1, [str(w.message) for w in seen]
+    assert "Py4JJavaError" in str(ours[0].message)
+    assert sb.diagnostics(spark) is None

@@ -195,8 +195,7 @@ def test_sql_string_band_join_is_rewritten_to_equi(spark):
     cannot reach — and replan it as a bucket equi-join."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
     before = diagnostics(spark)["rewrites"]
     p = plan(spark, "join_sql_band")
     assert "BroadcastNestedLoopJoin" not in p, p
@@ -211,8 +210,7 @@ def test_sql_string_timestamp_band_join_is_rewritten_to_equi(spark):
     must plan as a bucket equi-join, not BNLJ."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
     before = diagnostics(spark)["rewrites"]
     p = plan(spark, "join_sql_band_ts")
     assert "BroadcastNestedLoopJoin" not in p, p
@@ -228,8 +226,7 @@ def test_sql_string_decimal_band_join_is_rewritten_to_equi(spark):
     text must plan as a bucket equi-join, not BNLJ."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
     before = diagnostics(spark)["rewrites"]
     p = plan(spark, "join_sql_band_dec")
     assert "BroadcastNestedLoopJoin" not in p, p
@@ -245,8 +242,7 @@ def test_sql_string_ym_band_join_is_rewritten_to_equi(spark):
     BNLJ."""
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
 
-    if not install_sql_band_extension(spark):
-        pytest.skip("band extension jar unavailable and unbuildable here")
+    assert install_sql_band_extension(spark)
     before = diagnostics(spark)["rewrites"]
     p = plan(spark, "join_sql_band_ym")
     assert "BroadcastNestedLoopJoin" not in p, p
