@@ -244,10 +244,8 @@ FROM events GROUP BY user_id
 """,
 )
 def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-user totals via transformWithStateInPandas (the 4.x
-    ValueState API; applyInPandasWithState fallback with identical
-    semantics where the TWS protobuf runner can't start —
-    mounts.tws_available) over a single-batch replay. With one
+    """Running per-user totals in group state (applyInPandasWithState,
+    mounts.stateful_sum) over a single-batch replay. With one
     micro-batch the final emission per user IS the per-user total, so
     this streaming run is exactly oracle-checkable against a plain GROUP
     BY. (Python sums per-user values in arrival order within the single
@@ -255,7 +253,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~70 rows/user uses; rounded to 6dp.)"""
     replay = mounts.events_replay_dir(spark, sf_dir)
     stream = mounts.stream_events(spark, replay)
-    sink = mounts.run_streaming_to_memory(mounts.stateful_sum_tws(stream), "update")
+    sink = mounts.run_streaming_to_memory(mounts.stateful_sum(stream), "update")
     return sink.select("user_id", "n_events", "total_value")
 
 
@@ -463,7 +461,7 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of explode→groupBy), so the whole pipeline shuffles only
     4 short band rows per doc: one keyed MIN for the ownership registry,
     one join back, one per-doc MIN. The streaming formulation keeps the
-    ownership registry as per-band ValueState
+    ownership registry as per-band group state
     (mounts.band_first_owner_stream); parity is proven in
     tests/test_stream_parity.py under doc-id-ordered multi-batch replay.
     """
@@ -511,20 +509,16 @@ WHERE sid < last_sid
 """,
 )
 def stream_session_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization by EVENT-TIME TIMERS, run on the real streaming
+    """Gap sessionization by EVENT-TIME TIMEOUTS, run on the real streaming
     machinery in-query (3-file doc-ordered replay, maxFilesPerTrigger=1,
     10-minute watermark) — and still fully SQL-oracled, because both
     closure paths are deterministic under time-ordered replay: a session
     is emitted iff a later same-user event breaks the gap (every
     non-last session) OR the final watermark (global max ts − 10 min)
     passes its end + gap (idle-tail sessions, fired by the no-data
-    batch's timer sweep). See mounts._SessionTimerProcessor for why the
-    ms-granular timer registration implies the µs-exact oracle rule.
-
-    Runs on transformWithStateInPandas timers where the TWS runtime
-    exists, and on applyInPandasWithState EventTimeTimeout otherwise —
-    identical semantics either way; the real streaming machinery always
-    runs (sessions_closed_batch is the test expectation, not a fallback).
+    batch's timeout sweep). Runs on applyInPandasWithState with
+    EventTimeTimeout; see mounts._session_timer_fn for why the
+    ms-granular timeout implies the µs-exact oracle rule.
     """
     replay = mounts.events_replay_dir(spark, sf_dir, n_files=3)
     ev = mounts.stream_events(spark, replay, max_files_per_trigger=1).withWatermark(
@@ -533,16 +527,11 @@ def stream_session_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mounts.run_streaming_to_memory(mounts.session_timer_stream(ev), "append")
 
 
-def sessions_closed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch window formulation of stream_session_timer's emission rule
-    over the fixture events table (the restart-test expectation)."""
-    return sessions_closed_from(table(spark, sf_dir, "events"))
-
-
 def sessions_closed_from(events: DataFrame) -> DataFrame:
-    """Same emission rule over an arbitrary (user_id, event_id, ts)
-    frame — lets tests build modified replays (e.g. a user going idle)
-    and still derive the exact expected emissions."""
+    """Batch window formulation of stream_session_timer's emission rule
+    over an arbitrary (user_id, event_id, ts) frame — lets tests build
+    modified replays (e.g. a user going idle) and still derive the exact
+    expected emissions."""
     o = events.select("user_id", "event_id", F.unix_micros("ts").alias("t"))
     w = W.partitionBy("user_id").orderBy("t", "event_id")
     g = o.withColumn(

@@ -7,6 +7,10 @@ and an identical *streaming* formulation mounted here on
 assert equality — that is the streaming correctness story DuckDB can't
 check directly.
 
+Every stateful operator runs on one API, ``applyInPandasWithState``:
+group state per key, plus an event-time timeout where a session must
+close on the watermark rather than on another event.
+
 At production scale the replay dir is a Kafka topic / object-store prefix;
 nothing below depends on single-machine layout: state is keyed by
 user_id / window, so the state store shards with the shuffle.
@@ -147,20 +151,14 @@ def _replay_dir(
 
 
 def stream_events(
-    spark: SparkSession, replay_dir: str, max_files_per_trigger: int | None = None
+    spark: SparkSession,
+    replay_dir: str,
+    max_files_per_trigger: int | None = None,
+    schema: T.StructType = EVENTS_STREAM_SCHEMA,
 ) -> DataFrame:
-    """File-source stream over a replay dir with the pinned schema."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(replay_dir)
-
-
-def stream_documents(
-    spark: SparkSession, replay_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over a documents replay dir."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
+    """File-source stream over a replay dir with a pinned schema (events by
+    default; DOCS_STREAM_SCHEMA for a documents replay)."""
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(replay_dir)
@@ -464,67 +462,9 @@ def stateful_counter(ev: DataFrame) -> DataFrame:
     )
 
 
-# --- transformWithStateInPandas (the 4.x successor API) ---------------------
-
-
-class _SumByTypeProcessor:
-    """StatefulProcessor: per (user) running sum of `value` and event
-    count via a ValueState — the transformWithStateInPandas twin of the
-    applyInPandasWithState counter (same semantics, newer state API)."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        self._state = handle.getValueState(
-            "totals",
-            StructType(
-                [
-                    StructField("n", LongType()),
-                    StructField("total", DoubleType()),
-                ]
-            ),
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        n, total = (self._state.get() or (0, 0.0)) if self._state.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, round(total, 6)))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 6)]}
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas spawns a protobuf-speaking driver
-    worker; in environments with a broken/absent google.protobuf the
-    runner crashes before user code runs. Gate on the exact import it
-    needs (observed: "cannot import name 'descriptor'")."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _sum_fallback_fn(key, pdf_iter, state):
-    """applyInPandasWithState twin of _SumByTypeProcessor (identical
-    semantics, older state API) for runtimes where TWS can't start."""
+def _sum_fn(key, pdf_iter, state):
+    """Per-user running event count and sum of `value` in group state,
+    rounded to 6 dp on every update."""
     import pandas as pd
 
     n, total = state.get if state.exists else (0, 0.0)
@@ -537,26 +477,13 @@ def _sum_fallback_fn(key, pdf_iter, state):
     )
 
 
-def stateful_sum_tws(ev: DataFrame) -> DataFrame:
-    """Per-user running totals on the 4.x transformWithStateInPandas API
-    (ValueState), falling back to applyInPandasWithState with identical
-    semantics where the TWS runner can't start (tws_available)."""
-    if tws_available():
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class Proc(_SumByTypeProcessor, StatefulProcessor):
-            pass
-
-        return ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType="user_id bigint, n_events bigint, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
+def stateful_sum(ev: DataFrame) -> DataFrame:
+    """Per-user running totals (n_events, total_value) in group state;
+    each micro-batch emits the updated totals of the users it touched."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return ev.groupBy("user_id").applyInPandasWithState(
-        _sum_fallback_fn,
+        _sum_fn,
         outputStructType="user_id bigint, n_events bigint, total_value double",
         stateStructType="n bigint, total double",
         outputMode="update",
@@ -567,10 +494,10 @@ def stateful_sum_tws(ev: DataFrame) -> DataFrame:
 # --- streaming ingest-dedup gate (per-band first owner) ---------------------
 
 
-class _BandOwnerProcessor:
-    """StatefulProcessor keyed by (band_no, val): a ValueState holds the
-    smallest doc_id ever seen for the band; every arriving band row is
-    emitted with the band's owner at arrival time.
+def _band_owner_fn(key, pdf_iter, state):
+    """Keyed by (band_no, val): group state holds the smallest doc_id ever
+    seen for the band; every arriving band row is emitted with the band's
+    owner at arrival time.
 
     Under doc-id-ordered replay (documents_replay_dir) the at-arrival
     owner equals the global MIN(doc_id) of the band, which is exactly the
@@ -580,41 +507,6 @@ class _BandOwnerProcessor:
     state store shards on the band key with the shuffle; state size is
     one long per distinct band — the smallest possible near-dup registry.
     """
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        self._state = handle.getValueState(
-            "owner", StructType([StructField("owner", LongType())])
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        ids: list[int] = []
-        for pdf in rows:
-            ids.extend(int(x) for x in pdf["doc_id"])
-        prev = self._state.get()[0] if self._state.exists() else None
-        owner = min(ids) if prev is None else min(prev, min(ids))
-        self._state.update((owner,))
-        yield pd.DataFrame(
-            {
-                "band_no": [int(key[0])] * len(ids),
-                "val": [str(key[1])] * len(ids),
-                "doc_id": ids,
-                "owner": [owner] * len(ids),
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _band_owner_fallback_fn(key, pdf_iter, state):
-    """applyInPandasWithState twin of _BandOwnerProcessor."""
     import pandas as pd
 
     ids: list[int] = []
@@ -643,22 +535,10 @@ def band_first_owner_stream(bands: DataFrame) -> DataFrame:
     (ops.minhash.minhash_bands_narrow), so this single keyed stateful op
     is the only state in the pipeline; the per-doc verdict is a
     stateless rollup of its output (MIN(owner) over the doc's bands)."""
-    if tws_available():
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class Proc(_BandOwnerProcessor, StatefulProcessor):
-            pass
-
-        return bands.groupBy("band_no", "val").transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType=_BAND_OWNER_OUT,
-            outputMode="Append",
-            timeMode="None",
-        )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return bands.groupBy("band_no", "val").applyInPandasWithState(
-        _band_owner_fallback_fn,
+        _band_owner_fn,
         outputStructType=_BAND_OWNER_OUT,
         stateStructType="owner bigint",
         outputMode="append",
@@ -666,135 +546,34 @@ def band_first_owner_stream(bands: DataFrame) -> DataFrame:
     )
 
 
-# --- event-time-timer sessionization (TWS timers) ---------------------------
+# --- event-time-timeout sessionization --------------------------------------
 
 _SESS_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 _SESS_OUT = "user_id bigint, start_us bigint, end_us bigint, n_events bigint"
 
 
-class _SessionTimerProcessor:
-    """StatefulProcessor keyed by user_id: classic gap sessionization
-    driven by EVENT-TIME TIMERS — the one streaming shape neither
-    `session_window` nor a plain stateful fold covers, because closing
-    an idle session requires the watermark, not another event.
+def _session_timer_fn(key, pdf_iter, state):
+    """Keyed by user_id: classic gap sessionization driven by an
+    EVENT-TIME TIMEOUT — the one streaming shape neither `session_window`
+    nor a plain stateful fold covers, because closing an idle session
+    requires the watermark, not another event.
 
     Two ways a session closes, both emitted exactly once:
     - in-stream: a same-user event beyond the gap arrives → the previous
-      session is emitted from handleInputRows and the timer is moved;
-    - by timer: the watermark passes session_end + gap with no further
-      events → handleExpiredTimer emits it and clears state.
+      session is emitted and the timeout is moved;
+    - by timeout: the watermark passes session_end + gap with no further
+      events → the timed-out call emits it and removes the state.
 
-    The timer is registered at floor((end+gap)/1ms) + 1 ms — strictly
-    after the µs-exact expiry — so a firing timer IMPLIES the µs
-    condition `end + gap <= watermark` that the SQL oracle uses; the
-    two rules can only disagree when the final watermark lands inside
-    the same millisecond as a session boundary (µs-random fixture
-    timestamps make that measure-zero). Stale timers (moved after more
-    events arrived) are ignored by comparing against the timer stored
-    in state. State is one 4-tuple per OPEN session — the minimum for
-    gap sessionization — sharded on user_id with the shuffle.
+    The timeout is set at floor((end+gap)/1ms) + 1 ms — strictly after
+    the µs-exact expiry — so a firing timeout IMPLIES the µs condition
+    `end + gap <= watermark` that the SQL oracle uses; the two rules can
+    only disagree when the final watermark lands inside the same
+    millisecond as a session boundary (µs-random fixture timestamps make
+    that measure-zero). The timeout timestamp is part of the checkpointed
+    group state, so it survives a restart together with the open session.
+    State is one 3-tuple per OPEN session — the minimum for gap
+    sessionization — sharded on user_id with the shuffle.
     """
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        self._handle = handle
-        self._state = handle.getValueState(
-            "sess",
-            StructType(
-                [
-                    StructField("start_us", LongType()),
-                    StructField("end_us", LongType()),
-                    StructField("n", LongType()),
-                    StructField("timer_ms", LongType()),
-                ]
-            ),
-        )
-
-    @staticmethod
-    def _ts_us(series) -> list:
-        return [int(v) // 1000 for v in series.astype("int64")]
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        ts_us: list[int] = []
-        for pdf in rows:
-            ts_us.extend(self._ts_us(pdf["ts"]))
-        ts_us.sort()
-        if self._state.exists():
-            start, end, n, old_timer = self._state.get()
-            self._handle.deleteTimer(old_timer)
-        else:
-            start, end, n = None, None, 0
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_us:
-            if start is None:
-                start, end, n = t, t, 1
-            elif t > end + _SESS_GAP_US:
-                closed.append((start, end, n))
-                start, end, n = t, t, 1
-            else:
-                end, n = t, n + 1
-        timer_ms = (end + _SESS_GAP_US) // 1000 + 1
-        self._handle.registerTimer(timer_ms)
-        self._state.update((start, end, n, timer_ms))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])] * len(closed),
-                    "start_us": [c[0] for c in closed],
-                    "end_us": [c[1] for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        import pandas as pd
-
-        if not self._state.exists():
-            return
-        start, end, n, timer_ms = self._state.get()
-        if expiredTimerInfo.getExpiryTimeInMs() != timer_ms:
-            return  # stale timer: the session gained events and moved on
-        self._state.clear()
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "start_us": [start],
-                "end_us": [end],
-                "n_events": [n],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def session_timer_tws(ev: DataFrame) -> DataFrame:
-    """Event-time-timer sessionization over a watermarked event stream.
-    Requires the TWS runtime (timers need timeMode='EventTime'); callers
-    gate on tws_available()."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Proc(_SessionTimerProcessor, StatefulProcessor):
-        pass
-
-    return ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Proc(),
-        outputStructType=_SESS_OUT,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
-def _session_timer_fallback_fn(key, pdf_iter, state):
-    """applyInPandasWithState twin of _SessionTimerProcessor: identical
-    fold + emission rule, with the event-time TIMEOUT (EventTimeTimeout +
-    setTimeoutTimestamp) standing in for a registered timer. The timeout
-    timestamp is part of the checkpointed group state, so it survives
-    restart exactly like a TWS timer. Same ms+1 registration so a firing
-    timeout implies the µs-exact oracle rule."""
     import pandas as pd
 
     def emit(sessions):
@@ -833,16 +612,12 @@ def _session_timer_fallback_fn(key, pdf_iter, state):
 
 
 def session_timer_stream(ev: DataFrame) -> DataFrame:
-    """Event-time-timer sessionization over a watermarked event stream:
-    transformWithStateInPandas timers where the TWS runtime exists,
-    applyInPandasWithState EventTimeTimeout (same semantics, same
-    checkpoint durability) where it doesn't."""
-    if tws_available():
-        return session_timer_tws(ev)
+    """Event-time-timeout sessionization over a watermarked event stream
+    (applyInPandasWithState with EventTimeTimeout)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return ev.groupBy("user_id").applyInPandasWithState(
-        _session_timer_fallback_fn,
+        _session_timer_fn,
         outputStructType=_SESS_OUT,
         stateStructType="start_us bigint, end_us bigint, n bigint",
         outputMode="append",

@@ -10,6 +10,8 @@ watermark late-data drops with a crafted two-batch replay.
 from __future__ import annotations
 
 import shutil
+import sys
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -355,13 +357,13 @@ def test_file_sink_exactly_once_after_restart(spark, tmp_path):
     assert merged.filter(F.col("n_events") != F.col("expect")).count() == 0
 
 
-def test_tws_state_restored_after_restart(spark, tmp_path):
-    """Kill-and-restart matrix for the transformWithStateInPandas
-    processor (mirrors the r6 foreachBatch-sink restart test): run the
-    per-user running totals over file 1 with a checkpoint, stop, append
-    file 2, restart with the SAME checkpoint. The restarted query must
+def test_stateful_sum_state_restored_after_restart(spark, tmp_path):
+    """Kill-and-restart matrix for the per-user running-totals stream
+    (mounts.stateful_sum; mirrors the r6 foreachBatch-sink restart test):
+    run it over file 1 with a checkpoint, stop, append file 2, restart
+    with the SAME checkpoint. The restarted query must
     (a) process only file 2 (its emitted keys = file 2's users — no
-    re-read of file 1), and (b) resume from RESTORED ValueState: every
+    re-read of file 1), and (b) resume from RESTORED group state: every
     user's final (n_events, total_value) equals the two-stage
     replay-exact expectation over both halves."""
     import time
@@ -384,7 +386,7 @@ def test_tws_state_restored_after_restart(spark, tmp_path):
     def start():
         stream = mounts.stream_events(spark, src)
         return (
-            mounts.stateful_sum_tws(stream)
+            mounts.stateful_sum(stream)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .outputMode("update")
@@ -406,8 +408,8 @@ def test_tws_state_restored_after_restart(spark, tmp_path):
     # (a) restart processed ONLY the new file: emitted keys = file2 users
     assert users_run2 == {r[0] for r in half2.select("user_id").distinct().collect()}
 
-    # (b) restored state: replicate the processor's per-run rounding
-    # exactly (one handleInputRows call per user per run — availableNow
+    # (b) restored state: replicate the state function's per-run rounding
+    # exactly (one call per user per run — availableNow
     # over one new file is a single batch)
     h1 = {
         r["user_id"]: (r["n"], float(r["t"]))
@@ -440,7 +442,7 @@ def test_tws_state_restored_after_restart(spark, tmp_path):
 
 def test_band_owner_stream_equals_batch(spark):
     """Streaming near-dup ingest gate: minhash banding as a stateless
-    narrow map + per-band first-owner ValueState, replayed over 3
+    narrow map + per-band first-owner group state, replayed over 3
     doc-id-ordered micro-batches (maxFilesPerTrigger=1 → cross-batch
     state), must yield exactly the batch stream_dedup_near verdicts."""
     from sim_spark.ops.minhash import minhash_bands_narrow
@@ -450,7 +452,12 @@ def test_band_owner_stream_equals_batch(spark):
     try:
         out = mounts.band_first_owner_stream(
             minhash_bands_narrow(
-                mounts.stream_documents(spark, replay, max_files_per_trigger=1)
+                mounts.stream_events(
+                    spark,
+                    replay,
+                    max_files_per_trigger=1,
+                    schema=mounts.DOCS_STREAM_SCHEMA,
+                )
             )
         )
         sink = mounts.run_streaming_to_memory(out, "append")
@@ -474,14 +481,14 @@ def test_band_owner_stream_equals_batch(spark):
 
 
 def test_session_timer_state_and_timers_survive_restart(spark, tmp_path):
-    """Kill-and-restart for the EVENT-TIME TIMER processor (TWS timers
-    or the EventTimeTimeout fallback, whichever runtime provides): run the
+    """Kill-and-restart for the EVENT-TIME TIMEOUT sessionizer
+    (applyInPandasWithState with EventTimeTimeout): run the
     session-timer stream over the first (time-ordered) half of events
     with a checkpoint, stop, append the second half, restart from the
     SAME checkpoint. The union of both runs' emissions must equal the
     batch emission rule over the full fixture — which requires (a) open
-    sessions restored from ValueState and correctly EXTENDED or broken
-    by run-2 events, and (b) REGISTERED TIMERS restored: idle users with
+    sessions restored from group state and correctly EXTENDED or broken
+    by run-2 events, and (b) TIMEOUTS restored: idle users with
     no run-2 events at all must still have their tail session fired by
     run-2's higher watermark."""
     import time
@@ -496,7 +503,7 @@ def test_session_timer_state_and_timers_survive_restart(spark, tmp_path):
     # timestamp: its session expiry (end + 30 min) is ABOVE run 1's final
     # watermark (max1 − 10 min), so nothing can emit it in run 1 — in
     # run 2 it has no events, so its emission proves the restart restored
-    # the registered timer/timeout, not just the value state.
+    # the event-time timeout, not just the value state.
     idle_user = 99_999
     max1 = half1.agg(F.max("ts")).collect()[0][0]
     import datetime as _dt
@@ -546,7 +553,7 @@ def test_session_timer_state_and_timers_survive_restart(spark, tmp_path):
     run()
 
     # (b) restored timers: at least one user emitted in run 2 without a
-    # single run-2 event — only a checkpoint-restored timer can do that.
+    # single run-2 event — only a checkpoint-restored timeout can do that.
     h2_users = {r[0] for r in half2.select("user_id").distinct().collect()}
     timer_only = {r["user_id"] for r in run_marker} - h2_users
     assert idle_user in timer_only, (
@@ -561,3 +568,41 @@ def test_session_timer_state_and_timers_survive_restart(spark, tmp_path):
         .collect()
     )
     assert got == want, f"{len(got)} emitted vs {len(want)} expected"
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        mounts.stateful_sum,
+        lambda ev: mounts.band_first_owner_stream(
+            ev.select(
+                F.col("event_id").alias("doc_id"),
+                F.lit(0).alias("band_no"),
+                F.col("event_type").alias("val"),
+            )
+        ),
+        lambda ev: mounts.session_timer_stream(ev.withWatermark("ts", "10 minutes")),
+    ],
+    ids=["stateful_sum", "band_first_owner", "session_timer"],
+)
+def test_stateful_ops_have_one_plan_whatever_is_installed(
+    spark, replay, monkeypatch, build
+):
+    """Each stateful operator analyzes to one applyInPandasWithState node
+    (FlatMapGroupsInPandasWithState) even when google.protobuf is
+    importable: no installed package may switch a stateful key onto
+    another state API."""
+    google, pb, desc = (
+        types.ModuleType(n)
+        for n in ("google", "google.protobuf", "google.protobuf.descriptor")
+    )
+    google.protobuf, pb.descriptor = pb, desc
+    for m in (google, pb, desc):
+        monkeypatch.setitem(sys.modules, m.__name__, m)
+    from google.protobuf import descriptor  # noqa: F401
+
+    plan = build(mounts.stream_events(spark, replay))._jdf.queryExecution().analyzed()
+    text = plan.toString()
+    assert text.count("FlatMapGroupsInPandasWithState") == 1, text
+    # Spark 4.1 prints the TWS node as TransformWithStateInPySpark.
+    assert "TransformWithState" not in text, text
