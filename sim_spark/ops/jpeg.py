@@ -1,21 +1,29 @@
-"""Baseline JPEG (JFIF) codec — dependency-free, grayscale, real.
+"""JPEG (JFIF) codecs — dependency-free, real, ITU T.81.
 
-Closes the r10 verdict's #1 capability gap ("entropy-coded media
-decode"). This is a genuine ITU T.81 baseline sequential DCT codec for
-single-component (grayscale) images:
+Five codecs: baseline sequential grayscale and 4:2:0 YCbCr color,
+progressive (SOF2) grayscale and color, and arithmetic-coded SOF9
+grayscale (its QM entropy layer lives in ops/jpeg_arith.py). They share
+one container layer:
 
-- encoder: quantized-coefficient blocks -> zigzag -> DC prediction ->
-  category/magnitude coding -> canonical Huffman (Annex K standard
-  luminance tables) -> byte-stuffed entropy stream with optional
-  restart markers -> SOI/APP0/DQT/SOF0/DHT/SOS/EOI container. Output
-  is a spec-valid JFIF file any viewer opens.
-- decoder: full marker walk (segment lengths honored, unknown
-  APPn/COM skipped), DQT/DHT/SOF0/DRI/SOS parse, canonical Huffman
-  table reconstruction from BITS/HUFFVAL, bit-reader with 0xFF00
-  unstuffing and RSTn handling, DC predictor, inverse zigzag,
-  dequantize, exact float 2-D IDCT (orthonormal DCT-III via a
-  precomputed 8x8 cosine matrix, vectorized across all blocks),
-  level shift + clamp.
+- ``_jfif``/``_sos``: the one writer of SOI/APP0/DQT/DAC/SOF/DHT/DRI
+  headers and scan headers;
+- ``_read_jpeg``: the one marker reader — segment lengths honored and
+  checked, unknown APPn/COM skipped, DQT/DHT/DAC/DRI/SOF state held in a
+  ``_Frame``, a yield at each SOS — driven by ``_decode``, which
+  entropy-decodes each scan for the frame kind and turns corrupt input
+  into ``ValueError`` (unsupported shapes: ``NotImplementedError``);
+- ``_scan_order``: the one scan-order walk (interleaved MCU order, or a
+  component's own raster) encoders and decoders both follow.
+
+Entropy layers: quantized-coefficient blocks -> zigzag -> DC
+prediction -> category/magnitude coding -> canonical Huffman (Annex K
+standard tables; fixed-length tables with EOBn symbols for progressive
+spectral selection + successive approximation) -> byte-stuffed stream
+with optional restart markers; decoded by a table-driven bit reader
+with 0xFF00 unstuffing and RSTn handling. Pixels: dequantize, exact
+float 2-D IDCT (orthonormal DCT-III via a precomputed 8x8 cosine
+matrix, vectorized across all blocks), level shift + clamp; color adds
+chroma upsampling and BT.601 YCbCr->RGB.
 
 Oracle strategy (JPEG is lossy, so "decoded pixels == source pixels"
 is not a lawful oracle): the *entropy layer* is exactly invertible —
@@ -34,9 +42,13 @@ general IDCT is property-tested against a naive O(N^4) reference.
 payload size, parallelism = partition count.
 """
 
+
 from __future__ import annotations
 
+import functools
+import re
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -186,60 +198,6 @@ def _encode_coeff_bits(w: _BitWriter, codes: dict, symbol: int, value: int, size
         w.put(value & ((1 << size) - 1), size)
 
 
-def encode_jpeg_from_coeffs(
-    wb: int,
-    hb: int,
-    coeffs_zz: np.ndarray,
-    qtable_zz: list[int] = QTABLE_ZZ,
-    restart_interval: int = 0,
-) -> bytes:
-    """Quantized coefficients -> baseline JFIF bytes.
-
-    ``coeffs_zz``: int array (hb*wb, 64) in ZIGZAG order, blocks in
-    raster order. Image is exactly (wb*8) x (hb*8) pixels, grayscale.
-    ``restart_interval`` > 0 emits DRI and RSTn every that many MCUs
-    (one MCU = one block for a non-subsampled single component).
-    """
-    n_blocks = wb * hb
-    assert coeffs_zz.shape == (n_blocks, 64)
-    width, height = wb * 8, hb * 8
-
-    out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    # APP0 / JFIF 1.01, no thumbnail
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-        [1, 1, 0, 0, 1, 0, 1, 0, 0]
-    )
-    # DQT: precision 0, table id 0, 64 entries in zigzag order
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0]) + bytes(qtable_zz)
-    # SOF0: 8-bit, 1 component, sampling 1x1, quant table 0
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, height, width, 1)
-    out += bytes([1, 0x11, 0])
-    # DHT: DC table class 0 id 0, AC table class 1 id 0
-    dc_seg = bytes([0x00]) + bytes(DC_LUM_BITS) + bytes(DC_LUM_VALS)
-    ac_seg = bytes([0x10]) + bytes(AC_LUM_BITS) + bytes(AC_LUM_VALS)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dc_seg) + len(ac_seg))
-    out += dc_seg + ac_seg
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    # SOS: 1 component, DC table 0 / AC table 0, spectral 0..63
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-
-    w = _BitWriter()
-    prev_dc = 0
-    rst = 0
-    for b in range(n_blocks):
-        if restart_interval and b and b % restart_interval == 0:
-            w.raw_marker(0xD0 + (rst & 7))
-            rst += 1
-            prev_dc = 0  # RST resets the DC predictor
-        prev_dc = _encode_block(w, coeffs_zz[b], _DC_CODES, _AC_CODES, prev_dc)
-    w.flush()
-    out += w.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
 def _encode_block(w: _BitWriter, blk, dc_codes: dict, ac_codes: dict, prev_dc: int) -> int:
     """Entropy-encode one 8x8 data unit (zigzag order); returns new DC."""
     dc = int(blk[0])
@@ -271,6 +229,377 @@ _DC_CHR_CODES = _build_canonical_codes(DC_CHR_BITS, DC_CHR_VALS)
 _AC_CHR_CODES = _build_canonical_codes(AC_CHR_BITS, AC_CHR_VALS)
 
 
+class _Huffman(NamedTuple):
+    """A DC + AC Huffman table pair: each table's BITS + HUFFVAL bytes as
+    a DHT segment carries them, and the symbol -> (code, length) maps
+    that encode with them."""
+
+    dc_spec: bytes
+    ac_spec: bytes
+    dc: dict
+    ac: dict
+
+
+_LUM = _Huffman(
+    bytes(DC_LUM_BITS + DC_LUM_VALS), bytes(AC_LUM_BITS + AC_LUM_VALS), _DC_CODES, _AC_CODES
+)
+_CHR = _Huffman(
+    bytes(DC_CHR_BITS + DC_CHR_VALS), bytes(AC_CHR_BITS + AC_CHR_VALS),
+    _DC_CHR_CODES, _AC_CHR_CODES,
+)
+
+
+# --- container layer: one writer, one scan-order walk, one marker reader ----
+
+# SOFn frame markers (T.81 Table B.1: 0xC4 DHT, 0xC8 JPG, 0xCC DAC are not)
+_SOF_MARKERS = frozenset(
+    (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF)
+)
+_BASELINE, _PROGRESSIVE, _ARITHMETIC = 0xC0, 0xC2, 0xC9
+# the marker ending entropy-coded data: 0xFF not followed by stuffing
+# (0x00), an RSTn inside the scan, or another (fill) 0xFF
+_SCAN_END = re.compile(rb"\xff[^\x00\xd0-\xd7\xff]")
+
+# frame components as the writer emits them: (id, HV sampling, table index);
+# the table index names both the DQT and the Huffman pair of a component
+_GRAY = ((1, 0x11, 0),)
+_YCC420 = ((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1))
+
+# SOI + APP0 (JFIF 1.01, 1:1 aspect, no thumbnail)
+_JFIF_HEAD = b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
+
+
+def _jfif(kind, width, height, comps, qtables, huff=(), dac=b"", restart_interval=0) -> bytearray:
+    """The container header every encoder writes, up to its first SOS:
+    SOI, APP0, one DQT (``qtables`` as ids 0..), DAC, the ``kind`` SOF
+    over ``comps``, one DHT (each ``huff`` pair as DC then AC table of
+    its index), DRI."""
+    out = bytearray(_JFIF_HEAD)
+    out += _segment(0xDB, b"".join(bytes([t]) + bytes(q) for t, q in enumerate(qtables)))
+    if dac:
+        out += _segment(0xCC, dac)
+    sof = struct.pack(">BHHB", 8, height, width, len(comps))
+    out += _segment(kind, sof + bytes(sum(comps, ())))
+    if huff:
+        out += _segment(0xC4, b"".join(
+            bytes([t]) + h.dc_spec + bytes([0x10 | t]) + h.ac_spec
+            for t, h in enumerate(huff)
+        ))
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    return out
+
+
+def _sos(sel, ss: int = 0, se: int = 63, ah: int = 0, al: int = 0) -> bytes:
+    """SOS header; ``sel`` holds (component id, Td << 4 | Ta) per scan
+    component."""
+    return _segment(0xDA, bytes([len(sel), *sum(sel, ()), ss, se, (ah << 4) | al]))
+
+
+@functools.lru_cache(maxsize=256)
+def _grid(width: int, height: int, sampling: bytes) -> tuple:
+    """(mcus_x, mcus_y, ((bw, bh, bw_nc, bh_nc), ...)) per HV sampling
+    byte (T.81 A.1.1): the MCU-padded grid a component's coefficients sit
+    in, and the ceil(dims/8) raster a non-interleaved scan walks."""
+    hmax = max(hv >> 4 for hv in sampling)
+    vmax = max(hv & 15 for hv in sampling)
+    mcus_x = -(-width // (8 * hmax))
+    mcus_y = -(-height // (8 * vmax))
+    return mcus_x, mcus_y, tuple(
+        (mcus_x * h, mcus_y * v, (-(-width * h // hmax) + 7) // 8, (-(-height * v // vmax) + 7) // 8)
+        for h, v in ((hv >> 4, hv & 15) for hv in sampling)
+    )
+
+
+_WALKS: dict[tuple, tuple] = {}
+
+
+def _scan_order(width: int, height: int, sampling: bytes, cis: tuple) -> tuple:
+    """The scan-order walk (T.81 A.2) over frame components ``cis``:
+    ``(units, per_mcu)``, each data unit as (position in ``cis``, block
+    index), and the units per MCU that restart intervals count. One
+    component is non-interleaved (one block per MCU, its own raster);
+    several interleave h x v blocks of each per MCU. Small walks — every
+    scan of a fixture's payloads — are kept (64 of <= 4096 units)."""
+    key = (width, height, sampling, cis)
+    walk = _WALKS.get(key)
+    if walk is not None:
+        return walk
+    mcus_x, mcus_y, dims = _grid(width, height, sampling)
+    if len(cis) == 1:
+        bw, _, bw_nc, bh_nc = dims[cis[0]]
+        walk = tuple((0, row * bw + col) for row in range(bh_nc) for col in range(bw_nc)), 1
+    else:
+        # per data unit of an MCU: (position, offset, MCU row stride, MCU width)
+        mcu = [
+            (k, by * dims[ci][0] + bx, (sampling[ci] & 15) * dims[ci][0], sampling[ci] >> 4)
+            for k, ci in enumerate(cis)
+            for by in range(sampling[ci] & 15)
+            for bx in range(sampling[ci] >> 4)
+        ]
+        walk = tuple(
+            (k, my * stride + mx * h + off)
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+            for k, off, stride, h in mcu
+        ), len(mcu)
+    if len(walk[0]) <= 4096:
+        if len(_WALKS) >= 64:
+            _WALKS.clear()
+        _WALKS[key] = walk
+    return walk
+
+
+class _Frame:
+    """The marker reader's state: the SOF header, the component dicts
+    (id, h, v, tq, ``bw`` x ``bh`` grid, ``coeffs``) and every table read
+    so far. A frame check sees the SOF fields before ``comps`` exist."""
+
+    kind = 0  # SOFn marker byte; 0 until the SOF is read
+    precision = width = height = restart_interval = 0
+    comps: tuple | list = ()  # component dicts, built from the SOF
+    ids = sampling = b""  # per component: id, HV byte
+
+    def __init__(self) -> None:
+        self.qtables: dict[int, bytes] = {}
+        self.dc_luts: dict[int, list] = {}
+        self.ac_luts: dict[int, list] = {}
+        self.dac: dict[tuple[int, int], int] = {}  # (Tc, Tb) -> conditioning
+
+
+class _Scan(NamedTuple):
+    cis: tuple  # indices of the scan's components in the frame, scan order
+    tables: tuple  # (DC, AC) table selectors per scan component
+    ss: int
+    se: int
+    ah: int
+    al: int
+
+
+def _read_jpeg(payload: bytes, check=None):
+    """The one JPEG marker reader: walks the segments from SOI into a
+    :class:`_Frame` and yields ``(frame, scan, pos)`` at each SOS; the
+    caller decodes the entropy-coded data at ``pos`` before resuming.
+    ``check(frame)`` runs once the SOF is read, so an entry point refuses
+    a frame kind or component count before any grid is allocated."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG (missing SOI)")
+    f = _Frame()
+    pos = 2
+    n = len(payload)
+    n_scans = 0
+    while pos + 1 < n:
+        if payload[pos] != 0xFF:
+            raise ValueError("marker expected (corrupt JPEG stream)")
+        marker = payload[pos + 1]
+        if marker == 0xD9:
+            if not n_scans:
+                raise ValueError("EOI before SOS")
+            return
+        end = pos + 2 + (payload[pos + 2] << 8 | payload[pos + 3]) if pos + 3 < n else n + 1
+        if not pos + 4 <= end <= n:  # the length field counts itself
+            raise ValueError(f"truncated segment 0xFF{marker:02X}")
+        seg = payload[pos + 4 : end]
+        pos = end
+        if marker == 0xDB:
+            _read_dqt(f, seg)
+        elif marker == 0xC4:
+            for tc, th, lut in _read_dht(seg):
+                (f.ac_luts if tc else f.dc_luts)[th] = lut
+        elif marker == 0xCC:  # DAC: arithmetic conditioning per table
+            if len(seg) % 2:
+                raise ValueError("malformed DAC segment")
+            for i in range(0, len(seg), 2):
+                f.dac[seg[i] >> 4, seg[i] & 15] = seg[i + 1]
+        elif marker == 0xDD:
+            if len(seg) != 2:
+                raise ValueError("malformed DRI segment")
+            f.restart_interval = int.from_bytes(seg, "big")
+        elif marker in _SOF_MARKERS:
+            _read_sof(f, marker, seg, check)
+        elif marker == 0xDA:
+            if not f.kind:
+                raise ValueError("SOS before SOF")
+            if n_scans and f.kind != _PROGRESSIVE:
+                raise ValueError("more than one scan in a sequential frame")
+            yield f, _read_sos(seg, f.ids), pos
+            n_scans += 1
+            # JPEG has no entropy checksum and a decoder pads past
+            # end-of-data with 1-bits: a truncated scan shows here, as
+            # entropy-coded data that no marker ends
+            m = _SCAN_END.search(payload, pos)
+            if m is None:
+                raise ValueError("truncated JPEG (missing EOI)")
+            pos = m.start()
+        # APPn / COM / anything else: skipped by its declared length
+    raise ValueError("truncated JPEG (missing EOI)" if n_scans else "no SOS marker")
+
+
+def _read_dqt(f: _Frame, seg: bytes) -> None:
+    i = 0
+    while i < len(seg):  # several tables per segment
+        if seg[i] >> 4:
+            raise ValueError("16-bit quant tables unsupported")
+        if i + 65 > len(seg):
+            raise ValueError("truncated DQT table")
+        f.qtables[seg[i] & 15] = seg[i + 1 : i + 65]
+        i += 65
+
+
+@functools.lru_cache(maxsize=16)
+def _read_dht(seg: bytes) -> tuple:
+    """(Tc, Th, decode LUT) per table of a DHT segment. Cached: every
+    payload of a fixture repeats the same DHT segment."""
+    tables = []
+    i = 0
+    while i < len(seg):  # several tables per segment
+        tc, th = seg[i] >> 4, seg[i] & 15
+        n = 16 + sum(seg[i + 1 : i + 17])
+        spec = seg[i + 1 : i + 1 + n]  # BITS + HUFFVAL
+        if tc > 1 or len(spec) != n or n == 16:
+            raise ValueError("malformed DHT segment")
+        if tc == 0 and max(spec[16:]) > 15:
+            raise ValueError("DC Huffman symbol beyond category 15")
+        tables.append((tc, th, _build_decode_lut(spec)))
+        i += 1 + n
+    return tuple(tables)
+
+
+def _read_sof(f: _Frame, kind: int, seg: bytes, check) -> None:
+    if f.kind:
+        raise ValueError("multiple frames")
+    if len(seg) < 6 or len(seg) != 6 + 3 * seg[5]:
+        raise ValueError("malformed SOF segment")
+    f.kind, f.precision = kind, seg[0]
+    f.height = int.from_bytes(seg[1:3], "big")
+    f.width = int.from_bytes(seg[3:5], "big")
+    f.ids, f.sampling = seg[6::3], seg[7::3]
+    if check is not None:
+        check(f)
+    if kind not in (_BASELINE, _PROGRESSIVE, _ARITHMETIC):
+        raise NotImplementedError(f"SOF 0xFF{kind:02X} frames unsupported")
+    if f.precision != 8 or seg[5] not in (1, 3):
+        raise NotImplementedError("only 8-bit 1- or 3-component JPEG supported")
+    if not (f.width and f.height):
+        raise ValueError("zero image dimension")
+    if seg[5] == 1:  # a lone component's MCU is one block
+        f.sampling = b"\x11"
+    else:
+        if len(set(f.ids)) != 3:
+            raise ValueError("duplicate component id")
+        if not set(f.sampling) <= {0x11, 0x12, 0x21, 0x22}:
+            raise NotImplementedError("sampling factors beyond 2")
+    dims = _grid(f.width, f.height, f.sampling)[2]
+    f.comps = [
+        {"id": i, "h": hv >> 4, "v": hv & 15, "tq": tq, "bw": bw, "bh": bh,
+         "coeffs": np.zeros((bh * bw, 64), dtype=np.int64)}
+        for i, hv, tq, (bw, bh, _, _) in zip(f.ids, f.sampling, seg[8::3], dims)
+    ]
+
+
+@functools.lru_cache(maxsize=256)
+def _read_sos(seg: bytes, ids: bytes) -> _Scan:
+    """SOS header against the frame's component ``ids``. Cached: every
+    payload of a fixture repeats the same few scan headers."""
+    ns = seg[0] if seg else 0
+    if not ns or len(seg) != 4 + 2 * ns:
+        raise ValueError("malformed SOS segment")
+    cis = tuple(ids.find(i) for i in seg[1 : 1 + 2 * ns : 2])
+    if -1 in cis or len(set(cis)) != ns:
+        raise ValueError("scan references unknown component")
+    sels = seg[2 : 2 + 2 * ns : 2]
+    return _Scan(
+        cis, tuple((t >> 4, t & 15) for t in sels),
+        seg[-3], seg[-2], seg[-1] >> 4, seg[-1] & 15,
+    )
+
+
+def _decode(payload: bytes, check=None) -> _Frame:
+    """Every JPEG decode's one path: the marker reader, each scan's
+    entropy decode for the frame kind, then the frame's quant tables.
+    Out-of-range reads of a corrupt or truncated stream surface as
+    ``ValueError``, like every check the reader makes."""
+    try:
+        for f, scan, pos in _read_jpeg(payload, check):
+            if f.kind == _ARITHMETIC:
+                from sim_spark.ops.jpeg_arith import _decode_arith_scan
+
+                _decode_arith_scan(payload, f, scan, pos)
+            else:
+                _decode_huffman_scan(payload, f, scan, pos)
+    except IndexError as e:
+        raise ValueError(f"truncated or corrupt JPEG: {e!r}") from e
+    except _Restart as e:  # stray RSTn outside an interval boundary
+        raise ValueError("unexpected restart marker in scan") from e
+    for c in f.comps:
+        if c["tq"] not in f.qtables:
+            raise ValueError(f"SOF references missing quant table {c['tq']}")
+        c["q"] = np.frombuffer(f.qtables[c["tq"]], dtype=np.uint8).astype(np.int64)
+    return f
+
+
+# --- baseline sequential encode ---------------------------------------------
+
+
+@functools.lru_cache(maxsize=16)
+def _spec_scan(spec: tuple) -> tuple:
+    """(HV sampling bytes, component indices, SOS header of one scan over
+    all of them) for a writer component spec."""
+    sel = [(cid, t << 4 | t) for cid, _, t in spec]
+    return bytes(hv for _, hv, _ in spec), tuple(range(len(spec))), _sos(sel)
+
+
+def _encode_sequential(
+    width: int, height: int, spec, qtables, huff, blocks, restart_interval: int
+) -> bytes:
+    """Baseline (SOF0) stream: one scan over every ``spec`` component
+    (interleaved when there are several), per-component DC predictors,
+    and RSTn every ``restart_interval`` MCUs resetting them all.
+    ``blocks[ci]`` holds component ci's quantized zigzag coefficients,
+    raster order over its MCU-padded block grid."""
+    sampling, cis, sos = _spec_scan(spec)
+    out = _jfif(_BASELINE, width, height, spec, qtables, huff, restart_interval=restart_interval)
+    out += sos
+    codes = [huff[t] for _, _, t in spec]
+    units, per_mcu = _scan_order(width, height, sampling, cis)
+    span = restart_interval * per_mcu or len(units)
+    w = _BitWriter()
+    pred = [0] * len(spec)
+    for start in range(0, len(units), span):  # one restart interval each
+        if start:
+            w.raw_marker(0xD0 + (start // span - 1) % 8)
+            pred = [0] * len(spec)  # RST resets the DC predictors
+        for ci, b in units[start : start + span]:
+            h = codes[ci]
+            pred[ci] = _encode_block(w, blocks[ci][b], h.dc, h.ac, pred[ci])
+    w.flush()
+    return bytes(out + w.out + b"\xff\xd9")
+
+
+def encode_jpeg_from_coeffs(
+    wb: int,
+    hb: int,
+    coeffs_zz: np.ndarray,
+    qtable_zz: list[int] = QTABLE_ZZ,
+    restart_interval: int = 0,
+) -> bytes:
+    """Quantized coefficients -> baseline JFIF bytes.
+
+    ``coeffs_zz``: int array (hb*wb, 64) in ZIGZAG order, blocks in
+    raster order. Image is exactly (wb*8) x (hb*8) pixels, grayscale.
+    ``restart_interval`` > 0 emits DRI and RSTn every that many MCUs
+    (one MCU = one block for a non-subsampled single component).
+    """
+    assert coeffs_zz.shape == (wb * hb, 64)
+    return _encode_sequential(
+        wb * 8, hb * 8, _GRAY, [qtable_zz], [_LUM], [coeffs_zz], restart_interval
+    )
+
+
 def encode_jpeg_color_from_coeffs(
     mcus_x: int,
     mcus_y: int,
@@ -290,60 +619,12 @@ def encode_jpeg_color_from_coeffs(
     per MCU, per-component DC predictors, RSTn every
     ``restart_interval`` MCUs resetting all three.
     """
-    ybw = mcus_x * 2
-    assert y_coeffs_zz.shape == (mcus_y * 2 * ybw, 64)
+    assert y_coeffs_zz.shape == (mcus_y * 2 * mcus_x * 2, 64)
     assert cb_coeffs_zz.shape == cr_coeffs_zz.shape == (mcus_y * mcus_x, 64)
-    width, height = mcus_x * 16, mcus_y * 16
-
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-        [1, 1, 0, 0, 1, 0, 1, 0, 0]
+    return _encode_sequential(
+        mcus_x * 16, mcus_y * 16, _YCC420, [QTABLE_ZZ, QTABLE_CHR_ZZ], [_LUM, _CHR],
+        [y_coeffs_zz, cb_coeffs_zz, cr_coeffs_zz], restart_interval,
     )
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 2 * 65)
-    out += bytes([0]) + bytes(QTABLE_ZZ) + bytes([1]) + bytes(QTABLE_CHR_ZZ)
-    # SOF0: 3 components, Y 2x2 q0, Cb 1x1 q1, Cr 1x1 q1
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, height, width, 3)
-    out += bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
-    segs = [
-        bytes([0x00]) + bytes(DC_LUM_BITS) + bytes(DC_LUM_VALS),
-        bytes([0x10]) + bytes(AC_LUM_BITS) + bytes(AC_LUM_VALS),
-        bytes([0x01]) + bytes(DC_CHR_BITS) + bytes(DC_CHR_VALS),
-        bytes([0x11]) + bytes(AC_CHR_BITS) + bytes(AC_CHR_VALS),
-    ]
-    out += b"\xff\xc4" + struct.pack(">H", 2 + sum(len(s) for s in segs))
-    for s in segs:
-        out += s
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    out += bytes([1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-
-    w = _BitWriter()
-    dc = {"y": 0, "cb": 0, "cr": 0}
-    rst = 0
-    for m in range(mcus_y * mcus_x):
-        if restart_interval and m and m % restart_interval == 0:
-            w.raw_marker(0xD0 + (rst & 7))
-            rst += 1
-            dc = {"y": 0, "cb": 0, "cr": 0}
-        my, mx = divmod(m, mcus_x)
-        for by in range(2):
-            for bx in range(2):
-                b = (my * 2 + by) * ybw + (mx * 2 + bx)
-                dc["y"] = _encode_block(
-                    w, y_coeffs_zz[b], _DC_CODES, _AC_CODES, dc["y"]
-                )
-        dc["cb"] = _encode_block(
-            w, cb_coeffs_zz[m], _DC_CHR_CODES, _AC_CHR_CODES, dc["cb"]
-        )
-        dc["cr"] = _encode_block(
-            w, cr_coeffs_zz[m], _DC_CHR_CODES, _AC_CHR_CODES, dc["cr"]
-        )
-    w.flush()
-    out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 # --- decoder ----------------------------------------------------------------
@@ -440,24 +721,28 @@ class _Restart(Exception):
         self.marker = marker
 
 
-_LUT_CACHE: dict[tuple, list] = {}
+_LUT_CACHE: dict[bytes, list] = {}
 
 
-def _build_decode_lut(bits: tuple[int, ...], vals: tuple[int, ...]) -> list:
+def _build_decode_lut(spec: bytes) -> list:
     """16-bit-prefix lookup table: lut[peek16] = (symbol << 5) | code_len,
-    -1 for prefixes no code owns. One table per distinct (BITS, HUFFVAL)
+    -1 for prefixes no code owns. One table per distinct BITS + HUFFVAL
     spec, cached process-wide — every payload of a fixture shares the
     same DHT, so the 65536-entry build cost is paid once, and Huffman
     decode becomes a single list index + shift per symbol instead of a
-    bit-by-bit tree walk (the r11 fast path: ~4x on the sf1 bench)."""
-    key = (bits, vals)
-    lut = _LUT_CACHE.get(key)
+    bit-by-bit tree walk (the r11 fast path: ~4x on the sf1 bench).
+    The cache holds at most 64 specs: streams with per-image optimized
+    tables must not grow it without bound."""
+    lut = _LUT_CACHE.get(spec)
     if lut is not None:
         return lut
+    bits, vals = spec[:16], spec[16:]
     lut = [-1] * 65536
     code = 0
     k = 0
     for length in range(1, 17):
+        if code + bits[length - 1] > 1 << length:
+            raise ValueError("over-subscribed Huffman table")
         for _ in range(bits[length - 1]):
             lo = code << (16 - length)
             entry = (vals[k] << 5) | length
@@ -465,7 +750,9 @@ def _build_decode_lut(bits: tuple[int, ...], vals: tuple[int, ...]) -> list:
             code += 1
             k += 1
         code <<= 1
-    _LUT_CACHE[key] = lut
+    if len(_LUT_CACHE) >= 64:
+        _LUT_CACHE.clear()
+    _LUT_CACHE[spec] = lut
     return lut
 
 
@@ -504,46 +791,6 @@ def idct2_blocks(coeffs: np.ndarray) -> np.ndarray:
     return np.einsum("xu,nuv,yv->nxy", _IDCT_COS, coeffs, _IDCT_COS)
 
 
-def sniff_jpeg_frame(payload: bytes) -> tuple[int, int]:
-    """(SOF marker byte, component count) from the header marker walk —
-    the dispatch the generic multimodal.decode() router needs to send a
-    payload to the right entry point (baseline gray / baseline color /
-    progressive) without attempting a decode."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("marker expected (corrupt JPEG stream)")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD9, 0xDA):
-            break
-        seglen = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                      0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return marker, payload[pos + 7]
-        pos += seglen
-    raise ValueError("no SOF marker found")
-
-
-def decode_jpeg(payload: bytes):
-    """Baseline JFIF grayscale decode.
-
-    Returns ``(width, height, pixels, coeffs_zz)`` where ``pixels`` is
-    a uint8 array of length width*height (raster order, MCU padding
-    cropped) and ``coeffs_zz`` is the recovered QUANTIZED coefficient
-    array (n_blocks, 64) in zigzag order — the exactly-invertible
-    entropy-layer output the hash oracle checks.
-    """
-    try:
-        return _decode_jpeg(payload)
-    except (IndexError, struct.error) as e:  # truncated / corrupt stream
-        raise ValueError(f"truncated or corrupt JPEG: {e!r}") from e
-    except _Restart as e:  # stray RSTn outside an interval boundary
-        raise ValueError("unexpected restart marker in scan") from e
-
-
 def _decode_block_into(r, row, dc_lut, ac_lut, prev_dc: int) -> int:
     """Huffman-decode one 8x8 data unit into `row` (a length-64 int64
     view, zigzag order); returns the new DC predictor."""
@@ -565,158 +812,61 @@ def _decode_block_into(r, row, dc_lut, ac_lut, prev_dc: int) -> int:
     return prev_dc
 
 
-def _parse_jpeg(payload: bytes):
-    """Shared baseline parse: marker walk + entropy decode for 1- or
-    3-component scans. Returns (width, height, comps) with comps a list
-    of dicts: {"h", "v", "coeffs" (n_blocks, 64 zigzag), "q" (64),
-    "bw", "bh" (block-grid dims)}."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    # JPEG has no entropy checksum, and end-of-data padding is
-    # indistinguishable from the spec's legal final-byte 1-padding — so
-    # a TRUNCATED scan would otherwise decode silently to garbage
-    # coefficients. Every complete stream ends with EOI; require it.
-    # (Entropy data can never contain a raw FF D9: stuffing maps data
-    # FF to FF 00, so only a real marker matches.)
-    if payload[-2:] != b"\xff\xd9":
-        raise ValueError("truncated JPEG (missing EOI)")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_luts: dict[int, list] = {}
-    ac_luts: dict[int, list] = {}
-    width = height = 0
-    sof_comps: list[tuple[int, int, int, int]] = []  # (id, h, v, tq)
-    restart_interval = 0
-    scan_tbls: dict[int, tuple[int, int]] = {}  # comp id -> (dc, ac)
-    scan_order: list[int] = []
+def _luts(luts: dict, ts) -> list:
+    """The Huffman tables ``ts`` a scan selects, each defined by a DHT."""
+    try:
+        return [luts[t] for t in ts]
+    except KeyError as e:
+        raise ValueError(f"scan references undefined Huffman table {e}") from None
 
-    while True:
-        if payload[pos] != 0xFF:
-            raise ValueError("marker expected (corrupt JPEG stream)")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI with no scan
-            raise ValueError("EOI before SOS")
-        seglen = struct.unpack(">H", payload[pos : pos + 2])[0]
-        seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not baseline")
-                qtables[tq] = list(seg[i + 1 : i + 65])
-                i += 65
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                bits = tuple(seg[i + 1 : i + 17])
-                n = sum(bits)
-                vals = tuple(seg[i + 17 : i + 17 + n])
-                lut = _build_decode_lut(bits, vals)
-                (dc_luts if tc == 0 else ac_luts)[th] = lut
-                i += 17 + n
-        elif marker == 0xC0:  # SOF0
-            precision = seg[0]
-            height, width = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            if precision != 8 or ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "only 8-bit 1- or 3-component baseline JPEG supported"
-                )
-            for c in range(ncomp):
-                cid = seg[6 + 3 * c]
-                hv = seg[7 + 3 * c]
-                sof_comps.append((cid, hv >> 4, hv & 15, seg[8 + 3 * c]))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("non-baseline SOF marker")
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack(">H", seg[0:2])[0]
-        elif marker == 0xDA:  # SOS
-            ns = seg[0]
-            if ns != len(sof_comps):
-                raise NotImplementedError("partial-component scan")
-            for c in range(ns):
-                cid = seg[1 + 2 * c]
-                tbl = seg[2 + 2 * c]
-                scan_tbls[cid] = (tbl >> 4, tbl & 15)
-                scan_order.append(cid)
-            pos += seglen
-            break
-        # APPn / COM / anything else: skip by declared length
-        pos += seglen
 
-    hmax = max(h for _, h, _, _ in sof_comps)
-    vmax = max(v for _, _, v, _ in sof_comps)
-    by_id = {cid: (h, v, tq) for cid, h, v, tq in sof_comps}
+def _decode_huffman_scan(payload: bytes, f: _Frame, scan: _Scan, pos: int) -> None:
+    """Entropy-decode one Huffman scan, its data starting at ``pos``, into
+    its components' coefficient grids: a baseline sequential scan (all
+    components, restart intervals honored), or one progressive scan —
+    DC first or refine (interleaved or not), or one component's AC band
+    first or refine."""
+    cis, ss, se, ah, al = scan.cis, scan.ss, scan.se, scan.ah, scan.al
+    grids = [f.comps[ci]["coeffs"] for ci in cis]
+    units, per_mcu = _scan_order(f.width, f.height, f.sampling, cis)
     r = _BitReader(payload, pos)
-    comps: list[dict] = []
-
-    if len(sof_comps) == 1:
-        # single-component scans are non-interleaved: MCU = 1 data unit
-        cid, h, v, tq = sof_comps[0]
-        bw = (width + 7) // 8
-        bh = (height + 7) // 8
-        n_blocks = bw * bh
-        dc_lut = dc_luts[scan_tbls[cid][0]]
-        ac_lut = ac_luts[scan_tbls[cid][1]]
-        coeffs = np.zeros((n_blocks, 64), dtype=np.int64)
-        prev_dc = 0
-        b = 0
-        while b < n_blocks:
-            if restart_interval and b and b % restart_interval == 0:
+    pred = [0] * len(cis)
+    if f.kind == _BASELINE:
+        if len(cis) != len(f.comps):
+            raise NotImplementedError("partial-component scan")
+        dcl = _luts(f.dc_luts, [td for td, _ in scan.tables])
+        acl = _luts(f.ac_luts, [ta for _, ta in scan.tables])
+        span = f.restart_interval * per_mcu or len(units)
+        for start in range(0, len(units), span):  # one restart interval each
+            if start:
                 r.align_past_restart()
-                prev_dc = 0
-            try:
-                prev_dc = _decode_block_into(r, coeffs[b], dc_lut, ac_lut, prev_dc)
-                b += 1
-            except _Restart:
-                # defensive: interval boundary normally consumes RSTn above
-                r.align_past_restart()
-                prev_dc = 0
-        comps.append(
-            dict(h=h, v=v, coeffs=coeffs,
-                 q=np.array(qtables[tq], dtype=np.int64), bw=bw, bh=bh)
-        )
-        return width, height, comps
-
-    # interleaved 3-component scan: MCU = h*v data units per component
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    state = {}
-    for cid in scan_order:
-        h, v, tq = by_id[cid]
-        bw, bh = mcus_x * h, mcus_y * v
-        state[cid] = dict(
-            h=h, v=v, coeffs=np.zeros((bw * bh, 64), dtype=np.int64),
-            q=np.array(qtables[tq], dtype=np.int64), bw=bw, bh=bh, dc=0,
-            dc_lut=dc_luts[scan_tbls[cid][0]], ac_lut=ac_luts[scan_tbls[cid][1]],
-        )
-    n_mcus = mcus_x * mcus_y
-    for m in range(n_mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            r.align_past_restart()
-            for st in state.values():
-                st["dc"] = 0
-        my, mx = divmod(m, mcus_x)
-        for cid in scan_order:
-            st = state[cid]
-            h, v = st["h"], st["v"]
-            for by in range(v):
-                for bx in range(h):
-                    b = (my * v + by) * st["bw"] + (mx * h + bx)
-                    st["dc"] = _decode_block_into(
-                        r, st["coeffs"][b], st["dc_lut"], st["ac_lut"], st["dc"]
-                    )
-    for cid in scan_order:
-        st = state[cid]
-        comps.append(
-            dict(h=st["h"], v=st["v"], coeffs=st["coeffs"], q=st["q"],
-                 bw=st["bw"], bh=st["bh"])
-        )
-    return width, height, comps
+                pred = [0] * len(cis)  # RST resets the DC predictors
+            for ci, b in units[start : start + span]:
+                pred[ci] = _decode_block_into(r, grids[ci][b], dcl[ci], acl[ci], pred[ci])
+        return
+    if f.restart_interval:
+        raise NotImplementedError("restart markers in progressive scans")
+    if ss > se or se > 63 or (ss == 0) != (se == 0):
+        raise ValueError("invalid spectral band")
+    if len(cis) > 1 and ss:
+        raise ValueError("progressive AC scans must be single-component")
+    if ss == 0 and ah == 0:  # DC first: predicted, point-transformed
+        dcl = _luts(f.dc_luts, [td for td, _ in scan.tables])
+        for ci, b in units:
+            size = _huff_decode(r, dcl[ci])
+            pred[ci] += _extend(r.bits(size), size)
+            grids[ci][b, 0] = pred[ci] << al
+    elif ss == 0:  # DC refine: one bit per block
+        bit = 1 << al
+        for ci, b in units:
+            if r.bit():
+                grids[ci][b, 0] |= bit
+    else:  # one component's AC band
+        grid, (lut,) = grids[0], _luts(f.ac_luts, [scan.tables[0][1]])
+        dec = _p_dec_ac_first if ah == 0 else _p_dec_ac_refine
+        eobrun = 0
+        for _, b in units:
+            eobrun = dec(r, lut, grid[b], ss, se, al, eobrun)
 
 
 def _idct_plane(comp: dict) -> np.ndarray:
@@ -729,14 +879,68 @@ def _idct_plane(comp: dict) -> np.ndarray:
     return px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
 
 
-def _decode_jpeg(payload: bytes):
-    width, height, comps = _parse_jpeg(payload)
-    if len(comps) != 1:
+def _gray(f: _Frame):
+    """(width, height, pixels, coeffs) of a decoded one-component frame."""
+    c = f.comps[0]
+    img = _idct_plane(c)[: f.height, : f.width].astype(np.uint8)
+    return f.width, f.height, img.reshape(-1), c["coeffs"]
+
+
+def _color(f: _Frame):
+    """Per-plane dequant+IDCT, chroma upsample, BT.601 YCbCr->RGB of a
+    decoded three-component frame — the scan structure never changes
+    the reconstruction math."""
+    hmax = max(c["h"] for c in f.comps)
+    vmax = max(c["v"] for c in f.comps)
+    planes = []
+    for c in f.comps:
+        p = _idct_plane(c)
+        # nearest-neighbor upsample to the full MCU grid
+        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
+        planes.append(p[: f.height, : f.width])
+    y, cb, cr = (pl.astype(np.float64) for pl in planes)
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    rgb = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
+    return f.width, f.height, rgb.reshape(-1), [c["coeffs"] for c in f.comps]
+
+
+def _decode_any(payload: bytes):
+    """Any supported JPEG — baseline, progressive or arithmetic, gray or
+    color — in one read: the frame kind picks the entropy decoder, the
+    component count gray pixels or RGB. Returns (width, height, pixels,
+    coeffs) like the entry point that frame belongs to."""
+    f = _decode(payload)
+    return _color(f) if len(f.comps) == 3 else _gray(f)
+
+
+def _sof0_gray(f: _Frame) -> None:
+    if f.kind != _BASELINE:
+        raise NotImplementedError("non-baseline SOF marker")
+    if len(f.ids) == 3:
         raise NotImplementedError(
             "decode_jpeg is the grayscale entry point; use decode_jpeg_color"
         )
-    img = _idct_plane(comps[0])[:height, :width].astype(np.uint8)
-    return width, height, img.reshape(-1), comps[0]["coeffs"]
+
+
+def _sof0_color(f: _Frame) -> None:
+    if f.kind != _BASELINE:
+        raise NotImplementedError("non-baseline SOF marker")
+    if len(f.ids) == 1:
+        raise ValueError("decode_jpeg_color expects a 3-component scan")
+
+
+def decode_jpeg(payload: bytes):
+    """Baseline JFIF grayscale decode.
+
+    Returns ``(width, height, pixels, coeffs_zz)`` where ``pixels`` is
+    a uint8 array of length width*height (raster order, MCU padding
+    cropped) and ``coeffs_zz`` is the recovered QUANTIZED coefficient
+    array (n_blocks, 64) in zigzag order — the exactly-invertible
+    entropy-layer output the hash oracle checks.
+    """
+    return _gray(_decode(payload, _sof0_gray))
 
 
 def decode_jpeg_color(payload: bytes):
@@ -747,38 +951,7 @@ def decode_jpeg_color(payload: bytes):
     round-half-away clamp), coeffs_list the per-component recovered
     QUANTIZED coefficient arrays (Y, Cb, Cr) the hash oracle checks.
     """
-    try:
-        width, height, comps = _parse_jpeg(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt JPEG: {e!r}") from e
-    except _Restart as e:  # stray RSTn mid-MCU in a corrupt stream
-        raise ValueError("unexpected restart marker in scan") from e
-    if len(comps) != 3:
-        raise ValueError("decode_jpeg_color expects a 3-component scan")
-    return _color_reconstruct(width, height, comps)
-
-
-def _color_reconstruct(width: int, height: int, comps: list):
-    """Per-plane dequant+IDCT, chroma upsample, BT.601 YCbCr->RGB —
-    shared by the baseline and progressive color decoders (the scan
-    structure never changes the reconstruction math)."""
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    planes = []
-    for c in comps:
-        p = _idct_plane(c)
-        # nearest-neighbor upsample to the full MCU grid
-        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
-        planes.append(p[:height, :width])
-    y, cb, cr = (pl.astype(np.float64) for pl in planes)
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
-    return width, height, rgb.reshape(-1), [c["coeffs"] for c in comps]
-
-
-# --- deterministic payload synthesis (integer arithmetic => SQL oracle) -----
+    return _color(_decode(payload, _sof0_color))
 
 
 # --- progressive (SOF2) grayscale (r12) -------------------------------------
@@ -800,15 +973,8 @@ _P_AC_VALS = sorted(
 _P_AC_BITS = [0] * 8 + [len(_P_AC_VALS)] + [0] * 7  # all nine-bit
 _P_DC_CODES = _build_canonical_codes(_P_DC_BITS, _P_DC_VALS)
 _P_AC_CODES = _build_canonical_codes(_P_AC_BITS, _P_AC_VALS)
-
-# scan script: DC first/refine, then each AC band first/refine
-_P_SCANS = (
-    ("dc_first", 0, 0, 0, 1),
-    ("dc_refine", 0, 0, 1, 0),
-    ("ac_first", 1, 5, 0, 1),
-    ("ac_first", 6, 63, 0, 1),
-    ("ac_refine", 1, 5, 1, 0),
-    ("ac_refine", 6, 63, 1, 0),
+_PROG = _Huffman(
+    bytes(_P_DC_BITS + _P_DC_VALS), bytes(_P_AC_BITS + _P_AC_VALS), _P_DC_CODES, _P_AC_CODES
 )
 
 
@@ -957,50 +1123,69 @@ def _p_enc_ac_refine(
     flush()
 
 
+@functools.lru_cache(maxsize=16)
+def _p_script(spec: tuple, ac_bands: tuple) -> tuple:
+    """The scans of a progressive stream, each as (components, Ss, Se,
+    Ah, Al, SOS header): a DC first scan (Al=1) and its refine over
+    every ``spec`` component — interleaved when there are several, the
+    only multi-component scan shape T.81 allows in progressive mode —
+    then each ``ac_bands`` (component, Ss, Se) band non-interleaved, all
+    firsts (Al=1) before all refines (Al=0)."""
+    dc = tuple(range(len(spec)))
+    scans = [(dc, 0, 0, 0, 1), (dc, 0, 0, 1, 0)]
+    scans += [((ci,), ss, se, 0, 1) for ci, ss, se in ac_bands]
+    scans += [((ci,), ss, se, 1, 0) for ci, ss, se in ac_bands]
+    # DC scans select a component's DC table, AC scans its AC table
+    return tuple(
+        (cis, ss, se, ah, al, _sos(
+            [(spec[ci][0], spec[ci][2] if ss else spec[ci][2] << 4) for ci in cis],
+            ss, se, ah, al,
+        ))
+        for cis, ss, se, ah, al in scans
+    )
+
+
+def _encode_progressive(
+    width: int, height: int, spec, qtables, huff, blocks, ac_bands
+) -> bytes:
+    """Progressive (SOF2) stream over the :func:`_p_script` scans. AC
+    bands code a component's blocks in array order, which is its scan
+    raster because encoded images are whole MCUs."""
+    sampling = _spec_scan(spec)[0]
+    out = _jfif(_PROGRESSIVE, width, height, spec, qtables, huff)
+    for cis, ss, se, ah, al, sos in _p_script(spec, ac_bands):
+        out += sos
+        w = _BitWriter()
+        if ss:
+            enc = _p_enc_ac_refine if ah else _p_enc_ac_first
+            enc(w, blocks[cis[0]], ss, se, al)
+        else:
+            pred = [0] * len(cis)
+            for k, b in _scan_order(width, height, sampling, cis)[0]:
+                v = int(blocks[cis[k]][b, 0]) >> al  # arithmetic-shift point transform
+                if ah:
+                    w.put(v & 1, 1)
+                    continue
+                diff = v - pred[k]
+                pred[k] = v
+                size = _magnitude_category(diff)
+                _encode_coeff_bits(w, _P_DC_CODES, size, diff, size)
+        w.flush()
+        out += w.out
+    return bytes(out + b"\xff\xd9")
+
+
 def encode_jpeg_progressive_from_coeffs(
     wb: int, hb: int, coeffs_zz: np.ndarray, qtable_zz: list[int] = QTABLE_ZZ
 ) -> bytes:
     """Quantized coefficients -> progressive (SOF2) JFIF bytes: six
     scans (DC first+refine, two AC bands first+refine), successive
     approximation Al 1 -> 0 throughout."""
-    n_blocks = wb * hb
-    assert coeffs_zz.shape == (n_blocks, 64)
-    width, height = wb * 8, hb * 8
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-        [1, 1, 0, 0, 1, 0, 1, 0, 0]
+    assert coeffs_zz.shape == (wb * hb, 64)
+    return _encode_progressive(
+        wb * 8, hb * 8, _GRAY, [qtable_zz], [_PROG], [coeffs_zz],
+        ((0, 1, 5), (0, 6, 63)),
     )
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0]) + bytes(qtable_zz)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, height, width, 1)
-    out += bytes([1, 0x11, 0])
-    dc_seg = bytes([0x00]) + bytes(_P_DC_BITS) + bytes(_P_DC_VALS)
-    ac_seg = bytes([0x10]) + bytes(_P_AC_BITS) + bytes(_P_AC_VALS)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dc_seg) + len(ac_seg))
-    out += dc_seg + ac_seg
-    for kind, ss, se, ah, al in _P_SCANS:
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-        out += bytes([1, 0x00, ss, se, (ah << 4) | al])
-        w = _BitWriter()
-        if kind == "dc_first":
-            prev = 0
-            for row in coeffs_zz:
-                v = int(row[0]) >> al  # DC point transform: arithmetic shift
-                diff = v - prev
-                prev = v
-                size = _magnitude_category(diff)
-                _encode_coeff_bits(w, _P_DC_CODES, size, diff, size)
-        elif kind == "dc_refine":
-            for row in coeffs_zz:
-                w.put((int(row[0]) >> al) & 1, 1)
-        elif kind == "ac_first":
-            _p_enc_ac_first(w, coeffs_zz, ss, se, al)
-        else:
-            _p_enc_ac_refine(w, coeffs_zz, ss, se, al)
-        w.flush()
-        out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def encode_jpeg_progressive_color_from_coeffs(
@@ -1021,83 +1206,13 @@ def encode_jpeg_progressive_color_from_coeffs(
     scans in each component's own raster block order (Y split 1-5 /
     6-63 to exercise spectral selection; chroma full-band), firsts
     then refines."""
-    ybw = mcus_x * 2
-    assert y_coeffs_zz.shape == (mcus_y * 2 * ybw, 64)
+    assert y_coeffs_zz.shape == (mcus_y * 2 * mcus_x * 2, 64)
     assert cb_coeffs_zz.shape == cr_coeffs_zz.shape == (mcus_y * mcus_x, 64)
-    width, height = mcus_x * 16, mcus_y * 16
-    comps = (y_coeffs_zz, cb_coeffs_zz, cr_coeffs_zz)
-
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-        [1, 1, 0, 0, 1, 0, 1, 0, 0]
+    return _encode_progressive(
+        mcus_x * 16, mcus_y * 16, _YCC420, [QTABLE_ZZ, QTABLE_CHR_ZZ],
+        [_PROG, _PROG], [y_coeffs_zz, cb_coeffs_zz, cr_coeffs_zz],
+        ((0, 1, 5), (0, 6, 63), (1, 1, 63), (2, 1, 63)),
     )
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 2 * 65)
-    out += bytes([0]) + bytes(QTABLE_ZZ) + bytes([1]) + bytes(QTABLE_CHR_ZZ)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 17, 8, height, width, 3)
-    out += bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
-    segs = [
-        bytes([0x00]) + bytes(_P_DC_BITS) + bytes(_P_DC_VALS),
-        bytes([0x10]) + bytes(_P_AC_BITS) + bytes(_P_AC_VALS),
-        bytes([0x01]) + bytes(_P_DC_BITS) + bytes(_P_DC_VALS),
-        bytes([0x11]) + bytes(_P_AC_BITS) + bytes(_P_AC_VALS),
-    ]
-    out += b"\xff\xc4" + struct.pack(">H", 2 + sum(len(s) for s in segs))
-    for s in segs:
-        out += s
-
-    def _mcu_blocks():
-        """(comp_index, block_row_index) in interleaved MCU order."""
-        for m in range(mcus_y * mcus_x):
-            my, mx = divmod(m, mcus_x)
-            for by in range(2):
-                for bx in range(2):
-                    yield 0, (my * 2 + by) * ybw + (mx * 2 + bx)
-            yield 1, m
-            yield 2, m
-
-    al = 1
-    # scan 1: DC first, interleaved, Al=1
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    out += bytes([1, 0x00, 2, 0x10, 3, 0x10, 0, 0, (0 << 4) | al])
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for ci, b in _mcu_blocks():
-        v = int(comps[ci][b, 0]) >> al
-        diff = v - prev[ci]
-        prev[ci] = v
-        size = _magnitude_category(diff)
-        _encode_coeff_bits(w, _P_DC_CODES, size, diff, size)
-    w.flush()
-    out += w.out
-    # scan 2: DC refine, interleaved, Ah=1 Al=0
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    out += bytes([1, 0x00, 2, 0x10, 3, 0x10, 0, 0, (1 << 4) | 0])
-    w = _BitWriter()
-    for ci, b in _mcu_blocks():
-        w.put(int(comps[ci][b, 0]) & 1, 1)
-    w.flush()
-    out += w.out
-    # per-component AC band scans, firsts then refines
-    ac_scans = [
-        (0, 1, 5), (0, 6, 63), (1, 1, 63), (2, 1, 63),
-    ]
-    for refine in (False, True):
-        for ci, ss, se in ac_scans:
-            cid = ci + 1
-            ta = 0 if ci == 0 else 1
-            out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-            ah, sal = (1, 0) if refine else (0, 1)
-            out += bytes([cid, ta, ss, se, (ah << 4) | sal])
-            w = _BitWriter()
-            if refine:
-                _p_enc_ac_refine(w, comps[ci], ss, se, 0)
-            else:
-                _p_enc_ac_first(w, comps[ci], ss, se, 1)
-            w.flush()
-            out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def _p_dec_ac_first(r, lut, row, ss: int, se: int, al: int, eobrun: int) -> int:
@@ -1169,215 +1284,32 @@ def _p_dec_ac_refine(r, lut, row, ss: int, se: int, al: int, eobrun: int) -> int
     return eobrun
 
 
+def _sof2_gray(f: _Frame) -> None:
+    if f.kind != _PROGRESSIVE:
+        raise ValueError("not a progressive stream (use decode_jpeg for baseline)")
+    if len(f.ids) == 3:
+        raise ValueError(
+            "decode_jpeg_progressive is the grayscale entry point; "
+            "use decode_jpeg_progressive_color"
+        )
+
+
+def _sof2_color(f: _Frame) -> None:
+    if f.kind != _PROGRESSIVE:
+        raise ValueError("not a progressive stream (use decode_jpeg for baseline)")
+    if len(f.ids) == 1:
+        raise ValueError("decode_jpeg_progressive_color expects a 3-component frame")
+
+
 def decode_jpeg_progressive(payload: bytes):
-    """Progressive (SOF2) JFIF grayscale decode: full multi-scan marker
-    walk — spectral selection, successive approximation (DC arithmetic
+    """Progressive (SOF2) JFIF grayscale decode: every scan of the
+    stream — spectral selection, successive approximation (DC arithmetic
     shift, AC magnitude shift), EOB-run and correction-bit coding —
     recovering the exact quantized coefficients (the hash-oracle
     contract, identical to baseline because the entropy layer is
     lossless whatever the scan structure). Returns
     (width, height, pixels, coeffs_zz) like :func:`decode_jpeg`."""
-    try:
-        return _decode_jpeg_progressive(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt JPEG: {e!r}") from e
-    except _Restart as e:
-        raise ValueError("unexpected restart marker in scan") from e
-
-
-def _parse_jpeg_progressive(payload: bytes):
-    """Multi-scan SOF2 marker walk for 1- or 3-component streams.
-    Returns (width, height, comps) shaped like :func:`_parse_jpeg`'s
-    output, so the baseline reconstruction helpers apply unchanged.
-
-    Interleaved (multi-component) scans are DC-only, as T.81 requires
-    in progressive mode; AC scans walk the named component's OWN
-    non-interleaved block raster — ceil(comp_dims/8), which can be
-    smaller than the MCU-padded grid the interleaved DC scan fills."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    if payload[-2:] != b"\xff\xd9":
-        raise ValueError("truncated JPEG (missing EOI)")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_luts: dict[int, list] = {}
-    ac_luts: dict[int, list] = {}
-    width = height = 0
-    comps: list[dict] = []
-    by_id: dict[int, dict] = {}
-    got_frame = False
-    while True:
-        if payload[pos] != 0xFF:
-            raise ValueError("marker expected (corrupt JPEG stream)")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        seglen = struct.unpack(">H", payload[pos : pos + 2])[0]
-        seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[i + 1 : i + 65])
-                i += 65
-        elif marker == 0xC4:
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                bits = tuple(seg[i + 1 : i + 17])
-                n = sum(bits)
-                vals = tuple(seg[i + 17 : i + 17 + n])
-                (dc_luts if tc == 0 else ac_luts)[th] = _build_decode_lut(
-                    bits, vals
-                )
-                i += 17 + n
-        elif marker == 0xC2:  # SOF2
-            if got_frame:
-                raise ValueError("multiple frames")
-            got_frame = True
-            precision = seg[0]
-            height, width = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            if precision != 8:
-                raise NotImplementedError("only 8-bit progressive JPEG")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "only 1- or 3-component progressive JPEG"
-                )
-            for ci in range(ncomp):
-                cid = seg[6 + 3 * ci]
-                h, v = seg[7 + 3 * ci] >> 4, seg[7 + 3 * ci] & 15
-                if not (1 <= h <= 2 and 1 <= v <= 2):
-                    raise NotImplementedError("sampling factors beyond 2")
-                comps.append(dict(id=cid, h=h, v=v, tq=seg[8 + 3 * ci]))
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                # interleaved (MCU-padded) grid holds the coefficients;
-                # non-interleaved scans address the ceil-dims sub-grid
-                c["bw"] = mcus_x * c["h"]
-                c["bh"] = mcus_y * c["v"]
-                cw = (width * c["h"] + hmax - 1) // hmax
-                chg = (height * c["v"] + vmax - 1) // vmax
-                c["bw_nc"] = (cw + 7) // 8
-                c["bh_nc"] = (chg + 7) // 8
-                c["coeffs"] = np.zeros((c["bh"] * c["bw"], 64), dtype=np.int64)
-                by_id[c["id"]] = c
-            frame = (mcus_x, mcus_y)
-        elif marker == 0xC0 or marker in (
-            0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF
-        ):
-            raise ValueError(
-                "not a progressive stream (use decode_jpeg for baseline)"
-            )
-        elif marker == 0xDD:
-            if struct.unpack(">H", seg[0:2])[0] != 0:
-                raise NotImplementedError(
-                    "restart markers in progressive scans"
-                )
-        elif marker == 0xDA:
-            if not got_frame:
-                raise ValueError("SOS before SOF2")
-            ns = seg[0]
-            scan = []
-            for si in range(ns):
-                cid = seg[1 + 2 * si]
-                if cid not in by_id:
-                    raise ValueError("scan references unknown component")
-                tdc = seg[2 + 2 * si] >> 4
-                tac = seg[2 + 2 * si] & 15
-                scan.append((by_id[cid], tdc, tac))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 15
-            if ss == 0 and se != 0:
-                raise ValueError("DC scan must have Se = 0")
-            if ss > se or se > 63:
-                raise ValueError("invalid spectral band")
-            if ns > 1 and ss != 0:
-                raise ValueError("progressive AC scans must be single-component")
-            r = _BitReader(payload, pos + seglen)
-            if ns > 1:  # interleaved DC scan, MCU order
-                mcus_x, mcus_y = frame
-                if ah == 0:
-                    luts = [dc_luts[tdc] for _c, tdc, _t in scan]
-                    prev = [0] * ns
-                    for m in range(mcus_y * mcus_x):
-                        my, mx = divmod(m, mcus_x)
-                        for si, (c, _tdc, _tac) in enumerate(scan):
-                            for dy in range(c["v"]):
-                                for dx in range(c["h"]):
-                                    size = _huff_decode(r, luts[si])
-                                    prev[si] += _extend(r.bits(size), size)
-                                    b = (my * c["v"] + dy) * c["bw"] + (
-                                        mx * c["h"] + dx
-                                    )
-                                    c["coeffs"][b, 0] = prev[si] << al
-                else:
-                    bit = 1 << al
-                    for m in range(mcus_y * mcus_x):
-                        my, mx = divmod(m, mcus_x)
-                        for c, _tdc, _tac in scan:
-                            for dy in range(c["v"]):
-                                for dx in range(c["h"]):
-                                    if r.bit():
-                                        b = (my * c["v"] + dy) * c["bw"] + (
-                                            mx * c["h"] + dx
-                                        )
-                                        c["coeffs"][b, 0] |= bit
-            else:
-                c, tdc, tac = scan[0]
-                coeffs, bw = c["coeffs"], c["bw"]
-
-                def _nc_blocks():
-                    for row in range(c["bh_nc"]):
-                        for col in range(c["bw_nc"]):
-                            yield row * bw + col
-
-                if ss == 0:
-                    if ah == 0:
-                        dc_lut = dc_luts[tdc]
-                        prev = 0
-                        for b in _nc_blocks():
-                            size = _huff_decode(r, dc_lut)
-                            prev += _extend(r.bits(size), size)
-                            coeffs[b, 0] = prev << al
-                    else:
-                        bit = 1 << al
-                        for b in _nc_blocks():
-                            if r.bit():
-                                coeffs[b, 0] |= bit
-                else:
-                    ac_lut = ac_luts[tac]
-                    eobrun = 0
-                    dec = _p_dec_ac_first if ah == 0 else _p_dec_ac_refine
-                    for b in _nc_blocks():
-                        eobrun = dec(r, ac_lut, coeffs[b], ss, se, al, eobrun)
-            pos = r.pos
-            continue
-        pos += seglen
-    if not comps:
-        raise ValueError("no SOF2 frame found")
-    for c in comps:
-        c["q"] = np.array(qtables[c["tq"]], dtype=np.int64)
-    return width, height, comps
-
-
-def _decode_jpeg_progressive(payload: bytes):
-    width, height, comps = _parse_jpeg_progressive(payload)
-    if len(comps) != 1:
-        raise ValueError(
-            "decode_jpeg_progressive is the grayscale entry point; "
-            "use decode_jpeg_progressive_color"
-        )
-    c = comps[0]
-    img = _idct_plane(c)[:height, :width].astype(np.uint8)
-    return width, height, img.reshape(-1), c["coeffs"]
+    return _gray(_decode(payload, _sof2_gray))
 
 
 def decode_jpeg_progressive_color(payload: bytes):
@@ -1388,17 +1320,10 @@ def decode_jpeg_progressive_color(payload: bytes):
     upsample, BT.601) is shared byte-for-byte with the baseline color
     decoder. Returns (width, height, rgb, [y, cb, cr] coeffs) like
     :func:`decode_jpeg_color`."""
-    try:
-        width, height, comps = _parse_jpeg_progressive(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"truncated or corrupt JPEG: {e!r}") from e
-    except _Restart as e:
-        raise ValueError("unexpected restart marker in scan") from e
-    if len(comps) != 3:
-        raise ValueError(
-            "decode_jpeg_progressive_color expects a 3-component frame"
-        )
-    return _color_reconstruct(width, height, comps)
+    return _color(_decode(payload, _sof2_color))
+
+
+# --- deterministic payload synthesis (integer arithmetic => SQL oracle) -----
 
 
 def formula_jpeg_coeffs(doc_id: int) -> tuple[int, int, np.ndarray, int]:

@@ -12,6 +12,13 @@ non-adapting fixed bin for AC signs, the DAC conditioning segment
 (L/U difference bounds, Kx band split), and the SOF9
 extended-sequential-arithmetic frame around them.
 
+This module is the entropy layer only. The container — SOI/APP0/DQT/
+DAC/SOF9/SOS writing, the marker reader that parses DQT, DAC, DRI and
+SOF9 and yields at the SOS, the scan-order walk, the typed-error
+wrapper and the IDCT — is ops/jpeg.py's one layer shared by all five
+JPEG codecs: ``decode_jpeg_arith`` is that reader plus its SOF9 frame
+check, and ``_decode_arith_scan`` is what it runs at the scan.
+
 Provenance: implemented from the public T.81 spec text (Annex D
 flowcharts, §F.1.4.4 / §F.2.x decision trees) and the standard
 published form of Table D.3. No JPEG library exists in this
@@ -29,21 +36,30 @@ encoder's quantized coefficients bit for bit, which is what makes the
 registry key hash-oracle-able (the multimodal_jpeg_decode stance).
 Restart markers are NOT emitted by this encoder (the Huffman keys
 exercise restart handling; arithmetic restart resets coder AND all
-statistics — noted, unimplemented).
+statistics — noted, unimplemented: a DRI in an SOF9 stream raises
+NotImplementedError).
 
-Typed ValueError on every malformed shape: missing/duplicate
-markers, non-SOF9 frames, bad segment lengths, truncated entropy
-data (marker reached mid-block feeds zeros per §D.2.2 but a BLOCK
-COUNT shortfall raises), magnitude-category overflow, missing EOI.
+Typed errors only: the shared reader raises ValueError on missing or
+duplicate markers, non-SOF9 frames, short segments and a missing EOI;
+the QM decoder on truncated entropy data (a marker reached mid-block
+feeds zeros per §D.2.2, the scan completes on block count) and
+magnitude-category overflow.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from sim_spark.ops.jpeg import QTABLE_ZZ, _UNZIGZAG, idct2_blocks
+from sim_spark.ops.jpeg import (
+    _ARITHMETIC,
+    _GRAY,
+    QTABLE_ZZ,
+    _decode,
+    _gray,
+    _jfif,
+    _scan_order,
+    _sos,
+)
 
 __all__ = [
     "encode_jpeg_arith_from_coeffs",
@@ -494,30 +510,31 @@ def encode_jpeg_arith_from_coeffs(
         raise ValueError(
             f"coeffs shape {coeffs_zz.shape} != ({n_blocks}, 64)"
         )
-    width, height = wb * 8, hb * 8
-    out = bytearray()
-    out += b"\xff\xd8"
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-        [1, 1, 0, 0, 1, 0, 1, 0, 0]
-    )
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0]) + bytes(qtable_zz)
     # DAC: DC conditioning table 0 = (U << 4) | L; AC table 0 = Kx
-    out += b"\xff\xcc" + struct.pack(">H", 6) + bytes(
-        [0x00, (_DEFAULT_U << 4) | _DEFAULT_L, 0x10, _DEFAULT_KX]
-    )
-    # SOF9: extended sequential DCT, arithmetic coding
-    out += b"\xff\xc9" + struct.pack(">HBHHB", 11, 8, height, width, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
+    dac = bytes([0x00, (_DEFAULT_U << 4) | _DEFAULT_L, 0x10, _DEFAULT_KX])
+    out = _jfif(_ARITHMETIC, wb * 8, hb * 8, _GRAY, [qtable_zz], dac=dac)
+    out += _sos([(1, 0x00)])
     enc = QMEncoder()
     dcc = _DCCodec(_DEFAULT_L, _DEFAULT_U)
     acc = _ACCodec(_DEFAULT_KX)
-    for b in range(n_blocks):
+    for b in range(n_blocks):  # one component: the scan walks its raster
         dcc.encode(enc, int(coeffs_zz[b, 0]))
         acc.encode(enc, coeffs_zz[b])
     out += enc.flush()
     out += b"\xff\xd9"
     return bytes(out)
+
+
+def _check_sof9(f) -> None:
+    if f.kind != _ARITHMETIC:
+        raise ValueError(
+            f"frame 0xFF{f.kind:02X} is not arithmetic sequential "
+            f"(expected SOF9)"
+        )
+    if f.precision != 8 or len(f.ids) != 1:
+        raise ValueError("only 8-bit single-component SOF9 supported")
+    if f.sampling != b"\x11":
+        raise ValueError("subsampled SOF9 unsupported")
 
 
 def decode_jpeg_arith(payload: bytes):
@@ -526,103 +543,26 @@ def decode_jpeg_arith(payload: bytes):
     Mirrors decode_jpeg's return contract: pixels are the dequantized
     IDCT plane (level-shifted, clamped), coeffs the exact recovered
     quantized coefficients in zigzag order."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("missing SOI marker")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    cond_dc = {0: (_DEFAULT_L, _DEFAULT_U)}
-    cond_ac = {0: _DEFAULT_KX}
-    sof = None
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at offset {pos}")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("EOI before SOS")
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        seg = payload[pos + 2 : pos + seglen]
-        if len(seg) != seglen - 2:
-            raise ValueError(f"truncated segment 0xFF{marker:02X}")
-        pos += seglen
-        if marker == 0xDB:
-            o = 0
-            while o < len(seg):
-                pq, tq = seg[o] >> 4, seg[o] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qtables[tq] = np.frombuffer(
-                    seg[o + 1 : o + 65], dtype=np.uint8
-                ).astype(np.int64)
-                o += 65
-        elif marker == 0xCC:  # DAC
-            for o in range(0, len(seg), 2):
-                tc, tb, v = seg[o] >> 4, seg[o] & 0xF, seg[o + 1]
-                if tc == 0:
-                    cond_dc[tb] = (v & 0xF, v >> 4)
-                else:
-                    cond_ac[tb] = v
-        elif marker == 0xC9:
-            prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
-            if prec != 8 or nc != 1:
-                raise ValueError(
-                    "only 8-bit single-component SOF9 supported"
-                )
-            if seg[7] != 0x11:  # comp layout: id, sampling, tq
-                raise ValueError("subsampled SOF9 unsupported")
-            sof = (w, h, seg[8])
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"frame 0xFF{marker:02X} is not arithmetic sequential "
-                f"(expected SOF9)"
-            )
-        elif marker == 0xDA:
-            if sof is None:
-                raise ValueError("SOS before SOF9")
-            if seg[0] != 1:
-                raise ValueError("single-component scan expected")
-            td, ta = seg[2] >> 4, seg[2] & 0xF
-            break
-        # other segments (APPn/COM/...) are skipped
-    else:
-        raise ValueError("no SOS marker")
-    w, h, tq = sof
-    if tq not in qtables:
-        raise ValueError(f"SOF references missing quant table {tq}")
-    wb, hb = (w + 7) // 8, (h + 7) // 8
-    n_blocks = wb * hb
+    return _gray(_decode(payload, _check_sof9))
+
+
+def _decode_arith_scan(payload: bytes, f, scan, pos: int) -> None:
+    """QM-decode one SOF9 scan into its component's coefficient grid —
+    the arithmetic entropy layer under ops/jpeg.py's shared reader,
+    which hands over the frame (DAC conditioning included) at the SOS.
+    The decoder zero-feeds past a marker, so completion is by block
+    count; the reader then requires the marker after the scan."""
+    if len(scan.cis) != 1 or f.restart_interval:
+        raise NotImplementedError(
+            "SOF9 decode takes one component and no restart markers"
+        )
+    ((td, ta),) = scan.tables
+    dc_cond = f.dac.get((0, td), (_DEFAULT_U << 4) | _DEFAULT_L)
+    dcc = _DCCodec(dc_cond & 0xF, dc_cond >> 4)
+    acc = _ACCodec(f.dac.get((1, ta), _DEFAULT_KX))
     dec = QMDecoder(payload, pos)
-    L, U = cond_dc.get(td, (_DEFAULT_L, _DEFAULT_U))
-    dcc = _DCCodec(L, U)
-    acc = _ACCodec(cond_ac.get(ta, _DEFAULT_KX))
-    coeffs = np.zeros((n_blocks, 64), dtype=np.int64)
-    for b in range(n_blocks):
+    coeffs = f.comps[scan.cis[0]]["coeffs"]
+    for _, b in _scan_order(f.width, f.height, f.sampling, scan.cis)[0]:
         blk = coeffs[b]
         blk[0] = dcc.decode(dec)
         acc.decode(dec, blk)
-    # locate EOI: either the decoder already hit it, or scan forward
-    if dec.marker is None:
-        p = dec._p
-        while p + 1 < len(payload) and not (
-            payload[p] == 0xFF and payload[p + 1] != 0x00
-        ):
-            p += 1
-        if p + 1 >= len(payload):
-            raise ValueError("missing EOI after arithmetic scan")
-        dec.marker = payload[p + 1]
-    if dec.marker != 0xD9:
-        raise ValueError(
-            f"unexpected marker 0xFF{dec.marker:02X} after scan "
-            f"(expected EOI)"
-        )
-    q = qtables[tq]
-    deq = (coeffs * q)[:, _UNZIGZAG].reshape(-1, 8, 8).astype(np.float64)
-    px = np.clip(np.rint(idct2_blocks(deq) + 128.0), 0, 255)
-    px = (
-        px.reshape(hb, wb, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(hb * 8, wb * 8)[:h, :w]
-        .astype(np.uint8)
-    )
-    return w, h, px.reshape(-1), coeffs

@@ -5,11 +5,12 @@ alongside. The Spark-side machinery — schema, Arrow batching,
 mapInPandas signature, partition behavior — is real, and so is the decode:
 WAV (RIFF PCM16) and BMP (24bpp) are parsed with dependency-free
 ``struct`` code below, PNG (non-interlaced RGB8, stdlib zlib, all five
-filters, CRC-verified) since round 9, and baseline grayscale JPEG
-(full Huffman entropy decode + IDCT, ops/jpeg.py) since round 11 —
-each hash-oracled against DuckDB. Only codecs whose decode genuinely
-needs absent libraries (MP3, video) remain behind
-``NotImplementedError``; :func:`decode` makes that boundary explicit.
+filters, CRC-verified) since round 9, and JPEG — baseline and
+progressive, gray and color, and arithmetic-coded, all through the one
+container layer in ops/jpeg.py — each hash-oracled against DuckDB.
+Only codecs whose decode genuinely needs absent libraries (MP3, video)
+remain behind ``NotImplementedError``; :func:`decode` makes that
+boundary explicit.
 
 At 100 TB: binary payloads ride in parquet with the metadata columns;
 `mapInPandas` processes one Arrow batch at a time so executor memory is
@@ -41,11 +42,12 @@ CHUNK = 4096
 def decode(payload: bytes) -> dict:
     """Media decode dispatch by magic bytes.
 
-    Uncompressed containers (RIFF/WAVE PCM16, BMP 24bpp) are decoded for
-    real with the dependency-free ``struct`` parsers below. Compressed
-    formats (JPEG/PNG/…) still raise: their codecs are not in this
-    environment, and faking them would be dishonest — the dispatch makes
-    the boundary explicit."""
+    Every branch decodes for real with dependency-free code: WAV and BMP
+    with the ``struct`` parsers below, PNG with stdlib zlib, JPEG, FLAC,
+    GIF and TIFF with their ops/ codecs, and the bz2/gzip/zip/MP4/WARC/
+    tar container walks. Only MP3/video sample decode raises
+    ``NotImplementedError`` — its codecs are not in this environment and
+    faking them would be dishonest."""
     if payload[:2] == b"BM":
         w, h, px = decode_bmp(payload)
         return {"kind": "bmp", "width": w, "height": h, "pixels": px}
@@ -56,43 +58,17 @@ def decode(payload: bytes) -> dict:
         rate, samples = decode_wav(payload)
         return {"kind": "wav", "sample_rate": rate, "samples": samples}
     if payload[:2] == b"\xff\xd8":
-        # r12 (r11 advice): sniff the SOF marker + component count and
-        # route — 3-component scans to the color decoder, SOF2 streams
-        # to the progressive decoder — matching the FLAC branch's
-        # channel dispatch instead of forcing grayscale-baseline.
-        from sim_spark.ops.jpeg import (
-            decode_jpeg,
-            decode_jpeg_color,
-            decode_jpeg_progressive,
-            decode_jpeg_progressive_color,
-            sniff_jpeg_frame,
-        )
+        # one read of the shared JPEG reader: the frame kind (SOF0, SOF2,
+        # SOF9) picks the entropy decoder, the component count gray or RGB
+        from sim_spark.ops.jpeg import _decode_any
 
-        sof, ncomp = sniff_jpeg_frame(payload)
-        if sof == 0xC2:
-            if ncomp == 3:
-                w, h, rgb, _coeffs = decode_jpeg_progressive_color(payload)
-                return {
-                    "kind": "jpeg",
-                    "width": w,
-                    "height": h,
-                    "pixels": rgb.tobytes(),
-                }
-            w, h, px, _coeffs = decode_jpeg_progressive(payload)
-            return {
-                "kind": "jpeg",
-                "width": w,
-                "height": h,
-                "pixels": px.tobytes(),
-            }
-        if ncomp == 3:
-            w, h, rgb, _coeffs = decode_jpeg_color(payload)
-            return {"kind": "jpeg", "width": w, "height": h, "pixels": rgb.tobytes()}
-        w, h, px, _coeffs = decode_jpeg(payload)
+        w, h, px, _coeffs = _decode_any(payload)
         return {"kind": "jpeg", "width": w, "height": h, "pixels": px.tobytes()}
     if payload[:4] == b"fLaC":
         from sim_spark.ops.flac import decode_flac, decode_flac_stereo
 
+        if len(payload) < 42:  # fLaC + STREAMINFO block header + body
+            raise ValueError("truncated FLAC (no STREAMINFO)")
         nch = ((payload[8 + 12] >> 1) & 0b111) + 1  # STREAMINFO channels
         if nch == 2:
             rate, left, right = decode_flac_stereo(payload)
@@ -246,6 +222,8 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
+    if len(payload) < 54:  # file header + BITMAPINFOHEADER
+        raise ValueError("truncated BMP header")
     data_off = struct.unpack_from("<I", payload, 10)[0]
     hdr_size, width, height_raw, _planes, bpp, compression = struct.unpack_from(
         "<IiiHHI", payload, 14
@@ -269,8 +247,8 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
 # DEFLATE is in the stdlib, so "compressed" was never an honest fence for
 # PNG (r8 verdict "What's missing" #2): a real decoder needs only the
 # IHDR/IDAT chunk walk, zlib.decompress, and the five per-row unfilter
-# predictors. JPEG/MP3 stay fenced — THEIR entropy coding (Huffman over
-# DCT / subband samples) has no stdlib implementation.
+# predictors. (JPEG's Huffman/arithmetic entropy coding is implemented in
+# ops/jpeg.py; MP3 sample decode stays fenced.)
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 

@@ -676,3 +676,58 @@ def test_jpeg_arith_typed_errors():
     # bad coeff shape on the encoder side
     with pytest.raises(ValueError, match="shape"):
         encode_jpeg_arith_from_coeffs(2, 1, c)
+
+
+# --- typed errors under corruption (all five decoders) -----------------------
+
+
+def _corruption_cases():
+    from sim_spark.ops import jpeg, jpeg_arith
+    from sim_spark.queries import multimodal_real as mr
+
+    return {
+        "baseline": (jpeg.decode_jpeg, jpeg.gen_jpeg_payload),
+        "dc_only": (jpeg.decode_jpeg, jpeg.gen_jpeg_dc_payload),
+        "color": (jpeg.decode_jpeg_color, jpeg.gen_jpeg_color_payload),
+        "progressive": (
+            jpeg.decode_jpeg_progressive, mr._gen_jpeg_progressive_payload),
+        "progressive_color": (
+            jpeg.decode_jpeg_progressive_color, mr._gen_jpeg_prog_color_payload),
+        "arithmetic": (
+            jpeg_arith.decode_jpeg_arith, mr._gen_jpeg_arith_payload),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["baseline", "dc_only", "color", "progressive", "progressive_color",
+     "arithmetic"],
+)
+def test_corrupted_payloads_raise_only_typed_errors(case):
+    """Untrusted bytes through every decoder: each generator payload
+    truncated at every 2.5% of its length, plus 40 single-bit flips
+    per doc (fixed seed). A flip may leave a decodable stream; what may
+    never happen is an exception other than ValueError /
+    NotImplementedError escaping (the contract _decode_docs relies on to
+    keep one bad file from killing a partition)."""
+    import random
+
+    decode, gen = _corruption_cases()[case]
+    rng = random.Random(20261019)
+    leaked = []
+    for doc_id in range(12):
+        p = gen(doc_id)
+        bad = [p[: len(p) * k // 40] for k in range(40)]
+        for _ in range(40):
+            bit = rng.randrange(8 * len(p))
+            q = bytearray(p)
+            q[bit >> 3] ^= 0x80 >> (bit & 7)
+            bad.append(bytes(q))
+        for q in bad:
+            try:
+                decode(q)
+            except (ValueError, NotImplementedError):
+                pass
+            except Exception as e:  # noqa: BLE001 - the leak under test
+                leaked.append(f"doc {doc_id}: {type(e).__name__}: {e}")
+    assert not leaked, f"{len(leaked)} leaked: {leaked[:5]}"

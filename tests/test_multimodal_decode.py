@@ -173,6 +173,39 @@ def test_png_truncated_chunk_raises_valueerror():
         decode_png(bytes(q))
 
 
+@pytest.mark.parametrize(
+    "payload", [b"fLaC" + bytes(10), b"BM\x00"], ids=["flac_streaminfo", "bmp"]
+)
+def test_router_short_headers_raise_value_error(payload):
+    """A header shorter than the router's (or the BMP parser's) fixed
+    peeks is a corrupt payload: typed ValueError, not IndexError /
+    struct.error."""
+    with pytest.raises(ValueError):
+        decode(payload)
+
+
+def test_jpeg_router_dispatches_on_frame_kind():
+    """The router reads each JPEG once and lands where the matching
+    entry point does: baseline / progressive / arithmetic, gray / RGB."""
+    from sim_spark.ops import jpeg, jpeg_arith
+    from sim_spark.queries import multimodal_real as mr
+
+    cases = [
+        (jpeg.gen_jpeg_payload, jpeg.decode_jpeg),
+        (jpeg.gen_jpeg_color_payload, jpeg.decode_jpeg_color),
+        (mr._gen_jpeg_progressive_payload, jpeg.decode_jpeg_progressive),
+        (mr._gen_jpeg_prog_color_payload, jpeg.decode_jpeg_progressive_color),
+        (mr._gen_jpeg_arith_payload, jpeg_arith.decode_jpeg_arith),
+    ]
+    for gen, entry in cases:
+        for d in (0, 5):
+            p = gen(d)
+            w, h, px, _ = entry(p)
+            out = decode(p)
+            assert out["kind"] == "jpeg" and (out["width"], out["height"]) == (w, h)
+            assert out["pixels"] == px.tobytes()
+
+
 def test_png_container_independence():
     """The BMP payload and its PNG twin decode to identical pixel
     arrays — the invariant dedup_image_dhash_png pins end-to-end."""
