@@ -743,7 +743,7 @@ def decode_flac(payload: bytes):
     CRC-8/CRC-16 and the STREAMINFO MD5 of the decoded stream."""
     try:
         sample_rate, frames, md5_expect, bps = _decode_stream(payload, 1)
-    except (IndexError, struct.error) as e:  # truncated / corrupt stream
+    except (IndexError, OverflowError, struct.error) as e:  # corrupt stream
         raise ValueError(f"truncated or corrupt FLAC: {e!r}") from e
     arr = np.concatenate(frames)
     if hashlib.md5(_pack_samples(arr, bps)).digest() != md5_expect:
@@ -759,7 +759,7 @@ def decode_flac_stereo(payload: bytes):
     so a decorrelation-mode or reconstruction bug cannot pass."""
     try:
         sample_rate, frames, md5_expect, bps = _decode_stream(payload, 2)
-    except (IndexError, struct.error) as e:  # truncated / corrupt stream
+    except (IndexError, OverflowError, struct.error) as e:  # corrupt stream
         raise ValueError(f"truncated or corrupt FLAC: {e!r}") from e
     lr = np.concatenate(frames, axis=1)
     inter = np.empty(2 * lr.shape[1], dtype=np.int64)

@@ -420,7 +420,7 @@ def _read_jpeg(payload: bytes, check=None):
                 raise ValueError("malformed DRI segment")
             f.restart_interval = int.from_bytes(seg, "big")
         elif marker in _SOF_MARKERS:
-            _read_sof(f, marker, seg, check)
+            _read_sof(f, marker, seg, check, n)
         elif marker == 0xDA:
             if not f.kind:
                 raise ValueError("SOS before SOF")
@@ -469,7 +469,11 @@ def _read_dht(seg: bytes) -> tuple:
     return tuple(tables)
 
 
-def _read_sof(f: _Frame, kind: int, seg: bytes, check) -> None:
+def _read_sof(f: _Frame, kind: int, seg: bytes, check, n_bytes: int) -> None:
+    """The frame header, then one coefficient grid per component. The
+    SOF's dimensions are untrusted: a Huffman frame codes every block in
+    at least one bit, so one that claims more blocks than ``n_bytes``
+    (the whole payload) can hold is refused before any allocation."""
     if f.kind:
         raise ValueError("multiple frames")
     if len(seg) < 6 or len(seg) != 6 + 3 * seg[5]:
@@ -494,6 +498,8 @@ def _read_sof(f: _Frame, kind: int, seg: bytes, check) -> None:
         if not set(f.sampling) <= {0x11, 0x12, 0x21, 0x22}:
             raise NotImplementedError("sampling factors beyond 2")
     dims = _grid(f.width, f.height, f.sampling)[2]
+    if kind != _ARITHMETIC and sum(bw * bh for bw, bh, _, _ in dims) > 8 * n_bytes:
+        raise ValueError(f"SOF claims {f.width}x{f.height}, more blocks than the payload codes")
     f.comps = [
         {"id": i, "h": hv >> 4, "v": hv & 15, "tq": tq, "bw": bw, "bh": bh,
          "coeffs": np.zeros((bh * bw, 64), dtype=np.int64)}

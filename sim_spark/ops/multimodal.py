@@ -4,10 +4,11 @@ Images/audio/video are opaque ``binary`` columns with typed metadata
 alongside. The Spark-side machinery — schema, Arrow batching,
 mapInPandas signature, partition behavior — is real, and so is the decode:
 WAV (RIFF PCM16) and BMP (24bpp) are parsed with dependency-free
-``struct`` code below, PNG (non-interlaced RGB8, stdlib zlib, all five
-filters, CRC-verified) since round 9, and JPEG — baseline and
-progressive, gray and color, and arithmetic-coded, all through the one
-container layer in ops/jpeg.py — each hash-oracled against DuckDB.
+``struct`` code below, PNG — every spec color type and bit depth,
+sequential or Adam7, through one encoder and one decoder over stdlib
+zlib — and JPEG — baseline and progressive, gray and color, and
+arithmetic-coded, all through the one container layer in ops/jpeg.py —
+each hash-oracled against DuckDB.
 Only codecs whose decode genuinely needs absent libraries (MP3, video)
 remain behind ``NotImplementedError``; :func:`decode` makes that
 boundary explicit.
@@ -43,17 +44,24 @@ def decode(payload: bytes) -> dict:
     """Media decode dispatch by magic bytes.
 
     Every branch decodes for real with dependency-free code: WAV and BMP
-    with the ``struct`` parsers below, PNG with stdlib zlib, JPEG, FLAC,
-    GIF and TIFF with their ops/ codecs, and the bz2/gzip/zip/MP4/WARC/
-    tar container walks. Only MP3/video sample decode raises
-    ``NotImplementedError`` — its codecs are not in this environment and
-    faking them would be dishonest."""
+    with the ``struct`` parsers below, PNG with :func:`decode_png` (any
+    color type and depth; the result carries ``channels`` and ``depth``
+    next to ``pixels``), JPEG, FLAC, GIF and TIFF with their ops/
+    codecs, and the bz2/gzip/zip/MP4/WARC/tar container walks. Only
+    MP3/video sample decode raises ``NotImplementedError`` — its codecs
+    are not in this environment and faking them would be dishonest."""
     if payload[:2] == b"BM":
         w, h, px = decode_bmp(payload)
         return {"kind": "bmp", "width": w, "height": h, "pixels": px}
     if payload[:8] == PNG_SIG:
-        w, h, px = decode_png(payload)
-        return {"kind": "png", "width": w, "height": h, "pixels": px}
+        # every color type and depth: one byte per sample, big-endian
+        # u16 at depth 16 (palette images expand to 8-bit RGB/RGBA)
+        w, h, ch, depth, img = decode_png(payload)
+        px = img.astype(">u2" if depth == 16 else "u1").tobytes()
+        return {
+            "kind": "png", "width": w, "height": h,
+            "channels": ch, "depth": depth, "pixels": px,
+        }
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         rate, samples = decode_wav(payload)
         return {"kind": "wav", "sample_rate": rate, "samples": samples}
@@ -176,14 +184,15 @@ def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
 
     import numpy as np
 
-    riff, _size, wave = struct.unpack_from("<4sI4s", payload, 0)
-    if riff != b"RIFF" or wave != b"WAVE":
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, rate, data = 12, None, None
     while pos + 8 <= len(payload):
         cid, clen = struct.unpack_from("<4sI", payload, pos)
         body = payload[pos + 8 : pos + 8 + clen]
         if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("truncated WAV fmt chunk")
             fmt, channels, rate = struct.unpack_from("<HHI", body, 0)
             bits = struct.unpack_from("<H", body, 14)[0]
             if fmt != 1 or channels != 1 or bits != 16:
@@ -242,13 +251,14 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     return width, height, b"".join(rows)
 
 
-# --- PNG: non-interlaced RGB8 via stdlib zlib (round 9) ---------------------
+# --- PNG: every spec-valid color type and bit depth via stdlib zlib ---------
 #
 # DEFLATE is in the stdlib, so "compressed" was never an honest fence for
-# PNG (r8 verdict "What's missing" #2): a real decoder needs only the
-# IHDR/IDAT chunk walk, zlib.decompress, and the five per-row unfilter
-# predictors. (JPEG's Huffman/arithmetic entropy coding is implemented in
-# ops/jpeg.py; MP3 sample decode stays fenced.)
+# PNG (r8 verdict "What's missing" #2): a real codec needs only the chunk
+# walk, zlib, the five per-row filter predictors, the Adam7 pass grid and
+# sample packing. One encoder writes every shape and one decoder reads
+# every spec-valid one. (JPEG's Huffman/arithmetic entropy coding is
+# implemented in ops/jpeg.py; MP3 sample decode stays fenced.)
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -293,21 +303,15 @@ def _adam7_passes(width: int, height: int):
             yield x0, y0, dx, dy, wp, hp
 
 
-def _png_filter_rows(
-    pixels: bytes, width: int, height: int, bpp: int, row_bytes: int | None = None
-) -> bytearray:
-    """Serialize ``height`` rows with filter type r % 5 (every payload
-    taller than 4 rows exercises all five predictors); shared by the
-    plain, indexed, and per-Adam7-pass encoders. ``row_bytes`` defaults
-    to ``width * bpp`` (whole-byte samples); sub-8-bit depths pass the
-    packed scanline length explicitly while ``bpp`` stays the spec's
-    filter offset of max(1, bits//8) = 1."""
-    if row_bytes is None:
-        row_bytes = width * bpp
+def _png_filter_rows(packed: bytes, height: int, row_bytes: int, bpp: int) -> bytearray:
+    """Serialize ``height`` packed scanlines of ``row_bytes`` each with
+    filter type r % 5 (every payload taller than 4 rows exercises all
+    five predictors). ``bpp`` is the spec's filter offset: the bytes per
+    pixel, at least 1 (sub-byte depths)."""
     raw = bytearray()
     prior = bytes(row_bytes)
     for r in range(height):
-        row = pixels[r * row_bytes : (r + 1) * row_bytes]
+        row = packed[r * row_bytes : (r + 1) * row_bytes]
         ft = r % 5
         raw.append(ft)
         if ft == 0:
@@ -342,127 +346,99 @@ def _png_filter_rows(
     return raw
 
 
-def _extract_pass(pixels: bytes, width: int, bpp: int, x0, y0, dx, dy, wp, hp) -> bytes:
-    import numpy as np
-
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(-1, width, bpp)
-    return a[y0::dy, x0::dx].tobytes()
-
-
-def encode_png_indexed(
-    width: int,
-    height: int,
-    indices: bytes,
-    palette: list[tuple[int, int, int]],
-    trns: list[int] | None = None,
-    interlace: bool = False,
-    depth: int = 8,
-) -> bytes:
-    """Color-type-3 (palette) PNG — the shape icon/graphic files off
-    the web commonly are (r12). ``indices`` are row-major palette
-    indices, one per byte regardless of ``depth`` (1/2/4-bit depths are
-    bit-packed here, MSB-first with scanline padding); ``trns``
-    optionally gives per-entry alpha (tRNS chunk). With ``interlace``
-    the scanlines are Adam7-ordered."""
-    import struct
-    import zlib
-
-    assert len(indices) == width * height and 1 <= len(palette) <= 256
-    assert max(indices) < len(palette)
-    if depth not in (1, 2, 4, 8) or max(indices) >> depth:
-        raise ValueError(f"palette depth {depth} cannot hold these indices")
-
-    def _pack(sub: bytes, wp: int, hp: int) -> tuple[bytes, int]:
-        if depth == 8:
-            return sub, wp
-        return _png_pack_rows(sub, wp, hp, depth), (wp * depth + 7) // 8
-
-    if interlace:
-        raw = bytearray()
-        for x0, y0, dx, dy, wp, hp in _adam7_passes(width, height):
-            sub = _extract_pass(indices, width, 1, x0, y0, dx, dy, wp, hp)
-            packed, rb = _pack(sub, wp, hp)
-            raw += _png_filter_rows(packed, wp, hp, 1, row_bytes=rb)
-    else:
-        packed, rb = _pack(indices, width, height)
-        raw = _png_filter_rows(packed, width, height, 1, row_bytes=rb)
-    z = zlib.compress(bytes(raw), 6)
-    half = max(1, len(z) // 2)
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, 3, 0, 0, int(interlace)
-    )
-    plte = b"".join(bytes(rgb) for rgb in palette)
-    out = PNG_SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"PLTE", plte)
-    if trns is not None:
-        out += _png_chunk(b"tRNS", bytes(trns))
-    return (
-        out
-        + _png_chunk(b"IDAT", z[:half])
-        + _png_chunk(b"IDAT", z[half:])
-        + _png_chunk(b"IEND", b"")
-    )
-
-
 def encode_png(
     width: int,
     height: int,
-    pixels: bytes,
+    samples,
     channels: int = 3,
+    depth: int = 8,
     interlace: bool = False,
+    palette: list[tuple[int, int, int]] | None = None,
+    trns: list[int] | None = None,
 ) -> bytes:
-    """Non-interlaced 8-bit PNG. ``pixels`` is row-major TOP-DOWN,
-    ``channels`` bytes/pixel (1 = grayscale, 2 = gray+alpha, 3 = RGB,
-    4 = RGBA — the color type is derived). Row ``r`` is written with
-    filter type ``r % 5``, so every payload taller than 4 rows exercises
-    ALL five PNG filters (None/Sub/Up/Average/Paeth) — a decoder with
-    any unfilter bug cannot round-trip these bytes. The zlib stream is
-    split across two IDAT chunks to exercise IDAT concatenation, as
-    real encoders emit."""
+    """The PNG encoder, for every color type and bit depth the spec
+    allows. ``samples`` holds height·width·channels values, row-major
+    TOP-DOWN: ``bytes`` (one per sample) or an integer array.
+    ``channels`` picks the color type (1 gray, 2 gray+alpha, 3 RGB,
+    4 RGBA); a ``palette`` of (r, g, b) entries makes it color type 3
+    with one index per pixel (``channels`` 1) and optional per-entry
+    alpha ``trns``. Sub-byte samples are packed MSB-first with per-row
+    padding, 16-bit ones big-endian; ``interlace`` writes the seven
+    Adam7 passes. Row ``r`` of each pass gets filter type ``r % 5``, so
+    a decoder with any unfilter bug cannot round-trip these bytes, and
+    the zlib stream is split across two IDAT chunks, as real encoders
+    emit. Raises ``ValueError`` for a depth the color type does not
+    allow, a wrong sample count, a sample out of range, or a palette
+    outside 1..256 entries."""
     import struct
     import zlib
 
-    if interlace:
-        raw = bytearray()
-        for x0, y0, dx, dy, wp, hp in _adam7_passes(width, height):
-            sub = _extract_pass(pixels, width, channels, x0, y0, dx, dy, wp, hp)
-            raw += _png_filter_rows(sub, wp, hp, channels)
+    import numpy as np
+
+    ctype = 3 if palette is not None else _PNG_COLOR_TYPE.get(channels)
+    if (
+        ctype is None
+        or depth not in _PNG_VALID_DEPTHS[ctype]
+        or (ctype == 3 and channels != 1)
+        or (trns is not None and ctype != 3)
+    ):
+        raise ValueError(
+            f"no PNG color type for channels={channels} depth={depth} "
+            f"palette={palette is not None} trns={trns is not None}"
+        )
+    top = 1 << depth
+    if palette is not None:
+        plte = bytes(v for rgb in palette for v in rgb)
+        if not 1 <= len(palette) <= 256 or len(plte) != 3 * len(palette) or (
+            trns is not None and len(trns) > len(palette)
+        ):
+            raise ValueError("PNG palette needs 1..256 RGB entries, tRNS no more")
+        top = min(top, len(palette))
+    if isinstance(samples, (bytes, bytearray)):
+        a = np.frombuffer(samples, dtype=np.uint8)
     else:
-        raw = _png_filter_rows(pixels, width, height, channels)
+        a = np.asarray(samples)
+        if a.dtype != np.uint8:
+            a = a.astype(np.int64)
+    # uint8 samples need no range scan when every byte value is valid
+    if a.size != width * height * channels or (
+        (top < 256 or a.dtype != np.uint8)
+        and (a.max(initial=0) >= top or a.min(initial=0) < 0)
+    ):
+        raise ValueError("bad PNG sample count or sample out of range")
+    grid = a.reshape(height, width, channels)
+    if depth == 16:
+        grid = grid.astype(">u2")
+    elif depth == 8:
+        grid = grid.astype(np.uint8, copy=False)
+    bpp = max(1, channels * depth // 8)
+    raw = bytearray()
+    passes = (
+        _adam7_passes(width, height) if interlace
+        else [(0, 0, 1, 1, width, height)]
+    )
+    for x0, y0, dx, dy, wp, hp in passes:
+        sub = grid[y0::dy, x0::dx]
+        packed = _png_pack_rows(sub[..., 0], depth) if depth < 8 else sub.tobytes()
+        raw += _png_filter_rows(packed, hp, (wp * channels * depth + 7) // 8, bpp)
     z = zlib.compress(bytes(raw), 6)
     half = max(1, len(z) // 2)
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, 8, _PNG_COLOR_TYPE[channels], 0, 0,
-        int(interlace),
-    )
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", z[:half])
-        + _png_chunk(b"IDAT", z[half:])
-        + _png_chunk(b"IEND", b"")
-    )
+    ihdr = struct.pack(">IIBBBBB", width, height, depth, ctype, 0, 0, int(interlace))
+    chunks = [(b"IHDR", ihdr)]
+    if palette is not None:
+        chunks.append((b"PLTE", plte))
+        if trns is not None:
+            chunks.append((b"tRNS", bytes(trns)))
+    chunks += [(b"IDAT", z[:half]), (b"IDAT", z[half:]), (b"IEND", b"")]
+    return PNG_SIG + b"".join(_png_chunk(t, d) for t, d in chunks)
 
 
-def decode_png(payload: bytes) -> tuple[int, int, bytes]:
-    """RGB entry point (back-compat): decode and require 3 channels."""
-    w, h, channels, px = decode_png_any(payload)
-    if channels != 3:
-        raise ValueError(f"expected RGB PNG, got {channels}-channel")
-    return w, h, px
-
-
-def _png_unfilter(
-    raw: bytes, offset: int, w_px: int, h_px: int, bpp: int,
-    row_bytes: int | None = None,
-):
-    """Unfilter ``h_px`` scanlines of ``w_px`` pixels starting at
+def _png_unfilter(raw: bytes, offset: int, h_px: int, bpp: int, row_bytes: int):
+    """Unfilter ``h_px`` scanlines of ``row_bytes`` bytes starting at
     ``offset`` in the decompressed stream; returns (pixels, new_offset).
     Shared by the sequential path and each Adam7 pass (whose predictor
-    state resets per pass, per spec). ``row_bytes`` defaults to
-    ``w_px * bpp``; sub-8-bit depths pass the packed scanline length
-    while ``bpp`` stays the spec's filter offset of 1."""
-    if row_bytes is None:
-        row_bytes = w_px * bpp
+    state resets per pass, per spec). ``bpp`` is the spec's filter
+    offset of max(1, bits per pixel // 8)."""
     need = h_px * (1 + row_bytes)
     if offset + need > len(raw):
         raise ValueError("PNG scanline payload length mismatch")
@@ -503,16 +479,13 @@ _PNG_VALID_DEPTHS = {
     6: (8, 16),           # RGBA
 }
 
-
-def _png_pack_rows(vals, w_px: int, h_px: int, depth: int) -> bytes:
-    """MSB-first bit packing of sub-8-bit samples into scanlines with
-    per-row byte padding (PNG spec 7.2)."""
+def _png_pack_rows(grid, depth: int) -> bytes:
+    """MSB-first bit packing of an (h, w) grid of sub-8-bit samples into
+    scanlines with per-row byte padding (PNG spec 7.2)."""
     import numpy as np
 
-    if isinstance(vals, (bytes, bytearray)):
-        vals = np.frombuffer(vals, dtype=np.uint8)
-    a = np.asarray(vals, dtype=np.uint8).reshape(h_px, w_px)
-    bits = np.unpackbits(a[..., None], axis=2)[..., 8 - depth :]
+    h_px, w_px = grid.shape
+    bits = np.unpackbits(grid.astype(np.uint8)[..., None], axis=2)[..., 8 - depth :]
     flat = bits.reshape(h_px, w_px * depth)
     pad = (-flat.shape[1]) % 8
     if pad:
@@ -534,87 +507,18 @@ def _png_unpack_rows(px: bytes, w_px: int, h_px: int, depth: int):
     return (grouped * weights).sum(axis=2).astype(np.uint8)
 
 
-def encode_png_deep(
-    width: int,
-    height: int,
-    samples,
-    channels: int = 1,
-    depth: int = 16,
-    interlace: bool = False,
-) -> bytes:
-    """Non-palette PNG at the spec's non-8-bit depths (r12): 16-bit
-    gray/GA/RGB/RGBA (big-endian sample packing) and 1/2/4-bit
-    grayscale (MSB-first bit packing with per-scanline padding).
-    ``samples`` is a flat sequence of h·w·channels ints < 2^depth,
-    row-major TOP-DOWN. Filter offset follows the spec: the byte
-    holding the corresponding sample of the pixel to the left —
-    channels·2 for 16-bit, 1 for sub-byte depths."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    ctype_col = _PNG_COLOR_TYPE[channels]
-    if depth not in _PNG_VALID_DEPTHS[ctype_col] or depth == 8:
-        raise ValueError(f"encode_png_deep: depth {depth} invalid for "
-                         f"{channels}-channel (use encode_png for 8-bit)")
-    if depth < 8 and channels != 1:
-        raise ValueError("sub-8-bit PNG is grayscale-only")
-    a = np.asarray(samples, dtype=np.int64)
-    if a.size != width * height * channels or a.min(initial=0) < 0 or (
-        a.max(initial=0) >> depth
-    ):
-        raise ValueError("bad sample count or sample out of depth range")
-    raw = bytearray()
-    if depth == 16:
-        packed = a.astype(">u2").tobytes()
-        bpp = 2 * channels
-        if interlace:
-            for x0, y0, dx, dy, wp, hp in _adam7_passes(width, height):
-                sub = _extract_pass(packed, width, bpp, x0, y0, dx, dy, wp, hp)
-                raw += _png_filter_rows(sub, wp, hp, bpp)
-        else:
-            raw += _png_filter_rows(packed, width, height, bpp)
-    else:
-        grid = a.astype(np.uint8).reshape(height, width)
-        if interlace:
-            for x0, y0, dx, dy, wp, hp in _adam7_passes(width, height):
-                sub = grid[y0::dy, x0::dx]
-                packed = _png_pack_rows(sub, wp, hp, depth)
-                raw += _png_filter_rows(
-                    packed, wp, hp, 1, row_bytes=(wp * depth + 7) // 8
-                )
-        else:
-            packed = _png_pack_rows(grid, width, height, depth)
-            raw += _png_filter_rows(
-                packed, width, height, 1, row_bytes=(width * depth + 7) // 8
-            )
-    z = zlib.compress(bytes(raw), 6)
-    half = max(1, len(z) // 2)
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, ctype_col, 0, 0, int(interlace)
-    )
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", z[:half])
-        + _png_chunk(b"IDAT", z[half:])
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png_deep(payload: bytes):
-    """Parse a PNG at ANY spec-valid bit depth / color type combination
-    (r12 — retiring the r11 "8-bit only" fence): grayscale 1/2/4/8/16,
-    gray+alpha / RGB / RGBA 8/16, palette 1/2/4/8 (PLTE + optional tRNS),
-    sequential or Adam7-interlaced. Returns (width, height, channels,
-    depth, samples) where ``samples`` is a numpy (height, width,
-    channels) int64 array of decoded sample values (palette expanded to
-    8-bit RGB/RGBA; ``depth`` reports the SOURCE bit depth). Signature
-    check, CRC-verified chunk walk, multi-IDAT concatenation, the five
+def decode_png(payload: bytes):
+    """The PNG decoder, for every spec-valid bit depth / color type
+    combination: grayscale 1/2/4/8/16, gray+alpha / RGB / RGBA 8/16,
+    palette 1/2/4/8 (PLTE + optional tRNS), sequential or
+    Adam7-interlaced. Returns (width, height, channels, depth, samples)
+    where ``samples`` is a numpy (height, width, channels) int64 array
+    of decoded sample values (palette expanded to 8-bit RGB/RGBA;
+    ``depth`` reports the SOURCE bit depth). Signature check,
+    CRC-verified chunk walk, multi-IDAT concatenation, the five
     unfilter predictors at the spec's filter offset, per-pass state
     resets, MSB-first sub-byte unpacking, and big-endian 16-bit
-    samples."""
+    samples. Every malformed payload raises ``ValueError``."""
     import struct
     import zlib
 
@@ -640,6 +544,8 @@ def decode_png_deep(payload: bytes):
         if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
             raise ValueError(f"PNG chunk CRC mismatch in {ctype!r}")
         if ctype == b"IHDR":
+            if len(data) != 13:
+                raise ValueError("malformed IHDR chunk")
             width, height, depth, ctype_col, comp, filt, interlace = (
                 struct.unpack(">IIBBBBB", data)
             )
@@ -650,10 +556,11 @@ def decode_png_deep(payload: bytes):
                 or comp != 0
                 or filt != 0
                 or interlace not in (0, 1)
+                or not (width and height)
             ):
                 raise ValueError(
-                    f"unsupported PNG: depth={depth} color={ctype_col} "
-                    f"interlace={interlace}"
+                    f"unsupported PNG: {width}x{height} depth={depth} "
+                    f"color={ctype_col} interlace={interlace}"
                 )
         elif ctype == b"PLTE":
             if len(data) % 3 or not 3 <= len(data) <= 768:
@@ -671,8 +578,14 @@ def decode_png_deep(payload: bytes):
     is_palette = ctype_col == 3
     if is_palette and palette is None:
         raise ValueError("palette PNG missing PLTE chunk")
-    raw = zlib.decompress(bytes(idat))
-    sample_bytes = 2 if depth == 16 else 1
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:  # truncated or corrupt DEFLATE stream
+        raise ValueError(f"corrupt PNG zlib stream: {e}") from e
+    # every sample takes depth bits of the stream: refuse an IHDR that
+    # claims more before allocating its grid
+    if width * height * channels * depth > 8 * len(raw):
+        raise ValueError("PNG scanline payload length mismatch")
     bpp = max(1, channels * depth // 8)  # spec filter offset
 
     def _rows(w_px: int) -> int:
@@ -688,7 +601,7 @@ def decode_png_deep(payload: bytes):
         return _png_unpack_rows(px, w_px, h_px, depth)[..., None]
 
     if interlace == 0:
-        px, end = _png_unfilter(raw, 0, width, height, bpp, _rows(width))
+        px, end = _png_unfilter(raw, 0, height, bpp, _rows(width))
         if end != len(raw):
             raise ValueError("PNG scanline payload length mismatch")
         img = _to_grid(px, width, height).astype(np.int64)
@@ -696,7 +609,7 @@ def decode_png_deep(payload: bytes):
         img = np.zeros((height, width, channels), dtype=np.int64)
         off = 0
         for x0, y0, dx, dy, wp, hp in _adam7_passes(width, height):
-            sub, off = _png_unfilter(raw, off, wp, hp, bpp, _rows(wp))
+            sub, off = _png_unfilter(raw, off, hp, bpp, _rows(wp))
             img[y0::dy, x0::dx] = _to_grid(sub, wp, hp)
         if off != len(raw):
             raise ValueError("PNG scanline payload length mismatch")
@@ -714,24 +627,6 @@ def decode_png_deep(payload: bytes):
             return width, height, 4, depth, out
         return width, height, 3, depth, rgb
     return width, height, channels, depth, img
-
-
-def decode_png_any(payload: bytes) -> tuple[int, int, int, bytes]:
-    """8-bit entry point (back-compat contract: one BYTE per sample):
-    grayscale / gray+alpha / RGB / RGBA / palette, sequential or Adam7
-    → (width, height, channels, pixels) row-major TOP-DOWN. Non-8-bit
-    depths decode through :func:`decode_png_deep`, whose sample array
-    this byte-oriented contract cannot represent — a typed error points
-    there."""
-    import numpy as np
-
-    w, h, channels, depth, img = decode_png_deep(payload)
-    if depth != 8:
-        raise ValueError(
-            f"{depth}-bit PNG: use decode_png_deep (byte-per-sample "
-            f"contract cannot represent it)"
-        )
-    return w, h, channels, img.astype(np.uint8).tobytes()
 
 
 def _features_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -974,4 +869,4 @@ def gen_png_payload(doc_id: int) -> bytes:
     c = np.arange(w, dtype=np.int64)[None, :, None]
     ch = np.arange(3, dtype=np.int64)[None, None, :]
     px = ((3 * doc_id + 11 * r + 17 * c + 31 * ch) % 256).astype(np.uint8)
-    return encode_png(w, h, px.tobytes())
+    return encode_png(w, h, px)

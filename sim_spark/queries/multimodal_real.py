@@ -45,6 +45,7 @@ from sim_spark.ops.multimodal import (
     decode_bmp,
     decode_png,
     decode_wav,
+    encode_png,
     gen_bmp_payload,
     gen_png_payload,
     gen_png_twin_payload,
@@ -276,17 +277,17 @@ def _bmp_tile_rows(doc_id: int, payload: bytes) -> list[tuple]:
     return rows
 
 
-def _make_dhash_rows(decode_fn):
+def _make_dhash_rows(pixels_fn):
     """Container-generic dhash signature row function: decode via
-    ``decode_fn`` (BMP or PNG parser — both return top-down (w, h,
-    pixel-bytes)), grayscale by exact channel sum, nearest-neighbor
-    sample to the canonical 8x9 grid, pack the 64
-    brighter-to-the-right bits as 4x16-bit band values."""
+    ``pixels_fn`` (BMP or PNG — both give a top-down (h, w, 3) sample
+    array), grayscale by exact channel sum, nearest-neighbor sample to
+    the canonical 8x9 grid, pack the 64 brighter-to-the-right bits as
+    4x16-bit band values."""
 
     def _rows(doc_id: int, payload: bytes) -> list[tuple]:
-        w, h, px = decode_fn(payload)
-        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
-        gray = a.sum(axis=2)  # exact int channel sum, 0..765
+        a = pixels_fn(payload)
+        h, w = a.shape[:2]
+        gray = a.sum(axis=2, dtype=np.int64)  # exact channel sum, 0..765
         # nearest-neighbor "resize" to the canonical 8x9 dhash grid
         ri = (np.arange(8) * h) // 8
         cj = (np.arange(9) * w) // 9
@@ -302,8 +303,13 @@ def _make_dhash_rows(decode_fn):
     return _rows
 
 
-_bmp_dhash_rows = _make_dhash_rows(decode_bmp)
-_png_dhash_rows = _make_dhash_rows(decode_png)
+def _bmp_pixels(payload: bytes) -> np.ndarray:
+    w, h, px = decode_bmp(payload)
+    return np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
+
+
+_bmp_dhash_rows = _make_dhash_rows(_bmp_pixels)
+_png_dhash_rows = _make_dhash_rows(lambda payload: decode_png(payload)[4])
 
 
 _IMG_SIG_CTES = """dims AS (
@@ -406,8 +412,7 @@ def dedup_image_dhash_megadup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _png_rows(doc_id: int, payload: bytes) -> list[tuple]:
-    w, h, px = decode_png(payload)
-    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
+    w, h, _ch, _depth, a = decode_png(payload)
     return [
         (
             doc_id, w, h, int(a.sum()), int(a[0].sum()),
@@ -1434,8 +1439,6 @@ def multimodal_flac_depth_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PNG gray/RGBA decode (r11): real-world color types ---------------------
 
-from sim_spark.ops.multimodal import decode_png_any, encode_png  # noqa: E402
-
 
 def _gen_png_any_payload(doc_id: int) -> bytes:
     """Deterministic PNG alternating real-world color types: even docs
@@ -1449,17 +1452,13 @@ def _gen_png_any_payload(doc_id: int) -> bytes:
     c = np.arange(w, dtype=np.int64)[None, :, None]
     ch = np.arange(ch_n, dtype=np.int64)[None, None, :]
     px = ((5 * doc_id + 7 * r + 11 * c + 23 * ch) % 256).astype(np.uint8)
-    return encode_png(w, h, px.tobytes(), channels=ch_n)
+    return encode_png(w, h, px, channels=ch_n)
 
 
 def _png_any_rows(doc_id: int, payload: bytes) -> list[tuple]:
-    w, h, ch_n, px = decode_png_any(payload)
-    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-    alpha = int(a.reshape(-1, ch_n)[:, 3].sum()) if ch_n == 4 else 0
-    return [
-        (doc_id, w, h, ch_n, int(a.sum()), alpha,
-         int(a[: w * ch_n].sum()))
-    ]
+    w, h, ch_n, _depth, img = decode_png(payload)
+    alpha = int(img[..., 3].sum()) if ch_n == 4 else 0
+    return [(doc_id, w, h, ch_n, int(img.sum()), alpha, int(img[0].sum()))]
 
 
 @query(
@@ -1507,8 +1506,6 @@ def multimodal_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PNG palette + Adam7 interlace decode (r12) ------------------------------
 
-from sim_spark.ops.multimodal import encode_png_indexed  # noqa: E402
-
 
 def _gen_png_pal7_payload(doc_id: int) -> bytes:
     """Deterministic PNG cycling the two shapes the r11 verdict listed
@@ -1530,7 +1527,7 @@ def _gen_png_pal7_payload(doc_id: int) -> bytes:
         c = np.arange(w, dtype=np.int64)[None, :, None]
         ch = np.arange(ch_n, dtype=np.int64)[None, None, :]
         px = ((5 * doc_id + 7 * r + 11 * c + 23 * ch) % 256).astype(np.uint8)
-        return encode_png(w, h, px.tobytes(), channels=ch_n, interlace=True)
+        return encode_png(w, h, px, channels=ch_n, interlace=True)
     P = 3 + doc_id % 5
     pal = [
         tuple(int((11 * doc_id + 29 * e + 37 * ch) % 256) for ch in range(3))
@@ -1542,8 +1539,8 @@ def _gen_png_pal7_payload(doc_id: int) -> bytes:
     trns = (
         [int((7 * doc_id + 13 * e) % 256) for e in range(P)] if m == 2 else None
     )
-    return encode_png_indexed(
-        w, h, idx.tobytes(), pal, trns=trns, interlace=(m == 2)
+    return encode_png(
+        w, h, idx, channels=1, interlace=(m == 2), palette=pal, trns=trns
     )
 
 
@@ -1716,8 +1713,6 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PNG bit depths (r12): 16-bit and sub-byte, the last PNG fence -----------
 
-from sim_spark.ops.multimodal import decode_png_deep, encode_png_deep  # noqa: E402
-
 
 def _gen_png_depth_payload(doc_id: int) -> bytes:
     """Deterministic PNG cycling the non-8-bit depths the spec allows
@@ -1739,30 +1734,24 @@ def _gen_png_depth_payload(doc_id: int) -> bytes:
         ch_n = 1 if m == 0 else 3
         ch = np.arange(ch_n, dtype=np.int64)[None, None, :]
         s = (5 * doc_id + 257 * r + 263 * c + 1031 * ch) % 65536
-        return encode_png_deep(
-            w, h, s.ravel(), channels=ch_n, depth=16, interlace=(m == 1)
-        )
+        return encode_png(w, h, s, channels=ch_n, depth=16, interlace=(m == 1))
     if m == 2:
         s = (doc_id + 3 * r[..., 0] + 5 * c[..., 0]) % 16
-        return encode_png_deep(w, h, s.ravel(), channels=1, depth=4)
+        return encode_png(w, h, s, channels=1, depth=4)
     if m == 4:
         s = (doc_id + r[..., 0] + c[..., 0]) % 2
-        return encode_png_deep(
-            w, h, s.ravel(), channels=1, depth=1, interlace=True
-        )
+        return encode_png(w, h, s, channels=1, depth=1, interlace=True)
     P = 3 + doc_id % 2
     pal = [
         tuple(int((11 * doc_id + 29 * e + 37 * ch) % 256) for ch in range(3))
         for e in range(P)
     ]
-    idx = ((doc_id + 3 * r[..., 0] + 5 * c[..., 0]) % P).astype(np.uint8)
-    return encode_png_indexed(
-        w, h, idx.tobytes(), pal, interlace=True, depth=2
-    )
+    idx = (doc_id + 3 * r[..., 0] + 5 * c[..., 0]) % P
+    return encode_png(w, h, idx, channels=1, depth=2, interlace=True, palette=pal)
 
 
 def _png_depth_rows(doc_id: int, payload: bytes) -> list[tuple]:
-    w, h, ch_n, depth, img = decode_png_deep(payload)
+    w, h, ch_n, depth, img = decode_png(payload)
     wrow = int((img.sum(axis=(1, 2)) * (np.arange(h) + 1)).sum())
     return [
         (
@@ -2709,14 +2698,14 @@ def _gen_mp3_apic_payload(doc_id: int) -> bytes:
 def _mp3_apic_rows(doc_id: int, payload: bytes) -> list[tuple]:
     prof = parse_mp3(payload)
     apic = prof["id3"]["APIC"]
-    w, h, px = decode_png(apic["data"])
+    w, h, _ch, _depth, img = decode_png(apic["data"])
     return [
         (
             doc_id,
             prof["id3"]["_version"],
             w,
             h,
-            sum(px),
+            int(img.sum()),
             apic["pic_type"],
             sum(apic["desc"].encode("latin-1")),
             sum(apic["mime"].encode("latin-1")),

@@ -678,11 +678,12 @@ def test_jpeg_arith_typed_errors():
         encode_jpeg_arith_from_coeffs(2, 1, c)
 
 
-# --- typed errors under corruption (all five decoders) -----------------------
+# --- typed errors under corruption (JPEG, PNG, WAV, FLAC LPC) ---------------
 
 
 def _corruption_cases():
-    from sim_spark.ops import jpeg, jpeg_arith
+    from sim_spark.ops import flac, jpeg, jpeg_arith
+    from sim_spark.ops import multimodal as mm
     from sim_spark.queries import multimodal_real as mr
 
     return {
@@ -695,13 +696,22 @@ def _corruption_cases():
             jpeg.decode_jpeg_progressive_color, mr._gen_jpeg_prog_color_payload),
         "arithmetic": (
             jpeg_arith.decode_jpeg_arith, mr._gen_jpeg_arith_payload),
+        "png": (mm.decode_png, mm.gen_png_payload),
+        "png_twin": (mm.decode_png, mm.gen_png_twin_payload),
+        "png_rgba_gray": (mm.decode_png, mr._gen_png_any_payload),
+        "png_palette_adam7": (mm.decode_png, mr._gen_png_pal7_payload),
+        "png_depth": (mm.decode_png, mr._gen_png_depth_payload),
+        "wav": (mm.decode_wav, lambda d: mm.gen_wav_payload(d, 100)),
+        "wav_tone": (mm.decode_wav, mm.gen_wav_tone_payload),
+        "flac_lpc": (flac.decode_flac, flac.gen_flac_lpc_payload),
     }
 
 
 @pytest.mark.parametrize(
     "case",
     ["baseline", "dc_only", "color", "progressive", "progressive_color",
-     "arithmetic"],
+     "arithmetic", "png", "png_twin", "png_rgba_gray", "png_palette_adam7",
+     "png_depth", "wav", "wav_tone", "flac_lpc"],
 )
 def test_corrupted_payloads_raise_only_typed_errors(case):
     """Untrusted bytes through every decoder: each generator payload
@@ -731,3 +741,16 @@ def test_corrupted_payloads_raise_only_typed_errors(case):
             except Exception as e:  # noqa: BLE001 - the leak under test
                 leaked.append(f"doc {doc_id}: {type(e).__name__}: {e}")
     assert not leaked, f"{len(leaked)} leaked: {leaked[:5]}"
+
+
+def test_sof_dimensions_beyond_the_payload_are_refused():
+    """A baseline SOF patched to 65535x65535 asks for a 32 GiB
+    coefficient grid; a Huffman frame codes every block in at least one
+    bit, so the reader refuses it with ValueError before allocating."""
+    from sim_spark.ops import jpeg
+
+    p = bytearray(jpeg.gen_jpeg_payload(1))
+    sof = p.index(b"\xff\xc0")
+    p[sof + 5 : sof + 9] = b"\xff\xff\xff\xff"  # height, width
+    with pytest.raises(ValueError, match="more blocks"):
+        jpeg.decode_jpeg(bytes(p))

@@ -110,7 +110,9 @@ def test_png_roundtrip_all_filters():
     payload = encode_png(6, 10, px)
     assert payload[:8] == b"\x89PNG\r\n\x1a\n"
     assert payload.count(b"IDAT") == 2  # multi-IDAT reassembly exercised
-    assert decode_png(payload) == (6, 10, px)
+    w, h, ch, depth, img = decode_png(payload)
+    assert (w, h, ch, depth) == (6, 10, 3, 8)
+    assert img.astype(np.uint8).tobytes() == px
 
 
 def test_png_crc_is_verified():
@@ -174,14 +176,28 @@ def test_png_truncated_chunk_raises_valueerror():
 
 
 @pytest.mark.parametrize(
-    "payload", [b"fLaC" + bytes(10), b"BM\x00"], ids=["flac_streaminfo", "bmp"]
+    "payload",
+    [
+        b"fLaC" + bytes(10),
+        b"BM\x00",
+        # a `fmt ` chunk shorter than its 16-byte PCM body
+        b"RIFF" + bytes(4) + b"WAVE" + b"fmt " + (2).to_bytes(4, "little")
+        + b"\x01\x00" + b"data" + bytes(4),
+    ],
+    ids=["flac_streaminfo", "bmp", "wav_fmt"],
 )
 def test_router_short_headers_raise_value_error(payload):
-    """A header shorter than the router's (or the BMP parser's) fixed
-    peeks is a corrupt payload: typed ValueError, not IndexError /
+    """A header shorter than the router's (or the BMP or WAV parser's)
+    fixed peeks is a corrupt payload: typed ValueError, not IndexError /
     struct.error."""
     with pytest.raises(ValueError):
         decode(payload)
+
+
+def test_wav_short_riff_header_raises_value_error():
+    """A payload shorter than the 12-byte RIFF/WAVE header."""
+    with pytest.raises(ValueError, match="RIFF"):
+        decode_wav(b"RIFF\x00\x00")
 
 
 def test_jpeg_router_dispatches_on_frame_kind():
@@ -213,7 +229,8 @@ def test_png_container_independence():
     from sim_spark.ops.multimodal import decode_png
 
     for d in (0, 1, 12, 91, 400):
-        assert decode_png(gen_png_twin_payload(d)) == decode_bmp(
+        w, h, _ch, _depth, img = decode_png(gen_png_twin_payload(d))
+        assert (w, h, img.astype(np.uint8).tobytes()) == decode_bmp(
             gen_bmp_payload(d)
         )
 
@@ -224,6 +241,7 @@ def test_png_dispatch_and_remaining_fence():
 
     out = decode(gen_png_payload(7))
     assert out["kind"] == "png" and out["width"] == 5 + 7 % 11
+    assert (out["channels"], out["depth"]) == (3, 8)
     out = decode(gen_jpeg_payload(7))  # JPEG dispatches for real since r11
     assert out["kind"] == "jpeg" and out["width"] == (2 + 7 % 4) * 8
     from sim_spark.ops.gif import encode_gif  # GIF dispatches since r12
@@ -237,25 +255,20 @@ def test_png_dispatch_and_remaining_fence():
 
 
 def test_png_all_color_types_roundtrip():
-    """decode_png_any (r11): gray / gray+alpha / RGB / RGBA round-trip
-    bit-exactly through every filter type; the RGB entry point keeps
-    its 3-channel contract."""
+    """gray / gray+alpha / RGB / RGBA (r11) round-trip bit-exactly
+    through every filter type."""
     import numpy as np
 
-    from sim_spark.ops.multimodal import decode_png_any, encode_png
+    from sim_spark.ops.multimodal import decode_png, encode_png
 
     rng = np.random.default_rng(4)
     for ch in (1, 2, 3, 4):
         for _ in range(10):
             w, h = int(rng.integers(1, 12)), int(rng.integers(1, 11))
             px = rng.integers(0, 256, w * h * ch, dtype=np.uint8).tobytes()
-            assert decode_png_any(encode_png(w, h, px, channels=ch)) == (
-                w, h, ch, px
-            )
-    with pytest.raises(ValueError):  # RGB wrapper rejects other types
-        from sim_spark.ops.multimodal import decode_png
-
-        decode_png(encode_png(2, 2, bytes(16), channels=4))
+            w2, h2, c2, d2, img = decode_png(encode_png(w, h, px, channels=ch))
+            assert (w2, h2, c2, d2) == (w, h, ch, 8)
+            assert img.astype(np.uint8).tobytes() == px
 
 
 # --- PNG palette + Adam7 (r12) -----------------------------------------------
@@ -275,30 +288,27 @@ def test_png_adam7_grid_covers_every_pixel_once():
 def test_png_palette_and_adam7_roundtrip_all_shapes():
     import numpy as np
 
-    from sim_spark.ops.multimodal import (
-        decode_png_any,
-        encode_png,
-        encode_png_indexed,
-    )
+    from sim_spark.ops.multimodal import decode_png, encode_png
 
     rng = np.random.default_rng(5)
     for ch in (1, 2, 3, 4):
         for il in (False, True):
             for (w, h) in [(1, 1), (2, 3), (8, 8), (13, 11), (1, 9), (9, 1)]:
                 px = rng.integers(0, 256, w * h * ch, dtype=np.uint8).tobytes()
-                w2, h2, c2, px2 = decode_png_any(
+                w2, h2, c2, _d, img = decode_png(
                     encode_png(w, h, px, channels=ch, interlace=il)
                 )
-                assert (w2, h2, c2) == (w, h, ch) and px2 == px
+                assert (w2, h2, c2) == (w, h, ch)
+                assert img.astype(np.uint8).tobytes() == px
     for il in (False, True):
         for trns in (None, [0, 128, 255]):
             pal = [tuple(int(x) for x in rng.integers(0, 256, 3)) for _ in range(5)]
             idx = rng.integers(0, 5, 13 * 7, dtype=np.uint8).tobytes()
-            w2, h2, c2, px2 = decode_png_any(
-                encode_png_indexed(13, 7, idx, pal, trns=trns, interlace=il)
+            w2, h2, c2, _d, a = decode_png(
+                encode_png(13, 7, idx, channels=1, interlace=il, palette=pal,
+                           trns=trns)
             )
             assert (w2, h2) == (13, 7) and c2 == (4 if trns else 3)
-            a = np.frombuffer(px2, dtype=np.uint8).reshape(7, 13, c2)
             ii = np.frombuffer(idx, dtype=np.uint8).reshape(7, 13)
             assert np.array_equal(a[..., :3], np.array(pal, dtype=np.uint8)[ii])
 
@@ -313,12 +323,12 @@ def test_png_palette_malformed_typed_errors():
     from sim_spark.ops.multimodal import (
         PNG_SIG,
         _png_chunk,
-        decode_png_any,
-        encode_png_indexed,
+        decode_png,
+        encode_png,
     )
 
     pal = [(1, 2, 3), (4, 5, 6)]
-    good = encode_png_indexed(4, 3, bytes([0, 1] * 6), pal)
+    good = encode_png(4, 3, bytes([0, 1] * 6), channels=1, palette=pal)
     # out-of-range palette index
     z = zlib.compress(bytes([0, 0, 1, 5, 0]) + bytes([0, 1, 0, 1]) + bytes([0, 0, 0, 1, 0]))
     bad = (
@@ -329,7 +339,7 @@ def test_png_palette_malformed_typed_errors():
         + _png_chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError):
-        decode_png_any(bad)
+        decode_png(bad)
     # missing PLTE
     no_plte = (
         PNG_SIG
@@ -338,7 +348,7 @@ def test_png_palette_malformed_typed_errors():
         + _png_chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError):
-        decode_png_any(no_plte)
+        decode_png(no_plte)
     # malformed PLTE length
     bad_plte = (
         PNG_SIG
@@ -348,13 +358,14 @@ def test_png_palette_malformed_typed_errors():
         + _png_chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError):
-        decode_png_any(bad_plte)
+        decode_png(bad_plte)
     # truncations of a valid palette+interlace stream stay typed
-    full = encode_png_indexed(5, 4, bytes(range(20)), [(i, i, i) for i in range(20)], interlace=True)
+    full = encode_png(5, 4, bytes(range(20)), channels=1, interlace=True,
+                      palette=[(i, i, i) for i in range(20)])
     for k in range(9, len(full), 2):
         try:
-            decode_png_any(full[:k])
-        except (ValueError, zlib.error):
+            decode_png(full[:k])
+        except ValueError:
             pass
 
 
@@ -408,32 +419,28 @@ def test_mp3_parse_typed_errors_on_malformed_streams():
 
 
 def test_png_deep_roundtrip_16bit_and_subbyte():
-    """decode_png_deep (r12): 16-bit gray/GA/RGB/RGBA and 1/2/4-bit
-    grayscale round-trip exactly, sequential and Adam7; sub-byte
-    palette expands through PLTE/tRNS."""
+    """16-bit gray/GA/RGB/RGBA and 1/2/4-bit grayscale (r12)
+    round-trip exactly, sequential and Adam7; sub-byte palette expands
+    through PLTE/tRNS."""
     import numpy as np
 
-    from sim_spark.ops.multimodal import (
-        decode_png_deep,
-        encode_png_deep,
-        encode_png_indexed,
-    )
+    from sim_spark.ops.multimodal import decode_png, encode_png
 
     rng = np.random.default_rng(42)
     for ch in (1, 2, 3, 4):
         for inter in (False, True):
             w, h = int(rng.integers(1, 20)), int(rng.integers(1, 20))
             s = rng.integers(0, 65536, w * h * ch)
-            g = encode_png_deep(w, h, s, channels=ch, depth=16, interlace=inter)
-            w2, h2, ch2, d2, img = decode_png_deep(g)
+            g = encode_png(w, h, s, channels=ch, depth=16, interlace=inter)
+            w2, h2, ch2, d2, img = decode_png(g)
             assert (w2, h2, ch2, d2) == (w, h, ch, 16)
             assert np.array_equal(img.ravel(), s)
     for d in (1, 2, 4):
         for inter in (False, True):
             w, h = int(rng.integers(1, 30)), int(rng.integers(1, 30))
             s = rng.integers(0, 1 << d, w * h)
-            g = encode_png_deep(w, h, s, channels=1, depth=d, interlace=inter)
-            w2, h2, ch2, d2, img = decode_png_deep(g)
+            g = encode_png(w, h, s, channels=1, depth=d, interlace=inter)
+            w2, h2, ch2, d2, img = decode_png(g)
             assert (w2, h2, ch2, d2) == (w, h, 1, d)
             assert np.array_equal(img.ravel(), s)
     # 2-bit palette with tRNS, interlaced
@@ -441,39 +448,38 @@ def test_png_deep_roundtrip_16bit_and_subbyte():
     pal = [(e, 2 * e, 3 * e) for e in range(P)]
     trns = [10 * e for e in range(P)]
     idx = (np.arange(w * h) % P).astype(np.uint8)
-    g = encode_png_indexed(
-        w, h, idx.tobytes(), pal, trns=trns, interlace=True, depth=2
+    g = encode_png(
+        w, h, idx, channels=1, depth=2, interlace=True, palette=pal, trns=trns
     )
-    w2, h2, ch2, d2, img = decode_png_deep(g)
+    w2, h2, ch2, d2, img = decode_png(g)
     assert (w2, h2, ch2, d2) == (w, h, 4, 2)
     assert np.array_equal(img[..., :3], np.array(pal)[idx].reshape(h, w, 3))
     assert np.array_equal(img[..., 3], np.array(trns)[idx].reshape(h, w))
 
 
 def test_png_deep_typed_fences():
-    """Byte-oriented decode_png_any refuses non-8-bit with a pointer;
-    invalid depth/color combos and out-of-range samples are typed."""
+    """Invalid depth/color combos, wrong sample counts, out-of-range
+    samples and bad palettes are typed ValueErrors of the encoder."""
     import numpy as np
 
     import pytest as _pytest
 
-    from sim_spark.ops.multimodal import (
-        decode_png_any,
-        encode_png_deep,
-        encode_png_indexed,
-    )
+    from sim_spark.ops.multimodal import encode_png
 
-    g16 = encode_png_deep(4, 4, np.arange(16) * 97 % 65536, channels=1,
-                          depth=16)
-    with _pytest.raises(ValueError, match="decode_png_deep"):
-        decode_png_any(g16)
     with _pytest.raises(ValueError):
-        encode_png_deep(4, 4, np.zeros(16), channels=3, depth=4)  # sub-8 RGB
+        encode_png(4, 4, np.zeros(48), channels=3, depth=4)  # sub-8 RGB
     with _pytest.raises(ValueError):
-        encode_png_deep(4, 4, np.full(16, 99), channels=1, depth=4)  # range
+        encode_png(4, 4, np.full(16, 99), channels=1, depth=4)  # range
     with _pytest.raises(ValueError):
-        encode_png_indexed(2, 2, bytes([0, 1, 2, 3]), [(0, 0, 0)] * 4,
-                           depth=1)  # index 3 does not fit 1 bit
+        encode_png(4, 4, bytes(47))  # sample count
+    with _pytest.raises(ValueError):
+        encode_png(2, 2, bytes([0, 1, 2, 3]), channels=1, depth=1,
+                   palette=[(0, 0, 0)] * 4)  # index 3 does not fit 1 bit
+    with _pytest.raises(ValueError):
+        encode_png(2, 2, bytes(4), channels=1, palette=[])  # empty palette
+    with _pytest.raises(ValueError):
+        encode_png(2, 2, bytes(4), channels=1,
+                   palette=[(0, 0, 0)] * 257)  # over 256 entries
 
 
 def test_id3v2_roundtrip_and_walk_continues():

@@ -143,9 +143,9 @@ def test_png_roundtrip_property(width, height, data):
             )
         )
     )
-    w, h, out = decode_png(encode_png(width, height, pixels))
-    assert (w, h) == (width, height)
-    assert out == pixels
+    w, h, ch, depth, out = decode_png(encode_png(width, height, pixels))
+    assert (w, h, ch, depth) == (width, height, 3, 8)
+    assert out.astype("u1").tobytes() == pixels
 
 
 # ---------------------------------------------------------------------------
