@@ -30,8 +30,9 @@ raises instead of OOMing.
 
 Typed ValueError on every malformed shape: bad magic, missing
 avro.schema, unsupported codec, metadata map truncation, sync
-mismatch, byte_size disagreement, varint overflow, block inflate
-over budget, trailing garbage.
+mismatch, byte_size disagreement, varint overflow, corrupt deflate
+data, block inflate over budget, trailing garbage, a schema missing
+a key or holding one of the wrong type.
 """
 
 from __future__ import annotations
@@ -91,21 +92,28 @@ def _read_bytes(data: bytes, pos: int, what: str) -> tuple[bytes, int]:
 _PRIMS = {"long", "int", "string", "bytes", "double", "float", "boolean"}
 
 
-def _check_schema(schema: dict) -> list[tuple[str, str]]:
-    if schema.get("type") != "record":
+def _check_schema(schema: object) -> list[tuple[str, str]]:
+    """The header's JSON is not checksummed: every key a record schema
+    needs is checked for presence and type, so a damaged schema raises
+    ValueError, never KeyError/AttributeError."""
+    kind = schema.get("type") if isinstance(schema, dict) else type(schema)
+    if kind != "record":
         raise ValueError(
-            f"unsupported top-level schema type {schema.get('type')!r} "
-            f"(flat records only)"
+            f"unsupported top-level schema type {kind!r} (flat records only)"
         )
+    if not isinstance(schema.get("fields"), list):
+        raise ValueError("record schema has no fields list")
     fields = []
     for f in schema["fields"]:
-        t = f["type"]
+        name = f.get("name") if isinstance(f, dict) else None
+        if not isinstance(name, str):
+            raise ValueError(f"record field without a name: {f!r}")
+        t = f.get("type")
         if not isinstance(t, str) or t not in _PRIMS:
             raise ValueError(
-                f"field {f['name']!r}: unsupported type {t!r} "
-                f"(primitives only)"
+                f"field {name!r}: unsupported type {t!r} (primitives only)"
             )
-        fields.append((f["name"], t))
+        fields.append((name, t))
     return fields
 
 
@@ -198,7 +206,8 @@ def encode_avro_ocf(
 
 
 def parse_avro_ocf(data: bytes) -> dict:
-    """OCF -> {"schema", "codec", "sync", "n_blocks", "records"}."""
+    """OCF -> {"schema", "fields", "codec", "sync", "n_blocks",
+    "records"}; ``fields`` is the checked [(name, type)] list."""
     if data[:4] != _MAGIC:
         raise ValueError(f"bad avro magic {data[:4]!r}")
     pos = 4
@@ -243,13 +252,16 @@ def parse_avro_ocf(data: bytes) -> dict:
         pos += 16
         if codec == "deflate":
             d = zlib.decompressobj(-15)
-            body = d.decompress(body, _INFLATE_BUDGET)
-            if d.unconsumed_tail:
-                raise ValueError(
-                    f"OCF block inflates past the "
-                    f"{_INFLATE_BUDGET >> 20} MiB budget"
-                )
-            body += d.flush()
+            try:
+                body = d.decompress(body, _INFLATE_BUDGET)
+                if d.unconsumed_tail:
+                    raise ValueError(
+                        f"OCF block inflates past the "
+                        f"{_INFLATE_BUDGET >> 20} MiB budget"
+                    )
+                body += d.flush()
+            except zlib.error as e:
+                raise ValueError(f"corrupt deflate OCF block: {e}") from e
         bpos = 0
         for _ in range(count):
             rec, bpos = _decode_datum(fields, body, bpos)
@@ -261,6 +273,6 @@ def parse_avro_ocf(data: bytes) -> dict:
             )
         n_blocks += 1
     return dict(
-        schema=schema, codec=codec, sync=sync, n_blocks=n_blocks,
-        records=records,
+        schema=schema, fields=fields, codec=codec, sync=sync,
+        n_blocks=n_blocks, records=records,
     )

@@ -242,6 +242,14 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     height, bottom_up = abs(height_raw), height_raw > 0
     row_bytes = width * 3
     stride = (row_bytes + 3) & ~3
+    # The header's dimensions are untrusted: check that every row lies
+    # inside the payload before building one slice per row.
+    if width <= 0 or height == 0:
+        raise ValueError(f"BMP dimensions {width}x{height_raw}")
+    if data_off + (height - 1) * stride + row_bytes > len(payload):
+        raise ValueError(
+            f"BMP {width}x{height} rows end past the {len(payload)}-byte payload"
+        )
     rows = [
         payload[data_off + r * stride : data_off + r * stride + row_bytes]
         for r in range(height)

@@ -28,7 +28,8 @@ genuine interop check, not self-confirmation.
 
 Typed ValueError on malformed shapes: missing PAR1 magic, footer
 length past file start, truncated varints/strings, unknown compact
-type nibbles, struct nesting that escapes the buffer.
+type nibbles, struct nesting that escapes the buffer, a field whose
+wire type differs from the schema's (a name or struct read as an int).
 """
 
 from __future__ import annotations
@@ -169,6 +170,17 @@ def _stats(d: dict | None) -> dict:
     return out
 
 
+def _want(v, kind: type, what: str):
+    """A footer field as the schema types it. The compact protocol
+    carries each field's wire type, so a flipped bit can hand back an
+    int where bytes or a struct belong: refuse that with ValueError."""
+    if not isinstance(v, kind):
+        raise ValueError(
+            f"footer {what} is {type(v).__name__}, not {kind.__name__}"
+        )
+    return v
+
+
 def parse_parquet_footer(data: bytes) -> dict:
     """Whole-file bytes -> decoded FileMetaData.
 
@@ -188,11 +200,12 @@ def parse_parquet_footer(data: bytes) -> dict:
         )
     meta, _ = thrift_compact_struct(data[start:len(data) - 8])
     schema = []
-    for el in meta.get(2, []):
+    for el in _want(meta.get(2, []), list, "schema"):
         # SchemaElement: type(1), repetition(3), name(4), num_children(5)
+        el = _want(el, dict, "schema element")
         schema.append(
             dict(
-                name=el.get(4, b"").decode("utf-8"),
+                name=_want(el.get(4, b""), bytes, "field name").decode("utf-8"),
                 type=el.get(1),
                 repetition=el.get(3),
                 num_children=el.get(5, 0),
@@ -210,11 +223,14 @@ def parse_parquet_footer(data: bytes) -> dict:
         return v  # byte arrays etc.: raw
 
     row_groups = []
-    for rg in meta.get(4, []):
+    for rg in _want(meta.get(4, []), list, "row groups"):
+        rg = _want(rg, dict, "row group")
         cols = []
-        for cc in rg.get(1, []):
-            md = cc.get(3, {})
-            path = [p.decode("utf-8") for p in md.get(3, [])]
+        for cc in _want(rg.get(1, []), list, "column chunks"):
+            md = _want(_want(cc, dict, "column chunk").get(3, {}), dict,
+                       "column metadata")
+            path = [_want(p, bytes, "path").decode("utf-8")
+                    for p in _want(md.get(3, []), list, "path")]
             ptype = md.get(1)
             st = _stats(md.get(12))
             for k in ("min_value", "max_value"):
@@ -243,7 +259,8 @@ def parse_parquet_footer(data: bytes) -> dict:
     return dict(
         version=meta.get(1),
         num_rows=meta.get(3),
-        created_by=(meta.get(6) or b"").decode("utf-8", "replace"),
+        created_by=_want(meta.get(6, b""), bytes, "created_by").decode(
+            "utf-8", "replace"),
         schema=schema,
         row_groups=row_groups,
         phys_types=phys,

@@ -1,12 +1,19 @@
 """Relational classifiers / ensemble quality gates over `documents`.
 
-Both operators are pure DataFrame plans — no MLlib, no Python UDFs — so
+The operators are DataFrame plans — no MLlib, no Python UDFs — so
 they inherit partial+final aggregation, AQE, and broadcast decisions
 like any other query, and they scale exactly like the aggregations they
-are made of.
+are made of. One exception: ml_gbt_residual_stumps reduces the corpus
+to a 24-cell histogram in Spark and fits its stumps from it in one
+Python task.
 """
 
 from __future__ import annotations
+
+import math
+from collections.abc import Iterator
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -781,7 +788,7 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # JVM-side; argmin is a 64-row TakeOrdered.
         # Built as SQL strings (F.expr): the Column-API threshold loop
         # cost thousands of py4j round-trips of pure driver wall per
-        # build (see ml_gbt_residual_stumps.fit). {t}D literals keep
+        # build (r14 cProfile, OPTIMIZATION_r14.md item 5). {t}D literals keep
         # the original DOUBLE threshold type (SQL `0.25` is DECIMAL).
         aggs = [
             f"SUM(CASE WHEN (CASE WHEN x <= {t}D THEN 1 ELSE -1 END) <> y"
@@ -865,22 +872,110 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # - The SSE-optimal stump maximizes sumL^2/nL + sumR^2/nR. Candidate
 #   scores are RATIONALS a/b (a = sumL^2*nR + sumR^2*nL, b = nL*nR);
 #   rather than divide, candidates meet in a 23x23 cross-multiplied
-#   TOURNAMENT (a_d*b_c > a_c*b_d, 128-bit exact: DECIMAL(38,0) Spark,
-#   HUGEINT DuckDB) and the winner is the candidate no rival beats —
-#   argmax over exact rationals with a smallest-threshold tie-break.
-# - Bounds: |r| <= ~5.6e5 milli, so a <= 2*(n*5.6e5)^2*n and the
-#   tournament product a*b stays under 1e38 through n ~ 2e5 rows per
-#   fit. Beyond that, drop to centi-unit residuals (same plan, one
-#   fewer digit) — the bound is a unit choice, not a structural limit.
+#   TOURNAMENT (a_d*b_c > a_c*b_d, exact: Python integers in the Spark
+#   trainer, 128-bit HUGEINT in DuckDB) and the winner is the candidate
+#   no rival beats — argmax over exact rationals with a
+#   smallest-threshold tie-break.
+# - Bounds (the oracle's): |r| <= ~5.6e5 milli, so a <= 2*(n*5.6e5)^2*n
+#   and the HUGEINT product a*b stays under 1e38 through n ~ 2e5 rows.
+#   Beyond that, drop to centi-unit residuals (same plan, one fewer
+#   digit) — the bound is a unit choice, not a structural limit.
 # - Feature x = hour(ts) (integer 0..23), thresholds t in {0..22} on
 #   x <= t: integer-vs-integer comparisons can never tie-break on a
 #   float boundary.
 #
-# Corpus cost: 4 scans (f0 reduce, two fit reduces, final mse pass),
-# each a single partial+final conditional-sum aggregate; the tournament
-# runs on 23-row frames. Nothing is collected.
+# Spark shape: every residual the model sees has the form 10*yc - c(x),
+# where c(x), the running prediction, is constant per hour. So a round's
+# candidate sums and every SSE are sums over a per-hour histogram of
+# n_x = rows, s_x = Σ yc and q_x = Σ yc^2:
+#   nl_t = Σ_{x<=t} n_x,   sl_t = Σ_{x<=t} (10*s_x - n_x*c(x)),
+#   Σ r^2 = Σ_x (100*q_x - 20*c(x)*s_x + n_x*c(x)^2).
+# Corpus cost: ONE events scan, a groupBy(hour) reduce folded into one
+# row of <= 24 cells; one Python task fits both rounds from the cells
+# (_gbt_train) in exact integers. The two-stage "histogram" reduce of
+# SURVEY.md §2.
 
 _GBT_THRS = list(range(23))
+_GBT_FIT_SCHEMA = (
+    "n long, f0m long, thr1 int, nl1 long, pl1 long, pr1 long, thr2 int,"
+    " nl2 long, pl2 long, pr2 long, sse0 decimal(38,0),"
+    " sse1 decimal(38,0), sse2 decimal(38,0)"
+)
+
+
+def _gbt_stump(hist: list[tuple], c: list[int]) -> tuple | None:
+    """SSE-optimal stump on the residuals 10*yc - c(x) of the sorted
+    histogram ``hist`` [(x, n, s, q)], ``c`` the prediction per cell →
+    (t, nl, pl, pr), or None when no threshold leaves both sides
+    non-empty. Cross-multiplied exact comparisons in threshold order:
+    a candidate wins only by a strictly higher score, so ties keep the
+    smallest threshold, the tournament's rule. The leaves are the same
+    IEEE double operations Spark runs: floor(sl * 1.0 / nl + 0.5)."""
+    nt = sum(n for _, n, _, _ in hist)
+    st = sum(10 * s - n * cx for (_, n, s, _), cx in zip(hist, c))
+    best = None
+    nl = sl = i = 0
+    for t in _GBT_THRS:
+        while i < len(hist) and hist[i][0] <= t:
+            _, n, s, _ = hist[i]
+            nl += n
+            sl += 10 * s - n * c[i]
+            i += 1
+        nr, sr = nt - nl, st - sl
+        if nl == 0 or nr == 0:
+            continue
+        a, b = sl * sl * nr + sr * sr * nl, nl * nr
+        if best is None or a * best[1] > best[0] * b:
+            best = (a, b, t, nl, sl, nr, sr)
+    if best is None:
+        return None
+    _, _, t, nl, sl, nr, sr = best
+    return t, nl, math.floor(sl * 1.0 / nl + 0.5), math.floor(sr * 1.0 / nr + 0.5)
+
+
+def _gbt_train(hist: list[tuple]) -> tuple | None:
+    """Both boosting rounds from the per-hour histogram [(x, n, s, q)]
+    → (n, f0m, thr1, nl1, pl1, pr1, thr2, nl2, pl2, pr2, sse0, sse1,
+    sse2) in milli units, or None when the corpus is empty or a round
+    has no valid split (the report is then one all-NULL row, as when a
+    winner frame is empty). hour(ts) and value are never NULL in the
+    fixtures; a NULL hour cell fails the task rather than guess."""
+    hist = sorted(hist)
+    nt = sum(n for _, n, _, _ in hist)
+    if nt == 0:
+        return None
+    f0m = math.floor(sum(s for _, _, s, _ in hist) * 10.0 / nt + 0.5)
+
+    def sse(c: list[int]) -> int:
+        return sum(100 * q - 20 * cx * s + n * cx * cx
+                   for (_, n, s, q), cx in zip(hist, c))
+
+    c = [f0m] * len(hist)
+    model, sses = [nt, f0m], [sse(c)]
+    for _ in range(2):
+        win = _gbt_stump(hist, c)
+        if win is None:
+            return None
+        t, _, pl, pr = win
+        c = [cx + (pl if x <= t else pr) for (x, _, _, _), cx in zip(hist, c)]
+        model += win
+        sses.append(sse(c))
+    return (*model, *sses)
+
+
+def _gbt_fit_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The one task: each input row holds the whole histogram."""
+    names = [f.split()[0] for f in _GBT_FIT_SCHEMA.split(", ")]
+    for pdf in batches:
+        fits = [
+            _gbt_train([(int(h["x"]), int(h["n"]), int(h["s"]), int(h["q"]))
+                        for h in cells])
+            for cells in pdf["h"]
+        ]
+        yield pd.DataFrame(
+            [fit or (None,) * len(names) for fit in fits], columns=names,
+            dtype=object,
+        )
 
 
 def _gbt_cand_sql(src: str, rcol: str) -> str:
@@ -980,170 +1075,49 @@ FROM r2 CROSS JOIN p2 p
 def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two gradient-boosting rounds of SSE-optimal regression stumps
     (value ~ hour-of-day), exact end to end — quantized-rational leaf
-    values and a cross-multiplied 128-bit tournament for stump selection
+    values and a cross-multiplied exact tournament for stump selection
     (block comment above). Reports the fitted model plus the monotone
-    mse0 > mse1 > mse2 training trace. Spark shape: each fit is ONE
-    23-way conditional-sum aggregate over the corpus (no candidate
-    cross-join touches data rows); the 23-row candidate frames fight the
-    tournament broadcast-side, and the 1-row winners broadcast back into
-    the next scan. Four corpus scans total, nothing collected."""
-    from sim_spark.scratch import track_cache
-
+    mse0 > mse1 > mse2 training trace. Spark shape: one events scan
+    reduced to a per-hour histogram (count, Σyc, Σyc² as DECIMAL(38,0)),
+    folded into ONE row by a global collect_list — a global aggregate
+    yields its row even over an empty corpus, where a groupBy yields
+    none; coalesce(1) lets the fold reuse the hour shuffle, so the plan
+    runs as 2 jobs. One mapInPandas task trains both rounds from the
+    <= 24 cells (_gbt_train); the milli-unit rescale and the MSE
+    division stay in Spark SQL. No cache, nothing collected."""
     e = table(spark, sf_dir, "events")
-    base = e.select(
-        F.hour("ts").cast("int").alias("x"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("yc"),
-    )
-    g0 = track_cache(
-        base.agg(
-            F.floor(F.sum("yc") * 10.0 / F.count(F.lit(1)) + F.lit(0.5))
-            .cast("long")
-            .alias("f0m"),
-            F.count(F.lit(1)).cast("long").alias("n"),
+    hist = (
+        e.select(
+            F.hour("ts").cast("int").alias("x"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("yc"),
         )
-    )
-    r1 = base.crossJoin(F.broadcast(g0)).select(
-        "x", (F.col("yc") * 10 - F.col("f0m")).alias("r"), "f0m", "n"
-    )
-
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-
-    def fit(frame, rcol):
-        """SSE-optimal stump over (x, rcol): one conditional-sum pass +
-        exact-rational 23x23 tournament; returns 1 cached row
-        (t, nl, pl, pr) with milli-quantized leaf values.
-
-        Every expression here is built as ONE SQL string per output
-        column (F.expr / selectExpr): the per-threshold Column-API loop
-        issued ~16 000 py4j round-trips and cost 2.6 s of DRIVER wall
-        per query build (cProfile: socket recv under Column.__op__),
-        dwarfing the 0.77 s the tasks themselves take. Identical
-        expression trees — the SQL parser builds the same CaseWhen/
-        Cast/Decimal nodes the Column API did (oracle-hash re-proven).
-
-        The 23×23 tournament runs as nested array lambdas ON the one
-        aggregate row — same cross-multiplied 128-bit comparisons, same
-        d.t < c.t tie-break as the old explode → cache → crossJoin →
-        groupBy shape, but zero extra plans and no second cache."""
-        aggs = [
-            "CAST(COUNT(1) AS BIGINT) AS nt",
-            f"CAST(SUM({rcol}) AS BIGINT) AS st",
-        ]
-        for t in _GBT_THRS:
-            aggs.append(
-                f"CAST(SUM(CASE WHEN x <= {t} THEN 1 ELSE 0 END) AS BIGINT)"
-                f" AS nl{t}"
-            )
-            aggs.append(
-                f"CAST(SUM(CASE WHEN x <= {t} THEN {rcol} ELSE 0 END) AS BIGINT)"
-                f" AS sl{t}"
-            )
-        one = frame.agg(*[F.expr(a) for a in aggs])
-        structs = "array(" + ", ".join(
-            f"struct({t} AS t, nl{t} AS nl, sl{t} AS sl,"
-            f" nt - nl{t} AS nr, st - sl{t} AS sr)"
-            for t in _GBT_THRS
-        ) + ")"
-        cands = f"filter({structs}, c -> c.nl > 0 AND c.nr > 0)"
-
-        def score(s):
-            return (
-                f"(CAST({s}.sl AS DECIMAL(38,0)) * {s}.sl * {s}.nr"
-                f" + CAST({s}.sr AS DECIMAL(38,0)) * {s}.sr * {s}.nl)"
-            )
-
-        beats = (
-            f"({score('d')} * (c.nl * c.nr) > {score('c')} * (d.nl * d.nr))"
-            f" OR (({score('d')} * (c.nl * c.nr) = {score('c')} * (d.nl * d.nr))"
-            f" AND d.t < c.t)"
-        )
-        # try_element_at + the IS NOT NULL filter (ADVICE r14): when NO
-        # candidate is valid (every threshold leaves an empty side),
-        # filter() yields an empty array — plain element_at on it ERRORS
-        # under ANSI mode (which this session pins on), and silently
-        # yielding a 1-row all-NULL winner would propagate NULL pl/pr
-        # into the next boosting round's residuals. try_element_at
-        # returns NULL for the empty array and the filter restores the
-        # old crossJoin formulation's empty-frame shape: the degenerate
-        # round contributes nothing. Non-degenerate results unchanged
-        # (hash re-proven at sf0.01 and sf0.1).
-        w = (
-            f"try_element_at(filter({cands},"
-            f" c -> NOT exists({cands}, d -> {beats})), 1)"
-        )
-        # Cached: the 1-row winner broadcasts into the next boosting
-        # round AND the final report — uncached, the conditional-sum
-        # corpus reduce inside it would execute once per reference.
-        # 1.0D / 0.5D: SQL `1.0` parses as DECIMAL(2,1); the D suffix
-        # keeps the original Column API's DOUBLE arithmetic bit-for-bit.
-        win = one.selectExpr(f"{w} AS w").where("w IS NOT NULL").selectExpr(
-            "w.t AS t",
-            "w.nl AS nl",
-            "CAST(FLOOR(w.sl * 1.0D / w.nl + 0.5D) AS BIGINT) AS pl",
-            "CAST(FLOOR(w.sr * 1.0D / w.nr + 0.5D) AS BIGINT) AS pr",
-        )
-        return track_cache(win)
-
-    w1 = fit(r1, "r").select(
-        F.col("t").alias("thr1"),
-        F.col("nl").alias("nl1"),
-        F.col("pl").alias("pl1"),
-        F.col("pr").alias("pr1"),
-    )
-    r2 = r1.crossJoin(F.broadcast(w1)).select(
-        "x",
-        "r",
-        (
-            F.col("r")
-            - F.when(F.col("x") <= F.col("thr1"), F.col("pl1")).otherwise(
-                F.col("pr1")
-            )
-        ).alias("r2"),
-        "f0m",
-        "n",
-        "thr1",
-        "nl1",
-        "pl1",
-        "pr1",
-    )
-    w2 = fit(r2, "r2").select(
-        F.col("t").alias("thr2"),
-        F.col("nl").alias("nl2"),
-        F.col("pl").alias("pl2"),
-        F.col("pr").alias("pr2"),
-    )
-    r3 = F.col("r2") - F.when(F.col("x") <= F.col("thr2"), F.col("pl2")).otherwise(
-        F.col("pr2")
-    )
-    return (
-        r2.crossJoin(F.broadcast(w2))
+        .groupBy("x")
         .agg(
-            F.max("n").alias("n_rows"),
-            F.round(F.max("f0m") / 1000.0, 6).alias("f0"),
-            F.max("thr1").alias("thr1"),
-            F.max("nl1").alias("n_l1"),
-            F.round(F.max("pl1") / 1000.0, 6).alias("pred_l1"),
-            F.round(F.max("pr1") / 1000.0, 6).alias("pred_r1"),
-            F.max("thr2").alias("thr2"),
-            F.max("nl2").alias("n_l2"),
-            F.round(F.max("pl2") / 1000.0, 6).alias("pred_l2"),
-            F.round(F.max("pr2") / 1000.0, 6).alias("pred_r2"),
-            F.round(
-                F.sum(dec("r") * F.col("r")).cast("double")
-                / (1000000.0 * F.max("n")),
-                6,
-            ).alias("mse0"),
-            F.round(
-                F.sum(dec("r2") * F.col("r2")).cast("double")
-                / (1000000.0 * F.max("n")),
-                6,
-            ).alias("mse1"),
-            F.round(
-                F.sum(r3.cast("decimal(38,0)") * r3).cast("double")
-                / (1000000.0 * F.max("n")),
-                6,
-            ).alias("mse2"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("yc").alias("s"),
+            F.sum(F.col("yc").cast("decimal(38,0)") * F.col("yc")).alias("q"),
         )
+        .coalesce(1)
+        .agg(F.collect_list(F.struct("x", "n", "s", "q")).alias("h"))
+    )
+    # 1000.0D / 1000000.0D: SQL `1000.0` parses as DECIMAL; the D suffix
+    # keeps the DOUBLE arithmetic of the Column API (long / 1000.0).
+    milli = lambda c: f"ROUND({c} / 1000.0D, 6)"  # noqa: E731
+    mse = lambda c: f"ROUND(CAST({c} AS DOUBLE) / (1000000.0D * n), 6)"  # noqa: E731
+    return hist.mapInPandas(_gbt_fit_batches, _GBT_FIT_SCHEMA).selectExpr(
+        "n AS n_rows",
+        f"{milli('f0m')} AS f0",
+        "thr1",
+        "nl1 AS n_l1",
+        f"{milli('pl1')} AS pred_l1",
+        f"{milli('pr1')} AS pred_r1",
+        "thr2",
+        "nl2 AS n_l2",
+        f"{milli('pl2')} AS pred_l2",
+        f"{milli('pr2')} AS pred_r2",
+        f"{mse('sse0')} AS mse0",
+        f"{mse('sse1')} AS mse1",
+        f"{mse('sse2')} AS mse2",
     )
 
 

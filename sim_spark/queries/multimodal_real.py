@@ -3605,6 +3605,12 @@ def multimodal_tfrecord_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_AVRO_FIELDS = [
+    ("id", "long"), ("name", "string"), ("blob", "bytes"),
+    ("score", "double"), ("ok", "boolean"),
+]
+
+
 def _gen_avro_payload(doc_id: int) -> bytes:
     """Deterministic Avro OCF: 2 + doc%5 flat records in 2-record
     blocks, deflate codec on even docs; record i: id = doc*100 + i,
@@ -3617,13 +3623,7 @@ def _gen_avro_payload(doc_id: int) -> bytes:
 
     schema = {
         "type": "record", "name": "Doc",
-        "fields": [
-            {"name": "id", "type": "long"},
-            {"name": "name", "type": "string"},
-            {"name": "blob", "type": "bytes"},
-            {"name": "score", "type": "double"},
-            {"name": "ok", "type": "boolean"},
-        ],
+        "fields": [{"name": n, "type": t} for n, t in _AVRO_FIELDS],
     }
     recs = []
     for i in range(2 + doc_id % 5):
@@ -3648,7 +3648,11 @@ def _gen_avro_payload(doc_id: int) -> bytes:
 
 def _avro_rows(doc_id: int, payload: bytes) -> list[tuple]:
     r = parse_avro_ocf(payload)
+    if r["fields"] != _AVRO_FIELDS:
+        raise ValueError(f"unexpected avro record fields {r['fields']}")
     recs = r["records"]
+    if not all(np.isfinite(x["score"] * 4) for x in recs):
+        raise ValueError("non-finite avro score")
     return [
         (
             doc_id,
@@ -3758,6 +3762,13 @@ def _parquet_footer_rows(doc_id: int, payload: bytes) -> list[tuple]:
         for c in rg["columns"]
         if c["path"] == "id"
     ]
+    if not r["row_groups"] or not all(
+        isinstance(v, int)
+        for _, c in idcols
+        for v in (c["num_values"], c["stats"].get("min_value"),
+                  c["stats"].get("max_value"), c["stats"].get("null_count", 0))
+    ):
+        raise ValueError("footer lacks the id column's counts or statistics")
     return [
         (
             doc_id,

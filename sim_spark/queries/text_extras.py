@@ -180,7 +180,7 @@ def _spark_simhash_df(d: DataFrame) -> DataFrame:
     )
     # All per-bit expressions are SQL strings (F.expr): the Column-API
     # loops issued thousands of py4j round-trips of pure driver wall per
-    # query build (r14 cProfile; see ml_gbt_residual_stumps.fit). The
+    # query build (r14 cProfile, OPTIMIZATION_r14.md item 5). The
     # parsed trees are identical — same CaseWhen/Cast/BitwiseAnd nodes.
     hexed = tokens.withColumn("h8", F.substring(F.md5("word"), 1, 8))
     digits = hexed.select(

@@ -704,6 +704,10 @@ def _corruption_cases():
         "wav": (mm.decode_wav, lambda d: mm.gen_wav_payload(d, 100)),
         "wav_tone": (mm.decode_wav, mm.gen_wav_tone_payload),
         "flac_lpc": (flac.decode_flac, flac.gen_flac_lpc_payload),
+        "bmp": (mm.decode_bmp, mm.gen_bmp_payload),
+        "avro": (lambda p: mr._avro_rows(0, p), mr._gen_avro_payload),
+        "parquet_footer": (
+            lambda p: mr._parquet_footer_rows(0, p), mr._gen_parquet_payload),
     }
 
 
@@ -711,7 +715,8 @@ def _corruption_cases():
     "case",
     ["baseline", "dc_only", "color", "progressive", "progressive_color",
      "arithmetic", "png", "png_twin", "png_rgba_gray", "png_palette_adam7",
-     "png_depth", "wav", "wav_tone", "flac_lpc"],
+     "png_depth", "wav", "wav_tone", "flac_lpc", "bmp", "avro",
+     "parquet_footer"],
 )
 def test_corrupted_payloads_raise_only_typed_errors(case):
     """Untrusted bytes through every decoder: each generator payload

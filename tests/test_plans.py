@@ -602,16 +602,17 @@ def test_stream_dedup_near_signature_is_shuffle_free(spark):
 
 
 def test_gbt_fit_has_no_corpus_candidate_join(spark):
-    """Both GBT stump fits must reduce the corpus with ONE conditional-sum
-    aggregate per round — the 23-candidate tournament may only ever join
-    the exploded 23-row frames (broadcast side), never multiply data
-    rows. A corpus x candidate cross-join would show as a join whose
-    both sides scan events; instead every join in the plan must have a
-    broadcast side."""
+    """Both GBT stump fits train from ONE per-hour histogram: the plan
+    scans events exactly once, reduces it by hour and never joins data
+    rows against the 23 candidates (no cartesian or shuffled join). It
+    takes no cache either: an InMemoryRelation would mean a tracked
+    round-trip between rounds."""
     p = plan(spark, "ml_gbt_residual_stumps")
     assert "CartesianProduct" not in p, p
-    # All joins are 1-row/23-row broadcasts into scans or vs each other.
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
+    scans = re.findall(r"Location: \w+ \[[^\]]*/events\.parquet\]", p)
+    assert len(scans) == 1, p
+    assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p, p
 
 
 def test_winnowing_shuffles_on_doc_only(spark):

@@ -37,7 +37,7 @@ SNAPSHOT = [
     ("dedup_audio_fingerprint", "banded equi-join over energy-derivative fingerprint bands, no BNLJ"),
     ("sim_topk_pq_adc", "broadcast nano-int LUT; corpus touched only via 8-byte code rows"),
     ("sim_topk_ivfpq_adc", "IVF cell-equi candidate gate + PQ ADC refine; no corpus scan per query"),
-    ("ml_gbt_residual_stumps", "one conditional-sum reduce per fit; 23-row tournament broadcast-side"),
+    ("ml_gbt_residual_stumps", "one events scan -> per-hour histogram; both fits in one task, no cache"),
     ("text_winnowing_fingerprint", "narrow gram explode; single doc_id shuffle, no pairwise stage"),
     ("stats_bootstrap_ci", "explode -> resample-keyed partial+final; no corpus index join"),
     ("geo_dbscan_grid", "cell-count density; 3x3 offset-explode equi-adjacency, no distance join"),
