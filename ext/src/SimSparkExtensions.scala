@@ -1,10 +1,9 @@
-// Compiled Catalyst extension closing SURVEY.md §4.3's deferred item:
-// DataFrame calls get the band-bucket rewrite from sim_spark.ops.autojoin
-// (Python Column-tree walker), but a naive band predicate inside a
-// spark.sql(...) STRING never passes through that API and planned as
-// BroadcastNestedLoopJoin. These optimizer rules run inside Catalyst
+// Compiled Catalyst extension closing SURVEY.md §4.3's deferred item: the
+// one band-join implementation in sim_spark. A naive band predicate plans
+// as BroadcastNestedLoopJoin; these optimizer rules run inside Catalyst
 // itself (installed via spark.experimental.extraOptimizations — the
-// "User Provided Optimizers" batch), so SQL strings are covered too:
+// "User Provided Optimizers" batch), so SQL strings and DataFrame joins
+// are covered alike:
 //
 //  * SqlBandJoinRewrite — inner joins whose condition is a bounded band
 //    over INTEGRAL, TIMESTAMP, DATE, or (r9) DOUBLE/FLOAT/DECIMAL
@@ -14,11 +13,10 @@
 //    for fractional axes plain numeric literals) with no equi conjunct
 //    are replanned as bucket-explode + equi-join + exact refine with the
 //    ORIGINAL predicate (candidate superset — row-identical by
-//    construction, mirroring ops/autojoin.py's algebra). Timestamp/date
-//    axes reduce to the integral machinery through their exact epoch
-//    mappings (unix_micros / unix_date) in decimal(38,0) bucket
-//    arithmetic; fractional axes use double floor-division with a ±1
-//    bucket margin (exactly ops/autojoin.py's epsilon-tolerant path).
+//    construction). Timestamp/date axes reduce to the integral machinery
+//    through their exact epoch mappings (unix_micros / unix_date) in
+//    saturating long bucket arithmetic; fractional axes use double
+//    floor-division with a ±1 bucket margin.
 //    (r10) YEAR-MONTH INTERVAL offsets get their own exact bucket
 //    space: add_months arithmetic is variable-width in microseconds but
 //    EXACT in month-index space (year*12 + month), so `ts BETWEEN
@@ -30,10 +28,13 @@
 //    rounding ≤~0.375 buckets — the TWO-SIDED sum stays under the ±1
 //    margin at ANY axis magnitude (r10 ADVICE: a 2^51 clamp let
 //    adversarially aligned per-side roundings sum past 1 bucket).
+//    A join that already has an equi conjunct is left alone: its hash
+//    key is usually selective, and adding a bucket key to it measured
+//    slower (stream_join_purchase_view 0.33 vs 0.24 s at sf0.1).
 //  * NaiveBandJoinWarning — any remaining non-equi cross-side
 //    comparison join (exotic arithmetic over attributes, mixed
 //    month + day-time offsets on one axis pair) logs a loud warning
-//    naming auto_join, and bumps a counter tests can read.
+//    and bumps a counter tests can read.
 //
 // Scope (documented, honest): a year-month offset mixed with a NONZERO
 // day-time/day offset on the same attribute pair has no common exact
@@ -100,7 +101,7 @@ object BandDiagnostics {
   def rewrites: Long = bandRewrites
 }
 
-/** Shared predicate algebra for both rules (mirror of ops/autojoin.py).
+/** Shared predicate algebra for both rules.
   *
   * Axis kinds: 'i' = integral (bucket on the value), 't' = timestamp
   * (bucket on unix_micros, offsets in microseconds), 'd' = date (bucket
@@ -111,10 +112,9 @@ object BandDiagnostics {
   * each an EXACT integral mapping —
   * plus 'f' = fractional (DOUBLE/FLOAT/DECIMAL axes, r9): the
   * bucket function there is double floor-division with a ±1 bucket
-  * margin, the same epsilon-tolerant algebra ops/autojoin.py uses (the
-  * margin absorbs any ulp disagreement between the bucket arithmetic
-  * and the refine predicate's own arithmetic; the refine restores
-  * exactness either way). Offsets are carried as BigDecimal so the
+  * margin (the margin absorbs any ulp disagreement between the bucket
+  * arithmetic and the refine predicate's own arithmetic; the refine
+  * restores exactness either way). Offsets are carried as BigDecimal so the
   * exact kinds never round-trip through a double (a snowflake-scale
   * long offset near 2^60 would quantize to 256-unit steps).
   */
@@ -310,15 +310,14 @@ trait BandAlgebra extends PredicateHelper {
 class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
   private val BUCKET = "__sql_band_bucket"
 
-  private def dec(x: Long): Literal = Literal(Decimal(x), DecimalType(38, 0))
-  private def toDec(e: Expression): Expression = Cast(e, DecimalType(38, 0))
+  private def toLong(e: Expression): Expression = Cast(e, LongType)
 
   /** The exact integral image of the axis attribute, per kind. */
   private def axisExpr(a: AttributeReference, kind: Char): Expression =
     kind match {
-      case 'i' => toDec(a)
-      case 't' => toDec(UnixMicros(a)) // exact epoch micros
-      case 'd' => toDec(UnixDate(a))   // exact epoch days
+      case 'i' => toLong(a)
+      case 't' => UnixMicros(a)          // exact epoch micros
+      case 'd' => toLong(UnixDate(a))    // exact epoch days
       case 'm' =>
         // month index year*12 + month: monotone in the axis value, and
         // add_months lands exactly `n` indexes away (day clamping only
@@ -329,8 +328,21 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
         val d: Expression =
           if (a.dataType == DateType) a
           else Cast(a, DateType, Option(conf.sessionLocalTimeZone))
-        toDec(Add(Multiply(Year(d), Literal(12)), Month(d)))
+        toLong(Add(Multiply(Year(d), Literal(12)), Month(d)))
     }
+
+  /** `e + off` saturated at the long limits, never overflowing: clamp
+    * `e` first so the add stays in range (min(e, MAX - off) + off is
+    * min(e + off, MAX)). Saturation is monotone, so a true match
+    * `l + lo <= r <= l + hi` (r itself a long) keeps
+    * `sat(l + lo) <= r <= sat(l + hi)`: no match leaves the candidate
+    * range. An unguarded add would ANSI-abort on axes near the limits
+    * (e.g. timestamp_micros(9223372036854775000)) where the naive join
+    * returns rows. */
+  private def satAdd(e: Expression, off: Long): Expression =
+    if (off == 0) e
+    else if (off > 0) Add(Least(Seq(e, Literal(Long.MaxValue - off))), Literal(off))
+    else Add(Greatest(Seq(e, Literal(Long.MinValue - off))), Literal(off))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner, Some(cond), hint)
@@ -339,7 +351,7 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
       if (conjuncts.exists(isEqui(_, left, right))) j
       else {
         // accumulate lo/hi per (lAttr, rAttr, UNIT SPACE): max of lower
-        // bounds, min of upper bounds, exactly like the Python walker.
+        // bounds, min of upper bounds.
         // 'i' and 'f' share the value space (a pair bounded by one exact
         // and one fractional conjunct buckets on doubles); 't', 'd' and
         // 'm' are each their own unit — merging a micros delta with a
@@ -372,8 +384,8 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
         }
         bounds.values.collectFirst {
           // exact kinds: bounds must fit Long arithmetic with headroom
-          // (|offset| ≤ 2^61 so clamped-axis + offset stays inside
-          // Long; BigDecimal offsets are whole there by construction).
+          // (|offset| ≤ 2^61 keeps the width hi - lo inside Long;
+          // BigDecimal offsets are whole there by construction).
           // 'f' instead requires a non-denormal band width: a width
           // < ~1e-300 makes the double Divide yield ±Infinity with
           // OPPOSITE signs when the band straddles zero, so lob/hib
@@ -395,9 +407,9 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
             val (lob, hib, rBucket): (Expression, Expression, Expression) =
               if (kind == 'f') {
                 // Fractional axes: double floor-division with a ±1
-                // bucket margin (ops/autojoin.py's algebra) — a value
-                // one ulp across a bucket edge relative to the refine's
-                // own arithmetic still lands in a candidate bucket;
+                // bucket margin — a value one ulp across a bucket edge
+                // relative to the refine's own arithmetic still lands
+                // in a candidate bucket;
                 // fanout is at most 4 ids, refine restores exactness.
                 // Width is the actual band width (a 1.0 floor would
                 // over-fetch ~1/width for sub-unit bands — r9 review);
@@ -447,27 +459,17 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
                 val hi = hiD.toLongExact
                 val w = math.max(hi - lo, 1L)
                 // exact integer axes need no margin: fanout at most
-                // ceil((hi-lo)/w)+1 = 2. Overflow safety (r9, corrected
-                // by review): the quotient is computed as DECIMAL
-                // floor-division and the BUCKET ID clamps to ±2^62
-                // before the long cast — clamping in bucket space is
-                // 1-Lipschitz-safe (an axis-space clamp shifts the two
-                // sides by the band offset and silently DROPS matches
-                // for bands not straddling zero). |axis| ≤ ~9.3e18
-                // (long) + |offset| ≤ 2^61 keeps the decimal quotient
-                // exact in (38,6); IntegralDivide would ANSI-abort on
-                // the long conversion first, hence the decimal route.
-                def bucket(e: Expression): Expression = {
-                  val q = Floor(Divide(e, dec(w)))
-                  val qt = q.dataType
-                  def qd(x: Long) = Cast(Literal(x), qt)
-                  Cast(
-                    Least(Seq(Greatest(Seq(q, qd(-(1L << 62)))), qd(1L << 62))),
-                    LongType)
-                }
+                // ceil((hi-lo)/w)+1 = 2. Long arithmetic end to end:
+                // saturating add of the offset (|offset| ≤ 2^61, see
+                // satAdd), then integer `div` by the width. `div`
+                // truncates toward zero rather than flooring, but any
+                // monotone bucket function applied to both sides keeps
+                // the superset, and truncating division by a positive
+                // width is monotone.
+                def bucket(e: Expression): Expression = IntegralDivide(e, Literal(w))
                 val lAxis = axisExpr(lAttr, kind)
-                (bucket(Add(lAxis, dec(lo))),
-                 bucket(Add(lAxis, dec(hi))),
+                (bucket(satAdd(lAxis, lo)),
+                 bucket(satAdd(lAxis, hi)),
                  bucket(axisExpr(rAttr, kind)))
               }
             // Sequence is TimeZoneAwareExpression: without an explicit
@@ -497,7 +499,7 @@ class SqlBandJoinRewrite extends Rule[LogicalPlan] with BandAlgebra {
 
 /** Loud fence for the shapes the rewrite does not cover: an inner join
   * whose only cross-side conjuncts are non-equi comparisons will plan
-  * as BNLJ/cartesian — tell the user about auto_join. */
+  * as BNLJ/cartesian — tell the user which band spellings rewrite. */
 class NaiveBandJoinWarning extends Rule[LogicalPlan] with BandAlgebra with Logging {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     plan.foreach {
@@ -517,11 +519,10 @@ class NaiveBandJoinWarning extends Rule[LogicalPlan] with BandAlgebra with Loggi
           logWarning(
             "sim_spark: inner join with a non-equi cross-side predicate " +
               s"(${cond.sql}) will plan as BroadcastNestedLoopJoin/" +
-              "CartesianProduct. For bounded bands use " +
-              "sim_spark.ops.autojoin.auto_join (DataFrame API) or an " +
-              "integral/timestamp/date/month-interval/decimal/double-" +
-              "axis band in SQL (rewritten automatically); as-of " +
-              "shapes: sim_spark.ops.autojoin.auto_asof.")
+              "CartesianProduct. Bounded bands written as attr ± literal " +
+              "inequalities over one integral/timestamp/date/month-" +
+              "interval/decimal/double axis pair are rewritten " +
+              "automatically; as-of shapes: sim_spark.ops.asof.auto_asof.")
         }
       case _ =>
     }

@@ -1,42 +1,39 @@
-"""Catalyst-rule coverage for naive band predicates in spark.sql() STRINGS.
+"""The band-join implementation: a compiled Catalyst rule (SURVEY §4.3).
 
-ops/autojoin.py closes the band-join ergonomic gap for the DataFrame
-API, but a band predicate typed inside ``spark.sql("... JOIN ... ON
-lo <= b.x - a.y AND ...")`` never passes through that Python walker —
-it used to plan as BroadcastNestedLoopJoin with only a SCALE.md note.
-SURVEY §4.3 deferred the honest fix ("needs a compiled Scala rule");
-the Spark distribution in this environment ships
+A band predicate (``lo <= b.x - a.y <= hi``) with no equi key plans as
+BroadcastNestedLoopJoin in OSS Spark. SURVEY §4.3 deferred the honest
+fix ("needs a compiled Scala rule"); the Spark distribution ships
 ``scala-compiler-2.13.17.jar`` inside ``$SPARK_HOME/jars``, so the rule
 IS buildable here — ext/src/SimSparkExtensions.scala compiles to
 ext/simspark-ext.jar (committed, plus ext/build.sh to rebuild) and
 provides two optimizer rules, installed into the session's
 ``spark.experimental.extraOptimizations`` ("User Provided Optimizers"
-batch, applied to every subsequent plan including pure SQL strings):
+batch, applied to every subsequent plan: ``spark.sql`` strings and
+``DataFrame.join`` alike):
 
 * ``simspark.SqlBandJoinRewrite`` — inner joins whose condition is a
   bounded band over INTEGRAL, TIMESTAMP, DATE, or (r9) DOUBLE/FLOAT/
   DECIMAL attributes with no equi conjunct are replanned as
   bucket-explode + equi-join + exact refine with the ORIGINAL predicate
-  (candidate superset — row-identical by construction; the same algebra
-  as ops/autojoin.py, decimal(38,0) bucket arithmetic included).
-  Timestamp and date axes reduce to the integral machinery through
-  their exact epoch mappings (``unix_micros``/``unix_date``) for
-  day-time (fixed-width) interval offsets; (r10) YEAR-MONTH interval
+  (candidate superset — row-identical by construction). Integral,
+  timestamp and date axes bucket in long arithmetic through their exact
+  epoch mappings (``unix_micros``/``unix_date``): a saturating offset
+  add, then integer ``div`` by the band width. (r10) YEAR-MONTH interval
   offsets bucket on the exact month index (year*12+month — add_months
   lands exactly n indexes away, and the index is monotone), which also
   admits TIMESTAMP_NTZ axes (wall-clock month index, tz-free).
-  Fractional axes (doubles, floats, decimals of ANY width — r10
-  unfenced) bucket via double floor-division with a ±1 bucket margin
-  whose ±2^50 bucket-id clamp keeps the quotient inside the 53-bit
-  accuracy horizon at any magnitude, ops/autojoin.py's
-  epsilon-tolerant path.
+  Fractional axes (doubles, floats, decimals of ANY width) bucket via
+  double floor-division with a ±1 bucket margin whose ±2^50 bucket-id
+  clamp keeps the quotient inside the 53-bit accuracy horizon at any
+  magnitude. Joins with an equi conjunct are left to the hash join on
+  that key.
 * ``simspark.NaiveBandJoinWarning`` — shapes the rewrite does not
   cover (month offsets mixed with nonzero day-time offsets on one
-  pair, exotic arithmetic over attributes) log a loud warning naming
-  auto_join/auto_asof and bump a counter. Both counters dedupe on the
-  condition's canonicalized string under a bounded LRU (the optimizer
-  re-runs extra rules in its fixed-point batch and under AQE), so they
-  count distinct join conditions, not rule visits.
+  pair, exotic arithmetic over attributes) log a loud warning and bump
+  a counter. Both counters dedupe on the condition's canonicalized
+  string under a bounded LRU (the optimizer re-runs extra rules in its
+  fixed-point batch and under AQE), so they count distinct join
+  conditions, not rule visits.
 
 Platform: classic PySpark only. Installation is additive: the
 committed jar (``ext/build.sh``'s artifact, pinned to its source's
@@ -48,11 +45,9 @@ Correctness never depends on the rule being installed: the rewrite
 preserves semantics, so queries return identical rows either way; only
 the PLAN differs (asserted in tests/test_plans.py).
 
-Documented limitation (the honest fence SURVEY §4.3 asked to keep
-visible, shrunk again in r10 — year-month intervals and wide decimals
-now rewrite): a month offset mixed with a NONZERO day-time/day offset
-on the same attribute pair has no common exact bucket unit and still
-plans naively with a WARN; use the DataFrame API (auto_join) there.
+Documented limitation: a month offset mixed with a NONZERO
+day-time/day offset on the same attribute pair has no common exact
+bucket unit and still plans naively with a WARN.
 """
 
 from __future__ import annotations

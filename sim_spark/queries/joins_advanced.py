@@ -12,10 +12,10 @@ from pyspark.sql import functions as F
 
 from sim_spark.exprs import ts_str
 from sim_spark.io import register_views, table
-from sim_spark.ops.asof import asof_join_backward
-from sim_spark.ops.autojoin import auto_asof
-from sim_spark.ops.rangejoin import interval_join
+from sim_spark.ops.asof import asof_join_backward, auto_asof
+from sim_spark.ops.sqlband import install_sql_band_extension
 from sim_spark.registry import query
+from sim_spark.streaming import mounts
 
 
 @query(
@@ -34,7 +34,7 @@ WHERE p.event_type = 'purchase'
 def join_auto_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`join_asof` driven entirely by the NAIVE predicate: the caller
     writes the eligibility condition they would hand to a plain join —
-    ``user_id == v_user_id AND v_ts <= ts`` — and ops.autojoin.auto_asof
+    ``user_id == v_user_id AND v_ts <= ts`` — and ops.asof.auto_asof
     classifies the conjuncts (one equi key + one non-strict backward
     inequality), then delegates to the union-tag + keyed-window asof
     composite. Same single-shuffle plan as `join_asof` (asserted: no
@@ -84,16 +84,13 @@ ORDER BY cust_a, cust_b
 @query("join_sql_band", oracle=_SQL_BAND_TEXT)
 def join_sql_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate account balances (|diff| <= 5 cents) written as a
-    NAIVE band join inside a spark.sql() STRING — the shape the Python
-    auto_join walker can never see. The compiled Catalyst rule
-    (ext/src/SimSparkExtensions.scala, installed opportunistically via
-    ops.sqlband) replans it as bucket-explode + equi-join + exact
+    NAIVE band join inside a spark.sql() STRING. The compiled Catalyst
+    rule (ext/src/SimSparkExtensions.scala, installed opportunistically
+    via ops.sqlband) replans it as bucket-explode + equi-join + exact
     refine; without the extension the same SQL still returns identical
     rows (the rewrite is a plan property, asserted separately in
     tests/test_plans.py). The integer-cents axis is the documented
     supported domain; DuckDB runs the very same text as the oracle."""
-    from sim_spark.ops.sqlband import install_sql_band_extension
-
     install_sql_band_extension(spark)
     register_views(spark, sf_dir, ["customer"])
     return spark.sql(_SQL_BAND_TEXT)
@@ -117,13 +114,11 @@ def join_sql_band_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext/src/SimSparkExtensions.scala) from integral axes to TIMESTAMP
     and DATE axes: the analyzer folds ``ts - INTERVAL`` into
     TimestampAddInterval(attr, day-time-literal), whose offset is exact
-    epoch MICROSECONDS, so the same decimal(38,0) bucket algebra applies
-    after a unix_micros mapping. The plan is a bucket equi-join + exact
+    epoch MICROSECONDS, so the same long bucket algebra applies after a
+    unix_micros mapping. The plan is a bucket equi-join + exact
     refine (asserted BNLJ-free in tests/test_plans.py); DuckDB runs the
     identical SQL text as the oracle. This shrinks the ops/sqlband.py
     fence to double axes only."""
-    from sim_spark.ops.sqlband import install_sql_band_extension
-
     install_sql_band_extension(spark)
     register_views(spark, sf_dir, ["events"])
     return spark.sql(_SQL_BAND_TS_TEXT)
@@ -151,8 +146,8 @@ def join_sql_band_dec(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a DECIMAL(12,2) axis inside a spark.sql() STRING — the last
     numeric-axis shape the compiled Catalyst rule did not cover until r9.
     The rule's fractional path buckets both sides with double
-    floor-division plus a ±1 bucket margin (ops/autojoin.py's
-    epsilon-tolerant algebra — the margin absorbs any ulp disagreement
+    floor-division plus a ±1 bucket margin (an epsilon-tolerant
+    algebra — the margin absorbs any ulp disagreement
     between bucket arithmetic and the refine predicate; the exact refine
     restores row-identity), guarded to DECIMALs with <=15 integral
     digits so the double cast is exact. Plan asserted BNLJ-free in
@@ -161,8 +156,6 @@ def join_sql_band_dec(spark: SparkSession, sf_dir: str) -> DataFrame:
     double->decimal cast, whose rounding mode differs between engines).
     This shrinks the ops/sqlband.py fence to year-month intervals and
     wide decimals only."""
-    from sim_spark.ops.sqlband import install_sql_band_extension
-
     install_sql_band_extension(spark)
     register_views(spark, sf_dir, ["customer"])
     return spark.sql(_SQL_BAND_DEC_TEXT)
@@ -199,8 +192,6 @@ def join_sql_band_ym(spark: SparkSession, sf_dir: str) -> DataFrame:
     way). Anchors are sampled by orderkey residue so the anchor count —
     and the output — scales linearly with SF while the band stays a
     bounded two-bucket explode."""
-    from sim_spark.ops.sqlband import install_sql_band_extension
-
     install_sql_band_extension(spark)
     register_views(spark, sf_dir, ["orders"])
     return spark.sql(_SQL_BAND_YM_TEXT)
@@ -269,11 +260,13 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All (error, purchase) pairs — any user — where the purchase lands
     within 10 minutes after the error (pure interval join, no equi key).
 
-    ops.rangejoin.interval_join quantizes both sides into 10-minute
-    buckets and equi-joins on the bucket id (left exploded to ≤2 buckets)
-    with the exact range predicate as a residual — a hash join, not the
-    BroadcastNestedLoop a naive range predicate would plan.
+    Written as the plain join; the compiled band rule (ops.sqlband)
+    quantizes both sides into 10-minute buckets and equi-joins on the
+    bucket id (left exploded to ≤2 buckets) with the exact range
+    predicate as a residual — a hash join, not the BroadcastNestedLoop
+    the naive range predicate would otherwise plan.
     """
+    install_sql_band_extension(spark)
     ev = table(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"), F.col("ts").alias("e_ts")
@@ -281,10 +274,10 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
     )
-    ten_min_us = 10 * 60 * 1_000_000
-    pairs = interval_join(
-        errors, purchases, left_ts="e_ts", right_ts="p_ts",
-        lower_us=0, upper_us=ten_min_us,
+    pairs = errors.join(
+        purchases,
+        (F.col("p_ts") >= F.col("e_ts"))
+        & (F.col("p_ts") < F.col("e_ts") + F.expr("INTERVAL 10 MINUTE")),
     )
     return pairs.select(
         "error_id",
@@ -452,38 +445,17 @@ FROM events p JOIN events v
 """,
 )
 def join_auto_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The automatic band rewrite (ops/autojoin.py) on the plain
-    purchase⋈view predicate — the user writes the naive condition (equi
-    user key + two timestamp inequalities with an INTERVAL offset)
-    exactly as they would against any SQL engine; auto_join detects the
-    bounded band, buckets both sides on a 1-hour integer key, joins
-    bucket+user equi, and refines with the original predicate. Same
-    rows as stream_join_purchase_view (shared oracle); the plan is a
-    hash/SMJ join, plan-asserted nested-loop-free in tests/test_plans.py.
-    This closes SURVEY §4.3's deferred optimizer-rule ergonomics from
-    the Python side."""
-    from sim_spark.ops.autojoin import auto_join
-
+    """The plain purchase⋈view band predicate — equi user key plus two
+    timestamp inequalities with an INTERVAL offset — written exactly as
+    against any SQL engine. The ``user_id`` equi key makes it a hash
+    join with the band as residual, so no band rewrite is needed (adding
+    a bucket key measured slower: 0.33 vs 0.24 s at sf0.1). Same code
+    and rows as stream_join_purchase_view (shared oracle); plan-asserted
+    nested-loop-free in tests/test_plans.py."""
     ev = table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("v_id"), F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-    )
-    cond = (
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-    )
-    out = auto_join(p, v, cond)
-    return out.select(
-        "p_id",
-        "v_id",
-        F.col("p_user").alias("user_id"),
-        (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lead_us"),
+    return mounts.purchase_view_join(
+        ev.filter(F.col("event_type") == "purchase"),
+        ev.filter(F.col("event_type") == "view"),
     )
 
 

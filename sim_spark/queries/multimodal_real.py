@@ -1896,9 +1896,19 @@ def multimodal_jpeg_progressive_color_decode(
 from sim_spark.ops.mp3 import gen_mp3_id3_payload, parse_mp3  # noqa: E402
 
 
+def _id3_tags(prof: dict, *frames: str) -> dict:
+    """The parsed ID3v2 tag of ``prof``, refused with ValueError when the
+    tag or one of the ``frames`` the row needs is missing."""
+    tags = prof["id3"]
+    missing = [f for f in ("_version", *frames) if f not in tags]
+    if missing:
+        raise ValueError(f"ID3v2 tag lacks {', '.join(missing)}")
+    return tags
+
+
 def _mp3_id3_rows(doc_id: int, payload: bytes) -> list[tuple]:
     prof = parse_mp3(payload)
-    tags = prof["id3"]
+    tags = _id3_tags(prof, "TIT2", "TPE1", "TRCK", "TLEN")
     return [
         (
             doc_id,
@@ -2697,19 +2707,20 @@ def _gen_mp3_apic_payload(doc_id: int) -> bytes:
 
 def _mp3_apic_rows(doc_id: int, payload: bytes) -> list[tuple]:
     prof = parse_mp3(payload)
-    apic = prof["id3"]["APIC"]
+    tags = _id3_tags(prof, "APIC", "TIT2")
+    apic = tags["APIC"]
     w, h, _ch, _depth, img = decode_png(apic["data"])
     return [
         (
             doc_id,
-            prof["id3"]["_version"],
+            tags["_version"],
             w,
             h,
             int(img.sum()),
             apic["pic_type"],
             sum(apic["desc"].encode("latin-1")),
             sum(apic["mime"].encode("latin-1")),
-            sum(prof["id3"]["TIT2"].encode("latin-1")),
+            sum(tags["TIT2"].encode("latin-1")),
             prof["n_frames"],
         )
     ]

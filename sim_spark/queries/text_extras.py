@@ -578,28 +578,19 @@ def text_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     `lang` — a handful of values — so the id band ran as a POST-join
     filter and every same-lang pair paid a 30x30 Levenshtein:
     measured 50 s at sf0.1 (~3M distance calls), quadratic at sf1.
-    Routed through ops/autojoin.auto_join, which hashes on
-    (id-bucket, lang) and re-applies the original predicate, so
-    candidates are ~4 per doc and the distance runs only on true band
-    pairs — the same bucket-equi shape as join_theta_band."""
-    from sim_spark.ops.autojoin import auto_join
-
+    The id band is a small integer range, so each left doc enumerates
+    its three partner ids (``explode(sequence(id_a + 1, id_a + 3))``)
+    and the join hashes on (lang, id_b): exact, no refine step, and the
+    distance runs only on true band pairs."""
     d = table(spark, sf_dir, "documents")
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("lang_a"),
-                 F.substring("text", 1, 30).alias("pref_a"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("lang").alias("lang_b"),
+    a = d.select(
+        F.col("doc_id").alias("id_a"), "lang",
+        F.substring("text", 1, 30).alias("pref_a"),
+    ).withColumn("id_b", F.explode(F.sequence(F.col("id_a") + 1, F.col("id_a") + 3)))
+    b = d.select(F.col("doc_id").alias("id_b"), "lang",
                  F.substring("text", 1, 30).alias("pref_b"))
     dist = F.levenshtein("pref_a", "pref_b")
-    joined = auto_join(
-        a,
-        b,
-        # attr ± literal form (the walker's recognized band spelling;
-        # the difference form `id_b - id_a <= 3` parses as attr-minus-
-        # attr and would fall back to the naive plan)
-        (F.col("lang_a") == F.col("lang_b"))
-        & (F.col("id_a") < F.col("id_b"))
-        & (F.col("id_b") <= F.col("id_a") + 3),
-    )
+    joined = a.join(b, ["lang", "id_b"])
     return (
         joined.filter(dist <= 22)
         .select("id_a", "id_b", dist.alias("edit_dist"))

@@ -708,6 +708,8 @@ def _corruption_cases():
         "avro": (lambda p: mr._avro_rows(0, p), mr._gen_avro_payload),
         "parquet_footer": (
             lambda p: mr._parquet_footer_rows(0, p), mr._gen_parquet_payload),
+        "mp3_id3": (lambda p: mr._mp3_id3_rows(0, p), mr.gen_mp3_id3_payload),
+        "mp3_apic": (lambda p: mr._mp3_apic_rows(0, p), mr._gen_mp3_apic_payload),
     }
 
 
@@ -716,7 +718,7 @@ def _corruption_cases():
     ["baseline", "dc_only", "color", "progressive", "progressive_color",
      "arithmetic", "png", "png_twin", "png_rgba_gray", "png_palette_adam7",
      "png_depth", "wav", "wav_tone", "flac_lpc", "bmp", "avro",
-     "parquet_footer"],
+     "parquet_footer", "mp3_id3", "mp3_apic"],
 )
 def test_corrupted_payloads_raise_only_typed_errors(case):
     """Untrusted bytes through every decoder: each generator payload

@@ -1,6 +1,10 @@
 """Property tests for the composite operators (SURVEY.md §5.3.4):
-asof_join_backward and interval_join must equal their naive O(n·m)
-formulations on randomized small inputs."""
+asof_join_backward and the compiled band-join rule must equal their
+naive O(n·m) formulations on randomized small inputs.
+
+Band tests check the rule against a Python-computed expectation, never
+against an in-session ``L.join(R, cond)``: pytest shares one session, so
+once any test installs the rule that "naive" leg is itself rewritten."""
 
 from __future__ import annotations
 
@@ -11,7 +15,22 @@ import pytest
 
 from pyspark.sql import functions as F
 from sim_spark.ops.asof import asof_join_backward
-from sim_spark.ops.rangejoin import interval_join
+
+
+def _band_rule(spark) -> None:
+    from sim_spark.ops.sqlband import install_sql_band_extension
+
+    assert install_sql_band_extension(spark)
+
+
+def _rewritten(df) -> bool:
+    """Did the band rule replan this join? Its bucket column is then in
+    the optimized plan."""
+    return "__sql_band_bucket" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _pairs(df) -> list[tuple]:
+    return sorted(map(tuple, df.select("lid", "rid").collect()))
 
 
 def _random_events(rng: random.Random, n: int, n_keys: int) -> pd.DataFrame:
@@ -66,6 +85,10 @@ def test_asof_matches_naive(spark, seed):
 @pytest.mark.parametrize("seed", [0, 1, 2])
 @pytest.mark.parametrize("lower_s,upper_s", [(0, 7), (-3, 3), (5, 9)])
 def test_interval_join_matches_naive(spark, seed, lower_s, upper_s):
+    """A half-open timestamp window [l + lower, l + upper) as a plain
+    join: the band rule must replan it and return the Python-computed
+    pairs."""
+    _band_rule(spark)
     rng = random.Random(seed)
     left = _random_events(rng, 30, 3).rename(columns={"event_id": "l_id", "ts_us": "l_us"})
     right = _random_events(rng, 30, 3).rename(columns={"event_id": "r_id", "ts_us": "r_us"})
@@ -76,15 +99,13 @@ def test_interval_join_matches_naive(spark, seed, lower_s, upper_s):
     rdf = spark.createDataFrame(right[["r_id", "r_ts"]])
     lo, hi = lower_s * 1_000_000, upper_s * 1_000_000
 
-    got = sorted(
-        map(
-            tuple,
-            interval_join(ldf, rdf, "l_ts", "r_ts", lo, hi)
-            .select("l_id", "r_id")
-            .toPandas()
-            .values.tolist(),
-        )
+    joined = ldf.join(
+        rdf,
+        (F.col("r_ts") >= F.col("l_ts") + F.expr(f"INTERVAL '{lower_s}' SECOND"))
+        & (F.col("r_ts") < F.col("l_ts") + F.expr(f"INTERVAL '{upper_s}' SECOND")),
     )
+    assert _rewritten(joined)
+    got = sorted(map(tuple, joined.select("l_id", "r_id").collect()))
 
     want = sorted(
         (int(l.l_id), int(r.r_id))
@@ -159,13 +180,6 @@ def test_prefix_jaccard_join_equals_naive(spark, seed, t):
             if j >= t:
                 want.append((ids[x], ids[y], round(j, 6)))
     assert got == sorted(want), f"seed={seed} t={t}"
-
-
-def test_interval_join_rejects_empty_window(spark):
-    df = spark.range(1).withColumn("ts", __import__("pyspark").sql.functions.current_timestamp())
-    with pytest.raises(ValueError, match="empty interval"):
-        interval_join(df, df.withColumnRenamed("ts", "ts2").withColumnRenamed("id", "id2"),
-                      "ts", "ts2", 5, 5)
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -435,83 +449,64 @@ def test_grouped_exact_sums_matches_dsum_formulation(spark):
 
 
 def test_auto_join_equals_naive_randomized(spark, seed=3):
-    """auto_join must be row-identical to the naive non-equi join on
-    randomized numeric and timestamp bands, with and without equi keys,
-    including boundary-exact values."""
+    """Plain joins with the band rule installed must return the
+    Python-computed pairs on randomized timestamp and double bands,
+    boundary-exact values included; the rule rewrites the bands without
+    an equi key and stands aside for the one with an equi key."""
     import datetime
     import random
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     rng = random.Random(seed)
     base = datetime.datetime(2024, 3, 1)
-    L = spark.createDataFrame(
-        [
+
+    def rows():
+        return [
             (i, rng.randrange(4), base + datetime.timedelta(seconds=rng.randrange(7200)),
              float(rng.randrange(200)) / 2)
             for i in range(300)
-        ],
-        "lid long, lg int, lts timestamp, lv double",
-    )
-    R = spark.createDataFrame(
-        [
-            (i, rng.randrange(4), base + datetime.timedelta(seconds=rng.randrange(7200)),
-             float(rng.randrange(200)) / 2)
-            for i in range(300)
-        ],
-        "rid long, rg int, rts timestamp, rv double",
-    )
-    conds = [
-        (F.col("rts") >= F.col("lts") - F.expr("INTERVAL 10 MINUTE"))
-        & (F.col("rts") <= F.col("lts")),
-        (F.col("lg") == F.col("rg"))
-        & F.col("rv").between(F.col("lv") - 3, F.col("lv") + 3),
-        (F.col("rv") > F.col("lv") - 2) & (F.col("rv") < F.col("lv") + 2),
+        ]
+
+    lrows, rrows = rows(), rows()
+    L = spark.createDataFrame(lrows, "lid long, lg int, lts timestamp, lv double")
+    R = spark.createDataFrame(rrows, "rid long, rg int, rts timestamp, rv double")
+    ten_min = datetime.timedelta(minutes=10)
+    cases = [
+        ((F.col("rts") >= F.col("lts") - F.expr("INTERVAL 10 MINUTE"))
+         & (F.col("rts") <= F.col("lts")),
+         lambda l, r: l[2] - ten_min <= r[2] <= l[2], True),
+        ((F.col("lg") == F.col("rg"))
+         & F.col("rv").between(F.col("lv") - 3, F.col("lv") + 3),
+         lambda l, r: l[1] == r[1] and l[3] - 3 <= r[3] <= l[3] + 3, False),
+        ((F.col("rv") > F.col("lv") - 2) & (F.col("rv") < F.col("lv") + 2),
+         lambda l, r: l[3] - 2 < r[3] < l[3] + 2, True),
     ]
-    for i, cond in enumerate(conds):
-        a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-        b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-        assert a == b, f"cond {i}: {len(a)} naive vs {len(b)} auto"
+    for i, (cond, match, rewrites) in enumerate(cases):
+        joined = L.join(R, cond)
+        assert _rewritten(joined) == rewrites, f"cond {i}"
+        want = sorted((l[0], r[0]) for l in lrows for r in rrows if match(l, r))
+        got = _pairs(joined)
+        assert got == want and want, f"cond {i}: {len(got)} joined vs {len(want)} expected"
 
 
 def test_auto_join_falls_back_untouched(spark):
-    """Conditions outside the band grammar (scaled attr, OR, overlapping
-    column names, outer how) must fall back to the plain join."""
-    from sim_spark.ops.autojoin import auto_join
-
+    """Conditions outside the band grammar (scaled attr, OR) and outer
+    joins must plan without the rule and keep their rows."""
+    _band_rule(spark)
     L = spark.createDataFrame([(1, 2.0)], "a long, x double")
     R = spark.createDataFrame([(1, 3.0)], "b long, y double")
-    for cond in [
-        F.col("x") * 2 < F.col("y"),
-        (F.col("a") == F.col("b")) | (F.col("x") < F.col("y")),
+    for cond, want in [
+        (F.col("x") * 2 < F.col("y"), []),
+        ((F.col("a") == F.col("b")) | (F.col("x") < F.col("y")), [(1, 2.0, 1, 3.0)]),
     ]:
-        got = auto_join(L, R, cond)
-        exp = L.join(R, cond)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
-    # outer join is not rewritten (band rewrite is inner-only)
+        joined = L.join(R, cond)
+        assert not _rewritten(joined)
+        assert sorted(map(tuple, joined.collect())) == want
+    # outer join is not rewritten (the band rewrite is inner-only)
     band = (F.col("y") >= F.col("x") - 1) & (F.col("y") <= F.col("x") + 1)
-    got = auto_join(L, R, band, how="left")
-    assert got.count() == L.join(R, band, "left").count()
-
-
-def test_auto_join_abs_band(spark):
-    """ABS(x - y) < c is the most common band spelling — must rewrite to
-    the bucket join (no nested loop) and stay row-identical; a lower
-    bound on |diff| is NOT a band and must fall back."""
-    from sim_spark.ops.autojoin import auto_join
-
-    L = spark.createDataFrame([(i % 3, float(i) / 3) for i in range(200)], "g int, lv double")
-    R = spark.createDataFrame([(i % 3, float(2 * i) / 5) for i in range(200)], "h int, rv double")
-    cond = (F.col("g") == F.col("h")) & (F.abs(F.col("lv") - F.col("rv")) < 2.5)
-    a = sorted(map(tuple, L.join(R, cond).collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).collect()))
-    assert a == b and len(a) > 0
-    p = auto_join(L, R, cond)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p, p
-    anti = F.lit(2.5) < F.abs(F.col("lv") - F.col("rv"))
-    assert auto_join(L, R, anti).count() == L.join(R, anti).count()
+    outer = L.join(R, band, "left")
+    assert not _rewritten(outer)
+    assert sorted(map(tuple, outer.collect())) == [(1, 2.0, 1, 3.0)]
 
 
 def test_grouped_exact_sums_null_measures_count_nonnull(spark):
@@ -531,58 +526,63 @@ def test_grouped_exact_sums_null_measures_count_nonnull(spark):
 
 
 def test_auto_join_date_band(spark):
-    """DATE ± int-days bands bucket on unix_date (timezone-free); result
-    must equal the naive join, with no nested loop."""
+    """DATE ± int-days bands bucket on unix_date (timezone-free): the
+    rule must replan the plain join to a nested-loop-free plan with the
+    Python-computed pairs."""
     import datetime
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     d0 = datetime.date(2024, 1, 1)
-    L = spark.createDataFrame(
-        [(i, d0 + datetime.timedelta(days=3 * i)) for i in range(80)],
-        "lid long, ld date",
+    lrows = [(i, d0 + datetime.timedelta(days=3 * i)) for i in range(80)]
+    rrows = [(i, d0 + datetime.timedelta(days=5 * i + 1)) for i in range(80)]
+    L = spark.createDataFrame(lrows, "lid long, ld date")
+    R = spark.createDataFrame(rrows, "rid long, rd date")
+    joined = L.join(
+        R,
+        (F.col("rd") >= F.date_sub(F.col("ld"), 4))
+        & (F.col("rd") <= F.date_add(F.col("ld"), 4)),
     )
-    R = spark.createDataFrame(
-        [(i, d0 + datetime.timedelta(days=5 * i + 1)) for i in range(80)],
-        "rid long, rd date",
+    four = datetime.timedelta(days=4)
+    want = sorted(
+        (lid, rid) for lid, ld in lrows for rid, rd in rrows if ld - four <= rd <= ld + four
     )
-    cond = (F.col("rd") >= F.date_sub(F.col("ld"), 4)) & (
-        F.col("rd") <= F.date_add(F.col("ld"), 4)
-    )
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0
-    p = auto_join(L, R, cond)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
+    p = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p, p
 
 
 def test_auto_join_day_offset_on_timestamp_falls_back(spark):
-    """date_add/date_sub offsets are DAY counts; applied to a TIMESTAMP
-    (µs) axis they would shrink the bucket band 86400e6x and silently
-    drop matches — the unit check must force a fallback, keeping the
-    output equal to the naive join (review repro: 63 naive vs 0 rewritten
-    before the fix)."""
+    """date_add/date_sub offsets are DAY counts; on a TIMESTAMP axis they
+    truncate to a date, so the bound is no attr ± literal band and the
+    rule must stand aside (a day-granular offset read as microseconds
+    would shrink the band 86400e6x and drop matches)."""
     import datetime
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     t0 = datetime.datetime(2024, 1, 1)
-    L = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(hours=7 * i)) for i in range(60)],
-        "lid long, lts timestamp",
+    lrows = [(i, t0 + datetime.timedelta(hours=7 * i)) for i in range(60)]
+    rrows = [(i, t0 + datetime.timedelta(hours=11 * i + 1)) for i in range(60)]
+    L = spark.createDataFrame(lrows, "lid long, lts timestamp")
+    R = spark.createDataFrame(rrows, "rid long, rts timestamp")
+    joined = L.join(
+        R,
+        (F.col("rts") >= F.date_sub(F.col("lts"), 4))
+        & (F.col("rts") <= F.date_add(F.col("lts"), 4)),
     )
-    R = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(hours=11 * i + 1)) for i in range(60)],
-        "rid long, rts timestamp",
+
+    def midnight(t, days):  # date_add(ts, n) compared back as a timestamp
+        return datetime.datetime.combine(t.date() + datetime.timedelta(days=days),
+                                         datetime.time())
+
+    want = sorted(
+        (lid, rid)
+        for lid, lt in lrows
+        for rid, rt in rrows
+        if midnight(lt, -4) <= rt <= midnight(lt, 4)
     )
-    cond = (F.col("rts") >= F.date_sub(F.col("lts"), 4)) & (
-        F.col("rts") <= F.date_add(F.col("lts"), 4)
-    )
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0, (len(a), len(b))
+    assert not _rewritten(joined)
+    assert _pairs(joined) == want and want
 
 
 @pytest.mark.parametrize("seed", [0, 1])
@@ -595,7 +595,7 @@ def test_auto_asof_matches_composite_and_naive(spark, seed, direction_op):
     import random
 
     from sim_spark.ops.asof import asof_join_backward
-    from sim_spark.ops.autojoin import auto_asof
+    from sim_spark.ops.asof import auto_asof
 
     rng = random.Random(seed)
     L = spark.createDataFrame(
@@ -643,7 +643,7 @@ def test_auto_asof_rejects_non_asof_predicates(spark):
     """No silent fallback: strict inequality (tie semantics differ),
     missing equi key, extra unrecognized conjuncts, and shared column
     names must all raise, never guess."""
-    from sim_spark.ops.autojoin import auto_asof
+    from sim_spark.ops.asof import auto_asof
 
     L = spark.createDataFrame([(1, 1, 5)], "lid long, lkey long, lts long")
     R = spark.createDataFrame([(2, 1, 4)], "rid long, rkey long, rts long")
@@ -714,9 +714,9 @@ def test_auto_join_epoch_ns_scale_double_axis(spark):
     keeps them (the old ±2^62 clamp left multi-bucket rounding error
     inside the "trusted" range and silently dropped matches — r9
     ADVICE). Mixed magnitudes prove saturated and normal buckets
-    coexist."""
-    from sim_spark.ops.autojoin import auto_join
-
+    coexist. DataFrame spelling; the SQL spelling is
+    test_sql_band_rule_huge_double_axis."""
+    _band_rule(spark)
     base = 1_600_000_000_000_000_000
     lrows = [(i, float(base + 37 * i)) for i in range(120)]
     lrows += [(200 + i, float(i) * 3) for i in range(40)]  # normal scale
@@ -724,30 +724,14 @@ def test_auto_join_epoch_ns_scale_double_axis(spark):
     rrows += [(200 + i, float(i) * 5) for i in range(40)]
     L = spark.createDataFrame(lrows, "lid long, lv double")
     R = spark.createDataFrame(rrows, "rid long, rv double")
-    cond = (F.col("rv") >= F.col("lv") - 50.0) & (F.col("rv") <= F.col("lv") + 50.0)
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0
-
-
-def test_auto_join_denormal_width_stays_naive(spark):
-    """A pathological band narrower than ~1e-300 must fall back to the
-    naive join: the double divide yields ±Infinity with OPPOSITE signs
-    for zero-straddling axis values, so lo/hi clamp to opposite
-    saturation ids and Sequence would try to explode ~2^52 elements
-    (r9 ADVICE)."""
-    from sim_spark.ops.autojoin import auto_join
-
-    L = spark.createDataFrame(
-        [(1, -1.0), (2, 0.0), (3, 1.0)], "lid long, lv double"
+    joined = L.join(
+        R, (F.col("rv") >= F.col("lv") - 50.0) & (F.col("rv") <= F.col("lv") + 50.0)
     )
-    R = spark.createDataFrame(
-        [(1, -1.0), (2, 0.0), (3, 2.0)], "rid long, rv double"
+    want = sorted(
+        (lid, rid) for lid, lv in lrows for rid, rv in rrows if lv - 50.0 <= rv <= lv + 50.0
     )
-    eps = 2.5e-310
-    cond = (F.col("rv") >= F.col("lv") - eps) & (F.col("rv") <= F.col("lv") + eps)
-    got = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert got == [(1, 1), (2, 2)]
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
 
 
 def test_sql_band_rule_huge_double_axis(spark):
@@ -816,109 +800,204 @@ def test_sql_band_rule_denormal_width_stays_naive(spark):
     assert got == [(1, 1), (2, 2)]
 
 
+def _add_months(t, k: int):
+    """Spark's add_months on a date or datetime: the day clamps to the
+    target month's end, the time of day is kept."""
+    import calendar
+
+    m = t.month - 1 + k
+    y, m = t.year + m // 12, m % 12 + 1
+    return t.replace(year=y, month=m, day=min(t.day, calendar.monthrange(y, m)[1]))
+
+
 def test_auto_join_month_interval_band(spark):
     """Year-month-interval bands (r10) bucket on the exact month index
     (year*12+month): DATE and TIMESTAMP axes, MONTH and YEAR units, with
-    day-clamping anchors (month-end dates) in play — must be
-    row-identical to the naive join and BNLJ-free."""
+    day-clamping anchors (month-end dates) in play — the plain join must
+    be replanned, nested-loop-free, with the Python-computed pairs."""
     import datetime
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     d0 = datetime.date(2023, 1, 31)  # month-end: add_months clamping hit
-    L = spark.createDataFrame(
-        [(i, d0 + datetime.timedelta(days=13 * i)) for i in range(70)],
-        "lid long, ld date",
+    lrows = [(i, d0 + datetime.timedelta(days=13 * i)) for i in range(70)]
+    rrows = [(i, d0 + datetime.timedelta(days=8 * i + 2)) for i in range(70)]
+    L = spark.createDataFrame(lrows, "lid long, ld date")
+    R = spark.createDataFrame(rrows, "rid long, rd date")
+    joined = L.join(
+        R,
+        (F.col("rd") >= F.col("ld") - F.expr("INTERVAL '3' MONTH"))
+        & (F.col("rd") <= F.col("ld")),
     )
-    R = spark.createDataFrame(
-        [(i, d0 + datetime.timedelta(days=8 * i + 2)) for i in range(70)],
-        "rid long, rd date",
+    want = sorted(
+        (lid, rid)
+        for lid, ld in lrows
+        for rid, rd in rrows
+        if _add_months(ld, -3) <= rd <= ld
     )
-    cond = (F.col("rd") >= F.col("ld") - F.expr("INTERVAL '3' MONTH")) & (
-        F.col("rd") <= F.col("ld")
-    )
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0
-    p = auto_join(L, R, cond)._jdf.queryExecution().executedPlan().toString()
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
+    p = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
 
     t0 = datetime.datetime(2022, 2, 28, 23, 59)
-    LT = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(days=40 * i, hours=i)) for i in range(40)],
-        "lid long, lt timestamp",
+    lrows = [(i, t0 + datetime.timedelta(days=40 * i, hours=i)) for i in range(40)]
+    rrows = [(i, t0 + datetime.timedelta(days=25 * i + 5, hours=3 * i)) for i in range(40)]
+    LT = spark.createDataFrame(lrows, "lid long, lt timestamp")
+    RT = spark.createDataFrame(rrows, "rid long, rt timestamp")
+    joined = LT.join(
+        RT,
+        (F.col("rt") >= F.col("lt") - F.expr("INTERVAL '1' YEAR"))
+        & (F.col("rt") < F.col("lt")),
     )
-    RT = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(days=25 * i + 5, hours=3 * i)) for i in range(40)],
-        "rid long, rt timestamp",
+    want = sorted(
+        (lid, rid)
+        for lid, lt in lrows
+        for rid, rt in rrows
+        if _add_months(lt, -12) <= rt < lt
     )
-    c2 = (F.col("rt") >= F.col("lt") - F.expr("INTERVAL '1' YEAR")) & (
-        F.col("rt") < F.col("lt")
-    )
-    a2 = sorted(map(tuple, LT.join(RT, c2).select("lid", "rid").collect()))
-    b2 = sorted(map(tuple, auto_join(LT, RT, c2).select("lid", "rid").collect()))
-    assert a2 == b2 and len(a2) > 0
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
 
 
 def test_auto_join_month_mixed_daytime_falls_back(spark):
     """A month offset mixed with a NONZERO day-time offset on the same
-    pair has no common exact bucket unit — auto_join must stay naive
-    (row-identical), never bucket month deltas against micros."""
+    pair has no common exact bucket unit — the rule must stand aside
+    (never bucket month deltas against micros) and the plain join keeps
+    the Python-computed pairs."""
     import datetime
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     t0 = datetime.datetime(2024, 1, 15)
-    L = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(days=11 * i)) for i in range(30)],
-        "lid long, lt timestamp",
+    lrows = [(i, t0 + datetime.timedelta(days=11 * i)) for i in range(30)]
+    rrows = [(i, t0 + datetime.timedelta(days=7 * i + 1)) for i in range(30)]
+    L = spark.createDataFrame(lrows, "lid long, lt timestamp")
+    R = spark.createDataFrame(rrows, "rid long, rt timestamp")
+    joined = L.join(
+        R,
+        (F.col("rt") >= F.col("lt") - F.expr("INTERVAL '1' MONTH"))
+        & (F.col("rt") <= F.col("lt") + F.expr("INTERVAL '1' DAY")),
     )
-    R = spark.createDataFrame(
-        [(i, t0 + datetime.timedelta(days=7 * i + 1)) for i in range(30)],
-        "rid long, rt timestamp",
+    day = datetime.timedelta(days=1)
+    want = sorted(
+        (lid, rid)
+        for lid, lt in lrows
+        for rid, rt in rrows
+        if _add_months(lt, -1) <= rt <= lt + day
     )
-    cond = (F.col("rt") >= F.col("lt") - F.expr("INTERVAL '1' MONTH")) & (
-        F.col("rt") <= F.col("lt") + F.expr("INTERVAL '1' DAY")
-    )
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0
+    assert not _rewritten(joined)
+    assert _pairs(joined) == want and want
 
 
 def test_auto_join_wide_decimal_axis(spark):
     """DECIMAL axes wider than 15 integral digits (r10 unfence): the
     double cast rounds, but the ±2^50 bucket clamp keeps the quotient
-    inside the accuracy horizon, so the ±1 margin covers it — naive
-    row-identity on 20-integral-digit values with fractional cents."""
+    inside the accuracy horizon, so the ±1 margin covers it — the
+    replanned join returns the exact Decimal pairs on 20-integral-digit
+    values with fractional cents."""
     from decimal import Decimal
 
     from pyspark.sql import types as T
 
-    from sim_spark.ops.autojoin import auto_join
-
+    _band_rule(spark)
     sl = T.StructType(
         [T.StructField("lid", T.LongType()), T.StructField("x", T.DecimalType(25, 2))]
     )
     sr = T.StructType(
         [T.StructField("rid", T.LongType()), T.StructField("y", T.DecimalType(25, 2))]
     )
-    L = spark.createDataFrame(
-        [(i, Decimal(10**19 + i * 7) + Decimal("0.25")) for i in range(60)], sl
+    lrows = [(i, Decimal(10**19 + i * 7) + Decimal("0.25")) for i in range(60)]
+    rrows = [(i, Decimal(10**19 + i * 11 + 3) + Decimal("0.50")) for i in range(60)]
+    L = spark.createDataFrame(lrows, sl)
+    R = spark.createDataFrame(rrows, sr)
+    joined = L.join(R, (F.col("y") >= F.col("x") - 20) & (F.col("y") <= F.col("x") + 20))
+    want = sorted(
+        (lid, rid) for lid, x in lrows for rid, y in rrows if x - 20 <= y <= x + 20
     )
-    R = spark.createDataFrame(
-        [(i, Decimal(10**19 + i * 11 + 3) + Decimal("0.50")) for i in range(60)], sr
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
+
+
+_LONG_MAX = (1 << 63) - 1
+_LONG_MIN = -(1 << 63)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["ts_high", "ts_low", "long_high", "long_low", "fence", "straddle", "straddle_away"],
+)
+def test_band_rule_long_path_edges(spark, case):
+    """The exact kinds bucket in saturating long arithmetic. At the long
+    limits the rule's own `axis + offset` would overflow (an ANSI abort)
+    where the naive join, which only evaluates its predicate on the side
+    that stays in range, returns rows; a band away from zero with
+    offsets near the 2^61 fence and pre-1970 (negative) values around
+    bucket 0 must bucket exactly too. Each case must not raise and must
+    return the Python-computed pairs."""
+    _band_rule(spark)
+    k = 2**61
+    if case in ("ts_high", "ts_low"):
+        edge = (_LONG_MAX - 10) if case == "ts_high" else -(_LONG_MAX - 10)
+        sign = -1 if case == "ts_high" else 1
+        lvals = [edge + sign * d for d in (0, 3, 7, 4_000_000, 9_000_000, 5 * 10**12)]
+        rvals = [edge + sign * d for d in (0, 1, 6, 2_000_000, 8_000_000, 10**9)]
+        lvals += [0, -86_400_000_000 * 365]  # 1970 and 1969: ordinary rows
+        rvals += [3_000_000, -86_400_000_000 * 365 - 4_000_000]
+        five = 5_000_000
+        if case == "ts_high":
+            # r - 5 s <= l: the naive side never exceeds r; the rule's
+            # bucket adds +5 s to l
+            sql = ("r_ts - INTERVAL 5 SECONDS <= l_ts AND r_ts >= l_ts")
+            match = lambda x, y: x <= y <= x + five  # noqa: E731
+        else:
+            sql = ("r_ts + INTERVAL 5 SECONDS >= l_ts AND r_ts <= l_ts")
+            match = lambda x, y: x - five <= y <= x  # noqa: E731
+        L = spark.createDataFrame(list(enumerate(lvals)), "lid long, lx long").selectExpr(
+            "lid", "timestamp_micros(lx) AS l_ts")
+        R = spark.createDataFrame(list(enumerate(rvals)), "rid long, ry long").selectExpr(
+            "rid", "timestamp_micros(ry) AS r_ts")
+    else:
+        if case == "long_high":
+            lvals = [_LONG_MAX - d for d in (0, 2, 5, 9, 40)] + [0, -3]
+            rvals = [_LONG_MAX - d for d in (0, 1, 4, 12, 30)] + [2, -8]
+            sql = "ry - 5 <= lx AND ry >= lx - 5"
+            match = lambda x, y: x - 5 <= y <= x + 5  # noqa: E731
+        elif case == "long_low":
+            lvals = [_LONG_MIN + d for d in (0, 2, 5, 9, 40)] + [0, -3]
+            rvals = [_LONG_MIN + d for d in (0, 1, 4, 12, 30)] + [2, -8]
+            sql = "ry + 5 >= lx AND ry <= lx + 5"
+            match = lambda x, y: x - 5 <= y <= x + 5  # noqa: E731
+        elif case == "fence":
+            # a band [2^61 - 10, 2^61] far from zero; l near Long.MAX
+            # (no partner exists, but its bucket must not overflow)
+            base = _LONG_MAX - k
+            lvals = [base - d for d in (0, 3, 10, 25)] + [_LONG_MAX - d for d in (0, 7)]
+            lvals += [-k - 5, -7, 0]
+            rvals = [base + k - d for d in (0, 4, 9, 11, 40)] + [-8, k - 9, k + 1]
+            sql = f"ry - {k} >= lx - 10 AND ry - {k} <= lx"
+            match = lambda x, y: k - 10 <= y - x <= k  # noqa: E731
+        else:
+            # dense pre-/post-zero values: truncating `div` makes bucket
+            # 0 twice as wide as the others
+            lvals = list(range(-30, 31, 3))
+            rvals = list(range(-31, 32, 2))
+            lo, hi = (-3, 4) if case == "straddle" else (2, 9)
+            sql = f"ry >= lx + {lo} AND ry <= lx + {hi}"
+            match = lambda x, y: lo <= y - x <= hi  # noqa: E731
+        L = spark.createDataFrame(list(enumerate(lvals)), "lid long, lx long")
+        R = spark.createDataFrame(list(enumerate(rvals)), "rid long, ry long")
+    joined = L.join(R, F.expr(sql))
+    want = sorted(
+        (i, j) for i, x in enumerate(lvals) for j, y in enumerate(rvals) if match(x, y)
     )
-    cond = (F.col("y") >= F.col("x") - 20) & (F.col("y") <= F.col("x") + 20)
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b and len(a) > 0
+    assert _rewritten(joined)
+    assert _pairs(joined) == want and want
+
 
 
 def test_sql_band_rule_month_interval_preserves_rows(spark):
     """The compiled rule's month-index path must be row-identical to the
     Python-computed naive expectation, including add_months day-clamping
     anchors, and must fire (rewrites counter)."""
-    import calendar
     import datetime
 
     from sim_spark.ops.sqlband import diagnostics, install_sql_band_extension
@@ -946,73 +1025,13 @@ def test_sql_band_rule_month_interval_preserves_rows(spark):
     )
     assert diagnostics(spark)["rewrites"] > before, "rule did not fire"
 
-    def add_months(d, k):
-        m = d.month - 1 + k
-        y = d.year + m // 12
-        m = m % 12 + 1
-        return datetime.date(y, m, min(d.day, calendar.monthrange(y, m)[1]))
-
     want = sorted(
         (lid, rid)
         for lid, x in lrows
         for rid, y in rrows
-        if add_months(x, -2) <= y <= x
+        if _add_months(x, -2) <= y <= x
     )
     assert got == want, f"{len(got)} rewritten vs {len(want)} naive"
-
-
-def test_auto_join_connect_degradation_is_loud_and_routed(spark):
-    """When the Column expression tree is unreadable (PySpark internals
-    drift), auto_join must (a) warn loudly, naming the compiled SQL-band
-    rule, (b) return the naive join's exact rows, and (c) still end up
-    bucket-rewritten JVM-side when the compiled rule is installed — the
-    rule matches the resolved logical Join whether the condition came
-    from SQL text or the DataFrame API, so the fallback never silently
-    BNLJs."""
-    import warnings
-
-    from sim_spark.ops import autojoin
-    from sim_spark.ops.autojoin import auto_join
-    from sim_spark.ops.sqlband import install_sql_band_extension
-
-    L = spark.createDataFrame(
-        [(i, float(i) * 3) for i in range(80)], "lid long, lv double"
-    )
-    R = spark.createDataFrame(
-        [(i, float(i) * 5 + 1) for i in range(80)], "rid long, rv double"
-    )
-    cond = (F.col("rv") >= F.col("lv") - 4.0) & (F.col("rv") <= F.col("lv") + 4.0)
-    want = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-
-    # simulate internals drift: the walker's first tree read raises
-    orig = autojoin._conjuncts
-    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("drift"))
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            out = auto_join(L, R, cond)
-            got = sorted(map(tuple, out.select("lid", "rid").collect()))
-    finally:
-        autojoin._conjuncts = orig
-    assert got == want and len(got) > 0
-    msgs = [str(w.message) for w in caught if issubclass(w.category, RuntimeWarning)]
-    assert any("sqlband" in m and "auto_join could not read" in m for m in msgs), msgs
-
-    # with the compiled rule installed, the SAME fallback join is
-    # bucket-rewritten JVM-side: no BNLJ even though the Python walker
-    # never saw the condition
-    assert install_sql_band_extension(spark)
-    autojoin._conjuncts = lambda n: (_ for _ in ()).throw(AttributeError("drift"))
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            routed = auto_join(L, R, cond)
-        p = routed._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p, p
-        got2 = sorted(map(tuple, routed.select("lid", "rid").collect()))
-    finally:
-        autojoin._conjuncts = orig
-    assert got2 == want
 
 
 def test_candidate_density_guardrail(spark):

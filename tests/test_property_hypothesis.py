@@ -149,10 +149,11 @@ def test_png_roundtrip_property(width, height, data):
 
 
 # ---------------------------------------------------------------------------
-# auto_join: randomized band predicates must be row-identical to the
-# naive join — the rewriter is a predicate parser, exactly where
+# Band rule: randomized band predicates in plain joins must return the
+# Python-computed pairs — the rule is a predicate parser, exactly where
 # hypothesis finds the edges (boundary-exact values, degenerate bands,
-# negative offsets, mixed spellings).
+# negative offsets, mixed spellings). An equi conjunct makes the rule
+# stand aside.
 # ---------------------------------------------------------------------------
 
 
@@ -169,8 +170,9 @@ def test_png_roundtrip_property(width, height, data):
     strict=st.booleans(),
 )
 def test_auto_join_band_equals_naive_hypothesis(spark, data, lo, span, use_eq, strict):
-    from sim_spark.ops.autojoin import auto_join
+    from sim_spark.ops.sqlband import install_sql_band_extension
 
+    assert install_sql_band_extension(spark)
     hi = lo + span
     lvals = data.draw(
         st.lists(st.integers(min_value=-100, max_value=100), min_size=1, max_size=40)
@@ -193,6 +195,14 @@ def test_auto_join_band_equals_naive_hypothesis(spark, data, lo, span, use_eq, s
     cond = ge & le
     if use_eq:
         cond = (F.col("lg") == F.col("rg")) & cond
-    a = sorted(map(tuple, L.join(R, cond).select("lid", "rid").collect()))
-    b = sorted(map(tuple, auto_join(L, R, cond).select("lid", "rid").collect()))
-    assert a == b, (lo, hi, use_eq, strict, len(a), len(b))
+    joined = L.join(R, cond)
+    rewritten = "__sql_band_bucket" in joined._jdf.queryExecution().optimizedPlan().toString()
+    assert rewritten != use_eq, (lo, hi, use_eq, strict)
+    got = sorted(map(tuple, joined.select("lid", "rid").collect()))
+    want = sorted(
+        (i, j)
+        for i, x in enumerate(lvals)
+        for j, y in enumerate(rvals)
+        if lo <= y - x <= hi and (not use_eq or i % 3 == j % 3)
+    )
+    assert got == want, (lo, hi, use_eq, strict, len(got), len(want))

@@ -16,7 +16,7 @@ SNAPSHOT = [
     ("join_multiway_star", "3 broadcasts; single fact-side shuffle"),
     ("join_theta_band", "(brand, price-bucket) equi join + band refine — r8 sf1 fix, no BNLJ"),
     ("join_asof", "union-tag + single keyed window, no per-row subquery"),
-    ("join_range_interval", "bucket explode → shuffled equi-join → residual"),
+    ("join_range_interval", "plain band join; the compiled rule buckets it: explode → shuffled equi-join → residual"),
     ("win_topk_per_group", "WindowGroupLimit pushes rn<=3 into the sort"),
     ("limit_topk", "TakeOrderedAndProject, no global sort"),
     ("dedup_jaccard_shingles", "shuffled-hash candidate join, narrow pair rows"),
@@ -27,7 +27,7 @@ SNAPSHOT = [
     ("dedup_substring_spans", "int-space span keys; two map-combinable aggregates"),
     ("profile_key_skew", "TakeOrderedAndProject top-10, no global window"),
     ("er_blocking_pairs", "block-key equi-join + levenshtein residual, no BNLJ"),
-    ("join_auto_band", "plain band predicate auto-bucketed: equi join + refine, no BNLJ"),
+    ("join_auto_band", "plain band predicate with a user_id equi key: hash join + band residual, no BNLJ"),
     ("join_cbo_reordered_star", "ANALYZE stats + CBO: fact-first syntax re-sequenced by cost"),
     ("join_auto_asof", "as-of derived from the naive predicate: one shuffle + keyed window"),
     ("join_sql_band", "naive band in spark.sql() TEXT rewritten by the compiled Catalyst rule"),
@@ -50,7 +50,7 @@ SNAPSHOT = [
     ("dedup_embedding_ann", "per-cell GEMM candidate scoring + exact refine; cell join, never corpus self-join"),
     ("dedup_image_dhash_png", "PNG-decoded dhash through the shared banded-LSH scaffold, no BNLJ"),
     ("dedup_simhash64_tf", "TF-weighted 64-bit simhash; 4x16-bit band equi-join, sparse report"),
-    ("text_fuzzy_levenshtein", "id band auto-bucketed (lang alone is a skew key); levenshtein only on band pairs"),
+    ("text_fuzzy_levenshtein", "partner ids exploded, (lang, id) equi join (lang alone is a skew key); levenshtein only on band pairs"),
     ("text_bigram_perplexity", "broadcast bigram LM; nano-unit long sum; NTILE only on per-doc scores"),
     ("dedup_semantic_clusters", "ladder-K centroid broadcast; cluster-id shuffle scopes the quadratic stage"),
     # r11
