@@ -3,9 +3,10 @@
 The operators are DataFrame plans — no MLlib, no Python UDFs — so
 they inherit partial+final aggregation, AQE, and broadcast decisions
 like any other query, and they scale exactly like the aggregations they
-are made of. One exception: ml_gbt_residual_stumps reduces the corpus
-to a 24-cell histogram in Spark and fits its stumps from it in one
-Python task.
+are made of. Two exceptions share one path (_fit_in_one_task):
+ml_adaboost_stumps and ml_gbt_residual_stumps reduce the corpus to a
+histogram of at most 66 cells in Spark and fit their stumps from it in
+one Python task.
 """
 
 from __future__ import annotations
@@ -691,27 +692,86 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # - Final vote sign(a1*h1 + a2*h2) with a_k = ln r_k never evaluates a
 #   log: when the stumps agree the sign is theirs; when they disagree it
 #   is sign(ln r1 - ln r2) = sign(r1 - r2), decided by cross-multiplying
-#   the exact integer odds (decimal(38,0) so the products cannot wrap;
-#   per-round weighted-error masses stay under ~2n^2, fine to ~1e9 rows
-#   per partition-group — beyond that, the same decimals carry it).
-# - Degenerate e=0 rounds (a perfect stump) would make r infinite; the
-#   cross-multiplied comparison then deterministically prefers the other
-#   stump — semantically moot (sign agrees with the perfect stump on
-#   every row it got right) and identical in both engines.
+#   the exact integer odds (Python integers in the Spark trainer,
+#   decimal(38,0) in the oracle so the products cannot wrap; per-round
+#   weighted-error masses stay under ~2n^2).
+# - A perfect stump 1 (e1 = 0) would make r1 infinite. Instead every
+#   round-2 weight is e1 = 0, all 64 candidates tie at e2 = 0, the
+#   tie-break crowns (thr 0.25, pol -1), and the odds test (0 > 0)
+#   gives that stump every vote, even where it misses rows stump 1 got
+#   right. Deterministic and identical in both engines, not optimal.
 #
 # Candidate grid: 32 fixed value-thresholds (k*0.5 + 0.25 — offset off
 # the fixture's 2-decimal values so x <= thr never ties) x 2 polarities;
-# argmin tie-break ORDER BY (e, pol, thr). Each fit is ONE narrow
-# conditional-sum aggregate (see fit()) — no candidate cross-join, no
-# row multiplication, so corpus cost is 3 scans (fit, refit, vote)
-# regardless of grid size, and nothing is collected. At fixture scale
-# the wall clock is job-overhead-bound (~3 chained jobs), not data-bound.
+# argmin tie-break ORDER BY (e, pol, thr).
+#
+# Spark shape: a stump sees a row only through the value's bin among
+# the sorted thresholds, b = #{thr : NOT x <= thr} in 0..32 (32 for a
+# NULL x, which no threshold admits): stump (k, pol) predicts pol
+# exactly when b <= k. So both fits, the round-2 weights and the vote
+# are sums over the <= 66 (b, y) cells of one count histogram. Corpus
+# cost: ONE events scan, a groupBy(b, y) count folded into one row; one
+# Python task fits both rounds and the vote from the cells (_ada_train)
+# in exact integers — the fold-and-fit path GBT also takes.
 
 _ADA_THRS = [k * 0.5 + 0.25 for k in range(32)]
+_ADA_FIT_SCHEMA = (
+    "thr1 double, pol1 int, e1 bigint, thr2 double, pol2 int, e2 bigint,"
+    " n_correct bigint, n_rows bigint"
+)
+
+
+def _fit_in_one_task(cells: DataFrame, train, schema: str) -> DataFrame:
+    """Fold the few integer rows of ``cells`` into ONE row and run
+    ``train(cells) -> list of rows`` (``schema``) on them in one
+    mapInPandas task. The fold is a global collect_list: a global
+    aggregate yields its row even over an empty corpus, where a groupBy
+    yields none, so ``train`` always runs; coalesce(1) lets the fold
+    reuse the cells' shuffle, so the plan runs as 2 jobs. A NULL cell
+    fails the task (int(None)) rather than guess."""
+    cols = cells.columns
+    names = [f.split()[0] for f in schema.split(", ")]
+
+    def fit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row for h in pdf["h"]
+                    for row in train([tuple(int(c[k]) for k in cols) for c in h])]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    one = cells.coalesce(1).agg(F.collect_list(F.struct(*cols)).alias("h"))
+    return one.mapInPandas(fit, schema)
 
 
 def _ada_pred(x: str, thr: str, pol: str) -> str:
     return f"(CASE WHEN {x} <= {thr} THEN {pol} ELSE -{pol} END)"
+
+
+def _ada_train(cells: list[tuple]) -> list[tuple]:
+    """Both boosting rounds and the vote from the (b, y, count) cells →
+    [(thr1, pol1, e1, thr2, pol2, e2, n_correct, n_rows)], or no row for
+    an empty corpus (the oracle's GROUP BY over no rows). min() over
+    (e, pol, k) is ORDER BY (e, pol, thr) LIMIT 1: thr ascends with k."""
+    n = sum(c for _, _, c in cells)
+    if n == 0:
+        return []
+
+    def h(k: int, pol: int, b: int) -> int:
+        return pol if b <= k else -pol
+
+    def best(w: list[int]) -> tuple[int, int, int]:
+        return min(
+            (sum(c * wc for (b, y, c), wc in zip(cells, w) if h(k, pol, b) != y), pol, k)
+            for k in range(len(_ADA_THRS)) for pol in (1, -1)
+        )
+
+    e1, pol1, k1 = best([1] * len(cells))
+    e2, pol2, k2 = best([n - e1 if h(k1, pol1, b) != y else e1 for b, y, _ in cells])
+    # Where the stumps agree either one casts the vote, so every row
+    # takes the prediction of the stump that wins the odds test.
+    stump1_wins = (n - e1) * e2 > 2 * e1 * e1 * (n - e1) - e1 * e2
+    k, pol = (k1, pol1) if stump1_wins else (k2, pol2)
+    n_correct = sum(c for b, y, c in cells if h(k, pol, b) == y)
+    return [(_ADA_THRS[k1], pol1, e1, _ADA_THRS[k2], pol2, e2, n_correct, n)]
 
 
 def _ada_oracle() -> str:
@@ -767,94 +827,17 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two boosting rounds of decision stumps over events.value, exact in
     integer arithmetic end to end (header comment) — model selection,
     reweighting, and the combined vote all hash-match the SQL oracle.
-    One Catalyst plan: 64-row candidate grid and both 1-row stumps
-    broadcast into three corpus scans; nothing reaches the driver."""
-    ev = table(spark, sf_dir, "events")
-    r = ev.select(
-        F.when(F.col("event_type") == "purchase", 1).otherwise(-1).alias("y"),
-        F.col("value").alias("x"),
-    )
-
-    def pred(x, thr, pol):
-        return F.when(x <= thr, pol).otherwise(-pol)
-
-    def fit(weighted, wcol):
-        # One narrow pass: 32 conditional sums (pol=+1 errors) + the
-        # total weight; pol=-1 errors are their complements (the flipped
-        # stump misclassifies exactly the complementary weight mass), so
-        # no candidate cross-join and no row multiplication — the fit
-        # cost is a single partial+final aggregate regardless of grid
-        # size. The 64 (e, pol, thr) rows unfold from the 1-row result
-        # JVM-side; argmin is a 64-row TakeOrdered.
-        # Built as SQL strings (F.expr): the Column-API threshold loop
-        # cost thousands of py4j round-trips of pure driver wall per
-        # build (r14 cProfile, OPTIMIZATION_r14.md item 5). {t}D literals keep
-        # the original DOUBLE threshold type (SQL `0.25` is DECIMAL).
-        aggs = [
-            f"SUM(CASE WHEN (CASE WHEN x <= {t}D THEN 1 ELSE -1 END) <> y"
-            f" THEN {wcol} ELSE 0 END) AS e{i}"
-            for i, t in enumerate(_ADA_THRS)
-        ]
-        one = weighted.agg(F.expr(f"SUM({wcol}) AS wt"), *[F.expr(a) for a in aggs])
-        structs = "array(" + ", ".join(
-            f"struct(e{i} AS e, 1 AS pol, {t}D AS thr),"
-            f" struct(wt - e{i} AS e, -1 AS pol, {t}D AS thr)"
-            for i, t in enumerate(_ADA_THRS)
-        ) + ")"
-        cand = one.select(F.expr(f"explode({structs}) AS c"), F.col("wt")).select(
-            "c.thr", "c.pol", "c.e", "wt"
-        )
-        return cand.orderBy("e", "pol", "thr").limit(1)
-
-    from sim_spark.scratch import track_cache
-
-    # The 1-row fitted stumps feed 2-3 downstream branches each; cached,
-    # every fit aggregate runs exactly once (3 corpus scans total).
-    # Round 1 weights are all 1, so round 1's total weight IS the row
-    # count — n rides along in b1 and no separate count scan exists.
-    b1 = track_cache(
-        fit(r.withColumn("w", F.lit(1).cast("bigint")), "w").select(
-            F.col("thr").alias("thr1"),
-            F.col("pol").alias("pol1"),
-            F.col("e").cast("bigint").alias("e1"),
-            F.col("wt").cast("bigint").alias("n"),
-        )
-    )
-    w2 = (
-        r.crossJoin(F.broadcast(b1))
-        .select(
-            "y",
-            "x",
-            F.when(pred(F.col("x"), F.col("thr1"), F.col("pol1")) != F.col("y"), F.col("n") - F.col("e1"))
-            .otherwise(F.col("e1"))
-            .cast("bigint")
-            .alias("w"),
-        )
-    )
-    b2 = track_cache(
-        fit(w2, "w").select(
-            F.col("thr").alias("thr2"), F.col("pol").alias("pol2"), F.col("e").cast("bigint").alias("e2")
-        )
-    )
-
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    h1 = pred(F.col("x"), F.col("thr1"), F.col("pol1"))
-    h2 = pred(F.col("x"), F.col("thr2"), F.col("pol2"))
-    stump1_wins = dec(F.col("n") - F.col("e1")) * F.col("e2") > (
-        2 * dec(F.col("e1")) * F.col("e1") * (F.col("n") - F.col("e1"))
-        - dec(F.col("e1")) * F.col("e2")
-    )
-    combined = F.when(h1 == h2, h1).when(stump1_wins, h1).otherwise(h2)
-    return (
-        r.crossJoin(F.broadcast(b1))
-        .crossJoin(F.broadcast(b2))
-        .groupBy("thr1", "pol1", "e1", "thr2", "pol2", "e2")
-        .agg(
-            F.sum(F.when(combined == F.col("y"), 1).otherwise(0)).cast("bigint").alias("n_correct"),
-            F.max("n").cast("bigint").alias("n_rows"),
-        )
-        .select("thr1", "pol1", "e1", "thr2", "pol2", "e2", "n_correct", "n_rows")
-    )
+    Spark shape: one events scan reduced to (b, y) counts, b the value's
+    bin among the 32 thresholds; one mapInPandas task fits both rounds
+    and the vote from the <= 66 cells (_ada_train). No cache, nothing
+    collected."""
+    # {t}D literals keep the DOUBLE thresholds (SQL `0.25` is DECIMAL).
+    thrs = ", ".join(f"{t}D" for t in _ADA_THRS)
+    cells = table(spark, sf_dir, "events").selectExpr(
+        f"size(filter(array({thrs}), t -> NOT coalesce(value <= t, false))) AS b",
+        "CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END AS y",
+    ).groupBy("b", "y").count()
+    return _fit_in_one_task(cells, _ada_train, _ADA_FIT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -892,8 +875,8 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   Σ r^2 = Σ_x (100*q_x - 20*c(x)*s_x + n_x*c(x)^2).
 # Corpus cost: ONE events scan, a groupBy(hour) reduce folded into one
 # row of <= 24 cells; one Python task fits both rounds from the cells
-# (_gbt_train) in exact integers. The two-stage "histogram" reduce of
-# SURVEY.md §2.
+# (_gbt_train) in exact integers — AdaBoost's path, _fit_in_one_task.
+# The two-stage "histogram" reduce of SURVEY.md §2.
 
 _GBT_THRS = list(range(23))
 _GBT_FIT_SCHEMA = (
@@ -961,21 +944,6 @@ def _gbt_train(hist: list[tuple]) -> tuple | None:
         model += win
         sses.append(sse(c))
     return (*model, *sses)
-
-
-def _gbt_fit_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The one task: each input row holds the whole histogram."""
-    names = [f.split()[0] for f in _GBT_FIT_SCHEMA.split(", ")]
-    for pdf in batches:
-        fits = [
-            _gbt_train([(int(h["x"]), int(h["n"]), int(h["s"]), int(h["q"]))
-                        for h in cells])
-            for cells in pdf["h"]
-        ]
-        yield pd.DataFrame(
-            [fit or (None,) * len(names) for fit in fits], columns=names,
-            dtype=object,
-        )
 
 
 def _gbt_cand_sql(src: str, rcol: str) -> str:
@@ -1078,12 +1046,10 @@ def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     values and a cross-multiplied exact tournament for stump selection
     (block comment above). Reports the fitted model plus the monotone
     mse0 > mse1 > mse2 training trace. Spark shape: one events scan
-    reduced to a per-hour histogram (count, Σyc, Σyc² as DECIMAL(38,0)),
-    folded into ONE row by a global collect_list — a global aggregate
-    yields its row even over an empty corpus, where a groupBy yields
-    none; coalesce(1) lets the fold reuse the hour shuffle, so the plan
-    runs as 2 jobs. One mapInPandas task trains both rounds from the
-    <= 24 cells (_gbt_train); the milli-unit rescale and the MSE
+    reduced to a per-hour histogram (count, Σyc, Σyc² as DECIMAL(38,0));
+    one mapInPandas task trains both rounds from the <= 24 cells
+    (_gbt_train, through _fit_in_one_task), and a corpus without a model
+    reports one all-NULL row; the milli-unit rescale and the MSE
     division stay in Spark SQL. No cache, nothing collected."""
     e = table(spark, sf_dir, "events")
     hist = (
@@ -1097,14 +1063,13 @@ def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("yc").alias("s"),
             F.sum(F.col("yc").cast("decimal(38,0)") * F.col("yc")).alias("q"),
         )
-        .coalesce(1)
-        .agg(F.collect_list(F.struct("x", "n", "s", "q")).alias("h"))
     )
     # 1000.0D / 1000000.0D: SQL `1000.0` parses as DECIMAL; the D suffix
     # keeps the DOUBLE arithmetic of the Column API (long / 1000.0).
     milli = lambda c: f"ROUND({c} / 1000.0D, 6)"  # noqa: E731
     mse = lambda c: f"ROUND(CAST({c} AS DOUBLE) / (1000000.0D * n), 6)"  # noqa: E731
-    return hist.mapInPandas(_gbt_fit_batches, _GBT_FIT_SCHEMA).selectExpr(
+    fit = _fit_in_one_task(hist, lambda h: [_gbt_train(h) or (None,) * 13], _GBT_FIT_SCHEMA)
+    return fit.selectExpr(
         "n AS n_rows",
         f"{milli('f0m')} AS f0",
         "thr1",

@@ -100,3 +100,24 @@ def test_time_key_releases_tracked_caches_after_every_sample(spark, monkeypatch)
     for s in samples:
         assert s["build_s"] > 0 and s["exec_s"] > 0
         assert s["build_s"] + s["exec_s"] <= s["wall_s"] + 1e-9
+
+
+def test_measure_plans_takes_every_headline_key(spark, monkeypatch, tmp_path):
+    """`tools/measure.py plans` resolves a key the way bench.time_key
+    does: the bench-only legs of bench.HEADLINE (bench.SPECIAL) are not
+    registry keys, and looking them up in the registry alone raised
+    KeyError partway through a headline plan diff."""
+    import bench
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(bench.__file__), "tools"))
+    import measure
+
+    keys = [k for k in bench.HEADLINE if k in bench.SPECIAL]
+    assert keys
+    monkeypatch.setattr(bench, "open_session", lambda app: (spark, 1))
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(measure, "ROOT", str(tmp_path))
+    monkeypatch.setattr(measure, "SF_DIR", "/root/testdata/sf0.001")
+    measure.cmd_plans("t", "x", keys)
+    for k in keys:
+        assert "Physical Plan" in (tmp_path / "plans" / "t" / f"{k}_x.txt").read_text()

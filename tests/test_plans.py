@@ -20,9 +20,10 @@ def plan(spark, key: str) -> str:
     # Plan shape must not depend on which tests ran earlier in the
     # session: a materialized track_cache entry from a prior execution
     # of the SAME key substitutes InMemoryRelation fragments and can
-    # change the static plan (ml_adaboost_stumps gains a 4th BNLJ after
-    # its own parity run). Release tracked caches so every snapshot is
-    # the cold-session plan the spec was written against.
+    # change the static plan (a cached intermediate shows up as an
+    # InMemoryTableScan where the cold plan reads parquet). Release
+    # tracked caches so every snapshot is the cold-session plan the
+    # spec was written against.
     from sim_spark.scratch import release_tracked_caches
 
     release_tracked_caches()
@@ -632,6 +633,20 @@ def test_gbt_fit_has_no_corpus_candidate_join(spark):
     assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p, p
 
 
+def test_adaboost_fit_has_no_corpus_candidate_join(spark):
+    """Both AdaBoost rounds and the vote train from ONE (value bin,
+    label) histogram: the plan scans events exactly once and never joins
+    data rows against the 64 candidates or a fitted stump. It takes no
+    cache either: an InMemoryRelation would mean a tracked round-trip
+    between rounds."""
+    p = plan(spark, "ml_adaboost_stumps")
+    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
+    scans = re.findall(r"Location: \w+ \[[^\]]*/events\.parquet\]", p)
+    assert len(scans) == 1, p
+    assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p, p
+
+
 def test_winnowing_shuffles_on_doc_only(spark):
     """Winnowing is per-document: the gram explode is narrow, the window
     min and the fingerprint rollup both key on doc_id — exactly one
@@ -812,8 +827,12 @@ _HEADLINE_SPECS: dict[str, dict] = {
     "ts_autocorr": dict(bnlj=6, require=["Window"]),
     "events_ab_experiment": dict(require=["HashAggregate"]),
     "join_cbo_reordered_star": dict(require=["BroadcastHashJoin"]),
-    # per-round model-row attaches (3 boosting rounds)
-    "ml_adaboost_stumps": dict(bnlj=3, require=["TakeOrderedAndProject"]),
+    # both boosting rounds and the vote fit in one task from a
+    # (value bin, label) histogram: no model-row attach, no cache
+    "ml_adaboost_stumps": dict(
+        require=["MapInPandas"],
+        forbid=["InMemoryRelation", "BroadcastNestedLoopJoin"],
+    ),
     "graph_betweenness_sampled": dict(
         require=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"]
     ),

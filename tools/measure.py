@@ -75,7 +75,8 @@ def cmd_plans(round_: str, tag: str, keys: list[str]) -> None:
     out_dir = os.path.join(ROOT, "plans", round_)
     os.makedirs(out_dir, exist_ok=True)
     for key in keys:
-        txt = explain_formatted(QUERIES[key](spark, SF_DIR))
+        fn = bench.SPECIAL.get(key) or QUERIES[key]
+        txt = explain_formatted(fn(spark, SF_DIR))
         path = os.path.join(out_dir, f"{key}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)
