@@ -1,4 +1,8 @@
-"""FLAC codec — dependency-free, mono 16-bit, real (round 11).
+"""FLAC codec — dependency-free, mono and stereo, 8..24-bit, real.
+
+One encoder, :func:`encode_flac` (samples of shape (n,) or (2, n);
+``lpc=`` writes a given LPC predictor), and one decoder,
+:func:`decode_flac` (-> (sample_rate, (channels, n) samples)).
 
 The lossless complement to ops/jpeg.py: rice/Golomb residual coding is
 genuine entropy coding, and because FLAC is lossless the WHOLE pipeline
@@ -14,22 +18,22 @@ Implemented subset (a spec-conformant stream any FLAC decoder reads):
 
 - container: "fLaC" magic, STREAMINFO metadata block (blocksizes,
   sample rate, channels, bps, total samples, REAL MD5 of the unencoded
-  little-endian sample stream — verified on decode),
+  interleaved little-endian sample stream — verified on decode),
 - frames: sync code 0b11111111111110 + blocking strategy, coded block
   size / sample rate / channel / bps fields, UTF-8-coded frame number,
   CRC-8 header checksum and CRC-16 frame checksum (both computed and
   VERIFIED),
 - subframes: CONSTANT, VERBATIM, FIXED orders 0..4 (encode picks the
-  cheapest of constant/fixed-0..2 per frame like a real encoder), and
-  — decode-side — LPC orders 1..32 (QLP precision/shift/coefficient
-  parse + integer prediction), because real-world FLAC files
-  overwhelmingly use LPC; round-trip-tested via the LPC test writer.
+  cheapest of constant/fixed-0..2 per frame like a real encoder, with
+  wasted-bits stripping), and LPC orders 1..32 (QLP precision/shift/
+  coefficient parse + integer prediction), because real-world FLAC
+  files overwhelmingly use LPC; the encoder writes a given predictor.
   Residuals are rice-coded (4/5-bit parameter, zigzag, escape to raw)
   in 2^po partitions, each with its own parameter; the encoder picks
   the cheapest po in 0..6.
 - stereo: per-frame channel decorrelation (independent, left/side,
   right/side, mid/side with the exact (mid<<1)|(side&1) inverse),
-  chosen by cost like a real encoder; MD5 over the interleaved stream.
+  chosen by cost like a real encoder.
 
 The decoder validates CRC-8, CRC-16, and the STREAMINFO MD5, so a
 single corrupted bit anywhere in the stream is caught — tested.
@@ -132,18 +136,6 @@ class _BitWriter:
                 self._n -= 8
                 self.out.append((self._acc >> self._n) & 0xFF)
             self._acc &= (1 << self._n) - 1
-
-    def put_many(self, values: np.ndarray, nbits: np.ndarray) -> None:
-        """``put(v, n)`` for every (v, n) pair, packed in one numpy pass.
-        Each value must already fit its width (see :func:`_pack_bits`)."""
-        packed = _pack_bits(
-            np.concatenate([[self._acc], values]),
-            np.concatenate([[self._n], nbits]),
-        )
-        total = self._n + int(np.sum(nbits))
-        full, self._n = total >> 3, total & 7
-        self.out += packed[:full].tobytes()
-        self._acc = int(packed[full]) >> (8 - self._n) if self._n else 0
 
     def pad_to_byte(self) -> None:
         if self._n:
@@ -571,23 +563,7 @@ def _pack_samples(arr: np.ndarray, bps: int) -> bytes:
     )
 
 
-def encode_flac(
-    samples: np.ndarray, sample_rate: int, bps: int = 16
-) -> bytes:
-    """Mono samples -> FLAC stream (STREAMINFO + frames) at any
-    supported depth (8/12/16/20/24 bits, r12)."""
-    assert bps in _BPS_CODE, bps
-    s = np.asarray(samples, dtype=np.int64)
-    lim = 1 << (bps - 1)
-    assert s.size and np.all((s >= -lim) & (s <= lim - 1))
-    md5 = hashlib.md5(_pack_samples(s, bps)).digest()
-    frames = []
-    for frame_no, blocks in _stream_blocks(s):
-        frames += _mono_frames(blocks, frame_no, bps)
-    return _streaminfo(s.size, sample_rate, 1, bps, md5) + _emit(frames)
-
-
-def _frame_header(bs: int, frame_no: int, ch_code: int, bps: int = 16) -> bytes:
+def _frame_header(bs: int, frame_no: int, ch_code: int, bps: int) -> bytes:
     # block size code: 0b1000 = 256 exactly, 0b0111 = 16-bit size after
     # the frame number
     if bs == 256:
@@ -605,7 +581,7 @@ def _frame_header(bs: int, frame_no: int, ch_code: int, bps: int = 16) -> bytes:
     return header + bytes([_crc8(header)])
 
 
-def _mono_frames(blocks: np.ndarray, frame_no: int, bps: int = 16) -> list:
+def _mono_frames(blocks: np.ndarray, frame_no: int, bps: int) -> list:
     """(header, subframes) of mono frames, one per row of ``blocks``,
     numbered from ``frame_no``: each the cheapest of CONSTANT / FIXED
     order 0..2, with wasted-bits stripping and per-partition rice
@@ -617,16 +593,29 @@ def _mono_frames(blocks: np.ndarray, frame_no: int, bps: int = 16) -> list:
     ]
 
 
+def _lpc_frames(
+    blocks: np.ndarray, frame_no: int, bps: int,
+    coefs: list[int], precision: int, shift: int,
+) -> list:
+    """(header, subframes) of mono frames, one per row of ``blocks``,
+    numbered from ``frame_no``: each one LPC subframe of the given
+    quantized predictor (warm-up = the row's first len(coefs) samples)."""
+    rows, bs = blocks.shape
+    return [
+        (_frame_header(bs, frame_no + r, 0, bps),
+         [_lpc_spec(blocks[r], bps, coefs, precision, shift)])
+        for r in range(rows)
+    ]
+
+
 # Stereo channel assignments in cost-out order (ties keep the first):
 # frame channel code -> the two coded channels, as indices into
 # (left, right, side, mid). side = L - R at bps+1; mid = (L + R) >> 1.
 _STEREO = {0b0001: (0, 1), 0b1000: (0, 2), 0b1001: (2, 1), 0b1010: (3, 2)}
-_STEREO_BPS = np.array([16, 16, 17, 16])
 
 
 def _stereo_frames(
-    left: np.ndarray, right: np.ndarray, frame_no: int,
-    force_code: int | None = None,
+    left: np.ndarray, right: np.ndarray, frame_no: int, bps: int
 ) -> list:
     """(header, subframes) of stereo frames, one per row of
     ``left``/``right``, numbered from ``frame_no``. Per frame the
@@ -636,53 +625,52 @@ def _stereo_frames(
     stripping) and emit the cheapest."""
     rows, bs = left.shape
     chans = np.concatenate([left, right, left - right, (left + right) >> 1])
-    bps = np.repeat(_STEREO_BPS, rows)
-    plan = _FixedPlan(chans, bps)
+    widths = np.repeat(bps + np.array([0, 0, 1, 0]), rows)
+    plan = _FixedPlan(chans, widths)
     const = np.all(chans == chans[:, :1], axis=1)
-    ch_cost = 8 + np.where(const, bps, plan.cost).reshape(4, rows)
-    if force_code is None:
-        opt = np.array([ch_cost[a] + ch_cost[b] for a, b in _STEREO.values()])
-        picks = [list(_STEREO)[i] for i in opt.argmin(axis=0)]
-    else:
-        picks = [force_code] * rows
+    ch_cost = 8 + np.where(const, widths, plan.cost).reshape(4, rows)
+    opt = np.array([ch_cost[a] + ch_cost[b] for a, b in _STEREO.values()])
+    picks = [list(_STEREO)[i] for i in opt.argmin(axis=0)]
     coded = np.array(
         [c * rows + r for r, code in enumerate(picks) for c in _STEREO[code]]
     )
-    specs = _subframe_specs(chans[coded], bps[coded], plan.take(coded))
+    specs = _subframe_specs(chans[coded], widths[coded], plan.take(coded))
     return [
-        (_frame_header(bs, frame_no + r, code, 16), specs[2 * r : 2 * r + 2])
+        (_frame_header(bs, frame_no + r, code, bps), specs[2 * r : 2 * r + 2])
         for r, code in enumerate(picks)
     ]
 
 
-def _encode_frame_stereo(
-    left: np.ndarray, right: np.ndarray, frame_no: int,
-    force_code: int | None = None,
+def encode_flac(
+    samples: np.ndarray, sample_rate: int, bps: int = 16, lpc: tuple | None = None
 ) -> bytes:
-    """One stereo frame; ``force_code`` overrides the cost-out."""
-    return _emit(_stereo_frames(left[None], right[None], frame_no, force_code))
-
-
-def encode_flac_stereo(
-    left: np.ndarray, right: np.ndarray, sample_rate: int
-) -> bytes:
-    """Stereo int16 -> FLAC stream with per-frame decorrelation."""
-    lft = np.asarray(left, dtype=np.int64)
-    rgt = np.asarray(right, dtype=np.int64)
-    assert lft.size == rgt.size and lft.size
-    for s in (lft, rgt):
-        assert np.all((s >= -32768) & (s <= 32767))
-    inter = np.empty(2 * lft.size, dtype="<i2")
-    inter[0::2] = lft.astype("<i2")
-    inter[1::2] = rgt.astype("<i2")
-    md5 = hashlib.md5(inter.tobytes()).digest()
+    """Samples of shape (n,) (mono) or (2, n) (left, right) -> FLAC
+    stream (STREAMINFO + frames) at any supported depth (8/12/16/20/24
+    bits). Mono frames are the cheapest CONSTANT / FIXED subframe;
+    stereo frames pick their channel decorrelation by cost. With
+    ``lpc = (coefs, precision, shift)`` (mono only) every frame carries
+    that LPC predictor instead, except a tail frame too short for its
+    warm-up, which goes FIXED."""
+    assert bps in _BPS_CODE, bps
+    chans = np.atleast_2d(np.asarray(samples, dtype=np.int64))
+    nch, n = chans.shape
+    lim = 1 << (bps - 1)
+    assert n and nch in (1, 2) and (lpc is None or nch == 1)
+    assert np.all((chans >= -lim) & (chans <= lim - 1))
+    # the MD5 covers the interleaved stream, per spec
+    md5 = hashlib.md5(_pack_samples(chans.T.ravel(), bps)).digest()
     frames = []
-    for frame_no, lb, rb in _stream_blocks(lft, rgt):
-        frames += _stereo_frames(lb, rb, frame_no)
-    return _streaminfo(lft.size, sample_rate, 2, 16, md5) + _emit(frames)
+    for frame_no, *blocks in _stream_blocks(*chans):
+        if nch == 2:
+            frames += _stereo_frames(*blocks, frame_no, bps)
+        elif lpc is not None and blocks[0].shape[1] > len(lpc[0]):
+            frames += _lpc_frames(blocks[0], frame_no, bps, *lpc)
+        else:
+            frames += _mono_frames(blocks[0], frame_no, bps)
+    return _streaminfo(n, sample_rate, nch, bps, md5) + _emit(frames)
 
 
-def _decode_stream(payload: bytes, want_channels: int):
+def _decode_stream(payload: bytes):
     if payload[:4] != b"fLaC":
         raise ValueError("not a FLAC stream")
     pos = 4
@@ -706,11 +694,8 @@ def _decode_stream(payload: bytes, want_channels: int):
             total = r.bits(36)
             if bps not in _BPS_CODE:
                 raise NotImplementedError(f"unsupported FLAC bit depth {bps}")
-            if nch != want_channels:
-                raise NotImplementedError(
-                    f"stream has {nch} channel(s); use "
-                    f"{'decode_flac' if nch == 1 else 'decode_flac_stereo'}"
-                )
+            if nch > 2:
+                raise NotImplementedError(f"{nch}-channel FLAC")
             md5_expect = body[18:34]
         pos += 4 + length
         if last:
@@ -725,10 +710,10 @@ def _decode_stream(payload: bytes, want_channels: int):
     got = 0
     while got < total and pos < len(payload):
         frame, consumed = _decode_frame(payload, pos, bps)
-        if (frame.ndim == 2) != (want_channels == 2):
+        if len(frame) != nch:
             raise ValueError("frame channel layout contradicts STREAMINFO")
         frames.append(frame)
-        got += frame.shape[-1]
+        got += frame.shape[1]
         pos += consumed
     if got != total:
         raise ValueError(
@@ -739,39 +724,25 @@ def _decode_stream(payload: bytes, want_channels: int):
 
 
 def decode_flac(payload: bytes):
-    """Mono FLAC stream -> (sample_rate, int16 samples). Verifies frame
-    CRC-8/CRC-16 and the STREAMINFO MD5 of the decoded stream."""
+    """FLAC stream -> (sample_rate, samples): ``samples`` is (channels,
+    n), int16 up to 16 bits per sample, else int32. Undoes each stereo
+    frame's channel decorrelation (independent / left-side / right-side
+    / mid-side) and verifies frame CRC-8/CRC-16 and the STREAMINFO MD5
+    over the interleaved stream, so a reconstruction or interleave bug
+    cannot pass."""
     try:
-        sample_rate, frames, md5_expect, bps = _decode_stream(payload, 1)
+        sample_rate, frames, md5_expect, bps = _decode_stream(payload)
     except (IndexError, OverflowError, struct.error) as e:  # corrupt stream
         raise ValueError(f"truncated or corrupt FLAC: {e!r}") from e
-    arr = np.concatenate(frames)
-    if hashlib.md5(_pack_samples(arr, bps)).digest() != md5_expect:
+    chans = np.concatenate(frames, axis=1)
+    if hashlib.md5(_pack_samples(chans.T.ravel(), bps)).digest() != md5_expect:
         raise ValueError("FLAC MD5 mismatch: decoded stream corrupt")
-    return sample_rate, arr.astype("<i2") if bps <= 16 else arr.astype("<i4")
-
-
-def decode_flac_stereo(payload: bytes):
-    """Stereo FLAC -> (sample_rate, left int16, right int16). Undoes the
-    per-frame channel decorrelation (independent / left-side /
-    right-side / mid-side) and verifies all three checksums — the MD5 is
-    computed over the interleaved L,R stream exactly as the spec says,
-    so a decorrelation-mode or reconstruction bug cannot pass."""
-    try:
-        sample_rate, frames, md5_expect, bps = _decode_stream(payload, 2)
-    except (IndexError, OverflowError, struct.error) as e:  # corrupt stream
-        raise ValueError(f"truncated or corrupt FLAC: {e!r}") from e
-    lr = np.concatenate(frames, axis=1)
-    inter = np.empty(2 * lr.shape[1], dtype=np.int64)
-    inter[0::2] = lr[0]
-    inter[1::2] = lr[1]
-    if hashlib.md5(_pack_samples(inter, bps)).digest() != md5_expect:
-        raise ValueError("FLAC MD5 mismatch: decoded stream corrupt")
-    dt = "<i2" if bps <= 16 else "<i4"
-    return sample_rate, lr[0].astype(dt), lr[1].astype(dt)
+    return sample_rate, chans.astype("<i2" if bps <= 16 else "<i4")
 
 
 def _decode_frame(payload: bytes, byte_pos: int, stream_bps: int = 16):
+    """One frame at ``byte_pos`` -> ((channels, bs) samples, bytes
+    consumed), both checksums verified."""
     r = _BitReader(payload, byte_pos)
     if r.bits(14) != 0b11111111111110:
         raise ValueError("lost frame sync")
@@ -806,7 +777,7 @@ def _decode_frame(payload: bytes, byte_pos: int, stream_bps: int = 16):
         raise ValueError("frame header CRC-8 mismatch")
 
     if ch_code == 0b0000:
-        frame = _decode_subframe(r, bs, bps)
+        frame = _decode_subframe(r, bs, bps)[None]
     else:
         bps1 = bps + 1 if ch_code == 0b1001 else bps  # RS: ch1 is the side
         bps2 = bps + 1 if ch_code in (0b1000, 0b1010) else bps  # LS/MS side
@@ -861,25 +832,15 @@ def _decode_subframe(r: _BitReader, bs: int, bps: int) -> np.ndarray:
         for _ in range(order):
             v = r.bits(bps)
             warm.append(v - full if v >= sign else v)
-        res = _read_residuals(r, bs, order)
-        # integrate `order` times from the warm-up samples
-        blk = np.empty(bs, dtype=np.int64)
-        blk[:order] = warm
-        if order == 0:
-            blk[:] = res
-        elif order == 1:
-            blk[1:] = np.cumsum(res) + blk[0]
-        elif order == 2:
-            for i, e in enumerate(res):
-                blk[i + 2] = e + 2 * blk[i + 1] - blk[i]
-        elif order == 3:
-            for i, e in enumerate(res):
-                blk[i + 3] = e + 3 * blk[i + 2] - 3 * blk[i + 1] + blk[i]
-        else:
-            for i, e in enumerate(res):
-                blk[i + 4] = (
-                    e + 4 * blk[i + 3] - 6 * blk[i + 2] + 4 * blk[i + 1] - blk[i]
-                )
+        if order > bs:
+            raise ValueError("FIXED warm-up longer than the block")
+        blk = np.array(_read_residuals(r, bs, order), dtype=np.int64)
+        # The order-k difference of the block is its residual: integrate
+        # `order` times, each level m seeded with the warm-up's m-th
+        # difference at its first defined sample.
+        warm = np.array(warm, dtype=np.int64)
+        for m in range(order - 1, -1, -1):
+            blk = np.cumsum(np.concatenate([np.diff(warm, m)[:1], blk]))
     elif sf_type >= 0b100000:  # LPC order 1..32 — what real files use
         order = (sf_type & 0b011111) + 1
         warm = []
@@ -1033,7 +994,7 @@ def formula_flac_stereo_samples(doc_id: int):
 
 def gen_flac_stereo_payload(doc_id: int) -> bytes:
     rate, left, right = formula_flac_stereo_samples(doc_id)
-    return encode_flac_stereo(left, right, rate)
+    return encode_flac(np.stack([left, right]), rate)
 
 
 def _lpc_spec(blk: np.ndarray, bps: int, coefs: list[int], precision: int, shift: int):
@@ -1059,51 +1020,6 @@ def _lpc_spec(blk: np.ndarray, bps: int, coefs: list[int], precision: int, shift
     nbits = sum(n for _, n in head) + int(bits[0])
     head, res = _residual_spec(zp[0], order, po[0], ks[0], head)
     return head, res, nbits
-
-
-def _encode_subframe_lpc(
-    body: _BitWriter,
-    blk: np.ndarray,
-    bps: int,
-    coefs: list[int],
-    precision: int,
-    shift: int,
-) -> None:
-    """Write one LPC subframe (:func:`_lpc_spec`) into ``body``."""
-    head, (zz, ks, lens), _nbits = _lpc_spec(blk, bps, coefs, precision, shift)
-    items = _rice_items(
-        zz, ks, lens, [0] * len(head), [v for v, _ in head], [n for _, n in head]
-    )
-    body.put_many(items[:, 0], items[:, 1])
-
-
-def encode_flac_lpc(
-    samples: np.ndarray,
-    sample_rate: int,
-    coefs: list[int],
-    precision: int,
-    shift: int,
-) -> bytes:
-    """Mono int16 samples -> FLAC stream whose every frame carries an
-    LPC subframe with the given quantized predictor (order = len(coefs),
-    warm-up = the first `order` samples of each frame). Exists so the
-    decoder's LPC path is exercised END TO END — container, frame
-    headers, CRCs, MD5 — under the multimodal_flac_lpc_decode hash
-    oracle, not just at frame level in unit tests."""
-    s = np.asarray(samples, dtype=np.int64)
-    assert s.size > len(coefs) and np.all((s >= -32768) & (s <= 32767))
-    md5 = hashlib.md5(s.astype("<i2").tobytes()).digest()
-    frames = []
-    for frame_no, start in enumerate(range(0, s.size, _BLOCKSIZE)):
-        blk = s[start : start + _BLOCKSIZE]
-        if blk.size <= len(coefs):
-            # a tail frame shorter than the predictor order cannot carry
-            # its warm-up — per-frame subframe freedom lets it go FIXED
-            frames += _mono_frames(blk[None], frame_no)
-        else:
-            spec = _lpc_spec(blk, 16, coefs, precision, shift)
-            frames.append((_frame_header(blk.size, frame_no, 0), [spec]))
-    return _streaminfo(s.size, sample_rate, 1, 16, md5) + _emit(frames)
 
 
 def formula_flac_lpc(doc_id: int):
@@ -1168,4 +1084,4 @@ def gen_flac_wasted_payload(doc_id: int) -> bytes:
 
 def gen_flac_lpc_payload(doc_id: int) -> bytes:
     rate, s, coefs, precision, shift = formula_flac_lpc(doc_id)
-    return encode_flac_lpc(s, rate, coefs, precision, shift)
+    return encode_flac(s, rate, lpc=(coefs, precision, shift))

@@ -46,8 +46,9 @@ def decode(payload: bytes) -> dict:
     Every branch decodes for real with dependency-free code: WAV and BMP
     with the ``struct`` parsers below, PNG with :func:`decode_png` (any
     color type and depth; the result carries ``channels`` and ``depth``
-    next to ``pixels``), JPEG, FLAC, GIF and TIFF with their ops/
-    codecs, and the bz2/gzip/zip/MP4/WARC/tar container walks. Only
+    next to ``pixels``), JPEG, FLAC (mono or stereo: ``samples`` is
+    (channels, n)), GIF and TIFF with their ops/ codecs, and the
+    bz2/gzip/zip/MP4/WARC/tar container walks. Only
     MP3/video sample decode raises ``NotImplementedError`` — its codecs
     are not in this environment and faking them would be dishonest."""
     if payload[:2] == b"BM":
@@ -73,20 +74,9 @@ def decode(payload: bytes) -> dict:
         w, h, px, _coeffs = _decode_any(payload)
         return {"kind": "jpeg", "width": w, "height": h, "pixels": px.tobytes()}
     if payload[:4] == b"fLaC":
-        from sim_spark.ops.flac import decode_flac, decode_flac_stereo
+        from sim_spark.ops.flac import decode_flac
 
-        if len(payload) < 42:  # fLaC + STREAMINFO block header + body
-            raise ValueError("truncated FLAC (no STREAMINFO)")
-        nch = ((payload[8 + 12] >> 1) & 0b111) + 1  # STREAMINFO channels
-        if nch == 2:
-            rate, left, right = decode_flac_stereo(payload)
-            return {
-                "kind": "flac",
-                "sample_rate": rate,
-                "left": left,
-                "right": right,
-            }
-        rate, samples = decode_flac(payload)
+        rate, samples = decode_flac(payload)  # (channels, n)
         return {"kind": "flac", "sample_rate": rate, "samples": samples}
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         from sim_spark.ops.gif import decode_gif

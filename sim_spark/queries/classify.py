@@ -870,9 +870,11 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark shape: every residual the model sees has the form 10*yc - c(x),
 # where c(x), the running prediction, is constant per hour. So a round's
 # candidate sums and every SSE are sums over a per-hour histogram of
-# n_x = rows, s_x = Σ yc and q_x = Σ yc^2:
-#   nl_t = Σ_{x<=t} n_x,   sl_t = Σ_{x<=t} (10*s_x - n_x*c(x)),
-#   Σ r^2 = Σ_x (100*q_x - 20*c(x)*s_x + n_x*c(x)^2).
+# n_x = rows, m_x = rows with a value, s_x = Σ yc and q_x = Σ yc^2:
+#   nl_t = Σ_{x<=t} n_x,   sl_t = Σ_{x<=t} (10*s_x - m_x*c(x)),
+#   Σ r^2 = Σ_x (100*q_x - 20*c(x)*s_x + m_x*c(x)^2).
+# A NULL value has a NULL residual: it counts in the oracle's COUNT(*)
+# (so in nl, f0's denominator and the MSE's) but in no SUM.
 # Corpus cost: ONE events scan, a groupBy(hour) reduce folded into one
 # row of <= 24 cells; one Python task fits both rounds from the cells
 # (_gbt_train) in exact integers — AdaBoost's path, _fit_in_one_task.
@@ -888,21 +890,21 @@ _GBT_FIT_SCHEMA = (
 
 def _gbt_stump(hist: list[tuple], c: list[int]) -> tuple | None:
     """SSE-optimal stump on the residuals 10*yc - c(x) of the sorted
-    histogram ``hist`` [(x, n, s, q)], ``c`` the prediction per cell →
+    histogram ``hist`` [(x, n, m, s, q)], ``c`` the prediction per cell →
     (t, nl, pl, pr), or None when no threshold leaves both sides
     non-empty. Cross-multiplied exact comparisons in threshold order:
     a candidate wins only by a strictly higher score, so ties keep the
     smallest threshold, the tournament's rule. The leaves are the same
     IEEE double operations Spark runs: floor(sl * 1.0 / nl + 0.5)."""
-    nt = sum(n for _, n, _, _ in hist)
-    st = sum(10 * s - n * cx for (_, n, s, _), cx in zip(hist, c))
+    nt = sum(n for _, n, _, _, _ in hist)
+    st = sum(10 * s - m * cx for (_, _, m, s, _), cx in zip(hist, c))
     best = None
     nl = sl = i = 0
     for t in _GBT_THRS:
         while i < len(hist) and hist[i][0] <= t:
-            _, n, s, _ = hist[i]
+            _, n, m, s, _ = hist[i]
             nl += n
-            sl += 10 * s - n * c[i]
+            sl += 10 * s - m * c[i]
             i += 1
         nr, sr = nt - nl, st - sl
         if nl == 0 or nr == 0:
@@ -917,30 +919,37 @@ def _gbt_stump(hist: list[tuple], c: list[int]) -> tuple | None:
 
 
 def _gbt_train(hist: list[tuple]) -> tuple | None:
-    """Both boosting rounds from the per-hour histogram [(x, n, s, q)]
-    → (n, f0m, thr1, nl1, pl1, pr1, thr2, nl2, pl2, pr2, sse0, sse1,
+    """Both boosting rounds from the per-hour histogram [(x, n, m, s,
+    q)] → (n, f0m, thr1, nl1, pl1, pr1, thr2, nl2, pl2, pr2, sse0, sse1,
     sse2) in milli units, or None when the corpus is empty or a round
     has no valid split (the report is then one all-NULL row, as when a
-    winner frame is empty). hour(ts) and value are never NULL in the
-    fixtures; a NULL hour cell fails the task rather than guess."""
+    winner frame is empty). Without a single value f0m and the SSEs are
+    None (the oracle's SUM over no row) and every candidate sum is 0,
+    which c = 0 reproduces. hour(ts) is never NULL in the fixtures; a
+    NULL hour cell fails the task rather than guess."""
     hist = sorted(hist)
-    nt = sum(n for _, n, _, _ in hist)
+    nt = sum(n for _, n, _, _, _ in hist)
     if nt == 0:
         return None
-    f0m = math.floor(sum(s for _, _, s, _ in hist) * 10.0 / nt + 0.5)
+    valued = any(m for _, _, m, _, _ in hist)
+    f0m = None
+    if valued:
+        f0m = math.floor(sum(s for _, _, _, s, _ in hist) * 10.0 / nt + 0.5)
 
-    def sse(c: list[int]) -> int:
-        return sum(100 * q - 20 * cx * s + n * cx * cx
-                   for (_, n, s, q), cx in zip(hist, c))
+    def sse(c: list[int]) -> int | None:
+        if not valued:
+            return None
+        return sum(100 * q - 20 * cx * s + m * cx * cx
+                   for (_, _, m, s, q), cx in zip(hist, c))
 
-    c = [f0m] * len(hist)
+    c = [f0m or 0] * len(hist)
     model, sses = [nt, f0m], [sse(c)]
     for _ in range(2):
         win = _gbt_stump(hist, c)
         if win is None:
             return None
         t, _, pl, pr = win
-        c = [cx + (pl if x <= t else pr) for (x, _, _, _), cx in zip(hist, c)]
+        c = [cx + (pl if x <= t else pr) for (x, *_), cx in zip(hist, c)]
         model += win
         sses.append(sse(c))
     return (*model, *sses)
@@ -1046,7 +1055,8 @@ def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     values and a cross-multiplied exact tournament for stump selection
     (block comment above). Reports the fitted model plus the monotone
     mse0 > mse1 > mse2 training trace. Spark shape: one events scan
-    reduced to a per-hour histogram (count, Σyc, Σyc² as DECIMAL(38,0));
+    reduced to a per-hour histogram (rows, values, Σyc, Σyc² as
+    DECIMAL(38,0), the sums 0 for an hour without a value);
     one mapInPandas task trains both rounds from the <= 24 cells
     (_gbt_train, through _fit_in_one_task), and a corpus without a model
     reports one all-NULL row; the milli-unit rescale and the MSE
@@ -1060,8 +1070,11 @@ def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum("yc").alias("s"),
-            F.sum(F.col("yc").cast("decimal(38,0)") * F.col("yc")).alias("q"),
+            F.count("yc").alias("m"),
+            F.coalesce(F.sum("yc"), F.lit(0)).alias("s"),
+            F.coalesce(
+                F.sum(F.col("yc").cast("decimal(38,0)") * F.col("yc")), F.lit(0)
+            ).alias("q"),
         )
     )
     # 1000.0D / 1000000.0D: SQL `1000.0` parses as DECIMAL; the D suffix

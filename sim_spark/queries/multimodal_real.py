@@ -914,7 +914,7 @@ from sim_spark.ops.flac import decode_flac, gen_flac_payload  # noqa: E402
 
 
 def _flac_rows(doc_id: int, payload: bytes) -> list[tuple]:
-    rate, s = decode_flac(payload)
+    rate, (s,) = decode_flac(payload)
     a = s.astype(np.int64)
     return [
         (doc_id, rate, len(s), int(np.abs(a).sum()),
@@ -1111,14 +1111,11 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stereo FLAC with channel decorrelation (r11) ---------------------------
 
-from sim_spark.ops.flac import (  # noqa: E402
-    decode_flac_stereo,
-    gen_flac_stereo_payload,
-)
+from sim_spark.ops.flac import gen_flac_stereo_payload  # noqa: E402
 
 
 def _flac_stereo_rows(doc_id: int, payload: bytes) -> list[tuple]:
-    rate, left, right = decode_flac_stereo(payload)
+    rate, (left, right) = decode_flac(payload)
     lft = left.astype(np.int64)
     rgt = right.astype(np.int64)
     return [
@@ -1165,9 +1162,10 @@ def multimodal_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     mid/side (side = L−R at 17 bits) per frame like a real encoder, and
     the fixture's two regimes make BOTH an independent and a
     decorrelated assignment occur within most payloads (verified in
-    tests; all four reconstructions are additionally round-tripped with
-    forced assignments). The decoder undoes whichever assignment each
-    frame header declares and verifies CRC-8, CRC-16, and the
+    tests; all four reconstructions are additionally round-tripped from
+    inputs chosen so the cost-out picks each). The decoder undoes
+    whichever assignment each frame header declares and verifies
+    CRC-8, CRC-16, and the
     STREAMINFO MD5 computed over the INTERLEAVED L,R stream — so a
     reconstruction or interleave bug cannot pass. Lossless ⇒ one
     end-to-end oracle: DuckDB recomputes every L/R sample from the

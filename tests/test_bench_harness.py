@@ -121,3 +121,37 @@ def test_measure_plans_takes_every_headline_key(spark, monkeypatch, tmp_path):
     measure.cmd_plans("t", "x", keys)
     for k in keys:
         assert "Physical Plan" in (tmp_path / "plans" / "t" / f"{k}_x.txt").read_text()
+
+
+def test_measure_time_records_carry_run_order(monkeypatch, tmp_path, capsys):
+    """Each `tools/measure.py time` line names the keys its session
+    timed, in order, and the key's index among them, so a reader can
+    tell an ordering effect from a code change. A resumed run's session
+    is the keys it times, not the ones it skips."""
+    import bench
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(bench.__file__), "tools"))
+    import measure
+
+    class _Spark:
+        def stop(self):
+            pass
+
+    timed = []
+    monkeypatch.setattr(bench, "open_session", lambda app: (_Spark(), 1))
+    monkeypatch.setattr(bench, "warm_up", lambda spark, sf: None)
+
+    def time_key(spark, key, sf):
+        timed.append(key)
+        return [{"wall_s": 1.0, "build_s": 0.25, "exec_s": 0.5}]
+
+    monkeypatch.setattr(bench, "time_key", time_key)
+    out = tmp_path / "t.jsonl"
+    out.write_text(json.dumps({"key": "b"}) + "\n")
+    measure.cmd_time(["a", "b", "c"], str(out))
+    assert timed == ["a", "c"]
+    printed = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    appended = [json.loads(line) for line in out.read_text().splitlines()[1:]]
+    assert printed == appended
+    assert [(r["key"], r["position"], r["session"]) for r in printed] == [
+        ("a", 0, ["a", "c"]), ("c", 1, ["a", "c"])]

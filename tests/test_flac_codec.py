@@ -25,7 +25,7 @@ from sim_spark.ops.flac import (
 
 def _roundtrip(samples, rate=8000):
     s = np.asarray(samples, dtype=np.int64)
-    r2, s2 = decode_flac(encode_flac(s, rate))
+    r2, (s2,) = decode_flac(encode_flac(s, rate))
     assert r2 == rate
     assert np.array_equal(s2.astype(np.int64), s)
 
@@ -33,7 +33,7 @@ def _roundtrip(samples, rate=8000):
 def test_formula_roundtrip_exact():
     for d in (0, 1, 2, 5, 63, 64, 128, 255, 256, 399, 4999):
         rate, s = formula_flac_samples(d)
-        r2, s2 = decode_flac(gen_flac_payload(d))
+        r2, (s2,) = decode_flac(gen_flac_payload(d))
         assert r2 == rate and np.array_equal(s2.astype(np.int64), s)
 
 
@@ -90,10 +90,13 @@ def test_rejects_non_flac_and_stereo():
     with pytest.raises(ValueError):
         decode_flac(b"RIFF not flac")
     # patch STREAMINFO channel bits (byte 12 of streaminfo holds
-    # sample-rate low nibble + channels + bps high bit)
+    # sample-rate low nibble + channels-1 (bits 3..1) + bps high bit)
     payload = bytearray(gen_flac_payload(3))
-    payload[8 + 12] ^= 0b00000010  # channels 1 -> 2
-    with pytest.raises((NotImplementedError, ValueError)):
+    payload[8 + 12] ^= 0b00000010  # channels 1 -> 2 over mono frames
+    with pytest.raises(ValueError, match="channel layout contradicts"):
+        decode_flac(bytes(payload))
+    payload[8 + 12] ^= 0b00000110  # channels -> 3: out of scope
+    with pytest.raises(NotImplementedError, match="3-channel"):
         decode_flac(bytes(payload))
 
 
@@ -110,33 +113,55 @@ def test_md5_is_real():
 
 
 def test_stereo_formula_roundtrip_exact():
-    from sim_spark.ops.flac import (
-        decode_flac_stereo,
-        formula_flac_stereo_samples,
-        gen_flac_stereo_payload,
-    )
+    from sim_spark.ops.flac import formula_flac_stereo_samples, gen_flac_stereo_payload
 
     for d in (0, 1, 2, 5, 99, 100, 299, 4999):
         rate, left, right = formula_flac_stereo_samples(d)
-        r2, l2, rr2 = decode_flac_stereo(gen_flac_stereo_payload(d))
-        assert r2 == rate
+        r2, (l2, rr2) = decode_flac(gen_flac_stereo_payload(d))
+        assert r2 == rate and l2.dtype == np.dtype("<i2")
         assert np.array_equal(l2.astype(np.int64), left)
         assert np.array_equal(rr2.astype(np.int64), right)
 
 
-def test_stereo_all_four_reconstructions():
-    """Round-trip each channel assignment explicitly (forced), so the
-    left/side, side/right, and mid/side reconstructions are each
-    exercised even when the cost-out wouldn't naturally pick them."""
+def _frame_codes(p: bytes) -> list[int]:
+    """The channel-assignment code of every frame of stream ``p``."""
     import sim_spark.ops.flac as fl
 
+    pos = 4
+    while True:
+        hdr = p[pos]
+        pos += 4 + int.from_bytes(p[pos + 1 : pos + 4], "big")
+        if hdr & 0x80:
+            break
+    codes = []
+    while pos < len(p):
+        codes.append(p[pos + 3] >> 4)
+        _frame, consumed = fl._decode_frame(p, pos)
+        pos += consumed
+    return codes
+
+
+def test_stereo_all_four_reconstructions():
+    """Inputs chosen so the encoder's cost-out picks each channel
+    assignment in every frame (a cheap ramp against noise, or noise of
+    very different widths); each stream round-trips exactly, so the
+    left/side, side/right and mid/side reconstructions are all run."""
     rng = np.random.default_rng(1)
-    left = rng.integers(-2000, 2000, 256).astype(np.int64)
-    right = rng.integers(-2000, 2000, 256).astype(np.int64)
-    for code in (0b0001, 0b1000, 0b1001, 0b1010):
-        f = fl._encode_frame_stereo(left, right, 0, force_code=code)
-        frame, _ = fl._decode_frame(bytes(f), 0)
-        assert np.array_equal(frame[0], left) and np.array_equal(frame[1], right)
+    n = 3 * 256 + 40  # full frames and a short tail
+    ramp = np.arange(n, dtype=np.int64) * 7 - 2800
+    noise = rng.integers(-40, 40, n)
+    cases = {
+        0b1000: (ramp, ramp - noise),  # left/side
+        0b1001: (ramp + noise, ramp),  # side/right
+        0b1010: (ramp + noise, ramp - noise + ramp % 2),  # mid/side, odd sides
+        0b0001: (rng.integers(-50, 50, n), rng.integers(-20000, 20000, n)),
+    }
+    for code, (left, right) in cases.items():
+        payload = encode_flac(np.stack([left, right]), 8000)
+        assert _frame_codes(payload) == [code] * 4, code
+        rate, (l2, r2) = decode_flac(payload)
+        assert rate == 8000
+        assert np.array_equal(l2, left) and np.array_equal(r2, right), code
 
 
 def test_stereo_fixture_uses_multiple_assignments():
@@ -144,28 +169,9 @@ def test_stereo_fixture_uses_multiple_assignments():
     independent and a decorrelated assignment under the hash oracle."""
     import sim_spark.ops.flac as fl
 
-    def chcodes(p):
-        pos = 4
-        while True:
-            hdr = p[pos]
-            last = bool(hdr & 0x80)
-            ln = int.from_bytes(p[pos + 1 : pos + 4], "big")
-            pos += 4 + ln
-            if last:
-                break
-        codes = set()
-        while pos < len(p):
-            r = fl._BitReader(p, pos)
-            assert r.bits(14) == 0b11111111111110
-            r.bit(); r.bit(); r.bits(4); r.bits(4)
-            codes.add(r.bits(4))
-            _frame, consumed = fl._decode_frame(p, pos)
-            pos += consumed
-        return codes
-
     seen = set()
     for d in range(100):
-        seen.update(chcodes(fl.gen_flac_stereo_payload(d)))
+        seen.update(_frame_codes(fl.gen_flac_stereo_payload(d)))
     assert 0b0001 in seen and (seen & {0b1000, 0b1001, 0b1010})
 
 
@@ -182,23 +188,10 @@ def test_stereo_md5_is_over_interleaved_stream():
     assert payload[8 + 18 : 8 + 34] == hashlib.md5(inter.tobytes()).digest()
 
 
-def test_mono_and_stereo_entry_points_cross_reject():
-    from sim_spark.ops.flac import decode_flac, decode_flac_stereo, gen_flac_stereo_payload
-
-    with pytest.raises(NotImplementedError):
-        decode_flac(gen_flac_stereo_payload(3))
-    with pytest.raises(NotImplementedError):
-        decode_flac_stereo(gen_flac_payload(3))
-
-
 def test_lpc_subframe_decode_roundtrip():
-    """Decode-side LPC (what real FLAC files use): encode frames whose
-    subframe is a genuine LPC predictor at several orders/shifts and
-    require bit-exact reconstruction through the public frame decoder."""
-    import struct
-
-    import sim_spark.ops.flac as fl
-
+    """Decode-side LPC (what real FLAC files use): encode streams whose
+    frames carry a genuine LPC predictor at several orders/shifts and
+    require bit-exact reconstruction through the public decoder."""
     rng = np.random.default_rng(5)
     base = np.cumsum(rng.integers(-80, 80, 256)).astype(np.int64)
     cases = [
@@ -208,50 +201,73 @@ def test_lpc_subframe_decode_roundtrip():
         (list(rng.integers(-100, 100, 8)), 8, 6),  # order 8, random taps
     ]
     for coefs, precision, shift in cases:
-        header = fl._frame_header(256, 0, 0)
-        body = fl._BitWriter()
-        fl._encode_subframe_lpc(body, base, 16, [int(c) for c in coefs],
-                                precision, shift)
-        body.pad_to_byte()
-        payload = header + bytes(body.out)
-        payload += struct.pack(">H", fl._crc16(payload))
-        frame, consumed = fl._decode_frame(bytes(payload), 0)
-        assert consumed == len(payload)
-        assert np.array_equal(frame, base), (coefs, precision, shift)
+        coefs = [int(c) for c in coefs]
+        payload = encode_flac(base, 8000, lpc=(coefs, precision, shift))
+        # the one frame's subframe header (after 42 + 6 header bytes):
+        # padding bit, LPC type 0b1xxxxx with order - 1, no wasted bits
+        assert payload[48] >> 1 == 0b100000 | (len(coefs) - 1)
+        rate, (s2,) = decode_flac(payload)
+        assert np.array_equal(s2, base), (coefs, precision, shift)
 
 
 def test_lpc_rejects_invalid_precision_escape():
-    import struct
+    import sim_spark.ops.flac as fl
+
+    payload = bytearray(encode_flac(np.arange(256), 8000, lpc=([16], 6, 4)))
+    # the one frame starts at 42 (fLaC + STREAMINFO), its subframe after
+    # the 6-byte header: 0 | type(6) | 0 | warm(16) | precision-1(4) ...
+    # set the precision field to 0b1111 (the escape) and re-seal CRC-16
+    bit = (42 + 6) * 8 + 1 + 6 + 1 + 16
+    for i in range(4):
+        payload[(bit + i) // 8] |= 0x80 >> ((bit + i) % 8)
+    payload[-2:] = fl._crc16(bytes(payload[42:-2])).to_bytes(2, "big")
+    with pytest.raises(ValueError, match="precision escape"):
+        fl._decode_frame(bytes(payload), 42)
+
+
+def test_fixed_orders_3_and_4_decode_exactly():
+    """The encoder only emits FIXED orders 0..2; hand-built order 3 and
+    4 subframes (warm-up samples, then the order-k differences rice
+    coded by the encoder's own planner) must decode to the block."""
+    import hashlib
 
     import sim_spark.ops.flac as fl
 
-    base = np.arange(256, dtype=np.int64)
-    header = fl._frame_header(256, 0, 0)
-    body = fl._BitWriter()
-    fl._encode_subframe_lpc(body, base, 16, [16], 6, 4)
-    body.pad_to_byte()
-    payload = bytearray(header + bytes(body.out))
-    # precision-1 field sits right after the 16-bit warm-up sample:
-    # header | 0 | type(6) | 0 | warm(16) | precision-1(4) ...
-    # flip it to 0b1111 (escape) by locating bit offset
-    bit = len(header) * 8 + 1 + 6 + 1 + 16
-    for i in range(4):
-        payload[(bit + i) // 8] |= 0x80 >> ((bit + i) % 8)
-    payload += struct.pack(">H", fl._crc16(bytes(payload)))
-    with pytest.raises(ValueError):
-        fl._decode_frame(bytes(payload), 0)
+    rng = np.random.default_rng(34)
+    for bs in (256, 37, 5):
+        for order in (3, 4):
+            i = np.arange(bs, dtype=np.int64)
+            x = (i * i * 3 - i * 250 + rng.integers(-900, 900, bs)) % 60000 - 30000
+            x[bs // 2] = -32768  # a large residual around the extreme
+            zp = np.zeros((1, bs), dtype=np.int64)
+            zp[0, order:] = fl._zigzag(np.diff(x, order))
+            po, ks, bits = fl._rice_plans(zp, np.array([order]))
+            head = [(0, 1), (0b001000 | order, 6), (0, 1)]
+            head += [(int(v) & 0xFFFF, 16) for v in x[:order]]
+            nbits = sum(n for _, n in head) + int(bits[0])
+            head, res = fl._residual_spec(zp[0], order, po[0], ks[0], head)
+            frame = fl._emit([(fl._frame_header(bs, 0, 0, 16), [(head, res, nbits)])])
+            md5 = hashlib.md5(x.astype("<i2").tobytes()).digest()
+            rate, (s2,) = decode_flac(fl._streaminfo(bs, 8000, 1, 16, md5) + frame)
+            assert np.array_equal(s2, x), (bs, order)
+    # a 2-sample block cannot hold an order-3 warm-up: typed refusal
+    w = fl._BitWriter()
+    for v, n in [(0, 1), (0b001011, 6), (0, 1), (5, 16), (6, 16), (7, 16),
+                 (0, 2), (0, 4), (0, 4)]:
+        w.put(v, n)
+    w.pad_to_byte()
+    frame = fl._frame_header(2, 0, 0, 16) + bytes(w.out)
+    frame += fl._crc16(frame).to_bytes(2, "big")
+    with pytest.raises(ValueError, match="warm-up longer"):
+        fl._decode_frame(frame, 0)
 
 
 def test_lpc_full_stream_roundtrip_and_compression():
-    from sim_spark.ops.flac import (
-        decode_flac,
-        formula_flac_lpc,
-        gen_flac_lpc_payload,
-    )
+    from sim_spark.ops.flac import formula_flac_lpc, gen_flac_lpc_payload
 
     for d in (0, 1, 2, 76, 77, 78, 199, 4999):  # 76..78: short tail frames
         rate, s, coefs, precision, shift = formula_flac_lpc(d)
-        r2, s2 = decode_flac(gen_flac_lpc_payload(d))
+        r2, (s2,) = decode_flac(gen_flac_lpc_payload(d))
         assert r2 == rate and np.array_equal(s2.astype(np.int64), s)
     # the predictor must genuinely compress the walk fixture
     raw = formula_flac_lpc(7)[1].size * 2
@@ -289,7 +305,7 @@ def test_wasted_bits_roundtrip_and_occurrence():
 
     for d in (0, 1, 2, 3, 4, 5, 6, 7, 401, 402, 403):
         rate, s = fl.formula_flac_wasted(d)
-        r2, s2 = fl.decode_flac(fl.gen_flac_wasted_payload(d))
+        r2, (s2,) = fl.decode_flac(fl.gen_flac_wasted_payload(d))
         assert r2 == rate and np.array_equal(s2.astype(np.int64), s)
 
     recorded: dict[int, set[int]] = {}
@@ -354,16 +370,16 @@ def test_partitioned_rice_occurs_and_roundtrips():
     try:
         for d in (0, 3, 7, 50, 123, 200, 399):
             rate, s = fl.formula_flac_samples(d)
-            r2, s2 = fl.decode_flac(fl.gen_flac_payload(d))
+            r2, (s2,) = fl.decode_flac(fl.gen_flac_payload(d))
             assert r2 == rate and np.array_equal(s2.astype(np.int64), s)
         for d in (0, 7, 50, 123):
             rate, sl, sr = fl.formula_flac_stereo_samples(d)
-            _r, l2, r2_ = fl.decode_flac_stereo(fl.gen_flac_stereo_payload(d))
+            _r, (l2, r2_) = fl.decode_flac(fl.gen_flac_stereo_payload(d))
             assert np.array_equal(l2.astype(np.int64), sl)
             assert np.array_equal(r2_.astype(np.int64), sr)
         for d in (0, 7, 77, 199):
             rate, s, *_ = fl.formula_flac_lpc(d)
-            _r, s2 = fl.decode_flac(fl.gen_flac_lpc_payload(d))
+            _r, (s2,) = fl.decode_flac(fl.gen_flac_lpc_payload(d))
             assert np.array_equal(s2.astype(np.int64), s)
     finally:
         fl._read_residuals = orig
@@ -409,15 +425,23 @@ def test_bit_depths_roundtrip_and_cross_checks():
     for d in (0, 1, 2, 3, 4, 5, 100, 101, 102, 299):
         rate, bps, s = fl.formula_flac_depth(d)
         pay = fl.gen_flac_depth_payload(d)
-        r2, s2 = fl.decode_flac(pay)
+        r2, (s2,) = fl.decode_flac(pay)
         assert r2 == rate and np.array_equal(s2.astype(np.int64), s), (d, bps)
         assert s2.dtype == (np.dtype("<i4") if bps > 16 else np.dtype("<i2"))
     # extremes of each depth survive
     for bps in (8, 16, 24):
         lim = 1 << (bps - 1)
         s = np.array([-lim, lim - 1, 0, -1, 1] * 60, dtype=np.int64)
-        r2, s2 = fl.decode_flac(fl.encode_flac(s, 8000, bps=bps))
+        r2, (s2,) = fl.decode_flac(fl.encode_flac(s, 8000, bps=bps))
         assert np.array_equal(s2.astype(np.int64), s), bps
+        # stereo full-range mirror ramps: mid is constant, so every frame
+        # is mid/side, and the side channel spans bps + 1 bits
+        left = np.arange(300) * (2 * lim - 1) // 299 - lim
+        lr = np.stack([left, -left - 1])
+        pay = fl.encode_flac(lr, 8000, bps=bps)
+        assert pay[42 + 3] >> 4 == 0b1010, bps
+        r2, lr2 = fl.decode_flac(pay)
+        assert np.array_equal(lr2.astype(np.int64), lr), bps
     # contradiction probe: 24-bit STREAMINFO over 16-bit frames
     pay = bytearray(fl.encode_flac(np.arange(-100, 100), 8000, bps=16))
     # STREAMINFO bps-1 field: byte offset 8+4+13 = bits 132..136 of the

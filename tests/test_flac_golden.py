@@ -86,13 +86,3 @@ def test_pack_bits_matches_bit_writer():
             w.put(v, b)
         w.pad_to_byte()
         assert flac._pack_bits(values, nbits).tobytes() == bytes(w.out)
-        w2 = flac._BitWriter()
-        w2.put(5, 3)  # put_many continues mid-byte
-        w2.put_many(values, nbits)
-        w2.pad_to_byte()
-        w3 = flac._BitWriter()
-        w3.put(5, 3)
-        for v, b in zip(values.tolist(), nbits.tolist()):
-            w3.put(v, b)
-        w3.pad_to_byte()
-        assert bytes(w2.out) == bytes(w3.out)

@@ -678,7 +678,7 @@ def test_jpeg_arith_typed_errors():
         encode_jpeg_arith_from_coeffs(2, 1, c)
 
 
-# --- typed errors under corruption (JPEG, PNG, WAV, FLAC LPC) ---------------
+# --- typed errors under corruption (JPEG, PNG, WAV, FLAC) --------------------
 
 
 def _corruption_cases():
@@ -703,7 +703,11 @@ def _corruption_cases():
         "png_depth": (mm.decode_png, mr._gen_png_depth_payload),
         "wav": (mm.decode_wav, lambda d: mm.gen_wav_payload(d, 100)),
         "wav_tone": (mm.decode_wav, mm.gen_wav_tone_payload),
+        "flac": (flac.decode_flac, flac.gen_flac_payload),
+        "flac_stereo": (flac.decode_flac, flac.gen_flac_stereo_payload),
         "flac_lpc": (flac.decode_flac, flac.gen_flac_lpc_payload),
+        "flac_wasted": (flac.decode_flac, flac.gen_flac_wasted_payload),
+        "flac_depth": (flac.decode_flac, flac.gen_flac_depth_payload),
         "bmp": (mm.decode_bmp, mm.gen_bmp_payload),
         "avro": (lambda p: mr._avro_rows(0, p), mr._gen_avro_payload),
         "parquet_footer": (
@@ -717,7 +721,8 @@ def _corruption_cases():
     "case",
     ["baseline", "dc_only", "color", "progressive", "progressive_color",
      "arithmetic", "png", "png_twin", "png_rgba_gray", "png_palette_adam7",
-     "png_depth", "wav", "wav_tone", "flac_lpc", "bmp", "avro",
+     "png_depth", "wav", "wav_tone", "flac", "flac_stereo", "flac_lpc",
+     "flac_wasted", "flac_depth", "bmp", "avro",
      "parquet_footer", "mp3_id3", "mp3_apic"],
 )
 def test_corrupted_payloads_raise_only_typed_errors(case):

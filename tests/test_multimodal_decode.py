@@ -222,6 +222,29 @@ def test_jpeg_router_dispatches_on_frame_kind():
             assert out["pixels"] == px.tobytes()
 
 
+def test_flac_router_returns_the_one_decoder_output():
+    """The router hands a FLAC payload straight to decode_flac: mono and
+    stereo alike come back as one (channels, n) sample array."""
+    from sim_spark.ops import flac
+
+    gens = [
+        flac.gen_flac_payload,
+        flac.gen_flac_stereo_payload,
+        flac.gen_flac_lpc_payload,
+        flac.gen_flac_wasted_payload,
+        flac.gen_flac_depth_payload,
+    ]
+    for gen in gens:
+        for d in (0, 5):
+            p = gen(d)
+            rate, samples = flac.decode_flac(p)
+            out = decode(p)
+            assert out["kind"] == "flac" and out["sample_rate"] == rate
+            assert out["samples"].dtype == samples.dtype
+            assert np.array_equal(out["samples"], samples)
+    assert decode(flac.gen_flac_stereo_payload(1))["samples"].shape[0] == 2
+
+
 def test_png_container_independence():
     """The BMP payload and its PNG twin decode to identical pixel
     arrays — the invariant dedup_image_dhash_png pins end-to-end."""

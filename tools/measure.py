@@ -6,7 +6,10 @@ after every timed run).
   python tools/measure.py time [--out f.jsonl] [<key> ...]
       time keys (default: bench.HEADLINE), one JSON line per key; with
       --out, append each line to f.jsonl as it completes and skip keys
-      already in it (resumable long runs, e.g. an sf1 rehearsal)
+      already in it (resumable long runs, e.g. an sf1 rehearsal). A key's
+      timing depends on the keys run before it in the same session, so
+      each line carries "session" (the keys this run times, in order)
+      and "position" (the key's index in it)
   python tools/measure.py plans <round> <tag> (<key> ... | --file keys.txt)
       write .explain("formatted") to plans/<round>/<key>_<tag>.txt.
       Iterative keys run their rounds at build time, so the file holds
@@ -53,12 +56,14 @@ def cmd_time(keys: list[str], out: str | None) -> None:
         print(f"skipping {len(keys) - len(todo)} keys already in {out}", file=sys.stderr)
     spark, _ = bench.open_session("sim_spark-measure")
     bench.warm_up(spark, SF_DIR)
-    for key in todo:
+    for position, key in enumerate(todo):
         samples = bench.time_key(spark, key, SF_DIR)
         rec = {
             "key": key,
             "median": round(statistics.median(s["wall_s"] for s in samples), 3),
             "samples": [{k: round(v, 4) for k, v in s.items()} for s in samples],
+            "position": position,
+            "session": todo,
         }
         print(json.dumps(rec), flush=True)
         if out:
